@@ -43,7 +43,12 @@ case class TokenGrams(left: Expression, right: Expression) extends BinaryExpress
         s"token_grams requires a string text argument, got ${left.dataType.catalogString}")
     else if (right.dataType != IntegerType || !right.foldable)
       TypeCheckResult.TypeCheckFailure("token_grams requires a literal int n")
-    else TypeCheckResult.TypeCheckSuccess
+    else right.eval() match {
+      // rejected here: in executors n < 1 sizes a gram buffer negative
+      case n: Int if n < 1 =>
+        TypeCheckResult.TypeCheckFailure(s"token_grams requires n >= 1, got $n")
+      case _ => TypeCheckResult.TypeCheckSuccess
+    }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_grams"

@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
 /** The flagship pipeline: pages → extract kernel (narrow, shuffle-free) →
   * bucket-grouped write (+ per-bucket lineage, resume anti-join).
   *
+  * Lineage is aggregated from the extracted rows the write consumed
+  * (`ExtractRunner` persists them for the write and reuses them for
+  * `lineage`), not from a re-read of the landed table: the write is
+  * job-atomic and dynamic overwrite replaces exactly the touched buckets,
+  * so those rows are exactly what landed.
+  *
   * Spark restatement of the reference's upload→celery→worker lifecycle
   * (SURVEY.md §3.1): the Redis queue + worker pool becomes scan-partition
   * parallelism; the SQLite task upsert (task.py:39-58) becomes idempotent
@@ -176,10 +182,14 @@ object ExtractJob {
   /** Snapshot id for an input: stable hash of the resolved input files
     * (the Iceberg snapshot-id stand-in; SURVEY.md §1.2 "Iceberg note").
     */
-  def snapshotIdOf(spark: SparkSession, inputPath: String): Long = {
-    val files = spark.read.parquet(inputPath).inputFiles.sorted
-    files.foldLeft(17L)((acc, f) => acc * 31L + f.hashCode.toLong)
-  }
+  def snapshotIdOf(spark: SparkSession, inputPath: String): Long =
+    snapshotIdOf(spark.read.parquet(inputPath))
+
+  /** The same id from a frame already read over the input — no second
+    * listing of the table.
+    */
+  def snapshotIdOf(input: DataFrame): Long =
+    input.inputFiles.sorted.foldLeft(17L)((acc, f) => acc * 31L + f.hashCode.toLong)
 
   /** Per-host metrics with salting for the hot hosts: two-phase agg —
     * partial counts on (host, salt), then final on host — so a single hot

@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.kernel.ExtractKernel
 import graft.model.Page
 import graft.sources.PageSynth
+
+import scala.jdk.CollectionConverters._
 
 /** The production job entry (spark-submit main): one resumable extraction
   * run over a pages table, with the Iceberg contract emulated on plain
@@ -21,9 +23,10 @@ import graft.sources.PageSynth
   * Resume-from-checkpoint (north rule): a rerun reads `lineage`,
   * anti-joins the already-done buckets for this input snapshot, processes
   * only the remainder, and dynamic-partition-overwrite makes the rerun
-  * idempotent. Kill it anywhere; run it again; the final table is
-  * byte-identical to an uninterrupted run (asserted in OperatorsSpec /
-  * RunnerSpec).
+  * idempotent. When every bucket is done the rerun stops after reading
+  * lineage, without scanning the pages. Kill it anywhere; run it again;
+  * the final table is byte-identical to an uninterrupted run (asserted in
+  * OperatorsSpec / RunnerSpec).
   *
   * Usage:
   *   spark-submit --class graft.operators.ExtractRunner <jar> \
@@ -100,33 +103,36 @@ object ExtractRunner {
     // unknown engine at submission with the reference's exact literal
     require(graft.kernel.MergeSpec.ValidEngines(profile.engine),
       graft.kernel.MergeSpec.invalidOcrType(profile.engine))
+    require(buckets > 0, s"buckets must be positive, got $buckets")
     val t0 = System.currentTimeMillis()
     // input format: parquet table OR a directory of .warc(.gz) files —
     // crawls run in arrival format with identical lineage/resume
     // semantics (the snapshot id hashes the file listing either way)
     val warcInput = graft.sources.Warc.isWarcDir(spark, pagesDir)
-    val snapshotId =
-      if (warcInput) graft.sources.Warc.snapshotIdOf(spark, pagesDir)
-      else ExtractJob.snapshotIdOf(spark, pagesDir)
-    val pages =
-      if (warcInput) graft.sources.Warc.pages(spark, pagesDir)
-      else spark.read.parquet(pagesDir).as[Page]
+    // parquet: ONE listing of the pages table serves both the snapshot id
+    // and the scan the run reads
+    val (snapshotId, pages) =
+      if (warcInput)
+        (graft.sources.Warc.snapshotIdOf(spark, pagesDir), graft.sources.Warc.pages(spark, pagesDir))
+      else {
+        val df = spark.read.parquet(pagesDir)
+        (ExtractJob.snapshotIdOf(df), df.as[Page])
+      }
 
-    val lineagePath = s"$outRoot/lineage"
-    val priorLineage: Option[DataFrame] =
-      try Some(readLineage(spark, lineagePath)) catch { case _: Exception => None }
+    val lineage = priorLineage(spark, s"$outRoot/lineage")
 
-    val todo = priorLineage match {
+    recordTableBuckets(spark, outRoot, buckets)
+
+    // every bucket already completed for this snapshot → no page can be
+    // left to do: a no-op resume reads lineage alone, never the pages
+    val doneBuckets = lineage.fold(Set.empty[Int])(completedBuckets(_, snapshotId))
+    if ((0 until buckets).forall(doneBuckets))
+      return noopRun(spark, outRoot, snapshotId, profile, t0)
+
+    val todo = lineage match {
       case Some(lin) => ExtractJob.resumeFilter(spark, pages, lin, snapshotId, buckets)
       case None      => pages
     }
-
-    // Extract once, reuse for both writes (avoids running the kernel
-    // twice; at scale this would be a cached/localCheckpoint'd stage or a
-    // write-then-read of the output table — here write first, then derive
-    // lineage from the written table so the lineage reflects exactly what
-    // landed).
-    recordTableBuckets(spark, outRoot, buckets)
 
     // Touched-bucket ids, EAGERLY and from a url-only projection:
     //  - eager: the A10 cancel handler needs the ids AFTER a cancel has
@@ -147,19 +153,24 @@ object ExtractRunner {
     // describe — a partitioned write of zero rows emits no schema to
     // read back anyway); status lookups against a never-written table
     // surface path-not-found, which is the honest answer.
-    if (todoBuckets.isEmpty) {
-      val wallMs = System.currentTimeMillis() - t0
-      appendSnapshotRow(spark, outRoot, snapshotId, 0L, 0L, wallMs, profile.engine)
-      return RunReport(snapshotId, 0L, 0L, wallMs)
-    }
+    if (todoBuckets.isEmpty)
+      return noopRun(spark, outRoot, snapshotId, profile, t0)
 
     val extracted = ExtractJob.extract(spark, todo, buckets, profile)
     writeAndFinalize(spark, outRoot, snapshotId, extracted, todoBuckets, profile, t0)
   }
 
   /** Shared tail of both run paths: write under the cancel guard, then
-    * derive lineage from exactly the partitions this run wrote, append
-    * the snapshots ledger row, and report.
+    * derive lineage from the rows that write consumed, append the
+    * snapshots ledger row, and report.
+    *
+    * Lineage is aggregated over the persisted `extracted` rows, not over a
+    * re-read of the landed table: the write commits the whole job or
+    * nothing, and dynamic overwrite replaces exactly the buckets those
+    * rows fall in, so the landed rows of the touched buckets ARE the
+    * persisted rows (a lost cache block is recomputed by the
+    * deterministic kernel — the same rows). The counts still come from a
+    * Spark action over those rows, never from accumulators.
     *
     * A10 cancel semantics live here: cancel is a terminal STATE, not a
     * crash (task.py:8-12, routes.py:253). A cancelled write job committed
@@ -175,62 +186,69 @@ object ExtractRunner {
       bucketIds: Seq[Int], // concrete — both run paths compute it before the guarded write
       profile: ExtractKernel.Profile,
       t0: Long): RunReport = {
-    import spark.implicits._
     val lineagePath = s"$outRoot/lineage"
-    spark.sparkContext.setJobGroup(jobGroupFor(snapshotId),
-      s"graft extraction snapshot=$snapshotId", interruptOnCancel = true)
+    // the kernel runs once: the write fills the cache, lineage reads it
+    extracted.persist()
     try {
-      ExtractJob.writeExtracted(extracted, s"$outRoot/extracted")
-    } catch {
-      case e: Throwable if isCancellation(e) =>
-        spark.sparkContext.clearJobGroup()
-        // interruptOnCancel may have left the interrupt pending on THIS
-        // driver thread — clear it, or the mark-write job below is
-        // immediately killed and the cancel is indistinguishable from a
-        // crash (the exact failure mode A10 exists to prevent)
-        val wasInterrupted = Thread.interrupted()
-        // mark-write failures must not mask the graceful-cancel report:
-        // resume correctness never depends on the marks (only 'completed'
-        // rows skip buckets), so log and carry on
-        try
-          ExtractJob.cancelledLineage(spark, bucketIds, snapshotId,
-              System.currentTimeMillis() - t0)
-            .write.mode(SaveMode.Append).parquet(lineagePath)
-        catch {
-          case me: Exception =>
-            log.warn(s"cancelled-mark write failed for snapshot=$snapshotId " +
-              s"(resume unaffected; cancel-vs-crash distinction lost for this run)", me)
-        }
-        // the interrupt belongs to the CALLER (their cancellation signal)
-        // — restore it so the enclosing executor/Future still sees it
-        if (wasInterrupted) Thread.currentThread().interrupt()
-        return RunReport(snapshotId, 0L, 0L,
-          System.currentTimeMillis() - t0, cancelled = true)
-    } finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(jobGroupFor(snapshotId),
+        s"graft extraction snapshot=$snapshotId", interruptOnCancel = true)
+      try {
+        ExtractJob.writeExtracted(extracted, s"$outRoot/extracted")
+      } catch {
+        case e: Throwable if isCancellation(e) =>
+          spark.sparkContext.clearJobGroup()
+          // interruptOnCancel may have left the interrupt pending on THIS
+          // driver thread — clear it, or the mark-write job below is
+          // immediately killed and the cancel is indistinguishable from a
+          // crash (the exact failure mode A10 exists to prevent)
+          val wasInterrupted = Thread.interrupted()
+          // mark-write failures must not mask the graceful-cancel report:
+          // resume correctness never depends on the marks (only 'completed'
+          // rows skip buckets), so log and carry on
+          try
+            ExtractJob.cancelledLineage(spark, bucketIds, snapshotId,
+                System.currentTimeMillis() - t0)
+              .write.mode(SaveMode.Append).parquet(lineagePath)
+          catch {
+            case me: Exception =>
+              log.warn(s"cancelled-mark write failed for snapshot=$snapshotId " +
+                s"(resume unaffected; cancel-vs-crash distinction lost for this run)", me)
+          }
+          // the interrupt belongs to the CALLER (their cancellation signal)
+          // — restore it so the enclosing executor/Future still sees it
+          if (wasInterrupted) Thread.currentThread().interrupt()
+          return RunReport(snapshotId, 0L, 0L,
+            System.currentTimeMillis() - t0, cancelled = true)
+      } finally spark.sparkContext.clearJobGroup()
 
-    // lineage from what actually landed in this run's buckets — the
-    // bucket isin prunes the landed read to those partition directories
-    // instead of aggregating the whole output table every run
-    val landed = spark.read.parquet(s"$outRoot/extracted")
-      .filter(col("bucket").isin(bucketIds: _*))
+      // ≤ buckets rows: collected, then appended as a local frame; the
+      // report counts come from the same array
+      val lineage = ExtractJob.lineage(extracted, snapshotId)
+      val rows = lineage.collect()
+      val wallMs = System.currentTimeMillis() - t0
+      val wallIdx = lineage.schema.fieldIndex("wall_ms")
+      spark.createDataFrame(
+          rows.toSeq.map(r => Row.fromSeq(r.toSeq.updated(wallIdx, wallMs))).asJava,
+          lineage.schema)
+        .coalesce(1).write.mode(SaveMode.Append).parquet(lineagePath)
+      val docsProcessed = rows.map(_.getAs[Long]("doc_count")).sum
+      val bucketsDone = rows.length.toLong
+      appendSnapshotRow(spark, outRoot, snapshotId, docsProcessed, bucketsDone,
+        wallMs, profile.engine)
+
+      RunReport(snapshotId, docsProcessed, bucketsDone, wallMs)
+    } finally { extracted.unpersist(): Unit }
+  }
+
+  /** The end of a run with nothing left to do: no kernel, no write — but
+    * the run still gets its ledger row ("one row per run" includes no-op
+    * resumes).
+    */
+  private def noopRun(spark: SparkSession, outRoot: String, snapshotId: Long,
+      profile: ExtractKernel.Profile, t0: Long): RunReport = {
     val wallMs = System.currentTimeMillis() - t0
-    val lineageRows = ExtractJob
-      .lineage(landed.as[graft.model.Extracted], snapshotId)
-      .withColumn("wall_ms", lit(wallMs))
-      .select("snapshot_id", "bucket", "doc_count", "byte_count",
-        "ok_count", "fail_count", "failure_samples", "wall_ms", "status")
-    lineageRows.write.mode(SaveMode.Append).parquet(lineagePath)
-
-    // stats from the landed lineage rows (recomputing them scans the tiny
-    // written parquet — never the kernel again)
-    val statsRow = lineageRows
-      .agg(coalesce(sum(col("doc_count")), lit(0L)), count(lit(1))).collect()(0)
-    val docsProcessed = statsRow.getLong(0)
-    val bucketsDone = statsRow.getLong(1)
-    appendSnapshotRow(spark, outRoot, snapshotId, docsProcessed, bucketsDone,
-      wallMs, profile.engine)
-
-    RunReport(snapshotId, docsProcessed, bucketsDone, wallMs)
+    appendSnapshotRow(spark, outRoot, snapshotId, 0L, 0L, wallMs, profile.engine)
+    RunReport(snapshotId, 0L, 0L, wallMs)
   }
 
   /** One row in the run ledger (Iceberg snapshot-log analogue) — appended
@@ -300,9 +318,7 @@ object ExtractRunner {
     val lineagePath = s"$outRoot/lineage"
 
     val doneBuckets: Set[Int] =
-      try readLineage(spark, lineagePath)
-        .filter(col("snapshot_id") === snapshotId && col("status") === "completed")
-        .select(col("bucket")).distinct().as[Int].collect().toSet
+      try priorLineage(spark, lineagePath).fold(Set.empty[Int])(completedBuckets(_, snapshotId))
       catch { case _: Exception => Set.empty }
 
     // which buckets exist is directory metadata (partition values), not
@@ -313,11 +329,8 @@ object ExtractRunner {
 
     // no remaining work: a no-op resume must cost directory listings, not
     // a pass over the landed table — but it still gets its ledger row
-    if (todoBuckets.isEmpty) {
-      val wallMs = System.currentTimeMillis() - t0
-      appendSnapshotRow(spark, outRoot, snapshotId, 0L, 0L, wallMs, profile.engine)
-      return RunReport(snapshotId, 0L, 0L, wallMs)
-    }
+    if (todoBuckets.isEmpty)
+      return noopRun(spark, outRoot, snapshotId, profile, t0)
 
     // partition pruning: done-bucket directories are never opened
     val todo = spark.read.parquet(bucketedDir)
@@ -339,13 +352,10 @@ object ExtractRunner {
     * failure propagates — falling back there would reintroduce the
     * silent-empty-lookup failure this property exists to prevent.
     */
-  def tableBuckets(spark: SparkSession, outRoot: String): Int = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$outRoot/table_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaPath)) ExtractJob.DefaultBuckets
-    else spark.read.parquet(metaPath.toString)
+  def tableBuckets(spark: SparkSession, outRoot: String): Int =
+    if (!pathExists(spark, s"$outRoot/table_meta")) ExtractJob.DefaultBuckets
+    else spark.read.parquet(s"$outRoot/table_meta")
       .select(col("buckets")).collect()(0).getInt(0)
-  }
 
   // the modulus is immutable per table — resolve once per outRoot so the
   // point-lookup hot path doesn't pay a parquet read per call
@@ -361,16 +371,15 @@ object ExtractRunner {
     */
   private def recordTableBuckets(spark: SparkSession, outRoot: String, buckets: Int): Unit = {
     import spark.implicits._
-    val existing = tableBuckets(spark, outRoot)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$outRoot/table_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaPath)) {
+    val metaPath = s"$outRoot/table_meta"
+    if (pathExists(spark, metaPath)) {
+      val existing = tableBuckets(spark, outRoot)
       require(existing == buckets,
         s"table at $outRoot was written with buckets=$existing; " +
           s"running with buckets=$buckets would mix partition moduli")
     } else {
       Seq(buckets).toDF("buckets")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(metaPath.toString)
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(metaPath)
     }
     bucketsCache.put(outRoot, buckets): Unit
   }
@@ -412,9 +421,6 @@ object ExtractRunner {
         col("n_failed_pages"), col("engine"))
   }
 
-  /** Operational status — the status endpoint's aggregate view, from
-    * lineage alone (never scans the data table).
-    */
   /** Lineage reader tolerant of mixed schemas: a dir holding pre-status
     * (8-column) files plus new rows must NOT have parquet's
     * single-footer schema inference silently drop the status column —
@@ -430,6 +436,33 @@ object ExtractRunner {
     else df.withColumn("status", lit("completed"))
   }
 
+  /** Prior lineage for a run. None on a first run — the missing dir is
+    * checked, not caught, so no path-not-found stack trace is logged — and
+    * None when an existing dir is unreadable (the run then treats every
+    * bucket as not done).
+    */
+  private def priorLineage(spark: SparkSession, path: String): Option[DataFrame] =
+    if (!pathExists(spark, path)) None
+    else try Some(readLineage(spark, path)) catch { case _: Exception => None }
+
+  /** Buckets with a 'completed' lineage row for this snapshot (≤ buckets
+    * ids, collected to the driver).
+    */
+  private def completedBuckets(lineage: DataFrame, snapshotId: Long): Set[Int] = {
+    import lineage.sparkSession.implicits._
+    lineage
+      .filter(col("snapshot_id") === snapshotId && col("status") === "completed")
+      .select(col("bucket")).distinct().as[Int].collect().toSet
+  }
+
+  private def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Operational status — the status endpoint's aggregate view, from
+    * lineage alone (never scans the data table).
+    */
   def jobStatus(spark: SparkSession, outRoot: String): DataFrame =
     readLineage(spark, s"$outRoot/lineage")
       .groupBy(col("snapshot_id"))

@@ -259,7 +259,7 @@ object Warc {
     }
   }
 
-  private def stageRecords[T](ds: Dataset[T], dir: String, parts: Int,
+  private[graft] def stageRecords[T](ds: Dataset[T], dir: String, parts: Int,
       key: org.apache.spark.sql.Column)(toRecord: T => WarcRecord): Unit = {
     val hconf = ds.sparkSession.sparkContext.hadoopConfiguration
     val dirPath = new org.apache.hadoop.fs.Path(dir)
@@ -271,15 +271,30 @@ object Warc {
       val fin = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.warc.gz")
       // attempt-unique temp + rename-on-success: a retried or speculated
       // attempt can never interleave bytes with another attempt's file
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        f".part-$pid%05d.warc.gz.inprogress-${tc.taskAttemptId()}")
+      val tmpPrefix = f".part-$pid%05d.warc.gz.inprogress-"
+      val tmp = new org.apache.hadoop.fs.Path(dir, s"$tmpPrefix${tc.taskAttemptId()}")
       val fs = fin.getFileSystem(bcConf.value.value)
-      val out = new java.io.BufferedOutputStream(fs.create(tmp, true))
-      try write(it.map(toRecord), out, gzipMembers = true)
-      finally out.close()
-      if (fs.exists(fin)) fs.delete(fin, false): Unit
-      if (!fs.rename(tmp, fin))
-        throw new java.io.IOException(s"rename $tmp -> $fin failed")
+      try {
+        val out = new java.io.BufferedOutputStream(fs.create(tmp, true))
+        try write(it.map(toRecord), out, gzipMembers = true)
+        finally out.close()
+        if (fs.exists(fin)) fs.delete(fin, false): Unit
+        if (!fs.rename(tmp, fin))
+          throw new java.io.IOException(s"rename $tmp -> $fin failed")
+      } catch {
+        // a failed attempt removes its own temp file
+        case e: Throwable =>
+          try fs.delete(tmp, false): Unit
+          catch { case d: Exception => e.addSuppressed(d) }
+          throw e
+      }
+      // the partition is committed: sweep temp files of earlier attempts
+      // that died before cleaning up (a killed executor). Sweeping after
+      // the commit, not before the write, never removes the file of an
+      // attempt that could still win.
+      fs.listStatus(fin.getParent).iterator
+        .filter(_.getPath.getName.startsWith(tmpPrefix))
+        .foreach(st => fs.delete(st.getPath, false): Unit)
     }
   }
 

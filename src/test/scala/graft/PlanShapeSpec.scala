@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +20,25 @@ class PlanShapeSpec extends AnyFunSuite {
   private def physicalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The distinct file scans the executed plans ran, by object identity.
+    * Walks into AQE's final plan and query stages, and into a cached
+    * relation's plan — whose scan is shared by every query reading the
+    * cache, and which a plan string would repeat once per query.
+    */
+  private def fileScans(qes: Seq[QueryExecution]): Seq[FileSourceScanExec] = {
+    val seen = new java.util.IdentityHashMap[FileSourceScanExec, Unit]()
+    def walk(p: SparkPlan): Unit = p match {
+      case s: FileSourceScanExec => seen.put(s, ())
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cacheBuilder.cachedPlan)
+      case other => (other.children ++ other.subqueries).foreach(walk)
+    }
+    qes.foreach(qe => walk(qe.executedPlan))
+    import scala.jdk.CollectionConverters._
+    seen.keySet.asScala.toSeq
+  }
+
   test("extract: no exchange before the kernel; scan reads only url+html") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_plan").toString
     PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$tmp/pages")
@@ -31,35 +53,17 @@ class PlanShapeSpec extends AnyFunSuite {
   test("classic run: pages payload (html) is scanned exactly once, by the kernel") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_plan_once").toString
     PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$tmp/pages")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString): Unit
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      graft.operators.ExtractRunner.run(spark, s"$tmp/pages", s"$tmp/out", buckets = 8)
-      // the listener bus is async: poll until the captured set stops
-      // growing (two consecutive equal sizes with something captured)
-      var last = -1
-      var stable = 0
-      val deadline = System.currentTimeMillis() + 15000
-      while (stable < 2 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(200)
-        val n = plans.size
-        if (n == last && n > 0) stable += 1 else stable = 0
-        last = n
-      }
-      import scala.jdk.CollectionConverters._
-      val payloadScans = plans.asScala.count(p =>
-        p.contains(s"$tmp/pages") && p.contains("html:binary"))
-      assert(payloadScans == 1,
-        s"expected exactly one html-reading scan of the pages table, got $payloadScans:\n" +
-          plans.asScala.filter(p => p.contains(s"$tmp/pages")).mkString("\n----\n"))
-    } finally spark.listenerManager.unregister(listener)
+    val (_, qes) = TestSpark.capturingQueries(
+      graft.operators.ExtractRunner.run(spark, s"$tmp/pages", s"$tmp/out", buckets = 8))
+    // distinct executed scan nodes, not plan strings: the write and the
+    // lineage aggregate both read the persisted kernel output, and each
+    // plan string repeats the cached relation's one scan
+    val payloadScans = fileScans(qes).filter(s =>
+      s.relation.location.rootPaths.exists(_.toUri.getPath == s"$tmp/pages") &&
+        s.requiredSchema.fieldNames.contains("html"))
+    assert(payloadScans.size == 1,
+      s"expected exactly one html-reading scan of the pages table, got ${payloadScans.size}:\n" +
+        qes.map(_.executedPlan.toString).filter(_.contains(s"$tmp/pages")).mkString("\n----\n"))
   }
 
   test("statusBatch: bucket isin prunes partitions at the scan") {

@@ -13,6 +13,22 @@ import graft.sources.PageSynth
 class RunnerSpec extends AnyFunSuite {
   import TestSpark.{sf0001, spark}
 
+  /** The completed lineage rows a run wrote equal `ExtractJob.lineage`
+    * over the read-back landed table (wall_ms excluded): lineage taken
+    * from the rows the write consumed is exactly what landed.
+    */
+  private def assertLineageMatchesLanded(out: String, snapshotId: Long): Unit = {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .filter(col("snapshot_id") === snapshotId && col("status") === "completed")
+      .drop("wall_ms").orderBy(col("bucket")).collect().map(_.toSeq).toSeq
+    val written = rows(spark.read.parquet(s"$out/lineage"))
+    val landed = rows(ExtractJob.lineage(
+      spark.read.parquet(s"$out/extracted").as[graft.model.Extracted], snapshotId))
+    assert(written.nonEmpty && written == landed,
+      s"lineage rows differ from the landed table:\n${written.mkString("\n")}\n--\n${landed.mkString("\n")}")
+  }
+
   test("runner: full run, then no-op rerun, then crash-resume equivalence") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_runner").toString
@@ -25,11 +41,20 @@ class RunnerSpec extends AnyFunSuite {
       .select(col("url"), md5(col("text")).as("h"), col("status"))
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
     assert(table1.size == 500)
+    assertLineageMatchesLanded(s"$base/out", r1.snapshotId)
+    assert(spark.sharedState.cacheManager.isEmpty, "a run must not leave persisted data behind")
 
-    // run 2 over the same input snapshot: resume filter drops everything
-    val r2 = ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8)
+    // run 2 over the same input snapshot: every bucket is done, so the
+    // no-op resume reads lineage alone — no scan of the pages, and never
+    // a read of the landed table
+    val (r2, resumeQueries) = TestSpark.capturingQueries(
+      ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8))
     assert(r2.snapshotId == r1.snapshotId)
     assert(r2.docsProcessed == 0 && r2.bucketsDone == 0)
+    val resumeRead = TestSpark.pathsRead(resumeQueries)
+    assert(resumeRead.contains(s"$base/out/lineage") &&
+        !resumeRead.exists(p => p == s"$base/pages" || p.startsWith(s"$base/out/extracted")),
+      s"a no-op resume must read lineage, never pages or extracted/: $resumeRead")
     val table2 = spark.read.parquet(s"$base/out/extracted")
       .select(col("url"), md5(col("text")).as("h"), col("status"))
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
@@ -53,6 +78,7 @@ class RunnerSpec extends AnyFunSuite {
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
     assert(table3 == table1, "crash-resume must converge to the uninterrupted result")
     assert(spark.read.parquet(s"$crash/out/lineage").count() == 8)
+    assertLineageMatchesLanded(s"$crash/out", r3.snapshotId)
 
     // snapshots ledger: one row per run
     assert(spark.read.parquet(s"$base/out/snapshots").count() == 2)
@@ -134,6 +160,15 @@ class RunnerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("不支持的OCR类型: tesseract5"))
   }
 
+  test("runner: a non-positive bucket count is rejected at submission") {
+    val base = java.nio.file.Files.createTempDirectory("graft_buckets0").toString
+    PageSynth.pages(spark, sf0001).limit(1).write.mode("overwrite").parquet(s"$base/pages")
+    val e = intercept[IllegalArgumentException] {
+      ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 0)
+    }
+    assert(e.getMessage.contains("buckets must be positive, got 0"))
+  }
+
   test("runner: legacy status-less lineage files mix safely with new rows") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_legacy").toString
@@ -188,6 +223,7 @@ class RunnerSpec extends AnyFunSuite {
     ExtractRunner.cancel(spark, snapId)
     val r = Await.result(fut, 180.seconds)
     assert(r.cancelled, "cancel must land while the write job is running")
+    assert(spark.sharedState.cacheManager.isEmpty, "a cancelled run must not leave persisted data behind")
 
     // cancelled marks visible PRE-resume: status='cancelled' rows, zero
     // completed — distinguishable from a crash (which writes nothing)

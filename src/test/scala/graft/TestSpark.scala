@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for all Spark-backed suites (JVM-wide; sbt
   * forks one test JVM, so suites share startup cost).
@@ -18,4 +21,45 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` and returns it with every query execution that succeeded
+    * while it ran. The listener bus is async: after `body`, poll until the
+    * captured set stops growing (two consecutive equal, non-zero sizes).
+    */
+  def capturingQueries[T](body: => T): (T, Seq[QueryExecution]) = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qes.add(qe): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      var last = -1
+      var stable = 0
+      val deadline = System.currentTimeMillis() + 15000
+      while (stable < 2 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(200)
+        val n = qes.size
+        if (n == last && n > 0) stable += 1 else stable = 0
+        last = n
+      }
+      import scala.jdk.CollectionConverters._
+      (out, qes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Root paths of every file relation the queries read, subqueries
+    * included. Taken from the analyzed plans: AQE can drop a scan that
+    * already ran from its final physical plan (a stage found empty at
+    * runtime collapses to an empty relation), never from these.
+    */
+  def pathsRead(qes: Seq[QueryExecution]): Seq[String] =
+    qes.flatMap(_.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths.map(_.toUri.getPath)
+        case _ => Nil
+      }
+    }.flatten).distinct
 }

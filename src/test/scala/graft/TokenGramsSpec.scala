@@ -89,6 +89,15 @@ class TokenGramsSpec extends AnyFunSuite {
     assert(n == 0L)
   }
 
+  test("token_grams with n < 1 fails at analysis, not in executors") {
+    for (n <- Seq(0, -3)) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        texts.toDF("text").select(TokenGrams.tokenGrams(s, col("text"), n)).collect()
+      }
+      assert(e.getMessage.contains(s"token_grams requires n >= 1, got $n"), e.getMessage)
+    }
+  }
+
   test("interpreted eval (no codegen) agrees with codegen path") {
     // nullSafeEval is exercised through a filter that defeats codegen:
     // build the expression directly and eval it

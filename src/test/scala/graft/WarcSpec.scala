@@ -155,6 +155,36 @@ class WarcSpec extends AnyFunSuite {
     }
   }
 
+  test("staging leaves no .inprogress- temp files: failed attempts and dead leftovers") {
+    import TestSpark.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("warcspec_tmp").toString
+    def temps = new java.io.File(dir).list().filter(_.contains(".inprogress-")).toSeq
+    try {
+      val ids = spark.range(0, 50).as[Long]
+      val record = (i: Long) => WarcRecord(s"https://w/t$i", "response", s"body $i".getBytes("UTF-8"))
+      // one partition, one attempt: the record mapper throws mid-stream
+      intercept[Exception] {
+        Warc.stageRecords(ids, dir, parts = 1, col("id")) { i =>
+          if (i == 17L) throw new IllegalStateException("mapper failed") else record(i)
+        }
+      }
+      assert(temps.isEmpty, s"a failed attempt left its temp file: $temps")
+      // a temp file an earlier, killed attempt never cleaned up
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, ".part-00000.warc.gz.inprogress-999999"), Array[Byte](1, 2))
+      Warc.stageRecords(ids, dir, parts = 1, col("id"))(record)
+      assert(temps.isEmpty, s"a committed partition kept an earlier attempt's temp file: $temps")
+      assert(Warc.pages(spark, dir).count() == 50)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
   test("ExtractRunner accepts a WARC input dir: output identical to the parquet path") {
     import TestSpark.spark
     import spark.implicits._
