@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.kernel.ExtractKernel
 import graft.model.Page
-import graft.sources.PageSynth
 
 import scala.jdk.CollectionConverters._
 
@@ -146,13 +145,13 @@ object ExtractRunner {
     val todoBuckets = todo
       .select(ExtractJob.bucketCol(buckets).as("bucket")).distinct()
       .as[Int].collect().toSeq.sorted
-    // no remaining work → don't spin up the kernel/write at all (mirrors
-    // runBucketed's no-op resume); the run still gets its ledger row —
-    // "one row per run" includes no-op resumes. A FIRST run over an
-    // empty pages table therefore creates no extracted/ dir (nothing to
-    // describe — a partitioned write of zero rows emits no schema to
-    // read back anyway); status lookups against a never-written table
-    // surface path-not-found, which is the honest answer.
+    // no remaining work → don't spin up the kernel/write at all; the run
+    // still gets its ledger row — "one row per run" includes no-op
+    // resumes. A FIRST run over an empty pages table therefore creates
+    // no extracted/ dir (nothing to describe — a partitioned write of
+    // zero rows emits no schema to read back anyway); status lookups
+    // against a never-written table surface path-not-found, which is the
+    // honest answer.
     if (todoBuckets.isEmpty)
       return noopRun(spark, outRoot, snapshotId, profile, t0)
 
@@ -160,7 +159,7 @@ object ExtractRunner {
     writeAndFinalize(spark, outRoot, snapshotId, extracted, todoBuckets, profile, t0)
   }
 
-  /** Shared tail of both run paths: write under the cancel guard, then
+  /** The tail of a run with work left: write under the cancel guard, then
     * derive lineage from the rows that write consumed, append the
     * snapshots ledger row, and report.
     *
@@ -183,7 +182,7 @@ object ExtractRunner {
       outRoot: String,
       snapshotId: Long,
       extracted: org.apache.spark.sql.Dataset[graft.model.Extracted],
-      bucketIds: Seq[Int], // concrete — both run paths compute it before the guarded write
+      bucketIds: Seq[Int], // concrete — computed before the guarded write
       profile: ExtractKernel.Profile,
       t0: Long): RunReport = {
     val lineagePath = s"$outRoot/lineage"
@@ -266,86 +265,10 @@ object ExtractRunner {
       .write.mode(SaveMode.Append).parquet(s"$outRoot/snapshots")
   }
 
-  /** One-time bucketed ingest: repartition pages by the stable url-hash
-    * bucket and write partitioned by it. With the input laid out this
-    * way, `runBucketed`'s resume prunes whole DIRECTORIES of done
-    * buckets at the scan — rerun cost becomes proportional to the
-    * REMAINING work, where the plain `run` path's anti-join still scans
-    * (then discards) the full pages table. At 100 TB with 99% of buckets
-    * done, that is the difference between re-reading 1 TB and 100 TB.
-    * Returns the ingested doc count.
-    */
-  def ingest(spark: SparkSession, pagesDir: String, outRoot: String,
-      buckets: Int = ExtractJob.DefaultBuckets): Long = {
-    // the ingest FIXES the table's modulus — record it so runBucketed and
-    // the lookups can never disagree with the directory layout
-    recordTableBuckets(spark, outRoot, buckets)
-    val pages = spark.read.parquet(pagesDir)
-    pages
-      .withColumn("bucket", ExtractJob.bucketCol(buckets))
-      .repartition(math.max(spark.sparkContext.defaultParallelism, 1), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"$outRoot/pages_bucketed")
-    spark.read.parquet(s"$outRoot/pages_bucketed").count()
-  }
-
-  /** Resumable run over a bucketed ingest (`ingest` must have run once).
-    * Identical output contract to `run` — same kernel, same lineage,
-    * same dynamic-overwrite idempotency — but the resume filter is a
-    * partition-pruning scan over `pages_bucketed`, not an anti-join over
-    * every row.
-    */
-  def runBucketed(
-      spark: SparkSession,
-      outRoot: String,
-      buckets: Int = -1,
-      profile: ExtractKernel.Profile = ExtractKernel.Standard): RunReport = {
-    import spark.implicits._
-    require(graft.kernel.MergeSpec.ValidEngines(profile.engine),
-      graft.kernel.MergeSpec.invalidOcrType(profile.engine))
-    val t0 = System.currentTimeMillis()
-    val bucketedDir = s"$outRoot/pages_bucketed"
-    // the modulus comes from the table the ingest laid out; an explicit
-    // caller value must MATCH it (a mismatch would re-bucket rows with a
-    // different modulus than the directory layout and corrupt the
-    // dynamic-overwrite contract)
-    val tb = tableBuckets(spark, outRoot)
-    require(buckets <= 0 || buckets == tb,
-      s"table at $outRoot was ingested with buckets=$tb, caller passed $buckets")
-    val effBuckets = tb
-    val snapshotId = ExtractJob.snapshotIdOf(spark, bucketedDir)
-    val lineagePath = s"$outRoot/lineage"
-
-    val doneBuckets: Set[Int] =
-      try priorLineage(spark, lineagePath).fold(Set.empty[Int])(completedBuckets(_, snapshotId))
-      catch { case _: Exception => Set.empty }
-
-    // which buckets exist is directory metadata (partition values), not
-    // data — a partition-column-only projection reads zero payload bytes
-    val presentBuckets = spark.read.parquet(bucketedDir)
-      .select(col("bucket")).distinct().as[Int].collect().toSet
-    val todoBuckets = (presentBuckets -- doneBuckets).toSeq.sorted
-
-    // no remaining work: a no-op resume must cost directory listings, not
-    // a pass over the landed table — but it still gets its ledger row
-    if (todoBuckets.isEmpty)
-      return noopRun(spark, outRoot, snapshotId, profile, t0)
-
-    // partition pruning: done-bucket directories are never opened
-    val todo = spark.read.parquet(bucketedDir)
-      .filter(col("bucket").isin(todoBuckets: _*))
-      .select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"))
-      .as[Page]
-
-    val extracted = ExtractJob.extract(spark, todo, effBuckets, profile)
-    writeAndFinalize(spark, outRoot, snapshotId, extracted, todoBuckets, profile, t0)
-  }
-
   /** The table's bucket count is a TABLE property, not a caller guess: a
     * lookup hashing with the wrong modulus prunes to directories that
-    * don't contain the url and silently returns nothing. run()/ingest()
-    * record the count in `table_meta`; lookups resolve it from there
+    * don't contain the url and silently returns nothing. run() records
+    * the count in `table_meta`; lookups resolve it from there
     * unless the caller passes an explicit positive value.
     *
     * Absence (a legacy table) falls back to the default; an actual READ

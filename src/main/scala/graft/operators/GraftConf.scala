@@ -7,26 +7,7 @@ import org.apache.spark.sql.SparkSession
   * shuffle sizing", skew handling) and is harmless at local scale.
   */
 object GraftConf {
-
-  /** Shuffle/spill scratch on memory-backed storage when the host offers
-    * it (the Spark-on-K8s `emptyDir medium=Memory` deployment pattern):
-    * the dedup-at-scale profile showed ~22% of active samples inside
-    * shuffle-file open/commit syscalls on the disk-backed default. Real
-    * clusters override this via `SPARK_LOCAL_DIRS`, which Spark gives
-    * precedence over `spark.local.dir` — so the setting is inert exactly
-    * where the cluster manager provisions scratch disks.
-    */
-  private def memScratch: Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val d = new java.io.File(shm, "graft-spark-local")
-      d.mkdirs()
-      Some(d.getAbsolutePath)
-    } else None
-  }
-
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    memScratch.fold(b)(d => b.config("spark.local.dir", d))
+  def apply(b: SparkSession.Builder): SparkSession.Builder = b
     // AQE: runtime re-planning — coalesce undersized shuffle partitions,
     // split skewed ones, and re-size joins from observed statistics.
     .config("spark.sql.adaptive.enabled", "true")

@@ -5,12 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Page
 
+import java.io.EOFException
+import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
+
 /** WARC/1.0 source — the container Common-Crawl-style corpora actually
   * arrive in (the north rule's input shape). From-scratch writer and
   * reader for response records, in both plain and per-record
   * gzip-member framing (the standard `.warc.gz` layout: each record its
-  * own gzip member, members concatenated; `GZIPInputStream` reads the
-  * member chain natively).
+  * own gzip member, members concatenated; the reader chains members
+  * explicitly, `GzipMembers`).
   *
   * Scale shape: WARC gzip members are NOT splittable mid-file, so the
   * unit of parallelism is the file — exactly how production crawls are
@@ -45,10 +48,6 @@ object Warc {
 
   private val Crlf = "\r\n".getBytes("US-ASCII")
 
-  /** Serialize records; `gzipMembers` wraps EACH record in its own gzip
-    * member (the `.warc.gz` convention that keeps files seekable per
-    * record index).
-    */
   /** Shields the shared output from per-member close(): closing a
     * GZIPOutputStream is the only way to release its native Deflater,
     * but it must not close the underlying file between members.
@@ -60,6 +59,10 @@ object Warc {
     override def close(): Unit = out.flush()
   }
 
+  /** Serialize records; `gzipMembers` wraps EACH record in its own gzip
+    * member (the `.warc.gz` convention that keeps files seekable per
+    * record index).
+    */
   def write(records: Iterator[WarcRecord], out: java.io.OutputStream,
       gzipMembers: Boolean): Unit = {
     records.foreach { r =>
@@ -90,34 +93,87 @@ object Warc {
   /** Header-size bound: a record header past this is malformed. */
   val MaxHeaderBytes: Int = 65536
 
+  /** Concatenated gzip members chained to true EOF, one raw `Inflater` each
+    * (input read past a member's end is pushed back); a malformed or torn
+    * member throws. `GZIPInputStream` ends the chain silently at a torn next
+    * header, and before JDK-7036144 whenever `available()` reports 0.
+    */
+  private final class GzipMembers(in: java.io.PushbackInputStream) extends java.io.InputStream {
+    private val buf = new Array[Byte](65536)
+    private var bufLen = 0
+    private val inf = new Inflater(true)
+    private val crc = new CRC32()
+    private val one = new Array[Byte](1)
+    private var eof = !nextMember()
+
+    private def u8(): Int = { val b = in.read(); if (b < 0) throw new EOFException("truncated gzip"); b }
+    private def u16(): Int = u8() | (u8() << 8)
+    private def u32(): Long = u16().toLong | (u16().toLong << 16)
+
+    /** Consume the next member's RFC 1952 header; false at true EOF. */
+    private def nextMember(): Boolean = {
+      val b0 = in.read()
+      if (b0 >= 0) {
+        if (b0 != 0x1f || u8() != 0x8b || u8() != 8) throw new ZipException("not a gzip member")
+        val flg = u8()
+        in.skipNBytes(6) // MTIME, XFL, OS
+        if ((flg & 4) != 0) in.skipNBytes(u16().toLong) // FEXTRA
+        if ((flg & 8) != 0) while (u8() != 0) ()        // FNAME
+        if ((flg & 16) != 0) while (u8() != 0) ()       // FCOMMENT
+        if ((flg & 2) != 0) in.skipNBytes(2)            // FHCRC
+        inf.reset(); crc.reset()
+      }
+      b0 >= 0
+    }
+
+    override def read(): Int = if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      while (!eof && len > 0) {
+        val n = try inf.inflate(b, off, len)
+          catch { case e: DataFormatException => throw new ZipException(e.getMessage) }
+        if (n > 0) { crc.update(b, off, n); return n }
+        if (inf.finished()) {
+          in.unread(buf, bufLen - inf.getRemaining, inf.getRemaining)
+          if (u32() != crc.getValue || u32() != (inf.getBytesWritten & 0xffffffffL))
+            throw new ZipException("corrupt gzip trailer")
+          eof = !nextMember()
+        } else { // raw inflate: no dictionary, so 0 bytes out means it needs input
+          bufLen = in.read(buf)
+          if (bufLen < 0) throw new EOFException("truncated gzip")
+          inf.setInput(buf, 0, bufLen)
+        }
+      }
+      if (len == 0) 0 else -1
+    }
+
+    override def close(): Unit = { inf.end(); in.close() }
+  }
+
   /** Streaming record iterator over a WARC byte stream (plain or
     * gzip-member framed — the gzip sniff reads two bytes through a
-    * pushback wrapper; `GZIPInputStream` walks the member chain
-    * natively). Memory is O(MaxRecordPayload) PER RECORD, never O(file):
-    * round 5 inflated the whole file into one buffer with a silent drop
-    * past 1 GiB decompressed, so a standard production ~1 GB `.warc.gz`
-    * (3-4 GB decompressed) silently contributed zero pages. Totality
+    * pushback wrapper; `GzipMembers` walks the member chain). Memory
+    * is O(MaxRecordPayload) PER RECORD, never O(file). Totality
     * contract (every branch counted, never silent):
     *   - torn tail / malformed header / unparsable or negative
     *     Content-Length / corrupt gzip → iteration ends, intact prefix
     *     kept, `onTorn` fired once;
     *   - parseable Content-Length over `MaxRecordPayload` → the payload
     *     is SKIPPED (no allocation), `onOversize` fired, iteration
-    *     continues with the next record (round 5 dropped every
-    *     subsequent intact record too).
+    *     continues with the next record.
     */
   def recordIterator(raw: java.io.InputStream,
       onOversize: () => Unit = () => (),
       onTorn: () => Unit = () => ()): Iterator[WarcRecord] = {
     val in: java.io.InputStream =
       try {
-        val pb = new java.io.PushbackInputStream(raw, 2)
+        // capacity: GzipMembers pushes back up to one buffer of input
+        val pb = new java.io.PushbackInputStream(raw, 65536)
         val b0 = pb.read()
         val b1 = pb.read()
         if (b1 >= 0) pb.unread(b1)
         if (b0 >= 0) pb.unread(b0)
-        if (b0 == 0x1f && b1 == 0x8b)
-          new java.util.zip.GZIPInputStream(pb, 65536)
+        if (b0 == 0x1f && b1 == 0x8b) new GzipMembers(pb)
         else pb
       } catch { case _: java.io.IOException => onTorn(); null }
     if (in == null) return Iterator.empty
@@ -228,23 +284,8 @@ object Warc {
     recordIterator(new java.io.ByteArrayInputStream(bytes)).toVector
   }
 
-  /** Write a pages frame as `parts` gzip-member WARC files under `dir`
-    * (distributed: one file per output partition, payloads never
-    * collect to the driver).
-    */
-  /** Shared distributed staging core: `toRecord` rows of any frame
-    * (already url-keyed by the caller's repartition) as gzip-member WARC
-    * files, one per partition, written through the Hadoop filesystem
-    * (NOT executor-local java.io — on a real cluster the staged files
-    * must land where every reader task can list them; overwrite=true
-    * keeps re-staging idempotent; task-side Configuration resolves the
-    * default FS from the classpath's core-site, the standard pattern).
-    * ONE implementation so the staging contract snapshotIdOf depends on
-    * (fixed part names + fresh length/mtime) cannot diverge per caller.
-    */
   /** Driver-set Hadoop conf carried to executors (a fresh executor-side
-    * `new Configuration()` would drop fs.defaultFS / object-store
-    * credentials — round-5 advice).
+    * `new Configuration()` would drop fs.defaultFS / object-store credentials).
     */
   private final class SerConf(@transient private var conf: org.apache.hadoop.conf.Configuration)
       extends java.io.Serializable {
@@ -259,6 +300,16 @@ object Warc {
     }
   }
 
+  /** Shared distributed staging core: `toRecord` rows of any frame
+    * (already url-keyed by the caller's repartition) as gzip-member WARC
+    * files, one per partition, written through the Hadoop filesystem
+    * (NOT executor-local java.io — on a real cluster the staged files
+    * must land where every reader task can list them; overwrite=true
+    * keeps re-staging idempotent; task-side Configuration resolves the
+    * default FS from the classpath's core-site, the standard pattern).
+    * ONE implementation so the staging contract snapshotIdOf depends on
+    * (fixed part names + fresh length/mtime) cannot diverge per caller.
+    */
   private[graft] def stageRecords[T](ds: Dataset[T], dir: String, parts: Int,
       key: org.apache.spark.sql.Column)(toRecord: T => WarcRecord): Unit = {
     val hconf = ds.sparkSession.sparkContext.hadoopConfiguration
@@ -298,6 +349,10 @@ object Warc {
     }
   }
 
+  /** Write a pages frame as `parts` gzip-member WARC files under `dir`
+    * (distributed: one file per output partition, payloads never
+    * collect to the driver).
+    */
   def stagePages(pages: Dataset[Page], dir: String, parts: Int): Unit =
     stageRecords(pages, dir, parts, col("url"))(p =>
       WarcRecord(p.url, "response",
@@ -352,8 +407,7 @@ object Warc {
 
   /** Read a directory of WARC files as records of one type: one task
     * per file (the non-splittable-member reality), records STREAMED off
-    * the open file handle in-task — memory bounded per record, not per
-    * file (round 5 buffered and inflated whole files).
+    * the open file handle in-task — memory bounded per record, not per file.
     */
   def records(s: SparkSession, dir: String,
       warcType: String): Dataset[(String, Array[Byte])] = {

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{ExtractJob, ExtractRunner}
 import graft.sources.PageSynth
 
+import scala.jdk.CollectionConverters._
+
 /** End-to-end runner: snapshot → resume → extract → bucketed write →
   * lineage append → snapshots ledger. The kill-anywhere/rerun-idempotent
   * contract of the north rule at job granularity.
@@ -110,44 +112,25 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
-  test("runner: bucketed ingest — same output as plain run; resume prunes done-bucket directories") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-    PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
-
-    // reference output from the classic (anti-join) path
-    val refOut = s"$base/ref"
-    ExtractRunner.run(spark, s"$base/pages", refOut, buckets = 8)
-
-    // bucketed path: ingest once, run, must land the identical table
+  test("runner: a second bucket count on an existing table fails at submission, writing nothing") {
+    val base = java.nio.file.Files.createTempDirectory("graft_moduli").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
     val out = s"$base/out"
-    val n = ExtractRunner.ingest(spark, s"$base/pages", out, buckets = 8)
-    assert(n == 500)
-    val r1 = ExtractRunner.runBucketed(spark, out, buckets = 8)
-    assert(r1.docsProcessed == 500 && r1.bucketsDone == 8)
-    def tableOf(root: String) = spark.read.parquet(s"$root/extracted")
-      .select(col("url"), md5(col("text")).as("h"), col("status"))
-      .as[(String, String, String)].collect().sortBy(_._1).toSeq
-    assert(tableOf(out) == tableOf(refOut),
-      "bucketed path must produce the identical extracted table")
-
-    // crash-resume: drop lineage for half the buckets, rerun — and the
-    // resume scan must PRUNE the done-bucket directories, not read them
-    val lin = spark.read.parquet(s"$out/lineage")
-    lin.filter(col("bucket") < 4).write.mode("overwrite").parquet(s"$base/lin_half")
-    spark.read.parquet(s"$base/lin_half").write.mode("overwrite").parquet(s"$out/lineage")
-    val done = (0 until 4)
-    val prunedScan = spark.read.parquet(s"$out/pages_bucketed")
-      .filter(!col("bucket").isin(done: _*))
-    val plan = prunedScan.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
-      s"resume scan must partition-prune:\n$plan")
-    val r2 = ExtractRunner.runBucketed(spark, out, buckets = 8)
-    assert(r2.bucketsDone == 4, s"resume should process the 4 missing buckets, got ${r2.bucketsDone}")
-    assert(tableOf(out) == tableOf(refOut), "bucketed resume must converge")
-    // no-op rerun
-    val r3 = ExtractRunner.runBucketed(spark, out, buckets = 8)
-    assert(r3.docsProcessed == 0 && r3.bucketsDone == 0)
+    ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+    def landed() = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toSet
+      finally files.close()
+    }
+    def rows() = Seq("extracted", "lineage", "snapshots").map(t => spark.read.parquet(s"$out/$t").count())
+    val (filesBefore, rowsBefore) = (landed(), rows())
+    val e = intercept[IllegalArgumentException] {
+      ExtractRunner.run(spark, s"$base/pages", out, buckets = 4)
+    }
+    assert(e.getMessage.contains("buckets=8; running with buckets=4 would mix partition moduli"), e.getMessage)
+    assert(rows() == rowsBefore && landed() == filesBefore,
+      "a rejected run must write no extracted, lineage or snapshots rows")
+    assert(ExtractRunner.tableBuckets(spark, out) == 8)
   }
 
   test("runner: invalid engine rejected at submission with the reference literal (routes.py:39)") {

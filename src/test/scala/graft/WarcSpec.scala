@@ -104,6 +104,51 @@ class WarcSpec extends AnyFunSuite {
     assert(clean.length == samples.length && torn == 0)
   }
 
+  test("gzip members chain to true EOF on a stream whose available() is 0") {
+    // one member per read() and available() == 0: member sniffing that
+    // asks available() stops after the first member and drops the rest
+    // with no torn-tail count
+    val members = samples.map { r =>
+      val o = new java.io.ByteArrayOutputStream()
+      Warc.write(Iterator.single(r), o, gzipMembers = true)
+      o.toByteArray
+    }
+    final class MemberPerRead(ms: Seq[Array[Byte]]) extends java.io.InputStream {
+      private var m = 0
+      private var pos = 0
+      override def available(): Int = 0
+      override def read(): Int = {
+        val b = new Array[Byte](1)
+        if (read(b, 0, 1) < 0) -1 else b(0) & 0xff
+      }
+      override def read(b: Array[Byte], off: Int, len: Int): Int =
+        if (len == 0) 0
+        else if (m == ms.length) -1
+        else {
+          val n = math.min(len, ms(m).length - pos)
+          System.arraycopy(ms(m), pos, b, off, n)
+          pos += n
+          if (pos == ms(m).length) { m += 1; pos = 0 }
+          n
+        }
+    }
+    var torn = 0
+    val got = Warc.recordIterator(new MemberPerRead(members), onTorn = () => torn += 1).toVector
+    assert(got.map(_.url) == samples.map(_.url) && torn == 0, s"torn=$torn got=${got.map(_.url)}")
+    got.zip(samples).foreach { case (g, w) => assert(g.payload.sameElements(w.payload), w.url) }
+    // a torn last member through the same stream: intact prefix, one count
+    val cut = members.init :+ members.last.take(members.last.length / 2)
+    torn = 0
+    val prefix = Warc.recordIterator(new MemberPerRead(cut), onTorn = () => torn += 1).toVector
+    assert(prefix.map(_.url) == samples.init.map(_.url) && torn == 1, s"torn=$torn")
+    // a member torn inside its 10-byte header: every record kept, one
+    // count (GZIPInputStream reads a malformed next header as clean EOF)
+    torn = 0
+    val headTorn = Warc.recordIterator(new MemberPerRead(members :+ members.head.take(5)),
+      onTorn = () => torn += 1).toVector
+    assert(headTorn.map(_.url) == samples.map(_.url) && torn == 1, s"torn=$torn")
+  }
+
   test("drop counters surface through the distributed read path") {
     import TestSpark.spark
     val dir = java.nio.file.Files.createTempDirectory("warcdrops").toString
