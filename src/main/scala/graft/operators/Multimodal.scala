@@ -94,12 +94,9 @@ object Multimodal {
   }
 
   /** Triage rollup: corpus composition by media type (the query a crawl
-    * operator runs before scheduling decode budgets).
+    * operator runs before scheduling decode budgets), from an
+    * already-computed (or materialized) meta frame.
     */
-  def mediaTriage(s: SparkSession, dir: String): DataFrame =
-    mediaTriageFrom(mediaMeta(s, dir).toDF())
-
-  /** Triage agg from an already-computed (or materialized) meta frame. */
   def mediaTriageFrom(meta: DataFrame): DataFrame =
     meta
       .groupBy(col("media_type"))

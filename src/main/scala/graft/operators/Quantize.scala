@@ -51,12 +51,9 @@ object Quantize {
   }
 
   /** Corpus-level fidelity report (the number you check before switching
-    * the ANN index to the quantized representation).
+    * the ANN index to the quantized representation), from an
+    * already-computed (or materialized) quantized frame.
     */
-  def quantizeStats(s: SparkSession, dir: String): DataFrame =
-    quantizeStatsFrom(quantized(s, dir))
-
-  /** Stats agg from an already-computed (or materialized) quantized frame. */
   def quantizeStatsFrom(q: DataFrame): DataFrame =
     q.agg(count(lit(1)).as("n_vectors"),
         round(avg(col("cos_fidelity")), 5).as("avg_cos_fidelity"),

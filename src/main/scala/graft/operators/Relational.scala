@@ -449,7 +449,6 @@ object Relational {
     """SELECT strftime(l_shipdate, '%Y-%m') AS month FROM lineitem
       |INTERSECT SELECT strftime(o_orderdate, '%Y-%m') AS month FROM orders ORDER BY month""".stripMargin
 
-  /** All relational queries + oracles, keyed for SparkEntry. */
   /** AS-OF JOIN — the canonical time-series operator Spark lacks as a
     * built-in (for each purchase, the same user's latest click at or
     * before it), composed the scale-correct way: tag both sides, UNION,
@@ -644,6 +643,7 @@ object Relational {
       |      FROM events)
       |ORDER BY user_id, event_id""".stripMargin
 
+  /** All relational queries + oracles, lifted into SparkEntry.registry. */
   val all: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("q_exists_subquery", qExistsSubquery _, qExistsSubquerySql),
     ("q_lateral_topk", qLateralTopk _, qLateralTopkSql),

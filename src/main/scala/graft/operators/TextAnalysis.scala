@@ -184,7 +184,7 @@ object TextAnalysis {
       |FROM documents GROUP BY 1, 2 ORDER BY lang, split""".stripMargin
 
   // ------------------------------------------------------------------
-  // Language ID (heuristic kernel; rows-only check + spec)
+  // Language ID (heuristic kernel; oracle over the materialized pairs + spec)
   // ------------------------------------------------------------------
 
   private val StopwordLangs: Seq[(String, Set[String])] = Seq(
@@ -279,11 +279,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("lang"), col("pred_lang"))
 
-  def textLangid(s: SparkSession, dir: String): DataFrame =
-    langidConfusion(langidPairs(s, dir))
-
   // ------------------------------------------------------------------
-  // Document fingerprint (rolling hash; rows-only check + spec)
+  // Document fingerprint (rolling hash; oracle over the materialized pairs + spec)
   // ------------------------------------------------------------------
 
   /** 64-bit polynomial rolling hash (Rabin–Karp, base 1099511628211) over
@@ -325,9 +322,6 @@ object TextAnalysis {
   def fingerprintGroups(pairs: DataFrame): DataFrame =
     pairs.groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n"))
       .orderBy(col("keep_id"))
-
-  def textFingerprint(s: SparkSession, dir: String): DataFrame =
-    fingerprintGroups(fingerprintPairs(s, dir))
 
   // ------------------------------------------------------------------
   // Within-document repetition filters (Gopher-style; oracle-checked)

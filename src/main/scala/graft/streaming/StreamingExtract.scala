@@ -81,51 +81,35 @@ object StreamingExtract {
   def eventWindowCounts(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     val eventsFile = s"$sfDir/events.parquet"
     val schema = spark.read.parquet(eventsFile).schema
-    // the file-stream source requires a DIRECTORY; the testdata table is a
-    // single parquet file, so stage it into one
-    val eventsPath = {
-      val f = new java.io.File(eventsFile)
-      if (f.isDirectory) eventsFile
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_events_stream")
-        java.nio.file.Files.copy(f.toPath, d.resolve("events.parquet"))
-        d.toString
-      }
+    withStagedParquet(eventsFile, "graft_events_stream") { eventsPath =>
+      // unique sink name: memory-sink names are session-global and a rerun
+      // in the same JVM must not collide (output is deterministic either way)
+      val name = "stream_event_windows_" + java.lang.Long.toHexString(System.nanoTime())
+      val q = spark.readStream.schema(schema).parquet(eventsPath)
+        // the table stores TIMESTAMP_NTZ; event-time watermarks need
+        // TIMESTAMP (session TZ is UTC, so values are unchanged)
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val out = spark.table(name)
+        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+          col("event_type"), col("n"), col("sum_value"))
+        .orderBy(col("day"), col("event_type"))
+        // detach from the memory sink so the staged dir and sink table can
+        // be released (repeat invocations must not accumulate /tmp copies
+        // of the events table or session-catalog temp views)
+        .localCheckpoint()
+      spark.catalog.dropTempView(name)
+      out
     }
-    // unique sink name: memory-sink names are session-global and a rerun
-    // in the same JVM must not collide (output is deterministic either way)
-    val name = "stream_event_windows_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = spark.readStream.schema(schema).parquet(eventsPath)
-      // the table stores TIMESTAMP_NTZ; event-time watermarks need
-      // TIMESTAMP (session TZ is UTC, so values are unchanged)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table(name)
-      .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-        col("event_type"), col("n"), col("sum_value"))
-      .orderBy(col("day"), col("event_type"))
-      // detach from the memory sink so the staged dir and sink table can
-      // be released (repeat invocations must not accumulate /tmp copies
-      // of the events table or session-catalog temp views)
-      .localCheckpoint()
-    spark.catalog.dropTempView(name)
-    if (eventsPath != eventsFile) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(eventsPath))
-    }
-    out
   }
 
   /** Windowed aggregation in APPEND mode to a parquet sink — the
@@ -178,5 +162,33 @@ object StreamingExtract {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+  }
+
+  /** Recursive delete of a local temp tree. */
+  private[graft] def rmTree(path: String): Unit = {
+    def rm(x: java.io.File): Unit = {
+      if (x.isDirectory) Option(x.listFiles).foreach(_.foreach(rm))
+      x.delete(): Unit
+    }
+    rm(new java.io.File(path))
+  }
+
+  /** Runs `body` on a fresh local temp dir, then deletes the dir. */
+  private[graft] def withTempDir[A](prefix: String)(body: String => A): A = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(d) finally rmTree(d)
+  }
+
+  /** Streaming file sources need a DIRECTORY; the testdata tables are
+    * single parquet files. Stage the file into a temp dir for `body`,
+    * then remove the staging copy; a directory input passes through.
+    */
+  private[graft] def withStagedParquet[A](file: String, prefix: String)(body: String => A): A = {
+    val f = new java.io.File(file)
+    if (f.isDirectory) body(file)
+    else withTempDir(prefix) { d =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(d, f.getName))
+      body(d)
+    }
   }
 }

@@ -320,7 +320,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     val q = graft.operators.Quantize.quantized(spark, sf0001).cache()
     try {
-      val stats = graft.operators.Quantize.quantizeStats(spark, sf0001)
+      val stats = graft.operators.Quantize.quantizeStatsFrom(q)
         .as[(Long, Double, Double, Double)].collect()(0)
       assert(stats._1 == 500)
       assert(stats._3 >= 0.999, s"min cosine fidelity ${stats._3}") // int8 on 64-dim
@@ -344,7 +344,7 @@ class OperatorsSpec extends AnyFunSuite {
     // corpus-level: every zh doc detected (CJK paragraph markers survive
     // extraction); en majority-correct
     import spark.implicits._
-    val conf = TextAnalysis.textLangid(spark, sf0001)
+    val conf = TextAnalysis.langidConfusion(TextAnalysis.langidPairs(spark, sf0001))
       .as[(String, String, Long)].collect()
     val zhTotal = conf.filter(_._1 == "zh").map(_._3).sum
     val zhHit = conf.filter(r => r._1 == "zh" && r._2 == "zh").map(_._3).sum
@@ -396,7 +396,7 @@ class OperatorsSpec extends AnyFunSuite {
     // ordering as the kernel dispatch (a real raster header never sniffs html)
     assert(Multimodal.sniffType("BM <!doctype html> quarterly report".getBytes) == "html")
     import spark.implicits._
-    val triage = Multimodal.mediaTriage(spark, sf0001)
+    val triage = Multimodal.mediaTriageFrom(Multimodal.mediaMeta(spark, sf0001).toDF())
       .select(col("media_type"), col("n_docs")).as[(String, Long)].collect().toMap
     assert(triage.keySet == Set("html", "pdf", "zip", "empty", "png", "jpg", "tiff"))
     assert(triage.values.sum == 500)
