@@ -53,18 +53,36 @@ case class Extracted(
 )
 
 /** Per-bucket lineage row — replaces the SQLite status upsert
-  * (task.py:39-58) as the resumability store. One row per completed
-  * output bucket per input snapshot; a re-run anti-joins done buckets
-  * and dynamic-partition-overwrites the remainder (idempotent, same
-  * last-writer-wins semantics as INSERT OR REPLACE).
+  * (task.py:39-58) as the resumability store. Nested in a `RunRecord`:
+  * one row per output bucket the run touched. `status` is the bucket's
+  * terminal state (task.py:8-12): 'completed' (even when individual docs
+  * failed — doc failures are data, A9) or 'cancelled' (zero counts; the
+  * run was cancelled before its write committed). Only 'completed' rows
+  * make a resume skip a bucket.
   */
 case class PartitionLineage(
-    snapshot_id: Long,
     bucket: Int,
     doc_count: Long,
     byte_count: Long,
     ok_count: Long,
     fail_count: Long,
     failure_samples: Seq[String],
-    wall_ms: Long
+    status: String
+)
+
+/** One run of `ExtractRunner.run` — every run, no-op resumes included,
+  * appends exactly one: what ran (`engine`), over which input snapshot,
+  * with which bucket modulus, with what outcome, and the lineage of every
+  * bucket it touched.
+  */
+case class RunRecord(
+    snapshot_id: Long,
+    buckets: Int,
+    engine: String,
+    status: String,
+    docs_processed: Long,
+    buckets_done: Long,
+    wall_ms: Long,
+    run_at: String,
+    lineage: Seq[PartitionLineage]
 )

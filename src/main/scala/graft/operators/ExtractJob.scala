@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.kernel.ExtractKernel
-import graft.model.{Extracted, Page, PageRaw, PartitionLineage}
+import graft.model.{Extracted, Page, PageRaw}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,9 +87,11 @@ object ExtractJob {
     * `status` carries the bucket's terminal state, mirroring the
     * reference's 4-state task enum (task.py:8-12): rows written here are
     * 'completed' (even when individual docs failed — doc failures are
-    * data, A9); an explicitly cancelled run writes 'cancelled' marks via
-    * `cancelledLineage` (routes.py:253 sets the same state); a crash
-    * writes nothing — so resume can distinguish cancel from crash.
+    * data, A9); an explicitly cancelled run records 'cancelled' marks
+    * instead (routes.py:253 sets the same state); a crash records nothing
+    * — so resume can distinguish cancel from crash. The runner nests these
+    * rows in its `RunRecord` without `snapshot_id` (the record's own) and
+    * `wall_ms` (stored once per run there).
     */
   def lineage(extracted: Dataset[Extracted], snapshotId: Long): DataFrame = {
     extracted.toDF()
@@ -103,25 +105,9 @@ object ExtractJob {
           .as("failure_samples")
       )
       .withColumn("snapshot_id", lit(snapshotId))
-      .withColumn("wall_ms", lit(-1L)) // filled by the writer wrapper
+      .withColumn("wall_ms", lit(-1L)) // a run's wall time is in its RunRecord
       .withColumn("status", lit("completed"))
       .select("snapshot_id", "bucket", "doc_count", "byte_count",
-        "ok_count", "fail_count", "failure_samples", "wall_ms", "status")
-  }
-
-  /** Lineage marks for buckets interrupted by an explicit cancel (A10):
-    * zero-count rows with status='cancelled'. Written by the runner when a
-    * job-group cancel lands mid-run; the resume filter ignores them (only
-    * 'completed' buckets are skipped), so a rerun reprocesses exactly the
-    * cancelled buckets — but an operator inspecting lineage can tell the
-    * run was cancelled, not crashed.
-    */
-  def cancelledLineage(spark: SparkSession, bucketsTodo: Seq[Int],
-      snapshotId: Long, wallMs: Long): DataFrame = {
-    import spark.implicits._
-    bucketsTodo
-      .map(b => (snapshotId, b, 0L, 0L, 0L, 0L, Seq.empty[String], wallMs, "cancelled"))
-      .toDF("snapshot_id", "bucket", "doc_count", "byte_count",
         "ok_count", "fail_count", "failure_samples", "wall_ms", "status")
   }
 
@@ -139,9 +125,7 @@ object ExtractJob {
     val forSnapshot = lineageDf.filter(col("snapshot_id") === snapshotId)
     // only COMPLETED buckets are skipped: 'cancelled' marks (A10) leave
     // their buckets eligible for the resume run
-    val done = (if (forSnapshot.columns.contains("status"))
-        forSnapshot.filter(col("status") === "completed")
-      else forSnapshot)
+    val done = forSnapshot.filter(col("status") === "completed")
       .select(col("bucket"))
       .distinct()
     pages

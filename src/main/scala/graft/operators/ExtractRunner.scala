@@ -1,12 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.kernel.ExtractKernel
-import graft.model.Page
-
-import scala.jdk.CollectionConverters._
+import graft.model.{Page, PartitionLineage, RunRecord}
 
 /** The production job entry (spark-submit main): one resumable extraction
   * run over a pages table, with the Iceberg contract emulated on plain
@@ -15,17 +13,23 @@ import scala.jdk.CollectionConverters._
   *
   *   out/
   *     extracted/bucket=N/...   hash-bucketed output, dynamic-overwrite
-  *     lineage/                 one row per completed bucket per snapshot
-  *     snapshots/               one row per run: what ran, over which
-  *                              input snapshot, with what outcome
+  *     runs/                    one file per run, one `RunRecord` each:
+  *                              what ran, over which input snapshot, with
+  *                              which bucket modulus and outcome, plus the
+  *                              lineage of every bucket it touched
   *
-  * Resume-from-checkpoint (north rule): a rerun reads `lineage`,
+  * The record is appended after the data write and published by the
+  * committer's rename, so a run is recorded whole or not at all (Iceberg's
+  * snapshot log with the manifest inlined). `runs` and `lineage` are views
+  * over the records.
+  *
+  * Resume-from-checkpoint (north rule): a rerun reads the records,
   * anti-joins the already-done buckets for this input snapshot, processes
   * only the remainder, and dynamic-partition-overwrite makes the rerun
   * idempotent. When every bucket is done the rerun stops after reading
-  * lineage, without scanning the pages. Kill it anywhere; run it again;
-  * the final table is byte-identical to an uninterrupted run (asserted in
-  * OperatorsSpec / RunnerSpec).
+  * the records, without scanning the pages. Kill it anywhere; run it
+  * again; the final table is byte-identical to an uninterrupted run
+  * (asserted in OperatorsSpec / RunnerSpec).
   *
   * Usage:
   *   spark-submit --class graft.operators.ExtractRunner <jar> \
@@ -53,7 +57,7 @@ object ExtractRunner {
   def jobGroupFor(snapshotId: Long): String = s"graft-extract-$snapshotId"
 
   /** The cancel endpoint analogue (routes.py:207-263): interrupt the run
-    * for this snapshot. The running `run()` writes status='cancelled'
+    * for this snapshot. The running `run()` records status='cancelled'
     * lineage marks for its in-flight buckets before returning.
     */
   def cancel(spark: SparkSession, snapshotId: Long): Unit =
@@ -118,20 +122,28 @@ object ExtractRunner {
         (ExtractJob.snapshotIdOf(df), df.as[Page])
       }
 
-    val lineage = priorLineage(spark, s"$outRoot/lineage")
-
-    recordTableBuckets(spark, outRoot, buckets)
+    val prior = priorRuns(spark, outRoot, snapshotId)
+    // the modulus is a TABLE property: a lookup hashing with the wrong one
+    // prunes to directories that don't contain the url, so a second
+    // modulus on an existing table fails the run before anything is written
+    val moduli = prior.map(_._1).distinct
+    require(moduli.forall(_ == buckets),
+      s"table at $outRoot was written with buckets=${moduli.mkString(",")}; " +
+        s"running with buckets=$buckets would mix partition moduli")
 
     // every bucket already completed for this snapshot → no page can be
-    // left to do: a no-op resume reads lineage alone, never the pages
-    val doneBuckets = lineage.fold(Set.empty[Int])(completedBuckets(_, snapshotId))
+    // left to do: a no-op resume reads the run records alone, never the
+    // pages, and still gets its record
+    val doneBuckets = prior.flatMap(_._2).toSet
     if ((0 until buckets).forall(doneBuckets))
-      return noopRun(spark, outRoot, snapshotId, profile, t0)
+      return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0)
 
-    val todo = lineage match {
-      case Some(lin) => ExtractJob.resumeFilter(spark, pages, lin, snapshotId, buckets)
-      case None      => pages
-    }
+    val todo =
+      if (doneBuckets.isEmpty) pages
+      else ExtractJob.resumeFilter(spark, pages,
+        doneBuckets.toSeq.map(b => (snapshotId, b, "completed"))
+          .toDF("snapshot_id", "bucket", "status"),
+        snapshotId, buckets)
 
     // Touched-bucket ids, EAGERLY and from a url-only projection:
     //  - eager: the A10 cancel handler needs the ids AFTER a cancel has
@@ -146,22 +158,22 @@ object ExtractRunner {
       .select(ExtractJob.bucketCol(buckets).as("bucket")).distinct()
       .as[Int].collect().toSeq.sorted
     // no remaining work → don't spin up the kernel/write at all; the run
-    // still gets its ledger row — "one row per run" includes no-op
+    // still gets its record — "one record per run" includes no-op
     // resumes. A FIRST run over an empty pages table therefore creates
     // no extracted/ dir (nothing to describe — a partitioned write of
     // zero rows emits no schema to read back anyway); status lookups
     // against a never-written table surface path-not-found, which is the
     // honest answer.
     if (todoBuckets.isEmpty)
-      return noopRun(spark, outRoot, snapshotId, profile, t0)
+      return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0)
 
     val extracted = ExtractJob.extract(spark, todo, buckets, profile)
-    writeAndFinalize(spark, outRoot, snapshotId, extracted, todoBuckets, profile, t0)
+    writeAndFinalize(spark, outRoot, snapshotId, buckets, extracted, todoBuckets, profile, t0)
   }
 
   /** The tail of a run with work left: write under the cancel guard, then
-    * derive lineage from the rows that write consumed, append the
-    * snapshots ledger row, and report.
+    * derive lineage from the rows that write consumed, commit the run
+    * record, and report.
     *
     * Lineage is aggregated over the persisted `extracted` rows, not over a
     * re-read of the landed table: the write commits the whole job or
@@ -181,11 +193,12 @@ object ExtractRunner {
       spark: SparkSession,
       outRoot: String,
       snapshotId: Long,
+      buckets: Int,
       extracted: org.apache.spark.sql.Dataset[graft.model.Extracted],
       bucketIds: Seq[Int], // concrete — computed before the guarded write
       profile: ExtractKernel.Profile,
       t0: Long): RunReport = {
-    val lineagePath = s"$outRoot/lineage"
+    import spark.implicits._
     // the kernel runs once: the write fills the cache, lineage reads it
     extracted.persist()
     try {
@@ -204,114 +217,111 @@ object ExtractRunner {
           // mark-write failures must not mask the graceful-cancel report:
           // resume correctness never depends on the marks (only 'completed'
           // rows skip buckets), so log and carry on
-          try
-            ExtractJob.cancelledLineage(spark, bucketIds, snapshotId,
-                System.currentTimeMillis() - t0)
-              .write.mode(SaveMode.Append).parquet(lineagePath)
+          val marks = bucketIds.map(PartitionLineage(_, 0L, 0L, 0L, 0L, Seq.empty, "cancelled"))
+          val report = try commitRun(spark, outRoot, snapshotId, buckets, profile, "cancelled", marks, t0)
           catch {
             case me: Exception =>
               log.warn(s"cancelled-mark write failed for snapshot=$snapshotId " +
                 s"(resume unaffected; cancel-vs-crash distinction lost for this run)", me)
+              RunReport(snapshotId, 0L, 0L, System.currentTimeMillis() - t0)
           }
           // the interrupt belongs to the CALLER (their cancellation signal)
           // — restore it so the enclosing executor/Future still sees it
           if (wasInterrupted) Thread.currentThread().interrupt()
-          return RunReport(snapshotId, 0L, 0L,
-            System.currentTimeMillis() - t0, cancelled = true)
+          return report.copy(cancelled = true)
       } finally spark.sparkContext.clearJobGroup()
 
-      // ≤ buckets rows: collected, then appended as a local frame; the
-      // report counts come from the same array
+      // ≤ buckets rows, collected into the record; the report counts come
+      // from the same rows
       val lineage = ExtractJob.lineage(extracted, snapshotId)
-      val rows = lineage.collect()
-      val wallMs = System.currentTimeMillis() - t0
-      val wallIdx = lineage.schema.fieldIndex("wall_ms")
-      spark.createDataFrame(
-          rows.toSeq.map(r => Row.fromSeq(r.toSeq.updated(wallIdx, wallMs))).asJava,
-          lineage.schema)
-        .coalesce(1).write.mode(SaveMode.Append).parquet(lineagePath)
-      val docsProcessed = rows.map(_.getAs[Long]("doc_count")).sum
-      val bucketsDone = rows.length.toLong
-      appendSnapshotRow(spark, outRoot, snapshotId, docsProcessed, bucketsDone,
-        wallMs, profile.engine)
-
-      RunReport(snapshotId, docsProcessed, bucketsDone, wallMs)
+        .drop("snapshot_id", "wall_ms").as[PartitionLineage].collect().toSeq
+      commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", lineage, t0)
     } finally { extracted.unpersist(): Unit }
   }
 
-  /** The end of a run with nothing left to do: no kernel, no write — but
-    * the run still gets its ledger row ("one row per run" includes no-op
-    * resumes).
+  /** Append this run's one record to `runs/` — every run gets one, no-op
+    * resumes included, so operators can answer "did the scheduled run
+    * happen". A one-row local frame, written after the data. The committer publishes the file with one
+    * rename, so lineage, ledger row and modulus land together or not at
+    * all; a write killed before its commit leaves only `_temporary/`,
+    * which readers skip.
     */
-  private def noopRun(spark: SparkSession, outRoot: String, snapshotId: Long,
-      profile: ExtractKernel.Profile, t0: Long): RunReport = {
-    val wallMs = System.currentTimeMillis() - t0
-    appendSnapshotRow(spark, outRoot, snapshotId, 0L, 0L, wallMs, profile.engine)
-    RunReport(snapshotId, 0L, 0L, wallMs)
-  }
-
-  /** One row in the run ledger (Iceberg snapshot-log analogue) — appended
-    * by EVERY run, including no-op resumes, so operators can answer "did
-    * the scheduled run happen" from the ledger alone.
-    */
-  private def appendSnapshotRow(spark: SparkSession, outRoot: String,
-      snapshotId: Long, docsProcessed: Long, bucketsDone: Long,
-      wallMs: Long, engine: String): Unit = {
+  private def commitRun(spark: SparkSession, outRoot: String, snapshotId: Long,
+      buckets: Int, profile: ExtractKernel.Profile, status: String,
+      lineage: Seq[PartitionLineage], t0: Long): RunReport = {
     import spark.implicits._
-    Seq((snapshotId, docsProcessed, bucketsDone, wallMs,
-        java.time.Instant.now().toString, engine))
-      .toDF("snapshot_id", "docs_processed", "buckets_done", "wall_ms",
-        "run_at", "engine")
-      .write.mode(SaveMode.Append).parquet(s"$outRoot/snapshots")
+    val done = lineage.filter(_.status == "completed")
+    val report = RunReport(snapshotId, done.map(_.doc_count).sum, done.size.toLong,
+      System.currentTimeMillis() - t0)
+    Seq(RunRecord(snapshotId, buckets, profile.engine, status, report.docsProcessed,
+        report.bucketsDone, report.wallMs, java.time.Instant.now().toString, lineage))
+      .toDS().coalesce(1).write.mode(SaveMode.Append).parquet(runsPath(outRoot))
+    report
   }
 
-  /** The table's bucket count is a TABLE property, not a caller guess: a
-    * lookup hashing with the wrong modulus prunes to directories that
-    * don't contain the url and silently returns nothing. run() records
-    * the count in `table_meta`; lookups resolve it from there
-    * unless the caller passes an explicit positive value.
-    *
-    * Absence (a legacy table) falls back to the default; an actual READ
-    * failure propagates — falling back there would reintroduce the
-    * silent-empty-lookup failure this property exists to prevent.
-    */
-  def tableBuckets(spark: SparkSession, outRoot: String): Int =
-    if (!pathExists(spark, s"$outRoot/table_meta")) ExtractJob.DefaultBuckets
-    else spark.read.parquet(s"$outRoot/table_meta")
-      .select(col("buckets")).collect()(0).getInt(0)
+  private def runsPath(outRoot: String): String = s"$outRoot/runs"
 
-  // the modulus is immutable per table — resolve once per outRoot so the
-  // point-lookup hot path doesn't pay a parquet read per call
-  private val bucketsCache = scala.collection.concurrent.TrieMap.empty[String, Int]
+  /** Every committed run record, read with the record's own schema: no
+    * inference job, no schema merge. Spark's file listing skips
+    * `_temporary/`, so an uncommitted record is invisible.
+    */
+  private def records(spark: SparkSession, outRoot: String): DataFrame =
+    spark.read.schema(Encoders.product[RunRecord].schema).parquet(runsPath(outRoot))
+
+  /** The run ledger (Iceberg snapshot-log analogue): one row per run —
+    * what ran, over which input snapshot, with which modulus and outcome.
+    */
+  def runs(spark: SparkSession, outRoot: String): DataFrame =
+    records(spark, outRoot).drop("lineage")
+
+  /** Bucket lineage: one row per bucket per run, with its run's snapshot
+    * id. A bucket completed twice (a rerun of a cancelled run, say) has a
+    * row per run.
+    */
+  def lineage(spark: SparkSession, outRoot: String): DataFrame =
+    records(spark, outRoot)
+      .select(col("snapshot_id"), explode(col("lineage")).as("l"))
+      .select(col("snapshot_id"), col("l.*"))
+
+  /** Per committed record: its bucket modulus and the buckets it completed
+    * for `snapshotId` — one collect over `runs/`. Empty on a first run
+    * (the missing dir is checked, not caught). A read failure propagates,
+    * naming the path: the modulus guard and the resume both depend on the
+    * records, and reading an unreadable store as "nothing done" would
+    * re-extract every bucket beside the bad file on every run.
+    */
+  private def priorRuns(spark: SparkSession, outRoot: String,
+      snapshotId: Long): Seq[(Int, Seq[Int])] = {
+    import spark.implicits._
+    val path = runsPath(outRoot)
+    if (!pathExists(spark, path)) Nil
+    else try records(spark, outRoot)
+      .select(col("buckets"), filter(col("lineage"),
+        l => col("snapshot_id") === snapshotId && l("status") === "completed")("bucket"))
+      .as[(Int, Seq[Int])].collect().toSeq
+    catch {
+      case e: Exception =>
+        throw new IllegalStateException(s"cannot read the run records under $path", e)
+    }
+  }
+
+  /** The table's bucket modulus for a lookup: the caller's value when
+    * positive, else the one the run records hold. A table with no records
+    * (never run, or a legacy layout) falls back to the default; a read
+    * failure propagates — falling back there would reintroduce the
+    * silent-empty-lookup failure the recorded modulus exists to prevent.
+    */
   private def resolveBuckets(spark: SparkSession, outRoot: String, buckets: Int): Int =
     if (buckets > 0) buckets
-    else bucketsCache.getOrElseUpdate(outRoot, tableBuckets(spark, outRoot))
-
-  /** Record (or validate) the table's bucket modulus. Guards the property
-    * the lookups depend on: writing a SECOND modulus into an existing
-    * table would mix partition layouts and break every hash-pruned read,
-    * so a mismatch fails the run at submission.
-    */
-  private def recordTableBuckets(spark: SparkSession, outRoot: String, buckets: Int): Unit = {
-    import spark.implicits._
-    val metaPath = s"$outRoot/table_meta"
-    if (pathExists(spark, metaPath)) {
-      val existing = tableBuckets(spark, outRoot)
-      require(existing == buckets,
-        s"table at $outRoot was written with buckets=$existing; " +
-          s"running with buckets=$buckets would mix partition moduli")
-    } else {
-      Seq(buckets).toDF("buckets")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(metaPath)
-    }
-    bucketsCache.put(outRoot, buckets): Unit
-  }
+    else if (!pathExists(spark, runsPath(outRoot))) ExtractJob.DefaultBuckets
+    else runs(spark, outRoot).select(col("buckets")).head(1)
+      .headOption.fold(ExtractJob.DefaultBuckets)(_.getInt(0))
 
   /** Status point lookup — the `GET /api/file/status/<id>` analogue
     * (routes.py:138-204, task.py:60-84): one row for a url, served by
     * bucket-partition pruning + predicate pushdown (the scan touches one
     * bucket directory, not the table). `buckets` ≤ 0 → resolved from
-    * table_meta.
+    * the run records.
     */
   def status(spark: SparkSession, outRoot: String, url: String,
       buckets: Int = -1): DataFrame = {
@@ -344,54 +354,20 @@ object ExtractRunner {
         col("n_failed_pages"), col("engine"))
   }
 
-  /** Lineage reader tolerant of mixed schemas: a dir holding pre-status
-    * (8-column) files plus new rows must NOT have parquet's
-    * single-footer schema inference silently drop the status column —
-    * that would make resumeFilter treat 'cancelled' marks as completed
-    * and skip those buckets forever. mergeSchema unions the footers; a
-    * fully-legacy dir gets status='completed' backfilled (every row a
-    * legacy run wrote was a completed bucket).
-    */
-  def readLineage(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true").parquet(path)
-    if (df.columns.contains("status"))
-      df.withColumn("status", coalesce(col("status"), lit("completed")))
-    else df.withColumn("status", lit("completed"))
-  }
-
-  /** Prior lineage for a run. None on a first run — the missing dir is
-    * checked, not caught, so no path-not-found stack trace is logged — and
-    * None when an existing dir is unreadable (the run then treats every
-    * bucket as not done).
-    */
-  private def priorLineage(spark: SparkSession, path: String): Option[DataFrame] =
-    if (!pathExists(spark, path)) None
-    else try Some(readLineage(spark, path)) catch { case _: Exception => None }
-
-  /** Buckets with a 'completed' lineage row for this snapshot (≤ buckets
-    * ids, collected to the driver).
-    */
-  private def completedBuckets(lineage: DataFrame, snapshotId: Long): Set[Int] = {
-    import lineage.sparkSession.implicits._
-    lineage
-      .filter(col("snapshot_id") === snapshotId && col("status") === "completed")
-      .select(col("bucket")).distinct().as[Int].collect().toSet
-  }
-
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Operational status — the status endpoint's aggregate view, from
-    * lineage alone (never scans the data table).
+    * the run records alone (never scans the data table).
     */
   def jobStatus(spark: SparkSession, outRoot: String): DataFrame =
-    readLineage(spark, s"$outRoot/lineage")
+    lineage(spark, outRoot)
       .groupBy(col("snapshot_id"))
       .agg(
-        // distinct buckets per state: repeated cancel/resume appends must
-        // not inflate the counts (lineage is an append-only ledger)
+        // distinct buckets per state: repeated cancel/resume records must
+        // not inflate the counts (the run log is append-only)
         countDistinct(when(col("status") === "completed", col("bucket"))).as("buckets_done"),
         sum(col("doc_count")).as("docs"),
         sum(col("ok_count")).as("ok"),

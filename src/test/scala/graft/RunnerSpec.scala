@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.{PartitionLineage, RunRecord}
 import graft.operators.{ExtractJob, ExtractRunner}
 import graft.sources.PageSynth
 
 import scala.jdk.CollectionConverters._
 
 /** End-to-end runner: snapshot → resume → extract → bucketed write →
-  * lineage append → snapshots ledger. The kill-anywhere/rerun-idempotent
-  * contract of the north rule at job granularity.
+  * one run record. The kill-anywhere/rerun-idempotent contract of the
+  * north rule at job granularity.
   */
 class RunnerSpec extends AnyFunSuite {
   import TestSpark.{sf0001, spark}
@@ -24,12 +25,32 @@ class RunnerSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .filter(col("snapshot_id") === snapshotId && col("status") === "completed")
       .drop("wall_ms").orderBy(col("bucket")).collect().map(_.toSeq).toSeq
-    val written = rows(spark.read.parquet(s"$out/lineage"))
+    val written = rows(ExtractRunner.lineage(spark, out))
     val landed = rows(ExtractJob.lineage(
       spark.read.parquet(s"$out/extracted").as[graft.model.Extracted], snapshotId))
     assert(written.nonEmpty && written == landed,
       s"lineage rows differ from the landed table:\n${written.mkString("\n")}\n--\n${landed.mkString("\n")}")
   }
+
+  /** Appends one committed run record by hand, as a run would. */
+  private def writeRecord(out: String, snapshotId: Long, lineage: Seq[PartitionLineage],
+      status: String = "completed"): Unit = {
+    import spark.implicits._
+    val done = lineage.filter(_.status == "completed")
+    Seq(RunRecord(snapshotId, 8, "standard", status, done.map(_.doc_count).sum,
+        done.size.toLong, 1L, java.time.Instant.now().toString, lineage))
+      .toDS().write.mode("append").parquet(s"$out/runs")
+  }
+
+  private def filesUnder(root: String): Set[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toSet
+    finally files.close()
+  }
+
+  /** Committed record files under `runs/` (part files, not `_SUCCESS`). */
+  private def recordFiles(out: String): Int =
+    Option(new java.io.File(s"$out/runs").list()).fold(0)(_.count(_.startsWith("part-")))
 
   test("runner: full run, then no-op rerun, then crash-resume equivalence") {
     import spark.implicits._
@@ -45,45 +66,48 @@ class RunnerSpec extends AnyFunSuite {
     assert(table1.size == 500)
     assertLineageMatchesLanded(s"$base/out", r1.snapshotId)
     assert(spark.sharedState.cacheManager.isEmpty, "a run must not leave persisted data behind")
+    assert(recordFiles(s"$base/out") == 1)
 
     // run 2 over the same input snapshot: every bucket is done, so the
-    // no-op resume reads lineage alone — no scan of the pages, and never
-    // a read of the landed table
+    // no-op resume reads the run records alone — no scan of the pages,
+    // and never a read of the landed table
     val (r2, resumeQueries) = TestSpark.capturingQueries(
       ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8))
     assert(r2.snapshotId == r1.snapshotId)
     assert(r2.docsProcessed == 0 && r2.bucketsDone == 0)
     val resumeRead = TestSpark.pathsRead(resumeQueries)
-    assert(resumeRead.contains(s"$base/out/lineage") &&
+    assert(resumeRead.contains(s"$base/out/runs") &&
         !resumeRead.exists(p => p == s"$base/pages" || p.startsWith(s"$base/out/extracted")),
-      s"a no-op resume must read lineage, never pages or extracted/: $resumeRead")
+      s"a no-op resume must read the run records, never pages or extracted/: $resumeRead")
     val table2 = spark.read.parquet(s"$base/out/extracted")
       .select(col("url"), md5(col("text")).as("h"), col("status"))
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
     assert(table2 == table1, "no-op rerun must not change the table")
-    assert(spark.read.parquet(s"$base/out/lineage").count() == 8,
+    assert(ExtractRunner.lineage(spark, s"$base/out").count() == 8,
       "no duplicate lineage rows")
+    // an out root holds the table and the run log, one committed file per run
+    assert(new java.io.File(s"$base/out").list().toSet == Set("extracted", "runs"))
+    assert(recordFiles(s"$base/out") == 2)
 
-    // crash simulation: fresh output with lineage for only half the
+    // crash simulation: fresh output with a record for only half the
     // buckets (as if the job died mid-write), then one resume run
     val crash = java.nio.file.Files.createTempDirectory("graft_crash").toString
     spark.read.parquet(s"$base/out/extracted")
       .filter(col("bucket") < 4)
       .write.partitionBy("bucket").parquet(s"$crash/out/extracted")
-    spark.read.parquet(s"$base/out/lineage")
-      .filter(col("bucket") < 4)
-      .write.parquet(s"$crash/out/lineage")
+    writeRecord(s"$crash/out", r1.snapshotId, ExtractRunner.lineage(spark, s"$base/out")
+      .filter(col("bucket") < 4).drop("snapshot_id").as[PartitionLineage].collect().toSeq)
     val r3 = ExtractRunner.run(spark, s"$base/pages", s"$crash/out", buckets = 8)
     assert(r3.bucketsDone == 4, s"resume should process exactly the 4 missing buckets, got ${r3.bucketsDone}")
     val table3 = spark.read.parquet(s"$crash/out/extracted")
       .select(col("url"), md5(col("text")).as("h"), col("status"))
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
     assert(table3 == table1, "crash-resume must converge to the uninterrupted result")
-    assert(spark.read.parquet(s"$crash/out/lineage").count() == 8)
+    assert(ExtractRunner.lineage(spark, s"$crash/out").count() == 8)
     assertLineageMatchesLanded(s"$crash/out", r3.snapshotId)
 
-    // snapshots ledger: one row per run
-    assert(spark.read.parquet(s"$base/out/snapshots").count() == 2)
+    // run ledger: one row per run
+    assert(ExtractRunner.runs(spark, s"$base/out").count() == 2)
 
     // status point lookup (the GET /status/<id> analogue): one row,
     // bucket-pruned; and the lineage-only job status
@@ -91,10 +115,9 @@ class RunnerSpec extends AnyFunSuite {
       .select(col("url")).limit(1).as[String].collect()(0)
     val st = ExtractRunner.status(spark, s"$base/out", someUrl, buckets = 8).collect()
     assert(st.length == 1 && st(0).getAs[String]("url") == someUrl)
-    // bucket count is a TABLE property: resolved from table_meta when the
-    // caller doesn't pass one (a wrong modulus would prune to the wrong
+    // bucket count is a TABLE property: resolved from the run records when
+    // the caller doesn't pass one (a wrong modulus would prune to the wrong
     // directory and silently return nothing)
-    assert(ExtractRunner.tableBuckets(spark, s"$base/out") == 8)
     val stAuto = ExtractRunner.status(spark, s"$base/out", someUrl).collect()
     assert(stAuto.length == 1 && stAuto(0).getAs[String]("url") == someUrl)
     val js = ExtractRunner.jobStatus(spark, s"$base/out").collect()
@@ -117,20 +140,17 @@ class RunnerSpec extends AnyFunSuite {
     PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
     val out = s"$base/out"
     ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
-    def landed() = {
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
-      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toSet
-      finally files.close()
-    }
-    def rows() = Seq("extracted", "lineage", "snapshots").map(t => spark.read.parquet(s"$out/$t").count())
-    val (filesBefore, rowsBefore) = (landed(), rows())
+    def rows() = Seq(spark.read.parquet(s"$out/extracted"), ExtractRunner.lineage(spark, out),
+      ExtractRunner.runs(spark, out)).map(_.count())
+    val (filesBefore, rowsBefore) = (filesUnder(out), rows())
     val e = intercept[IllegalArgumentException] {
       ExtractRunner.run(spark, s"$base/pages", out, buckets = 4)
     }
     assert(e.getMessage.contains("buckets=8; running with buckets=4 would mix partition moduli"), e.getMessage)
-    assert(rows() == rowsBefore && landed() == filesBefore,
-      "a rejected run must write no extracted, lineage or snapshots rows")
-    assert(ExtractRunner.tableBuckets(spark, out) == 8)
+    assert(rows() == rowsBefore && filesUnder(out) == filesBefore,
+      "a rejected run must write no extracted, lineage or run rows")
+    val someUrl = spark.read.parquet(s"$out/extracted").select(col("url")).head().getString(0)
+    assert(ExtractRunner.status(spark, out, someUrl).count() == 1)
   }
 
   test("runner: invalid engine rejected at submission with the reference literal (routes.py:39)") {
@@ -152,33 +172,74 @@ class RunnerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("buckets must be positive, got 0"))
   }
 
-  test("runner: legacy status-less lineage files mix safely with new rows") {
+  test("runner: resume skips completed record buckets, not cancelled ones") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_legacy").toString
+    val base = java.nio.file.Files.createTempDirectory("graft_records").toString
     PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
     val snapId = ExtractJob.snapshotIdOf(spark, s"$base/pages")
-    // legacy 8-column lineage (pre-status) claims buckets 0-3 done...
-    (0 until 4).map(b => (snapId, b, 10L, 100L, 10L, 0L, Seq.empty[String], 5L))
-      .toDF("snapshot_id", "bucket", "doc_count", "byte_count",
-        "ok_count", "fail_count", "failure_samples", "wall_ms")
-      .write.parquet(s"$base/out/lineage")
-    // ...and a NEW-format cancelled mark exists for bucket 4
-    ExtractJob.cancelledLineage(spark, Seq(4), snapId, 1L)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$base/out/lineage")
-    // the merged read must keep the status column: legacy rows backfill
-    // 'completed', the cancelled mark survives, and resume reprocesses
-    // bucket 4 (plus 5-7) but not 0-3
-    val lin = ExtractRunner.readLineage(spark, s"$base/out/lineage")
-    assert(lin.filter(col("status") === "cancelled").count() == 1)
-    assert(lin.filter(col("status") === "completed").count() == 4)
-    val todo = ExtractJob.resumeFilter(spark,
-        spark.read.parquet(s"$base/pages").as[graft.model.Page], lin, snapId, buckets = 8)
+    // one record claims buckets 0-3 completed, a second one holds a
+    // cancelled mark for bucket 4
+    writeRecord(s"$base/out", snapId,
+      (0 until 4).map(b => PartitionLineage(b, 10L, 100L, 10L, 0L, Seq.empty, "completed")))
+    writeRecord(s"$base/out", snapId,
+      Seq(PartitionLineage(4, 0L, 0L, 0L, 0L, Seq.empty, "cancelled")), "cancelled")
+    val todo = ExtractJob.resumeFilter(spark, spark.read.parquet(s"$base/pages").as[graft.model.Page],
+        ExtractRunner.lineage(spark, s"$base/out"), snapId, buckets = 8)
       .select(ExtractJob.bucketCol(8).as("b")).distinct()
       .as[Int].collect().toSet
     assert(todo == Set(4, 5, 6, 7), s"got $todo")
-    // jobStatus over the mixed dir works and reports both states
     val js = ExtractRunner.jobStatus(spark, s"$base/out").collect()(0)
     assert(js.getAs[Long]("buckets_done") == 4 && js.getAs[Long]("buckets_cancelled") == 1)
+  }
+
+  test("runner: an unreadable run record fails the run at submission, writing nothing") {
+    val base = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+    val out = s"$base/out"
+    val bad = java.nio.file.Paths.get(s"$out/runs/x.parquet")
+    java.nio.file.Files.createDirectories(bad.getParent)
+    java.nio.file.Files.write(bad, "not a parquet file".getBytes("UTF-8"))
+    val before = filesUnder(out)
+    // a second run must fail the same way: nothing was recorded that
+    // would let it skip the bad file
+    for (attempt <- 1 to 2) {
+      val e = intercept[IllegalStateException] {
+        ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+      }
+      assert(e.getMessage.contains(s"$out/runs"), s"run $attempt: ${e.getMessage}")
+      assert(filesUnder(out) == before, s"run $attempt wrote under the out root")
+    }
+  }
+
+  test("runner: a record killed before its commit is invisible; the resume redoes every bucket") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_window").toString
+    PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
+    val ref = ExtractRunner.run(spark, s"$base/pages", s"$base/ref", buckets = 8)
+    assert(ref.bucketsDone == 8)
+    // the crash window: the data write committed, the record did not —
+    // extracted/ is whole, runs/ holds only the committer's _temporary/
+    // with a torn part file
+    val out = s"$base/out"
+    spark.read.parquet(s"$base/ref/extracted")
+      .write.partitionBy("bucket").parquet(s"$out/extracted")
+    val committed = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/ref/runs"))
+      .iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+    val bytes = java.nio.file.Files.readAllBytes(committed)
+    val torn = java.nio.file.Paths.get(
+      s"$out/runs/_temporary/0/_temporary/attempt_0/${committed.getFileName}")
+    java.nio.file.Files.createDirectories(torn.getParent)
+    java.nio.file.Files.write(torn, bytes.take(bytes.length / 2))
+
+    val r = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+    assert(r.bucketsDone == 8 && r.docsProcessed == 500)
+    def tableOf(root: String) = spark.read.parquet(s"$root/extracted")
+      .select(col("url"), md5(col("text")).as("h"), col("status"))
+      .as[(String, String, String)].collect().sortBy(_._1).toSeq
+    assert(tableOf(out) == tableOf(s"$base/ref"), "the resume must converge to the uninterrupted table")
+    assert(ExtractRunner.runs(spark, out).count() == 1)
+    val lin = ExtractRunner.lineage(spark, out)
+    assert(lin.count() == 8 && lin.filter(col("status") === "completed").count() == 8)
   }
 
   test("runner: explicit cancel mid-run writes cancelled marks; rerun converges (A10)") {
@@ -210,7 +271,7 @@ class RunnerSpec extends AnyFunSuite {
 
     // cancelled marks visible PRE-resume: status='cancelled' rows, zero
     // completed — distinguishable from a crash (which writes nothing)
-    val lin = spark.read.parquet(s"$base/out/lineage")
+    val lin = ExtractRunner.lineage(spark, s"$base/out")
     assert(lin.filter(col("status") === "cancelled").count() == 8)
     assert(lin.filter(col("status") === "completed").count() == 0)
 
