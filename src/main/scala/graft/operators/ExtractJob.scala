@@ -111,23 +111,19 @@ object ExtractJob {
         "ok_count", "fail_count", "failure_samples", "wall_ms", "status")
   }
 
-  /** Resume: drop pages whose bucket already has a lineage row for this
-    * snapshot (broadcast anti-join — the done-bucket list is tiny relative
-    * to the data; SURVEY.md §2 Table C "Joins").
+  /** Resume: drop pages whose bucket is already done (broadcast
+    * anti-join — the done-bucket list is tiny relative to the data;
+    * SURVEY.md §2 Table C "Joins"). The caller decides which buckets are
+    * done: `ExtractRunner` passes this snapshot's completed ones, so
+    * 'cancelled' marks (A10) leave their buckets eligible.
     */
   def resumeFilter(
       spark: SparkSession,
       pages: Dataset[Page],
-      lineageDf: DataFrame,
-      snapshotId: Long,
+      doneBuckets: Seq[Int],
       buckets: Int = DefaultBuckets): Dataset[Page] = {
     import spark.implicits._
-    val forSnapshot = lineageDf.filter(col("snapshot_id") === snapshotId)
-    // only COMPLETED buckets are skipped: 'cancelled' marks (A10) leave
-    // their buckets eligible for the resume run
-    val done = forSnapshot.filter(col("status") === "completed")
-      .select(col("bucket"))
-      .distinct()
+    val done = doneBuckets.distinct.toDF("bucket")
     pages
       .withColumn("__bucket", bucketCol(buckets))
       .join(broadcast(done), col("__bucket") === done("bucket"), "left_anti")

@@ -130,6 +130,7 @@ object ExtractRunner {
     require(moduli.forall(_ == buckets),
       s"table at $outRoot was written with buckets=${moduli.mkString(",")}; " +
         s"running with buckets=$buckets would mix partition moduli")
+    if (prior.isEmpty) requireLandedModulus(spark, outRoot, buckets)
 
     // every bucket already completed for this snapshot → no page can be
     // left to do: a no-op resume reads the run records alone, never the
@@ -140,10 +141,7 @@ object ExtractRunner {
 
     val todo =
       if (doneBuckets.isEmpty) pages
-      else ExtractJob.resumeFilter(spark, pages,
-        doneBuckets.toSeq.map(b => (snapshotId, b, "completed"))
-          .toDF("snapshot_id", "bucket", "status"),
-        snapshotId, buckets)
+      else ExtractJob.resumeFilter(spark, pages, doneBuckets.toSeq, buckets)
 
     // Touched-bucket ids, EAGERLY and from a url-only projection:
     //  - eager: the A10 cancel handler needs the ids AFTER a cancel has
@@ -241,10 +239,10 @@ object ExtractRunner {
 
   /** Append this run's one record to `runs/` — every run gets one, no-op
     * resumes included, so operators can answer "did the scheduled run
-    * happen". A one-row local frame, written after the data. The committer publishes the file with one
-    * rename, so lineage, ledger row and modulus land together or not at
-    * all; a write killed before its commit leaves only `_temporary/`,
-    * which readers skip.
+    * happen". A one-row local frame, written after the data: the
+    * committer publishes the file with one rename, so lineage, ledger row
+    * and modulus land together or not at all; a write killed before its
+    * commit leaves only `_temporary/`, which readers skip.
     */
   private def commitRun(spark: SparkSession, outRoot: String, snapshotId: Long,
       buckets: Int, profile: ExtractKernel.Profile, status: String,
@@ -302,6 +300,25 @@ object ExtractRunner {
     catch {
       case e: Exception =>
         throw new IllegalStateException(s"cannot read the run records under $path", e)
+    }
+  }
+
+  /** The modulus guard for a landed table that no committed record
+    * describes: a first run killed between its data commit and its record
+    * commit, or an out root written before run records. Every landed row
+    * must sit in the bucket `buckets` hashes its url to; one url-only scan
+    * checks it, and only in that state.
+    */
+  private def requireLandedModulus(spark: SparkSession, outRoot: String, buckets: Int): Unit = {
+    val path = s"$outRoot/extracted"
+    if (pathExists(spark, path)) {
+      val misplaced = spark.read.schema("url STRING, bucket INT").parquet(path)
+        .filter(ExtractJob.bucketCol(buckets) =!= col("bucket"))
+        .select(col("bucket")).head(1)
+      require(misplaced.isEmpty,
+        s"table at $outRoot has rows in bucket=${misplaced.head.getInt(0)} that " +
+          s"buckets=$buckets hashes elsewhere; running with buckets=$buckets " +
+          "would mix partition moduli")
     }
   }
 

@@ -114,12 +114,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("resume filter: the done-bucket side is broadcast, not shuffled") {
-    import spark.implicits._
     val pages = PageSynth.pages(spark, sf0001)
-    val extracted = ExtractJob.extract(spark, pages, 8)
-    val lineageDf = ExtractJob.lineage(extracted, 1L)
     val plan = physicalPlan(
-      ExtractJob.resumeFilter(spark, pages, lineageDf, 1L, 8).toDF())
+      ExtractJob.resumeFilter(spark, pages, Seq(0, 1, 2, 3), 8).toDF())
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan)
   }
 

@@ -151,6 +151,8 @@ class RunnerSpec extends AnyFunSuite {
       "a rejected run must write no extracted, lineage or run rows")
     val someUrl = spark.read.parquet(s"$out/extracted").select(col("url")).head().getString(0)
     assert(ExtractRunner.status(spark, out, someUrl).count() == 1)
+    assert(ExtractRunner.runs(spark, out).select(col("buckets")).distinct().collect()
+      .map(_.getInt(0)).toSeq == Seq(8))
   }
 
   test("runner: invalid engine rejected at submission with the reference literal (routes.py:39)") {
@@ -183,13 +185,13 @@ class RunnerSpec extends AnyFunSuite {
       (0 until 4).map(b => PartitionLineage(b, 10L, 100L, 10L, 0L, Seq.empty, "completed")))
     writeRecord(s"$base/out", snapId,
       Seq(PartitionLineage(4, 0L, 0L, 0L, 0L, Seq.empty, "cancelled")), "cancelled")
-    val todo = ExtractJob.resumeFilter(spark, spark.read.parquet(s"$base/pages").as[graft.model.Page],
-        ExtractRunner.lineage(spark, s"$base/out"), snapId, buckets = 8)
-      .select(ExtractJob.bucketCol(8).as("b")).distinct()
-      .as[Int].collect().toSet
-    assert(todo == Set(4, 5, 6, 7), s"got $todo")
     val js = ExtractRunner.jobStatus(spark, s"$base/out").collect()(0)
     assert(js.getAs[Long]("buckets_done") == 4 && js.getAs[Long]("buckets_cancelled") == 1)
+    val r = ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8)
+    assert(r.bucketsDone == 4, s"resume should process exactly buckets 4-7, got ${r.bucketsDone}")
+    val landed = spark.read.parquet(s"$base/out/extracted")
+      .select(col("bucket")).distinct().as[Int].collect().toSet
+    assert(landed == Set(4, 5, 6, 7), s"got $landed")
   }
 
   test("runner: an unreadable run record fails the run at submission, writing nothing") {
@@ -230,6 +232,18 @@ class RunnerSpec extends AnyFunSuite {
       s"$out/runs/_temporary/0/_temporary/attempt_0/${committed.getFileName}")
     java.nio.file.Files.createDirectories(torn.getParent)
     java.nio.file.Files.write(torn, bytes.take(bytes.length / 2))
+
+    // nothing records the modulus in this state, yet another bucket count
+    // is refused from the landed rows' url hashes, writing nothing: 4
+    // leaves rows in bucket dirs past its range, 16 keeps every dir in range
+    val before = filesUnder(out)
+    for (b <- Seq(4, 16)) {
+      val e = intercept[IllegalArgumentException] {
+        ExtractRunner.run(spark, s"$base/pages", out, buckets = b)
+      }
+      assert(e.getMessage.contains(s"running with buckets=$b would mix partition moduli"), e.getMessage)
+      assert(filesUnder(out) == before, s"a rejected buckets=$b run wrote under the out root")
+    }
 
     val r = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
     assert(r.bucketsDone == 8 && r.docsProcessed == 500)
