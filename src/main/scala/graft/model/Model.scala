@@ -54,11 +54,12 @@ case class Extracted(
 
 /** Per-bucket lineage row — replaces the SQLite status upsert
   * (task.py:39-58) as the resumability store. Nested in a `RunRecord`:
-  * one row per output bucket the run touched. `status` is the bucket's
-  * terminal state (task.py:8-12): 'completed' (even when individual docs
-  * failed — doc failures are data, A9) or 'cancelled' (zero counts; the
-  * run was cancelled before its write committed). Only 'completed' rows
-  * make a resume skip a bucket.
+  * one row per bucket the run covered. `status` is the bucket's terminal
+  * state (task.py:8-12): 'completed' (even when individual docs failed —
+  * doc failures are data, A9; zero counts when the input snapshot has no
+  * page in the bucket) or 'cancelled' (zero counts; the run was cancelled
+  * before its write committed). Only 'completed' rows make a resume skip
+  * a bucket.
   */
 case class PartitionLineage(
     bucket: Int,
@@ -73,7 +74,7 @@ case class PartitionLineage(
 /** One run of `ExtractRunner.run` — every run, no-op resumes included,
   * appends exactly one: what ran (`engine`), over which input snapshot,
   * with which bucket modulus, with what outcome, and the lineage of every
-  * bucket it touched.
+  * bucket it covered.
   */
 case class RunRecord(
     snapshot_id: Long,

@@ -142,14 +142,11 @@ object ExtractJob {
     * fragments — at 100 TB, file-count control is what keeps the output
     * table listable.
     */
-  def writeExtracted(extracted: Dataset[Extracted], outDir: String,
-      writeParallelism: Int = 0): Unit = {
+  def writeExtracted(extracted: Dataset[Extracted], outDir: String): Unit = {
     // explicit partition count: a bare repartition(col) is AQE-coalescible
     // and a small extracted shuffle collapses to ~1 task that then writes
     // every bucket directory serially (measured 15 s of a 20 s run)
-    val parallelism =
-      if (writeParallelism > 0) writeParallelism
-      else math.max(extracted.sparkSession.sparkContext.defaultParallelism, 1)
+    val parallelism = math.max(extracted.sparkSession.sparkContext.defaultParallelism, 1)
     extracted.toDF()
       .repartition(parallelism, col("bucket"))
       .write

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.kernel.ExtractKernel
-import graft.model.{Page, PartitionLineage, RunRecord}
+import graft.model.{Extracted, Page, PartitionLineage, RunRecord}
 
 /** The production job entry (spark-submit main): one resumable extraction
   * run over a pages table, with the Iceberg contract emulated on plain
@@ -16,20 +16,23 @@ import graft.model.{Page, PartitionLineage, RunRecord}
   *     runs/                    one file per run, one `RunRecord` each:
   *                              what ran, over which input snapshot, with
   *                              which bucket modulus and outcome, plus the
-  *                              lineage of every bucket it touched
+  *                              lineage of every bucket it covered
   *
   * The record is appended after the data write and published by the
   * committer's rename, so a run is recorded whole or not at all (Iceberg's
   * snapshot log with the manifest inlined). `runs` and `lineage` are views
   * over the records.
   *
-  * Resume-from-checkpoint (north rule): a rerun reads the records,
-  * anti-joins the already-done buckets for this input snapshot, processes
-  * only the remainder, and dynamic-partition-overwrite makes the rerun
-  * idempotent. When every bucket is done the rerun stops after reading
-  * the records, without scanning the pages. Kill it anywhere; run it
-  * again; the final table is byte-identical to an uninterrupted run
-  * (asserted in OperatorsSpec / RunnerSpec).
+  * Resume-from-checkpoint (north rule): a run plans from the records
+  * alone. The buckets it covers are every bucket the records do not hold
+  * as completed for this input snapshot — driver arithmetic, no Spark
+  * job. The pages are read once, by the kernel, with the done buckets
+  * anti-joined away, and dynamic-partition-overwrite makes the rerun
+  * idempotent. A completed run records every covered bucket, an empty
+  * one as a zero-count row, so the next run over the same snapshot stops
+  * after reading the records, without scanning the pages. Kill it
+  * anywhere; run it again; the final table is byte-identical to an
+  * uninterrupted run (asserted in OperatorsSpec / RunnerSpec).
   *
   * Usage:
   *   spark-submit --class graft.operators.ExtractRunner <jar> \
@@ -142,61 +145,48 @@ object ExtractRunner {
     val todo =
       if (doneBuckets.isEmpty) pages
       else ExtractJob.resumeFilter(spark, pages, doneBuckets.toSeq, buckets)
-
-    // Touched-bucket ids, EAGERLY and from a url-only projection:
-    //  - eager: the A10 cancel handler needs the ids AFTER a cancel has
-    //    landed; launching a fresh Spark job there could itself be killed
-    //    by the still-pending interrupt. Computed here, the ids are plain
-    //    driver data by the time the guarded write starts.
-    //  - url-only: bucketCol is a pure function of url, so parquet column
-    //    pruning keeps the payload (html) column unread — the payload is
-    //    scanned exactly once per run, by the kernel (PlanShapeSpec
-    //    asserts this).
-    val todoBuckets = todo
-      .select(ExtractJob.bucketCol(buckets).as("bucket")).distinct()
-      .as[Int].collect().toSeq.sorted
-    // no remaining work → don't spin up the kernel/write at all; the run
-    // still gets its record — "one record per run" includes no-op
-    // resumes. A FIRST run over an empty pages table therefore creates
-    // no extracted/ dir (nothing to describe — a partitioned write of
-    // zero rows emits no schema to read back anyway); status lookups
-    // against a never-written table surface path-not-found, which is the
-    // honest answer.
-    if (todoBuckets.isEmpty)
-      return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0)
-
     val extracted = ExtractJob.extract(spark, todo, buckets, profile)
-    writeAndFinalize(spark, outRoot, snapshotId, buckets, extracted, todoBuckets, profile, t0)
+    writeAndFinalize(spark, outRoot, snapshotId, buckets, doneBuckets, extracted, profile, t0)
   }
 
   /** The tail of a run with work left: write under the cancel guard, then
     * derive lineage from the rows that write consumed, commit the run
     * record, and report.
     *
-    * Lineage is aggregated over the persisted `extracted` rows, not over a
-    * re-read of the landed table: the write commits the whole job or
-    * nothing, and dynamic overwrite replaces exactly the buckets those
-    * rows fall in, so the landed rows of the touched buckets ARE the
-    * persisted rows (a lost cache block is recomputed by the
-    * deterministic kernel — the same rows). The counts still come from a
-    * Spark action over those rows, never from accumulators.
+    * The run covers every bucket not in `done`, decided on the driver
+    * with no Spark job. Lineage is aggregated over the persisted
+    * `extracted` rows, not over a re-read of the landed table: the write
+    * commits the whole job or nothing, and dynamic overwrite replaces
+    * exactly the buckets those rows fall in, so the landed rows of those
+    * buckets ARE the persisted rows (a lost cache block is recomputed by
+    * the deterministic kernel — the same rows). The counts still come from
+    * a Spark action over those rows, never from accumulators. A covered
+    * bucket with no pages in this snapshot is done too: it gets a
+    * zero-count 'completed' row, so the next run over the same snapshot
+    * is a no-op.
     *
     * A10 cancel semantics live here: cancel is a terminal STATE, not a
     * crash (task.py:8-12, routes.py:253). A cancelled write job committed
-    * nothing (the parquet committer is job-atomic), so every todo bucket
-    * gets a 'cancelled' mark — a resume reprocesses exactly those, and an
-    * operator can see the run was cancelled rather than dead.
+    * nothing (the parquet committer is job-atomic), so every covered
+    * bucket gets a 'cancelled' mark — a resume reprocesses exactly those,
+    * and an operator can see the run was cancelled rather than dead.
     */
   private def writeAndFinalize(
       spark: SparkSession,
       outRoot: String,
       snapshotId: Long,
       buckets: Int,
-      extracted: org.apache.spark.sql.Dataset[graft.model.Extracted],
-      bucketIds: Seq[Int], // concrete — computed before the guarded write
+      done: Set[Int],
+      extracted: org.apache.spark.sql.Dataset[Extracted],
       profile: ExtractKernel.Profile,
       t0: Long): RunReport = {
     import spark.implicits._
+    def mark(bucket: Int, status: String) =
+      PartitionLineage(bucket, 0L, 0L, 0L, 0L, Seq.empty, status)
+    // plain driver data before the guarded write: the cancel handler
+    // below must start no Spark job but the record append, which the
+    // still-pending interrupt could otherwise kill
+    val covered = (0 until buckets).filterNot(done)
     // the kernel runs once: the write fills the cache, lineage reads it
     extracted.persist()
     try {
@@ -215,8 +205,8 @@ object ExtractRunner {
           // mark-write failures must not mask the graceful-cancel report:
           // resume correctness never depends on the marks (only 'completed'
           // rows skip buckets), so log and carry on
-          val marks = bucketIds.map(PartitionLineage(_, 0L, 0L, 0L, 0L, Seq.empty, "cancelled"))
-          val report = try commitRun(spark, outRoot, snapshotId, buckets, profile, "cancelled", marks, t0)
+          val report = try commitRun(spark, outRoot, snapshotId, buckets, profile, "cancelled",
+            covered.map(mark(_, "cancelled")), t0)
           catch {
             case me: Exception =>
               log.warn(s"cancelled-mark write failed for snapshot=$snapshotId " +
@@ -231,8 +221,10 @@ object ExtractRunner {
 
       // ≤ buckets rows, collected into the record; the report counts come
       // from the same rows
-      val lineage = ExtractJob.lineage(extracted, snapshotId)
+      val rows = ExtractJob.lineage(extracted, snapshotId)
         .drop("snapshot_id", "wall_ms").as[PartitionLineage].collect().toSeq
+      val empty = covered.filterNot(rows.map(_.bucket).toSet).map(mark(_, "completed"))
+      val lineage = (rows ++ empty).sortBy(_.bucket)
       commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", lineage, t0)
     } finally { extracted.unpersist(): Unit }
   }
@@ -303,16 +295,22 @@ object ExtractRunner {
     }
   }
 
+  /** The landed table, read with the `Extracted` schema: no inference
+    * job, and an `extracted/` a run wrote from zero rows (no part file)
+    * reads as zero rows.
+    */
+  private def landed(spark: SparkSession, outRoot: String): DataFrame =
+    spark.read.schema(Encoders.product[Extracted].schema).parquet(s"$outRoot/extracted")
+
   /** The modulus guard for a landed table that no committed record
     * describes: a first run killed between its data commit and its record
     * commit, or an out root written before run records. Every landed row
     * must sit in the bucket `buckets` hashes its url to; one url-only scan
     * checks it, and only in that state.
     */
-  private def requireLandedModulus(spark: SparkSession, outRoot: String, buckets: Int): Unit = {
-    val path = s"$outRoot/extracted"
-    if (pathExists(spark, path)) {
-      val misplaced = spark.read.schema("url STRING, bucket INT").parquet(path)
+  private def requireLandedModulus(spark: SparkSession, outRoot: String, buckets: Int): Unit =
+    if (pathExists(spark, s"$outRoot/extracted")) {
+      val misplaced = landed(spark, outRoot)
         .filter(ExtractJob.bucketCol(buckets) =!= col("bucket"))
         .select(col("bucket")).head(1)
       require(misplaced.isEmpty,
@@ -320,41 +318,36 @@ object ExtractRunner {
           s"buckets=$buckets hashes elsewhere; running with buckets=$buckets " +
           "would mix partition moduli")
     }
-  }
 
   /** The table's bucket modulus for a lookup: the caller's value when
-    * positive, else the one the run records hold. A table with no records
-    * (never run, or a legacy layout) falls back to the default; a read
-    * failure propagates — falling back there would reintroduce the
-    * silent-empty-lookup failure the recorded modulus exists to prevent.
+    * positive, else the one the run records hold. With no committed record
+    * (a legacy root, or a first run killed before its record commit) the
+    * lookup fails and asks for `buckets`: guessing a modulus would prune
+    * to directories that may not hold the url and silently return nothing.
     */
   private def resolveBuckets(spark: SparkSession, outRoot: String, buckets: Int): Int =
     if (buckets > 0) buckets
-    else if (!pathExists(spark, runsPath(outRoot))) ExtractJob.DefaultBuckets
-    else runs(spark, outRoot).select(col("buckets")).head(1)
-      .headOption.fold(ExtractJob.DefaultBuckets)(_.getInt(0))
+    else {
+      val recorded =
+        if (!pathExists(spark, runsPath(outRoot))) None
+        else runs(spark, outRoot).select(col("buckets")).head(1).headOption.map(_.getInt(0))
+      recorded.getOrElse(throw new IllegalArgumentException(
+        s"no committed run record under ${runsPath(outRoot)} holds the table's bucket " +
+          "modulus; pass `buckets` to look up a url"))
+    }
 
   /** Status point lookup — the `GET /api/file/status/<id>` analogue
-    * (routes.py:138-204, task.py:60-84): one row for a url, served by
-    * bucket-partition pruning + predicate pushdown (the scan touches one
-    * bucket directory, not the table). `buckets` ≤ 0 → resolved from
-    * the run records.
+    * (routes.py:138-204, task.py:60-84): the batch lookup for one url.
     */
   def status(spark: SparkSession, outRoot: String, url: String,
-      buckets: Int = -1): DataFrame = {
-    val b = resolveBuckets(spark, outRoot, buckets)
-    val bucket = java.lang.Math.floorMod(XxHash.hashUtf8(url), b.toLong).toInt
-    spark.read.parquet(s"$outRoot/extracted")
-      .filter(col("bucket") === bucket && col("url") === url)
-      .select(col("url"), col("status"), col("error"), col("n_pages"),
-        col("n_failed_pages"), col("engine"))
-  }
+      buckets: Int = -1): DataFrame =
+    statusBatch(spark, outRoot, Seq(url), buckets)
 
   /** Batch status lookup — the `POST /api/file/batch_status` analogue
     * (reference caps it at 100 ids/request, API.md:468). One scan pruned
     * to exactly the buckets the requested urls hash to (`isin` on the
     * partition column prunes directories; the url `isin` pushes down
-    * within them).
+    * within them). `buckets` ≤ 0 → resolved from the run records.
     */
   def statusBatch(spark: SparkSession, outRoot: String, urls: Seq[String],
       buckets: Int = -1): DataFrame = {
@@ -365,7 +358,7 @@ object ExtractRunner {
     val bucketIds = wanted
       .map(u => java.lang.Math.floorMod(XxHash.hashUtf8(u), b.toLong).toInt)
       .distinct
-    spark.read.parquet(s"$outRoot/extracted")
+    landed(spark, outRoot)
       .filter(col("bucket").isin(bucketIds: _*) && col("url").isin(wanted: _*))
       .select(col("url"), col("status"), col("error"), col("n_pages"),
         col("n_failed_pages"), col("engine"))

@@ -73,12 +73,15 @@ class PlanShapeSpec extends AnyFunSuite {
     import spark.implicits._
     val urls = spark.read.parquet(s"$tmp/out/extracted")
       .select(col("url")).limit(3).as[String].collect().toSeq
-    val df = graft.operators.ExtractRunner.statusBatch(spark, s"$tmp/out", urls)
-    val plan = physicalPlan(df)
     // the bucket predicate must land in PartitionFilters (directory
-    // pruning), not as a post-scan filter over the whole table
-    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
-      s"no partition pruning:\n$plan")
+    // pruning), not as a post-scan filter over the whole table — for the
+    // batch lookup and for the single-url one
+    Seq(graft.operators.ExtractRunner.statusBatch(spark, s"$tmp/out", urls),
+      graft.operators.ExtractRunner.status(spark, s"$tmp/out", urls.head)).foreach { df =>
+      val plan = physicalPlan(df)
+      assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
+        s"no partition pruning:\n$plan")
+    }
   }
 
   test("minhash verify: candidate-doc gate is a broadcast semi-join") {

@@ -256,6 +256,63 @@ class RunnerSpec extends AnyFunSuite {
     assert(lin.count() == 8 && lin.filter(col("status") === "completed").count() == 8)
   }
 
+  test("runner: a table with empty buckets becomes a no-op after one run") {
+    val base = java.nio.file.Files.createTempDirectory("graft_sparse").toString
+    PageSynth.pages(spark, sf0001).limit(5).write.mode("overwrite").parquet(s"$base/pages")
+    val out = s"$base/out"
+    val r1 = ExtractRunner.run(spark, s"$base/pages", out, buckets = 64)
+    assert(r1.docsProcessed == 5)
+
+    val (r2, queries) = TestSpark.capturingQueries(
+      ExtractRunner.run(spark, s"$base/pages", out, buckets = 64))
+    assert(r2.docsProcessed == 0)
+    val read = TestSpark.pathsRead(queries)
+    assert(read.contains(s"$out/runs") &&
+        !read.exists(p => p == s"$base/pages" || p.startsWith(s"$out/extracted")),
+      s"a rerun over a table with empty buckets must read the run records alone: $read")
+
+    // 5 pages fill at most 5 of 64 buckets: the rest are done with zero counts
+    assert(r1.bucketsDone == 64)
+    val lin = ExtractRunner.lineage(spark, out).filter(col("status") === "completed")
+    assert(lin.count() == 64 && lin.filter(col("doc_count") > 0).count() ==
+      spark.read.parquet(s"$out/extracted").select(col("bucket")).distinct().count())
+  }
+
+  test("runner: an empty pages table runs once, then resumes from the records; lookups find nothing") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    spark.emptyDataset[graft.model.Page].write.parquet(s"$base/pages")
+    val out = s"$base/out"
+    val r1 = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+    assert(r1.docsProcessed == 0 && recordFiles(out) == 1)
+
+    val (r2, queries) = TestSpark.capturingQueries(
+      ExtractRunner.run(spark, s"$base/pages", out, buckets = 8))
+    assert(r2.docsProcessed == 0 && recordFiles(out) == 2)
+    val read = TestSpark.pathsRead(queries)
+    assert(!read.contains(s"$base/pages"), s"a rerun over an empty table must not read the pages: $read")
+
+    for (url <- Seq("https://e/a", "https://e/b", "https://e/c"))
+      assert(ExtractRunner.status(spark, out, url).count() == 0, url)
+  }
+
+  test("runner: a lookup with no committed record asks for the bucket count, never guesses it") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_nomodulus").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+    ExtractRunner.run(spark, s"$base/pages", s"$base/ref", buckets = 8)
+    // a legacy root, or the crash window: extracted/ landed, no record
+    val out = s"$base/out"
+    spark.read.parquet(s"$base/ref/extracted").write.partitionBy("bucket").parquet(s"$out/extracted")
+    // a url the old fallback modulus of 64 prunes to a directory a
+    // buckets=8 table never has: that lookup returned 0 rows, silently
+    val url = spark.read.parquet(s"$out/extracted").select(col("url")).as[String].collect()
+      .find(u => java.lang.Math.floorMod(graft.operators.XxHash.hashUtf8(u), 64L) >= 8).get
+    val e = intercept[IllegalArgumentException](ExtractRunner.status(spark, out, url))
+    assert(e.getMessage.contains(s"$out/runs") && e.getMessage.contains("pass `buckets`"), e.getMessage)
+    assert(ExtractRunner.status(spark, out, url, buckets = 8).count() == 1)
+  }
+
   test("runner: explicit cancel mid-run writes cancelled marks; rerun converges (A10)") {
     import spark.implicits._
     import scala.concurrent.{Await, Future}

@@ -276,6 +276,40 @@ class WarcSpec extends AnyFunSuite {
     }
   }
 
+  test("a run over WARC input decodes the input once: a torn tail counts once") {
+    import TestSpark.spark
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("warctorn").toString
+    try {
+      val pages = (0 until 60).map { i =>
+        val html = s"<html><body><p>Body text for page $i, long enough to keep.</p></body></html>"
+        graft.model.Page(f"https://w/t$i%03d", null, html.getBytes("UTF-8"), "", "en")
+      }
+      Warc.stagePages(spark.createDataset(pages), s"$base/pages", parts = 3)
+      val files = new java.io.File(s"$base/pages").listFiles
+        .filter(_.getName.endsWith(".warc.gz")).sortBy(_.getName)
+      assert(files.length == 3)
+      // cut into the last gzip member's deflate data, past its 8-byte
+      // trailer; drop the local filesystem's checksum sidecar, which
+      // would otherwise fail the whole file rather than its tail
+      val bytes = java.nio.file.Files.readAllBytes(files.head.toPath)
+      java.nio.file.Files.write(files.head.toPath, bytes.take(bytes.length - 20))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$base/pages/.${files.head.getName}.crc"))
+      val torn = Warc.drops(spark.sparkContext).tornTails
+      val before = torn.value
+      val r = graft.operators.ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8)
+      assert(torn.value - before == 1,
+        s"one run must decode each WARC file once, counted ${torn.value - before} torn tails")
+      assert(r.docsProcessed == 59, s"the torn record alone is lost, got ${r.docsProcessed}")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(new java.io.File(base))
+    }
+  }
+
   test("q_wet_sink: extracted text round-trips as conversion records, byte-exact") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
