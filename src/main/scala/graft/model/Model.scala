@@ -75,6 +75,10 @@ case class PartitionLineage(
   * appends exactly one: what ran (`engine`), over which input snapshot,
   * with which bucket modulus, with what outcome, and the lineage of every
   * bucket it covered.
+  *
+  * Stored as one single-line JSON file under `runs/`, named
+  * `s<unsigned hex snapshot_id>_b<buckets>_<run_at epoch ms>_<uuid>.json`
+  * and published by renaming a hidden temp file (`operators.RunLog`).
   */
 case class RunRecord(
     snapshot_id: Long,

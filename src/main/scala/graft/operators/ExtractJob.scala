@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.kernel.ExtractKernel
 import graft.model.{Extracted, Page, PageRaw}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The flagship pipeline: pages → extract kernel (narrow, shuffle-free) →
@@ -136,11 +136,13 @@ object ExtractJob {
     * partitions (the INSERT OR REPLACE analogue, task.py:52-55).
     *
     * The only shuffle of the whole pipeline happens here, on EXTRACTED
-    * rows (typically 5-20% of the raw payload bytes): repartitioning on
-    * the bucket column co-locates each output partition in one task so
-    * the writer emits one file per bucket instead of tasks×buckets
-    * fragments — at 100 TB, file-count control is what keeps the output
-    * table listable.
+    * rows (typically 5-20% of the raw payload bytes): each bucket goes
+    * whole to write task `bucket mod n`, so the writer emits one file per
+    * bucket instead of tasks×buckets fragments — at 100 TB, file-count
+    * control is what keeps the output table listable — and every task
+    * writes ⌊B/n⌋ or ⌈B/n⌉ buckets: the slowest task sets the length of
+    * the write, and a hash of the bucket id spreads a few dozen buckets
+    * unevenly over a few tasks.
     */
   def writeExtracted(extracted: Dataset[Extracted], outDir: String): Unit = {
     // explicit partition count: a bare repartition(col) is AQE-coalescible
@@ -148,7 +150,7 @@ object ExtractJob {
     // every bucket directory serially (measured 15 s of a 20 s run)
     val parallelism = math.max(extracted.sparkSession.sparkContext.defaultParallelism, 1)
     extracted.toDF()
-      .repartition(parallelism, col("bucket"))
+      .repartitionById(parallelism, pmod(col("bucket"), lit(parallelism)))
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -167,6 +169,13 @@ object ExtractJob {
     */
   def snapshotIdOf(input: DataFrame): Long =
     input.inputFiles.sorted.foldLeft(17L)((acc, f) => acc * 31L + f.hashCode.toLong)
+
+  /** The same id for a pages table from its file listing alone: the frame
+    * is declared with the `Page` schema, so no schema inference job runs.
+    * The listing and the URI strings are the inferred read's.
+    */
+  def listedSnapshotId(spark: SparkSession, pagesDir: String): Long =
+    snapshotIdOf(spark.read.schema(Encoders.product[Page].schema).parquet(pagesDir))
 
   /** Per-host metrics with salting for the hot hosts: two-phase agg —
     * partial counts on (host, salt), then final on host — so a single hot

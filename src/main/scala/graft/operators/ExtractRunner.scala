@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.kernel.ExtractKernel
@@ -13,26 +13,31 @@ import graft.model.{Extracted, Page, PartitionLineage, RunRecord}
   *
   *   out/
   *     extracted/bucket=N/...   hash-bucketed output, dynamic-overwrite
-  *     runs/                    one file per run, one `RunRecord` each:
-  *                              what ran, over which input snapshot, with
-  *                              which bucket modulus and outcome, plus the
-  *                              lineage of every bucket it covered
+  *     runs/                    the run log: one single-line JSON file per
+  *                              run, one `RunRecord` each — what ran, over
+  *                              which input snapshot, with which bucket
+  *                              modulus and outcome, plus the lineage of
+  *                              every bucket it covered
   *
-  * The record is appended after the data write and published by the
-  * committer's rename, so a run is recorded whole or not at all (Iceberg's
-  * snapshot log with the manifest inlined). `runs` and `lineage` are views
-  * over the records.
+  * The record is written after the data write, on the driver, under a
+  * hidden temp name, and published by one rename (`RunLog`), so a run is
+  * recorded whole or not at all (Iceberg's snapshot log with the manifest
+  * inlined, kept as Delta Lake keeps its commit log). Its name carries the
+  * snapshot id and the bucket modulus. `runs` and `lineage` are views over
+  * the records.
   *
   * Resume-from-checkpoint (north rule): a run plans from the records
-  * alone. The buckets it covers are every bucket the records do not hold
-  * as completed for this input snapshot — driver arithmetic, no Spark
-  * job. The pages are read once, by the kernel, with the done buckets
-  * anti-joined away, and dynamic-partition-overwrite makes the rerun
-  * idempotent. A completed run records every covered bucket, an empty
-  * one as a zero-count row, so the next run over the same snapshot stops
-  * after reading the records, without scanning the pages. Kill it
-  * anywhere; run it again; the final table is byte-identical to an
-  * uninterrupted run (asserted in OperatorsSpec / RunnerSpec).
+  * alone, on the driver: the snapshot id from the pages' file listing,
+  * every modulus from the record names, and the done buckets from this
+  * snapshot's records. The buckets it covers are every bucket the records
+  * do not hold as completed for this input snapshot. The pages are read
+  * once, by the kernel, with the done buckets anti-joined away, and
+  * dynamic-partition-overwrite makes the rerun idempotent. A completed run
+  * records every covered bucket, an empty one as a zero-count row, so the
+  * next run over the same snapshot stops after reading the records and
+  * starts no Spark job. Kill it anywhere; run it again; the final table is
+  * byte-identical to an uninterrupted run (asserted in OperatorsSpec /
+  * RunnerSpec).
   *
   * Usage:
   *   spark-submit --class graft.operators.ExtractRunner <jar> \
@@ -115,33 +120,43 @@ object ExtractRunner {
     // crawls run in arrival format with identical lineage/resume
     // semantics (the snapshot id hashes the file listing either way)
     val warcInput = graft.sources.Warc.isWarcDir(spark, pagesDir)
-    // parquet: ONE listing of the pages table serves both the snapshot id
-    // and the scan the run reads
-    val (snapshotId, pages) =
-      if (warcInput)
-        (graft.sources.Warc.snapshotIdOf(spark, pagesDir), graft.sources.Warc.pages(spark, pagesDir))
-      else {
-        val df = spark.read.parquet(pagesDir)
-        (ExtractJob.snapshotIdOf(df), df.as[Page])
-      }
+    // the planned snapshot, from a file listing alone (the stable hash of
+    // the input files; no schema inference job)
+    val snapshotId =
+      if (warcInput) graft.sources.Warc.snapshotIdOf(spark, pagesDir)
+      else ExtractJob.listedSnapshotId(spark, pagesDir)
 
-    val prior = priorRuns(spark, outRoot, snapshotId)
+    val logged = RunLog.entries(spark, runsPath(outRoot))
     // the modulus is a TABLE property: a lookup hashing with the wrong one
     // prunes to directories that don't contain the url, so a second
     // modulus on an existing table fails the run before anything is written
-    val moduli = prior.map(_._1).distinct
+    val moduli = logged.map(_.buckets).distinct
     require(moduli.forall(_ == buckets),
       s"table at $outRoot was written with buckets=${moduli.mkString(",")}; " +
         s"running with buckets=$buckets would mix partition moduli")
-    if (prior.isEmpty) requireLandedModulus(spark, outRoot, buckets)
+    if (logged.isEmpty) requireLandedModulus(spark, outRoot, buckets)
 
     // every bucket already completed for this snapshot → no page can be
-    // left to do: a no-op resume reads the run records alone, never the
-    // pages, and still gets its record
-    val doneBuckets = prior.flatMap(_._2).toSet
+    // left to do: a no-op resume reads this snapshot's records alone,
+    // never the pages, and still gets its record
+    val doneBuckets = logged.filter(_.snapshotId == snapshotId)
+      .flatMap(RunLog.read(spark, _).lineage.collect { case l if l.status == "completed" => l.bucket })
+      .toSet
     if ((0 until buckets).forall(doneBuckets))
       return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0)
 
+    val pages =
+      if (warcInput) graft.sources.Warc.pages(spark, pagesDir)
+      else {
+        // the inferred read, so a mistyped table fails at analysis; it
+        // lists the files again, and they must be the planned snapshot
+        val df = spark.read.parquet(pagesDir)
+        val seen = ExtractJob.snapshotIdOf(df)
+        if (seen != snapshotId) throw new IllegalStateException(
+          s"pages at $pagesDir changed while the run was planned (snapshot $snapshotId, " +
+            s"now $seen); run again to plan the new snapshot")
+        df.as[Page]
+      }
     val todo =
       if (doneBuckets.isEmpty) pages
       else ExtractJob.resumeFilter(spark, pages, doneBuckets.toSeq, buckets)
@@ -184,8 +199,8 @@ object ExtractRunner {
     def mark(bucket: Int, status: String) =
       PartitionLineage(bucket, 0L, 0L, 0L, 0L, Seq.empty, status)
     // plain driver data before the guarded write: the cancel handler
-    // below must start no Spark job but the record append, which the
-    // still-pending interrupt could otherwise kill
+    // below must start no Spark job, which the still-pending interrupt
+    // could kill
     val covered = (0 until buckets).filterNot(done)
     // the kernel runs once: the write fills the cache, lineage reads it
     extracted.persist()
@@ -198,9 +213,10 @@ object ExtractRunner {
         case e: Throwable if isCancellation(e) =>
           spark.sparkContext.clearJobGroup()
           // interruptOnCancel may have left the interrupt pending on THIS
-          // driver thread — clear it, or the mark-write job below is
-          // immediately killed and the cancel is indistinguishable from a
-          // crash (the exact failure mode A10 exists to prevent)
+          // driver thread — clear it, or a filesystem client that aborts
+          // interruptible I/O cuts the mark write below and the cancel is
+          // indistinguishable from a crash (the failure mode A10 exists
+          // to prevent)
           val wasInterrupted = Thread.interrupted()
           // mark-write failures must not mask the graceful-cancel report:
           // resume correctness never depends on the marks (only 'completed'
@@ -229,34 +245,31 @@ object ExtractRunner {
     } finally { extracted.unpersist(): Unit }
   }
 
-  /** Append this run's one record to `runs/` — every run gets one, no-op
-    * resumes included, so operators can answer "did the scheduled run
-    * happen". A one-row local frame, written after the data: the
-    * committer publishes the file with one rename, so lineage, ledger row
-    * and modulus land together or not at all; a write killed before its
-    * commit leaves only `_temporary/`, which readers skip.
+  /** Commit this run's one record to the run log — every run gets one,
+    * no-op resumes included, so operators can answer "did the scheduled
+    * run happen". Written on the driver after the data and published by
+    * one rename, so lineage, ledger row and modulus land together or not
+    * at all.
     */
   private def commitRun(spark: SparkSession, outRoot: String, snapshotId: Long,
       buckets: Int, profile: ExtractKernel.Profile, status: String,
       lineage: Seq[PartitionLineage], t0: Long): RunReport = {
-    import spark.implicits._
     val done = lineage.filter(_.status == "completed")
     val report = RunReport(snapshotId, done.map(_.doc_count).sum, done.size.toLong,
       System.currentTimeMillis() - t0)
-    Seq(RunRecord(snapshotId, buckets, profile.engine, status, report.docsProcessed,
-        report.bucketsDone, report.wallMs, java.time.Instant.now().toString, lineage))
-      .toDS().coalesce(1).write.mode(SaveMode.Append).parquet(runsPath(outRoot))
+    RunLog.commit(spark, runsPath(outRoot), RunRecord(snapshotId, buckets, profile.engine, status,
+      report.docsProcessed, report.bucketsDone, report.wallMs, java.time.Instant.now().toString, lineage))
     report
   }
 
   private def runsPath(outRoot: String): String = s"$outRoot/runs"
 
   /** Every committed run record, read with the record's own schema: no
-    * inference job, no schema merge. Spark's file listing skips
-    * `_temporary/`, so an uncommitted record is invisible.
+    * inference job. The file listing skips hidden names, so a record not
+    * yet published by its rename is invisible.
     */
   private def records(spark: SparkSession, outRoot: String): DataFrame =
-    spark.read.schema(Encoders.product[RunRecord].schema).parquet(runsPath(outRoot))
+    spark.read.schema(Encoders.product[RunRecord].schema).json(runsPath(outRoot))
 
   /** The run ledger (Iceberg snapshot-log analogue): one row per run —
     * what ran, over which input snapshot, with which modulus and outcome.
@@ -272,28 +285,6 @@ object ExtractRunner {
     records(spark, outRoot)
       .select(col("snapshot_id"), explode(col("lineage")).as("l"))
       .select(col("snapshot_id"), col("l.*"))
-
-  /** Per committed record: its bucket modulus and the buckets it completed
-    * for `snapshotId` — one collect over `runs/`. Empty on a first run
-    * (the missing dir is checked, not caught). A read failure propagates,
-    * naming the path: the modulus guard and the resume both depend on the
-    * records, and reading an unreadable store as "nothing done" would
-    * re-extract every bucket beside the bad file on every run.
-    */
-  private def priorRuns(spark: SparkSession, outRoot: String,
-      snapshotId: Long): Seq[(Int, Seq[Int])] = {
-    import spark.implicits._
-    val path = runsPath(outRoot)
-    if (!pathExists(spark, path)) Nil
-    else try records(spark, outRoot)
-      .select(col("buckets"), filter(col("lineage"),
-        l => col("snapshot_id") === snapshotId && l("status") === "completed")("bucket"))
-      .as[(Int, Seq[Int])].collect().toSeq
-    catch {
-      case e: Exception =>
-        throw new IllegalStateException(s"cannot read the run records under $path", e)
-    }
-  }
 
   /** The landed table, read with the `Extracted` schema: no inference
     * job, and an `extracted/` a run wrote from zero rows (no part file)
@@ -320,21 +311,18 @@ object ExtractRunner {
     }
 
   /** The table's bucket modulus for a lookup: the caller's value when
-    * positive, else the one the run records hold. With no committed record
+    * positive, else the one the run record names hold (one listing, no
+    * Spark job). With no committed record
     * (a legacy root, or a first run killed before its record commit) the
     * lookup fails and asks for `buckets`: guessing a modulus would prune
     * to directories that may not hold the url and silently return nothing.
     */
   private def resolveBuckets(spark: SparkSession, outRoot: String, buckets: Int): Int =
     if (buckets > 0) buckets
-    else {
-      val recorded =
-        if (!pathExists(spark, runsPath(outRoot))) None
-        else runs(spark, outRoot).select(col("buckets")).head(1).headOption.map(_.getInt(0))
-      recorded.getOrElse(throw new IllegalArgumentException(
+    else RunLog.entries(spark, runsPath(outRoot)).headOption.map(_.buckets)
+      .getOrElse(throw new IllegalArgumentException(
         s"no committed run record under ${runsPath(outRoot)} holds the table's bucket " +
           "modulus; pass `buckets` to look up a url"))
-    }
 
   /** Status point lookup — the `GET /api/file/status/<id>` analogue
     * (routes.py:138-204, task.py:60-84): the batch lookup for one url.

@@ -66,6 +66,23 @@ class PlanShapeSpec extends AnyFunSuite {
         qes.map(_.executedPlan.toString).filter(_.contains(s"$tmp/pages")).mkString("\n----\n"))
   }
 
+  test("bucket write: one file per bucket, bucket b written by task b mod n") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_write").toString
+    val pages = PageSynth.pages(spark, sf0001)
+    val buckets = 16
+    ExtractJob.writeExtracted(ExtractJob.extract(spark, pages, buckets), s"$tmp/extracted")
+    val n = spark.sparkContext.defaultParallelism
+    // a part file is named for the write task's partition: part-<i>-...
+    val taskOf = new java.io.File(s"$tmp/extracted").listFiles().filter(_.isDirectory).map { d =>
+      val parts = d.list().filter(_.startsWith("part-"))
+      assert(parts.length == 1, s"${d.getName}: ${parts.mkString(", ")}")
+      d.getName.stripPrefix("bucket=").toInt -> parts.head.stripPrefix("part-").take(5).toInt
+    }.toMap
+    assert(taskOf.keySet == (0 until buckets).toSet)
+    assert(taskOf.forall { case (b, t) => t == b % n }, s"bucket -> write task: ${taskOf.toSeq.sorted}")
+    assert(taskOf.values.toSet == (0 until n).toSet)
+  }
+
   test("statusBatch: bucket isin prunes partitions at the scan") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_plan_sb").toString
     PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$tmp/pages")

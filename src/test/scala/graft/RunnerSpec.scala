@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{PartitionLineage, RunRecord}
-import graft.operators.{ExtractJob, ExtractRunner}
+import graft.operators.{ExtractJob, ExtractRunner, RunLog}
 import graft.sources.PageSynth
 
 import scala.jdk.CollectionConverters._
@@ -32,14 +32,12 @@ class RunnerSpec extends AnyFunSuite {
       s"lineage rows differ from the landed table:\n${written.mkString("\n")}\n--\n${landed.mkString("\n")}")
   }
 
-  /** Appends one committed run record by hand, as a run would. */
+  /** Commits one run record by hand, as a run would. */
   private def writeRecord(out: String, snapshotId: Long, lineage: Seq[PartitionLineage],
       status: String = "completed"): Unit = {
-    import spark.implicits._
     val done = lineage.filter(_.status == "completed")
-    Seq(RunRecord(snapshotId, 8, "standard", status, done.map(_.doc_count).sum,
-        done.size.toLong, 1L, java.time.Instant.now().toString, lineage))
-      .toDS().write.mode("append").parquet(s"$out/runs")
+    RunLog.commit(spark, s"$out/runs", RunRecord(snapshotId, 8, "standard", status,
+      done.map(_.doc_count).sum, done.size.toLong, 1L, java.time.Instant.now().toString, lineage))
   }
 
   private def filesUnder(root: String): Set[String] = {
@@ -48,9 +46,9 @@ class RunnerSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  /** Committed record files under `runs/` (part files, not `_SUCCESS`). */
+  /** Committed record files under `runs/` (visible `.json` names). */
   private def recordFiles(out: String): Int =
-    Option(new java.io.File(s"$out/runs").list()).fold(0)(_.count(_.startsWith("part-")))
+    Option(new java.io.File(s"$out/runs").list()).fold(0)(_.count(n => n.startsWith("s") && n.endsWith(".json")))
 
   test("runner: full run, then no-op rerun, then crash-resume equivalence") {
     import spark.implicits._
@@ -69,16 +67,13 @@ class RunnerSpec extends AnyFunSuite {
     assert(recordFiles(s"$base/out") == 1)
 
     // run 2 over the same input snapshot: every bucket is done, so the
-    // no-op resume reads the run records alone — no scan of the pages,
-    // and never a read of the landed table
-    val (r2, resumeQueries) = TestSpark.capturingQueries(
+    // no-op resume plans from the pages' file listing and the run log on
+    // the driver — it starts no Spark job
+    val (r2, resumeJobs) = TestSpark.countingJobs(
       ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8))
     assert(r2.snapshotId == r1.snapshotId)
     assert(r2.docsProcessed == 0 && r2.bucketsDone == 0)
-    val resumeRead = TestSpark.pathsRead(resumeQueries)
-    assert(resumeRead.contains(s"$base/out/runs") &&
-        !resumeRead.exists(p => p == s"$base/pages" || p.startsWith(s"$base/out/extracted")),
-      s"a no-op resume must read the run records, never pages or extracted/: $resumeRead")
+    assert(resumeJobs == 0, s"a no-op resume must start no Spark job, started $resumeJobs")
     val table2 = spark.read.parquet(s"$base/out/extracted")
       .select(col("url"), md5(col("text")).as("h"), col("status"))
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
@@ -220,16 +215,15 @@ class RunnerSpec extends AnyFunSuite {
     val ref = ExtractRunner.run(spark, s"$base/pages", s"$base/ref", buckets = 8)
     assert(ref.bucketsDone == 8)
     // the crash window: the data write committed, the record did not —
-    // extracted/ is whole, runs/ holds only the committer's _temporary/
-    // with a torn part file
+    // extracted/ is whole, runs/ holds only the record's hidden temp file,
+    // half written
     val out = s"$base/out"
     spark.read.parquet(s"$base/ref/extracted")
       .write.partitionBy("bucket").parquet(s"$out/extracted")
     val committed = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/ref/runs"))
-      .iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+      .iterator().asScala.find(_.getFileName.toString.endsWith(".json")).get
     val bytes = java.nio.file.Files.readAllBytes(committed)
-    val torn = java.nio.file.Paths.get(
-      s"$out/runs/_temporary/0/_temporary/attempt_0/${committed.getFileName}")
+    val torn = java.nio.file.Paths.get(s"$out/runs/.${committed.getFileName}.tmp")
     java.nio.file.Files.createDirectories(torn.getParent)
     java.nio.file.Files.write(torn, bytes.take(bytes.length / 2))
 
@@ -263,13 +257,10 @@ class RunnerSpec extends AnyFunSuite {
     val r1 = ExtractRunner.run(spark, s"$base/pages", out, buckets = 64)
     assert(r1.docsProcessed == 5)
 
-    val (r2, queries) = TestSpark.capturingQueries(
+    val (r2, jobs) = TestSpark.countingJobs(
       ExtractRunner.run(spark, s"$base/pages", out, buckets = 64))
     assert(r2.docsProcessed == 0)
-    val read = TestSpark.pathsRead(queries)
-    assert(read.contains(s"$out/runs") &&
-        !read.exists(p => p == s"$base/pages" || p.startsWith(s"$out/extracted")),
-      s"a rerun over a table with empty buckets must read the run records alone: $read")
+    assert(jobs == 0, s"a rerun over a table with empty buckets must start no Spark job, started $jobs")
 
     // 5 pages fill at most 5 of 64 buckets: the rest are done with zero counts
     assert(r1.bucketsDone == 64)
@@ -286,11 +277,10 @@ class RunnerSpec extends AnyFunSuite {
     val r1 = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
     assert(r1.docsProcessed == 0 && recordFiles(out) == 1)
 
-    val (r2, queries) = TestSpark.capturingQueries(
+    val (r2, jobs) = TestSpark.countingJobs(
       ExtractRunner.run(spark, s"$base/pages", out, buckets = 8))
     assert(r2.docsProcessed == 0 && recordFiles(out) == 2)
-    val read = TestSpark.pathsRead(queries)
-    assert(!read.contains(s"$base/pages"), s"a rerun over an empty table must not read the pages: $read")
+    assert(jobs == 0, s"a rerun over an empty table must start no Spark job, started $jobs")
 
     for (url <- Seq("https://e/a", "https://e/b", "https://e/c"))
       assert(ExtractRunner.status(spark, out, url).count() == 0, url)
@@ -311,6 +301,102 @@ class RunnerSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](ExtractRunner.status(spark, out, url))
     assert(e.getMessage.contains(s"$out/runs") && e.getMessage.contains("pass `buckets`"), e.getMessage)
     assert(ExtractRunner.status(spark, out, url, buckets = 8).count() == 1)
+  }
+
+  test("runner: a default-buckets status lookup runs one query, the pruned extracted/ scan") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_lookup").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+    val out = s"$base/out"
+    ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+    val url = spark.read.parquet(s"$out/extracted").select(col("url")).as[String].head()
+    val (rows, queries) = TestSpark.capturingQueries(ExtractRunner.status(spark, out, url).collect())
+    assert(rows.map(_.getAs[String]("url")).toSeq == Seq(url))
+    assert(queries.size == 1 && TestSpark.pathsRead(queries) == Seq(s"$out/extracted"),
+      s"expected one query over extracted/, got ${queries.size}: ${TestSpark.pathsRead(queries)}")
+  }
+
+  test("runner: a run record round-trips through the driver parser and the views") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft_roundtrip").toString + "/out"
+    val samples = Seq("say \"no\"", "line one\nline two", "C:\\pages\\a.pdf", "文件内容为空")
+    val lineage = Seq(
+      PartitionLineage(3, 5L, 40L, 1L, 4L, samples, "completed"),
+      PartitionLineage(5, 0L, 0L, 0L, 0L, Seq.empty, "cancelled"))
+    // a negative id: the name carries it as unsigned hex
+    val rec = RunRecord(-42L, 8, "standard", "completed", 5L, 1L, 7L,
+      java.time.Instant.now().toString, lineage)
+    RunLog.commit(spark, s"$out/runs", rec)
+
+    val entries = RunLog.entries(spark, s"$out/runs")
+    assert(entries.map(e => (e.snapshotId, e.buckets)) == Seq((-42L, 8)))
+    assert(RunLog.read(spark, entries.head) == rec)
+    assert(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(entries.head.path.toUri)).size == 1,
+      "a record is one line")
+    assert(ExtractRunner.runs(spark, out).collect().map(_.toSeq).toSeq ==
+      Seq(rec.productIterator.toSeq.init))
+    assert(ExtractRunner.lineage(spark, out).orderBy(col("bucket")).as[(Long, Int, Long, Long,
+        Long, Long, Seq[String], String)].collect().toSeq ==
+      lineage.map(l => (rec.snapshot_id, l.bucket, l.doc_count, l.byte_count, l.ok_count,
+        l.fail_count, l.failure_samples, l.status)))
+  }
+
+  test("runner: a run log entry that is not a record fails the run at submission, naming it") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_notrecord").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+    val snapId = ExtractJob.listedSnapshotId(spark, s"$base/pages")
+    val recordName = s"s${java.lang.Long.toHexString(snapId)}_b8_1700000000000_" +
+      s"${java.util.UUID.randomUUID()}.json"
+    def put(out: String, name: String, content: String): Unit = {
+      val f = java.nio.file.Paths.get(s"$out/runs/$name")
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, content.getBytes("UTF-8"))
+    }
+    val cases = Seq[(String, String => String)](
+      "junk" -> { out => put(out, "notes.txt", "hello"); "notes.txt" },
+      // a run record as a parquet-era run wrote it: a committed part file
+      "parquet record" -> { out =>
+        Seq(RunRecord(snapId, 8, "standard", "completed", 0L, 0L, 1L, "2024-01-01T00:00:00Z", Nil))
+          .toDS().coalesce(1).write.parquet(s"$out/runs")
+        new java.io.File(s"$out/runs").list().find(_.startsWith("part-")).get
+      },
+      "record name, not JSON" -> { out => put(out, recordName, "{\"snapshot_id\": "); recordName })
+    for ((label, make) <- cases) {
+      val out = s"$base/out-${label.replace(' ', '-')}"
+      val bad = make(out)
+      val before = filesUnder(out)
+      val e = intercept[IllegalStateException] {
+        ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+      }
+      assert(e.getMessage.contains(s"$out/runs/$bad"), s"$label: ${e.getMessage}")
+      assert(filesUnder(out) == before, s"$label: the failed run wrote under the out root")
+    }
+  }
+
+  test("runner: the planned snapshot id is the inferred read's id, and a changed pages dir fails the run") {
+    val base = java.nio.file.Files.createTempDirectory("graft_snapid").toString
+    val pages = s"$base/pages"
+    PageSynth.pages(spark, sf0001).limit(60).repartition(3).write.parquet(pages)
+    val dir = new java.io.File(pages)
+    // with Spark's _SUCCESS and .crc files, plus hidden files of our own
+    java.nio.file.Files.write(new java.io.File(dir, ".hidden").toPath, Array[Byte](1))
+    java.nio.file.Files.write(new java.io.File(dir, "_staging").toPath, Array[Byte](1))
+    assert(ExtractJob.listedSnapshotId(spark, pages) == ExtractJob.snapshotIdOf(spark, pages))
+    // flat: part files alone
+    dir.listFiles().filterNot(_.getName.startsWith("part-")).foreach(_.delete())
+    assert(dir.list().forall(_.startsWith("part-")))
+    assert(ExtractJob.listedSnapshotId(spark, pages) == ExtractJob.snapshotIdOf(spark, pages))
+
+    // a part file lands between the planning listing and the inferred read
+    spark.sparkContext.hadoopConfiguration.set("fs.grow.impl", classOf[GrowingFs].getName)
+    GrowingFs.pagesDir = pages
+    val e = intercept[IllegalStateException] {
+      ExtractRunner.run(spark, pages, s"grow://$base/out", buckets = 8)
+    }
+    assert(GrowingFs.grown, "the pages dir never grew")
+    assert(e.getMessage.contains(s"pages at $pages changed while the run was planned"), e.getMessage)
+    assert(!new java.io.File(s"$base/out").exists(), "a run over a changed pages dir must write nothing")
   }
 
   test("runner: explicit cancel mid-run writes cancelled marks; rerun converges (A10)") {
@@ -362,5 +448,31 @@ class RunnerSpec extends AnyFunSuite {
     val js = ExtractRunner.jobStatus(spark, s"$base/out").collect()(0)
     assert(js.getAs[Long]("buckets_done") == 8 &&
       js.getAs[Long]("buckets_cancelled") == 8)
+  }
+}
+
+/** The local filesystem under a `grow:` scheme: the first time a run
+  * checks for the `runs/` dir of an out root on it, which it does after
+  * listing the pages for its plan, one more part file lands in
+  * `GrowingFs.pagesDir`.
+  */
+class GrowingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("grow:///")
+  override def getScheme: String = "grow"
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean = {
+    if (f.getName == "runs") GrowingFs.grow()
+    super.exists(f)
+  }
+}
+
+object GrowingFs {
+  @volatile var pagesDir: String = ""
+  @volatile var grown = false
+  def grow(): Unit = synchronized {
+    if (!grown) {
+      val part = new java.io.File(pagesDir).listFiles().find(_.getName.startsWith("part-")).get
+      java.nio.file.Files.copy(part.toPath, new java.io.File(pagesDir, s"part-grown-${part.getName}").toPath)
+      grown = true
+    }
   }
 }

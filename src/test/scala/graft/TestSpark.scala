@@ -50,6 +50,38 @@ object TestSpark {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** Runs `body` and returns it with the number of Spark jobs it started
+    * from this thread (or threads it spawned). Jobs are told apart by a
+    * local property; a marker job submitted after `body` drains the
+    * listener bus, which delivers job starts in order.
+    */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => started.incrementAndGet(): Unit
+          case t if t == s"$tag-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "the listener bus did not drain")
+      (out, started.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Root paths of every file relation the queries read, subqueries
     * included. Taken from the analyzed plans: AQE can drop a scan that
     * already ran from its final physical plan (a stage found empty at
