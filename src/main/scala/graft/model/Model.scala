@@ -77,7 +77,7 @@ case class PartitionLineage(
   * bucket it covered.
   *
   * Stored as one single-line JSON file under `runs/`, named
-  * `s<unsigned hex snapshot_id>_b<buckets>_<run_at epoch ms>_<uuid>.json`
+  * `s<unsigned hex snapshot_id>_b<buckets>_d<buckets_done>_<run_at epoch ms>_<uuid>.json`
   * and published by renaming a hidden temp file (`operators.RunLog`).
   */
 case class RunRecord(

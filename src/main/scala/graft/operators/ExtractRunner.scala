@@ -23,16 +23,17 @@ import graft.model.{Extracted, Page, PartitionLineage, RunRecord}
   * hidden temp name, and published by one rename (`RunLog`), so a run is
   * recorded whole or not at all (Iceberg's snapshot log with the manifest
   * inlined, kept as Delta Lake keeps its commit log). Its name carries the
-  * snapshot id and the bucket modulus. `runs` and `lineage` are views over
-  * the records.
+  * snapshot id, the bucket modulus and the number of completed buckets.
+  * `runs` and `lineage` are views over the records.
   *
   * Resume-from-checkpoint (north rule): a run plans from the records
   * alone, on the driver: the snapshot id from the pages' file listing,
   * every modulus from the record names, and the done buckets from this
-  * snapshot's records. The buckets it covers are every bucket the records
-  * do not hold as completed for this input snapshot. The pages are read
-  * once, by the kernel, with the done buckets anti-joined away, and
-  * dynamic-partition-overwrite makes the rerun idempotent. A completed run
+  * snapshot's records that completed any (no-op and cancelled runs'
+  * records are never opened). The buckets it covers are every bucket the
+  * records do not hold as completed for this input snapshot. The pages
+  * are read once, by the kernel, with the done buckets anti-joined away,
+  * and dynamic-partition-overwrite makes the rerun idempotent. A completed run
   * records every covered bucket, an empty one as a zero-count row, so the
   * next run over the same snapshot stops after reading the records and
   * starts no Spark job. Kill it anywhere; run it again; the final table is
@@ -138,8 +139,11 @@ object ExtractRunner {
 
     // every bucket already completed for this snapshot → no page can be
     // left to do: a no-op resume reads this snapshot's records alone,
-    // never the pages, and still gets its record
-    val doneBuckets = logged.filter(_.snapshotId == snapshotId)
+    // never the pages, and still gets its record. Only a record whose
+    // name says it completed a bucket can add one; the rest (no-op
+    // resumes, cancelled runs) stay unopened, so planning does not slow
+    // as scheduled reruns pile up
+    val doneBuckets = logged.filter(e => e.snapshotId == snapshotId && e.bucketsDone > 0)
       .flatMap(RunLog.read(spark, _).lineage.collect { case l if l.status == "completed" => l.bucket })
       .toSet
     if ((0 until buckets).forall(doneBuckets))
@@ -264,25 +268,18 @@ object ExtractRunner {
 
   private def runsPath(outRoot: String): String = s"$outRoot/runs"
 
-  /** Every committed run record, read with the record's own schema: no
-    * inference job. The file listing skips hidden names, so a record not
-    * yet published by its rename is invisible.
-    */
-  private def records(spark: SparkSession, outRoot: String): DataFrame =
-    spark.read.schema(Encoders.product[RunRecord].schema).json(runsPath(outRoot))
-
   /** The run ledger (Iceberg snapshot-log analogue): one row per run —
     * what ran, over which input snapshot, with which modulus and outcome.
     */
   def runs(spark: SparkSession, outRoot: String): DataFrame =
-    records(spark, outRoot).drop("lineage")
+    RunLog.frame(spark, runsPath(outRoot)).drop("lineage")
 
   /** Bucket lineage: one row per bucket per run, with its run's snapshot
     * id. A bucket completed twice (a rerun of a cancelled run, say) has a
     * row per run.
     */
   def lineage(spark: SparkSession, outRoot: String): DataFrame =
-    records(spark, outRoot)
+    RunLog.frame(spark, runsPath(outRoot))
       .select(col("snapshot_id"), explode(col("lineage")).as("l"))
       .select(col("snapshot_id"), col("l.*"))
 

@@ -4,31 +4,33 @@ import com.fasterxml.jackson.databind.DeserializationFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 import graft.model.RunRecord
 
 /** The run log under `runs/`, kept on the driver: one single-line JSON
   * file per `RunRecord` (Delta Lake's commit-log shape). No Spark job
-  * reads or writes it.
+  * reads or writes it for planning; only the `frame` views run one.
   *
   * A record is written under a hidden temp name and published by one
   * rename, so it is visible whole or not at all: a writer killed before
   * the rename leaves only a hidden file, which this log and Spark's file
-  * listing both skip. The name carries the snapshot id and the bucket
-  * modulus,
+  * listing both skip. The name carries the snapshot id, the bucket
+  * modulus and the number of buckets the run completed,
   *
-  *   s<unsigned hex snapshot id>_b<buckets>_<run_at epoch ms>_<uuid>.json
+  *   s<unsigned hex snapshot id>_b<buckets>_d<buckets done>_<run_at epoch ms>_<uuid>.json
   *
-  * so planning learns every record's modulus from one listing and parses
-  * only the records of its own snapshot.
+  * so planning learns every record's modulus from one listing and opens
+  * only the records of its own snapshot that completed a bucket: the
+  * records no-op resumes and cancelled runs append are never opened.
   */
 private[graft] object RunLog {
 
   /** A committed record, as its name describes it. */
-  final case class Entry(path: Path, snapshotId: Long, buckets: Int)
+  final case class Entry(path: Path, snapshotId: Long, buckets: Int, bucketsDone: Long)
 
-  private val RecordName = """s([0-9a-f]{1,16})_b([1-9][0-9]{0,8})_([0-9]+)_([0-9a-f-]{36})\.json""".r
+  private val RecordName =
+    """s([0-9a-f]{1,16})_b([1-9][0-9]{0,8})_d([0-9]{1,10})_([0-9]+)_([0-9a-f-]{36})\.json""".r
 
   // strict: a record missing a field, holding a null one or trailing junk
   // fails to parse instead of reading as zeros
@@ -48,7 +50,7 @@ private[graft] object RunLog {
   /** Writes `record` under `dir` and publishes it by rename. */
   def commit(spark: SparkSession, dir: String, record: RunRecord): Unit = {
     val name = s"s${java.lang.Long.toHexString(record.snapshot_id)}_b${record.buckets}_" +
-      s"${java.time.Instant.parse(record.run_at).toEpochMilli}_${java.util.UUID.randomUUID()}.json"
+      s"d${record.buckets_done}_${java.time.Instant.parse(record.run_at).toEpochMilli}_${java.util.UUID.randomUUID()}.json"
     val target = new Path(dir, name)
     val temp = new Path(dir, s".$name.tmp")
     val fs = fsOf(spark, target)
@@ -72,10 +74,10 @@ private[graft] object RunLog {
     else fs.listStatus(p).toSeq.map(_.getPath).filterNot(f => hidden(f.getName))
       .sortBy(_.getName).map { f =>
         f.getName match {
-          case RecordName(id, buckets, _, _) =>
-            Entry(f, java.lang.Long.parseUnsignedLong(id, 16), buckets.toInt)
+          case RecordName(id, buckets, done, _, _) =>
+            Entry(f, java.lang.Long.parseUnsignedLong(id, 16), buckets.toInt, done.toLong)
           case _ => throw new IllegalStateException(
-            s"$f is not a run record (s<hex snapshot id>_b<buckets>_<ms>_<uuid>.json); " +
+            s"$f is not a run record (s<hex snapshot id>_b<buckets>_d<buckets done>_<ms>_<uuid>.json); " +
               "move it out of the run log")
         }
       }
@@ -91,9 +93,20 @@ private[graft] object RunLog {
       case ex: Exception =>
         throw new IllegalStateException(s"cannot read the run record ${e.path}", ex)
     } finally in.close()
-    if (r.snapshot_id != e.snapshotId || r.buckets != e.buckets)
+    if (r.snapshot_id != e.snapshotId || r.buckets != e.buckets || r.buckets_done != e.bucketsDone)
       throw new IllegalStateException(s"run record ${e.path} holds snapshot_id=${r.snapshot_id}, " +
-        s"buckets=${r.buckets}; its name says snapshot_id=${e.snapshotId}, buckets=${e.buckets}")
+        s"buckets=${r.buckets}, buckets_done=${r.buckets_done}; its name says " +
+        s"snapshot_id=${e.snapshotId}, buckets=${e.buckets}, buckets_done=${e.bucketsDone}")
     r
+  }
+
+  /** Every committed record under `dir` as a frame with the record's own
+    * schema: no inference job. The names are checked first, as `entries`
+    * checks them, and content that is not JSON fails the first action
+    * over the frame: an unreadable log never reads as an empty one.
+    */
+  def frame(spark: SparkSession, dir: String): DataFrame = {
+    entries(spark, dir)
+    spark.read.schema(Encoders.product[RunRecord].schema).option("mode", "FAILFAST").json(dir)
   }
 }

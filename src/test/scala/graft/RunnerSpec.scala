@@ -46,9 +46,8 @@ class RunnerSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  /** Committed record files under `runs/` (visible `.json` names). */
-  private def recordFiles(out: String): Int =
-    Option(new java.io.File(s"$out/runs").list()).fold(0)(_.count(n => n.startsWith("s") && n.endsWith(".json")))
+  /** Committed records under `runs/`. */
+  private def recordFiles(out: String): Int = RunLog.entries(spark, s"$out/runs").size
 
   test("runner: full run, then no-op rerun, then crash-resume equivalence") {
     import spark.implicits._
@@ -346,7 +345,7 @@ class RunnerSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft_notrecord").toString
     PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
     val snapId = ExtractJob.listedSnapshotId(spark, s"$base/pages")
-    val recordName = s"s${java.lang.Long.toHexString(snapId)}_b8_1700000000000_" +
+    val recordName = s"s${java.lang.Long.toHexString(snapId)}_b8_d8_1700000000000_" +
       s"${java.util.UUID.randomUUID()}.json"
     def put(out: String, name: String, content: String): Unit = {
       val f = java.nio.file.Paths.get(s"$out/runs/$name")
@@ -371,7 +370,36 @@ class RunnerSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains(s"$out/runs/$bad"), s"$label: ${e.getMessage}")
       assert(filesUnder(out) == before, s"$label: the failed run wrote under the out root")
+      // the views fail on it too, never reading it as no runs
+      for ((view, rows) <- Seq[(String, () => Any)](
+          "runs" -> (() => ExtractRunner.runs(spark, out).collect()),
+          "lineage" -> (() => ExtractRunner.lineage(spark, out).collect()),
+          "jobStatus" -> (() => ExtractRunner.jobStatus(spark, out).collect()))) {
+        val ve = intercept[Exception](rows())
+        val msgs = Iterator.iterate[Throwable](ve)(_.getCause).takeWhile(_ != null).take(16).map(_.getMessage).mkString("\n")
+        assert(msgs.contains(bad), s"$label, $view: $msgs")
+      }
     }
+  }
+
+  test("runner: planning opens only this snapshot's records that completed a bucket") {
+    val base = java.nio.file.Files.createTempDirectory("graft_opens").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+    val out = s"$base/out"
+    ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+    // scheduled reruns over the same snapshot: each appends a record that
+    // completed nothing, as do cancelled runs and runs over other snapshots
+    for (_ <- 1 to 20) assert(ExtractRunner.run(spark, s"$base/pages", out, buckets = 8).docsProcessed == 0)
+    writeRecord(out, 12345L, Seq(PartitionLineage(0, 1L, 1L, 1L, 0L, Seq.empty, "completed")))
+    assert(recordFiles(out) == 22)
+
+    spark.sparkContext.hadoopConfiguration.set("fs.opens.impl", classOf[OpenCountingFs].getName)
+    OpenCountingFs.opened.clear()
+    val r = ExtractRunner.run(spark, s"$base/pages", s"opens://$out", buckets = 8)
+    assert(r.docsProcessed == 0 && recordFiles(out) == 23)
+    val opened = OpenCountingFs.opened.asScala.toSeq
+    assert(opened.size == 1 && opened.forall(_.contains("_d8_")),
+      s"a no-op resume must open only the record of the run that did the work: ${opened.mkString(", ")}")
   }
 
   test("runner: the planned snapshot id is the inferred read's id, and a changed pages dir fails the run") {
@@ -475,4 +503,20 @@ object GrowingFs {
       grown = true
     }
   }
+}
+
+/** The local filesystem under an `opens:` scheme, noting every file it
+  * opens.
+  */
+class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("opens:///")
+  override def getScheme: String = "opens"
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    OpenCountingFs.opened.add(f.toString)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
