@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.kernel.ExtractKernel
 import graft.model.{Extracted, Page, PageRaw}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** The flagship pipeline: pages → extract kernel (narrow, shuffle-free) →
@@ -158,24 +159,24 @@ object ExtractJob {
       .parquet(outDir)
   }
 
-  /** Snapshot id for an input: stable hash of the resolved input files
-    * (the Iceberg snapshot-id stand-in; SURVEY.md §1.2 "Iceberg note").
+  /** Snapshot id of an input (the Iceberg snapshot-id stand-in; SURVEY.md
+    * §1.2 "Iceberg note"): a stable hash of the sorted path, length and
+    * mtime of every file the frame reads, so a file rewritten in place
+    * under its old name (writers that number their parts, or a re-staged
+    * WARC dir) gets a new id. The statuses are the cached listing of the
+    * frame's file relations, the listing its scan reads: no Spark job and
+    * no filesystem call. The one snapshot id of the engine: run planning,
+    * lineage and resume, and the trained-codebook memos key on it.
     */
-  def snapshotIdOf(spark: SparkSession, inputPath: String): Long =
-    snapshotIdOf(spark.read.parquet(inputPath))
-
-  /** The same id from a frame already read over the input — no second
-    * listing of the table.
-    */
-  def snapshotIdOf(input: DataFrame): Long =
-    input.inputFiles.sorted.foldLeft(17L)((acc, f) => acc * 31L + f.hashCode.toLong)
-
-  /** The same id for a pages table from its file listing alone: the frame
-    * is declared with the `Page` schema, so no schema inference job runs.
-    * The listing and the URI strings are the inferred read's.
-    */
-  def listedSnapshotId(spark: SparkSession, pagesDir: String): Long =
-    snapshotIdOf(spark.read.schema(Encoders.product[Page].schema).parquet(pagesDir))
+  def snapshotIdOf(input: DataFrame): Long = {
+    val relations = input.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r }
+    require(relations.nonEmpty, "a snapshot id needs a frame that reads files")
+    relations.flatMap(_.location.listFiles(Nil, Nil).flatMap(_.files)).sortBy(_.getPath.toString)
+      .foldLeft(17L) { (acc, f) =>
+        ((acc * 31L + f.getPath.toString.hashCode.toLong) * 31L + f.getLen) * 31L + f.getModificationTime
+      }
+  }
 
   /** Per-host metrics with salting for the hot hosts: two-phase agg —
     * partial counts on (host, salt), then final on host — so a single hot

@@ -119,13 +119,14 @@ object ExtractRunner {
     val t0 = System.currentTimeMillis()
     // input format: parquet table OR a directory of .warc(.gz) files —
     // crawls run in arrival format with identical lineage/resume
-    // semantics (the snapshot id hashes the file listing either way)
+    // semantics. The planned snapshot is the id of a frame declared with
+    // no Spark job: the WARC frame the kernel reads, or the pages table
+    // under the `Page` schema (no schema inference job)
     val warcInput = graft.sources.Warc.isWarcDir(spark, pagesDir)
-    // the planned snapshot, from a file listing alone (the stable hash of
-    // the input files; no schema inference job)
-    val snapshotId =
-      if (warcInput) graft.sources.Warc.snapshotIdOf(spark, pagesDir)
-      else ExtractJob.listedSnapshotId(spark, pagesDir)
+    val planned =
+      if (warcInput) graft.sources.Warc.pages(spark, pagesDir)
+      else spark.read.schema(Encoders.product[Page].schema).parquet(pagesDir).as[Page]
+    val snapshotId = ExtractJob.snapshotIdOf(planned.toDF())
 
     val logged = RunLog.entries(spark, runsPath(outRoot))
     // the modulus is a TABLE property: a lookup hashing with the wrong one
@@ -150,7 +151,7 @@ object ExtractRunner {
       return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0)
 
     val pages =
-      if (warcInput) graft.sources.Warc.pages(spark, pagesDir)
+      if (warcInput) planned
       else {
         // the inferred read, so a mistyped table fails at analysis; it
         // lists the files again, and they must be the planned snapshot

@@ -110,21 +110,22 @@ object Pq {
   }
 
   /** [sub][code][subdim] — per-subspace codebooks. Memoized per
-    * (dir, input-file fingerprint) exactly like Similarity.ivfCentroids:
+    * embeddings snapshot id exactly like Similarity.ivfCentroids:
     * training is deterministic, and every IVF-PQ retrieval call would
     * otherwise re-pay the sample collect + per-subspace Lloyd runs.
     */
-  def trainCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    Similarity.boundedMemo(bookCache,
-      s"$dir#${Similarity.embeddingsFingerprint(s, dir)}")(
-      trainCodebooksUncached(s, dir))
+  def trainCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] = {
+    val embeddings = Relational.table(s, dir, "embeddings")
+    Similarity.boundedMemo(bookCache, ExtractJob.snapshotIdOf(embeddings))(
+      trainCodebooksUncached(embeddings))
+  }
 
   private val bookCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
+    scala.collection.concurrent.TrieMap.empty[Long, Array[Array[Array[Double]]]]
 
-  private def trainCodebooksUncached(s: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    import s.implicits._
-    val e = Relational.table(s, dir, "embeddings")
+  private def trainCodebooksUncached(embeddings: DataFrame): Array[Array[Array[Double]]] = {
+    import embeddings.sparkSession.implicits._
+    val e = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val n = e.agg(count(lit(1))).as[Long].head()
     val stride = math.max(1L, n / TrainCap)

@@ -182,15 +182,15 @@ object Similarity {
     * (ivfCellsFor). Returns (cellId, centroid).
     */
   def ivfCentroids(s: SparkSession, dir: String): Array[(Int, Array[Double])] = {
-    // memoized per (dir, input-file fingerprint): the codebook is
-    // deterministic, and annIvfCells + annIvfProbes would otherwise each
-    // pay the sample collect + Lloyd training. The fingerprint folds each
-    // file's LENGTH and MODIFICATION TIME alongside its name: a table
-    // rewritten in place with identical part-file names (same layout,
-    // new content) still retrains instead of silently reusing a stale
-    // codebook.
-    boundedMemo(centroidCache, s"$dir#${embeddingsFingerprint(s, dir)}")(
-      trainIvfCentroids(s, dir))
+    // memoized per embeddings snapshot: the codebook is deterministic, and
+    // annIvfCells + annIvfProbes would otherwise each pay the sample
+    // collect + Lloyd training. The snapshot id folds each file's LENGTH
+    // and MODIFICATION TIME alongside its name: a table rewritten in place
+    // with identical part-file names (same layout, new content) still
+    // retrains instead of silently reusing a stale codebook.
+    val embeddings = Relational.table(s, dir, "embeddings")
+    boundedMemo(centroidCache, ExtractJob.snapshotIdOf(embeddings))(
+      trainIvfCentroids(embeddings))
   }
 
   /** Bounded trained-artifact memo, shared by the IVF-centroid and PQ
@@ -200,34 +200,18 @@ object Similarity {
     * cache but not the other would silently desynchronize retraining.
     */
   private[operators] def boundedMemo[A](
-      cache: scala.collection.concurrent.TrieMap[String, A], key: String)(
+      cache: scala.collection.concurrent.TrieMap[Long, A], key: Long)(
       train: => A): A = {
     if (cache.size > 16) cache.clear()
     cache.getOrElseUpdate(key, train)
   }
 
-  /** Cache key for per-corpus trained artifacts (IVF and PQ codebooks). */
-  private[operators] def embeddingsFingerprint(s: SparkSession, dir: String): Long = {
-    val files = s.read.parquet(s"$dir/embeddings.parquet").inputFiles.sorted
-    val conf = s.sparkContext.hadoopConfiguration
-    files.foldLeft(17L) { (acc, f) =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      // a file deleted between listing and stat (concurrent rewrite)
-      // must not fail the query — fold a sentinel; the changed listing
-      // itself already changes the fingerprint on the next call
-      val (len, mtime) =
-        try { val st = p.getFileSystem(conf).getFileStatus(p); (st.getLen, st.getModificationTime) }
-        catch { case _: java.io.IOException => (-1L, -1L) }
-      ((acc * 31L + f.hashCode.toLong) * 31L + len) * 31L + mtime
-    }
-  }
-
   private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Int, Array[Double])]]
+    scala.collection.concurrent.TrieMap.empty[Long, Array[(Int, Array[Double])]]
 
-  private def trainIvfCentroids(s: SparkSession, dir: String): Array[(Int, Array[Double])] = {
-    import s.implicits._
-    val e = Relational.table(s, dir, "embeddings")
+  private def trainIvfCentroids(embeddings: DataFrame): Array[(Int, Array[Double])] = {
+    import embeddings.sparkSession.implicits._
+    val e = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val n = e.agg(count(lit(1))).as[Long].collect()(0)
     val cells = ivfCellsFor(n)

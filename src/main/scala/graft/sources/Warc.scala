@@ -30,7 +30,8 @@ import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
   * it are kept, `warc_torn_tails` increments); a parseable
   * Content-Length over the per-record cap skips just that record
   * (`warc_oversize_records_dropped` increments) and parsing continues —
-  * never a throw, never a silent drop.
+  * never a silent drop. A file whose filesystem checksum fails is
+  * corrupt, not torn: its read throws, naming the file.
   */
 object Warc {
 
@@ -150,6 +151,14 @@ object Warc {
     override def close(): Unit = { inf.end(); in.close() }
   }
 
+  /** A read failure that ends a file's record stream as a torn tail:
+    * any I/O error but a checksum mismatch, which is corruption.
+    */
+  private object TornRead {
+    def unapply(e: java.io.IOException): Boolean =
+      !e.isInstanceOf[org.apache.hadoop.fs.ChecksumException]
+  }
+
   /** Streaming record iterator over a WARC byte stream (plain or
     * gzip-member framed — the gzip sniff reads two bytes through a
     * pushback wrapper; `GzipMembers` walks the member chain). Memory
@@ -160,7 +169,9 @@ object Warc {
     *     kept, `onTorn` fired once;
     *   - parseable Content-Length over `MaxRecordPayload` → the payload
     *     is SKIPPED (no allocation), `onOversize` fired, iteration
-    *     continues with the next record.
+    *     continues with the next record;
+    *   - a `ChecksumException` (the bytes no longer match the
+    *     filesystem's checksum) → thrown, never counted as a torn tail.
     */
   def recordIterator(raw: java.io.InputStream,
       onOversize: () => Unit = () => (),
@@ -175,7 +186,7 @@ object Warc {
         if (b0 >= 0) pb.unread(b0)
         if (b0 == 0x1f && b1 == 0x8b) new GzipMembers(pb)
         else pb
-      } catch { case _: java.io.IOException => onTorn(); null }
+      } catch { case TornRead() => onTorn(); null }
     if (in == null) return Iterator.empty
 
     new scala.collection.AbstractIterator[WarcRecord] {
@@ -220,7 +231,7 @@ object Warc {
         while (nextRec == null && !done) {
           val hn =
             try readHeader()
-            catch { case _: java.io.IOException => -2 }
+            catch { case TornRead() => -2 }
           if (hn == -1) { done = true }
           else if (hn == -2) { torn(); () }
           else {
@@ -252,13 +263,13 @@ object Warc {
                 try {
                   in.skipNBytes(clen)
                   onOversize()
-                } catch { case _: java.io.IOException | _: java.io.EOFException => torn(); () }
+                } catch { case TornRead() => torn(); () }
               } else {
                 try {
                   val payload = in.readNBytes(clen.toInt)
                   if (payload.length < clen) { torn(); () }
                   else nextRec = WarcRecord(url, wtype, payload)
-                } catch { case _: java.io.IOException => torn(); () }
+                } catch { case TornRead() => torn(); () }
               }
             }
           }
@@ -307,8 +318,9 @@ object Warc {
     * must land where every reader task can list them; overwrite=true
     * keeps re-staging idempotent; task-side Configuration resolves the
     * default FS from the classpath's core-site, the standard pattern).
-    * ONE implementation so the staging contract snapshotIdOf depends on
-    * (fixed part names + fresh length/mtime) cannot diverge per caller.
+    * ONE implementation so the staging contract ExtractJob.snapshotIdOf
+    * depends on (fixed part names + fresh length/mtime) cannot diverge per
+    * caller.
     */
   private[graft] def stageRecords[T](ds: Dataset[T], dir: String, parts: Int,
       key: org.apache.spark.sql.Column)(toRecord: T => WarcRecord): Unit = {
@@ -370,24 +382,6 @@ object Warc {
         n.endsWith(".warc.gz") || n.endsWith(".warc")
       }
     } catch { case _: java.io.IOException => false }
-  }
-
-  /** Snapshot id over the WARC file listing — same stable-hash contract
-    * as ExtractJob.snapshotIdOf for parquet inputs, so lineage/resume
-    * semantics are input-format-independent. Length and mtime fold in
-    * alongside the path: stagePages reuses fixed part-NNNNN names, so a
-    * dir re-staged IN PLACE with new content must produce a NEW
-    * snapshot id — otherwise resume would silently skip the fresh data
-    * (the same in-place-rewrite hazard Similarity.embeddingsFingerprint
-    * guards its codebook memo against).
-    */
-  def snapshotIdOf(s: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).sortBy(_.getPath.toString).foldLeft(17L) { (acc, st) =>
-      ((acc * 31L + st.getPath.toString.hashCode.toLong) * 31L + st.getLen) * 31L +
-        st.getModificationTime
-    }
   }
 
   /** Per-SparkContext drop counters for the WARC read path — the

@@ -117,4 +117,23 @@ class PqSpec extends AnyFunSuite {
       assert(math.abs(lutDot - direct) < 1e-9, s"$lutDot vs $direct")
     }
   }
+
+  test("embeddings rewritten in place under the same file name retrain the codebooks") {
+    val dir = java.nio.file.Files.createTempDirectory("pq_inplace").toString
+    val emb = java.nio.file.Paths.get(dir, "embeddings.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "embeddings.parquet"), emb)
+    emb.toFile.setWritable(true): Unit
+    val a = Pq.trainCodebooks(spark, dir)
+    assert(Pq.trainCodebooks(spark, dir) eq a, "an unchanged table reuses its codebooks")
+    // the same file name, every vector doubled
+    spark.read.parquet(emb.toString)
+      .withColumn("embedding", transform(col("embedding"), x => x + x))
+      .coalesce(1).write.parquet(s"$dir/v2")
+    val part = new java.io.File(s"$dir/v2").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath, emb, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val b = Pq.trainCodebooks(spark, dir)
+    assert(!(b eq a), "a rewritten table must not reuse the old codebooks")
+    assert(!b(0)(0).sameElements(a(0)(0)), "codebooks trained on doubled vectors must differ")
+  }
 }

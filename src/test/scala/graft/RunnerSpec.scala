@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.{PartitionLineage, RunRecord}
+import graft.model.{Page, PartitionLineage, RunRecord}
 import graft.operators.{ExtractJob, ExtractRunner, RunLog}
-import graft.sources.PageSynth
+import graft.sources.{PageSynth, Warc}
 
 import scala.jdk.CollectionConverters._
 
@@ -45,6 +45,13 @@ class RunnerSpec extends AnyFunSuite {
     try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toSet
     finally files.close()
   }
+
+  /** The snapshot id of a pages table, through the inferred read. */
+  private def snapshotOf(pages: String): Long = ExtractJob.snapshotIdOf(spark.read.parquet(pages))
+
+  /** The snapshot id a run plans from: the table under the `Page` schema. */
+  private def listedId(pages: String): Long = ExtractJob.snapshotIdOf(
+    spark.read.schema(org.apache.spark.sql.Encoders.product[Page].schema).parquet(pages))
 
   /** Committed records under `runs/`. */
   private def recordFiles(out: String): Int = RunLog.entries(spark, s"$out/runs").size
@@ -172,7 +179,7 @@ class RunnerSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_records").toString
     PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
-    val snapId = ExtractJob.snapshotIdOf(spark, s"$base/pages")
+    val snapId = snapshotOf(s"$base/pages")
     // one record claims buckets 0-3 completed, a second one holds a
     // cancelled mark for bucket 4
     writeRecord(s"$base/out", snapId,
@@ -344,7 +351,7 @@ class RunnerSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_notrecord").toString
     PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
-    val snapId = ExtractJob.listedSnapshotId(spark, s"$base/pages")
+    val snapId = snapshotOf(s"$base/pages")
     val recordName = s"s${java.lang.Long.toHexString(snapId)}_b8_d8_1700000000000_" +
       s"${java.util.UUID.randomUUID()}.json"
     def put(out: String, name: String, content: String): Unit = {
@@ -410,11 +417,11 @@ class RunnerSpec extends AnyFunSuite {
     // with Spark's _SUCCESS and .crc files, plus hidden files of our own
     java.nio.file.Files.write(new java.io.File(dir, ".hidden").toPath, Array[Byte](1))
     java.nio.file.Files.write(new java.io.File(dir, "_staging").toPath, Array[Byte](1))
-    assert(ExtractJob.listedSnapshotId(spark, pages) == ExtractJob.snapshotIdOf(spark, pages))
+    assert(listedId(pages) == snapshotOf(pages))
     // flat: part files alone
     dir.listFiles().filterNot(_.getName.startsWith("part-")).foreach(_.delete())
     assert(dir.list().forall(_.startsWith("part-")))
-    assert(ExtractJob.listedSnapshotId(spark, pages) == ExtractJob.snapshotIdOf(spark, pages))
+    assert(listedId(pages) == snapshotOf(pages))
 
     // a part file lands between the planning listing and the inferred read
     spark.sparkContext.hadoopConfiguration.set("fs.grow.impl", classOf[GrowingFs].getName)
@@ -425,6 +432,66 @@ class RunnerSpec extends AnyFunSuite {
     assert(GrowingFs.grown, "the pages dir never grew")
     assert(e.getMessage.contains(s"pages at $pages changed while the run was planned"), e.getMessage)
     assert(!new java.io.File(s"$base/out").exists(), "a run over a changed pages dir must write nothing")
+  }
+
+  test("runner: a pages table rewritten in place under the same file names gets a new snapshot id") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_inplace").toString
+    val pages = java.nio.file.Paths.get(base, "pages")
+    java.nio.file.Files.createDirectories(pages)
+    // one part file under a fixed name, as pyarrow's `part-{i}.parquet`
+    // and DuckDB's `data_{i}.parquet` writers name theirs
+    def writeInPlace(rows: Seq[Page], tag: String): Unit = {
+      spark.createDataset(rows).coalesce(1).write.parquet(s"$base/$tag")
+      val part = new java.io.File(s"$base/$tag").listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, pages.resolve("part-0.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    }
+    val all = PageSynth.pages(spark, sf0001).collect().sortBy(_.url)
+    val before = all.take(60).toSeq
+    // the same urls with other pages' bodies
+    val after = before.zip(all.slice(60, 120)).map { case (o, n) => n.copy(url = o.url) }
+    def texts(out: String) = spark.read.parquet(s"$out/extracted")
+      .select(col("url"), col("status"), col("text")).as[(String, String, String)]
+      .collect().sortBy(_._1).toSeq
+
+    writeInPlace(before, "v1")
+    val r1 = ExtractRunner.run(spark, pages.toString, s"$base/out", buckets = 8)
+    assert(r1.docsProcessed == 60)
+    val texts1 = texts(s"$base/out")
+    writeInPlace(after, "v2")
+    assert(pages.toFile.list().toSeq == Seq("part-0.parquet"))
+    val r2 = ExtractRunner.run(spark, pages.toString, s"$base/out", buckets = 8)
+    assert(r2.snapshotId != r1.snapshotId, "a file rewritten in place must give a new snapshot id")
+    assert(r2.docsProcessed == 60, s"the rewritten table must be re-extracted, got ${r2.docsProcessed}")
+    // the new text landed: the table is a fresh run's over the rewritten file
+    ExtractRunner.run(spark, pages.toString, s"$base/ref", buckets = 8)
+    assert(texts(s"$base/out") == texts(s"$base/ref"))
+    assert(texts(s"$base/out") != texts1)
+  }
+
+  test("runner: a WARC run's id and rows come from the same listing") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_warcgrow").toString
+    val pages = s"$base/pages"
+    Warc.stagePages(PageSynth.pages(spark, sf0001).limit(60), pages, parts = 3)
+    val planned = ExtractJob.snapshotIdOf(Warc.pages(spark, pages).toDF())
+
+    // a .warc.gz lands after the run lists the pages for its plan
+    spark.sparkContext.hadoopConfiguration.set("fs.grow.impl", classOf[GrowingFs].getName)
+    GrowingFs.pagesDir = pages
+    GrowingFs.grown = false
+    val r = ExtractRunner.run(spark, pages, s"grow://$base/out", buckets = 8)
+    assert(GrowingFs.grown, "the pages dir never grew")
+    assert(r.docsProcessed == 60, s"only the planned files' pages may run, got ${r.docsProcessed}")
+    assert(r.snapshotId == planned)
+    assert(ExtractRunner.runs(spark, s"$base/out").select(col("snapshot_id")).as[Long]
+      .collect().toSeq == Seq(planned))
+    assert(spark.read.parquet(s"$base/out/extracted").count() == 60)
+
+    val next = ExtractRunner.run(spark, pages, s"$base/out", buckets = 8)
+    assert(next.snapshotId != planned, "the grown dir must be a new snapshot")
   }
 
   test("runner: explicit cancel mid-run writes cancelled marks; rerun converges (A10)") {
@@ -441,7 +508,7 @@ class RunnerSpec extends AnyFunSuite {
       p0.map(p => p.copy(url = p.url + s"?copy=$i"))
     }.reduce(_.unionAll(_)).write.mode("overwrite").parquet(s"$base/pages")
 
-    val snapId = ExtractJob.snapshotIdOf(spark, s"$base/pages")
+    val snapId = snapshotOf(s"$base/pages")
     val group = ExtractRunner.jobGroupFor(snapId)
     val fut = Future(ExtractRunner.run(spark, s"$base/pages", s"$base/out", buckets = 8))
     // cancel as soon as the run's job group has a live job (the write job)

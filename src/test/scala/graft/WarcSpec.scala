@@ -310,6 +310,39 @@ class WarcSpec extends AnyFunSuite {
     }
   }
 
+  test("a file whose checksum no longer matches fails the read, naming it; no torn tail counts") {
+    import TestSpark.spark
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("warccrc").toString
+    try {
+      val pages = (0 until 60).map { i =>
+        val html = s"<html><body><p>Body text for page $i, long enough to keep.</p></body></html>"
+        graft.model.Page(f"https://w/c$i%03d", null, html.getBytes("UTF-8"), "", "en")
+      }
+      Warc.stagePages(spark.createDataset(pages), s"$base/pages", parts = 3)
+      val files = new java.io.File(s"$base/pages").listFiles
+        .filter(_.getName.endsWith(".warc.gz")).sortBy(_.getName)
+      assert(files.length == 3)
+      // shorten the first file under its local-filesystem checksum sidecar
+      val bytes = java.nio.file.Files.readAllBytes(files.head.toPath)
+      java.nio.file.Files.write(files.head.toPath, bytes.take(bytes.length - 20))
+      assert(new java.io.File(s"$base/pages/.${files.head.getName}.crc").exists())
+      val torn = Warc.drops(spark.sparkContext).tornTails
+      val before = torn.value
+      val e = intercept[Exception](Warc.pages(spark, s"$base/pages").count())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(16).toSeq
+      assert(causes.exists(c => c.isInstanceOf[org.apache.hadoop.fs.ChecksumException] &&
+        c.getMessage.contains(files.head.getName)), causes.map(_.toString).mkString("\n"))
+      assert(torn.value == before, s"corruption counted as ${torn.value - before} torn tails")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(new java.io.File(base))
+    }
+  }
+
   test("q_wet_sink: extracted text round-trips as conversion records, byte-exact") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
