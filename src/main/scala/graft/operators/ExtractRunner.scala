@@ -119,13 +119,14 @@ object ExtractRunner {
     val t0 = System.currentTimeMillis()
     // input format: parquet table OR a directory of .warc(.gz) files —
     // crawls run in arrival format with identical lineage/resume
-    // semantics. The planned snapshot is the id of a frame declared with
-    // no Spark job: the WARC frame the kernel reads, or the pages table
-    // under the `Page` schema (no schema inference job)
-    val warcInput = graft.sources.Warc.isWarcDir(spark, pagesDir)
-    val planned =
-      if (warcInput) graft.sources.Warc.pages(spark, pagesDir)
-      else spark.read.schema(Encoders.product[Page].schema).parquet(pagesDir).as[Page]
+    // semantics. The pages table under the `Page` schema is declared with
+    // no Spark job (no schema inference), and its listing tells the
+    // format: any .warc or .warc.gz file makes it a WARC input. The
+    // planned snapshot is the id of that frame, or of the WARC frame the
+    // kernel reads
+    val listed = spark.read.schema(Encoders.product[Page].schema).parquet(pagesDir).as[Page]
+    val warcInput = listed.inputFiles.exists(f => f.endsWith(".warc.gz") || f.endsWith(".warc"))
+    val planned = if (warcInput) graft.sources.Warc.pages(spark, pagesDir) else listed
     val snapshotId = ExtractJob.snapshotIdOf(planned.toDF())
 
     val logged = RunLog.entries(spark, runsPath(outRoot))

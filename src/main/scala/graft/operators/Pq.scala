@@ -10,13 +10,13 @@ import org.apache.spark.sql.functions._
   * centroid from a per-subspace codebook (here 8 subs × 4 bits = 32 bits
   * per 64-dim float32 vector — 64× compression).
   *
-  * Training follows the same scale shape as the IVF codebook
-  * (Similarity.trainIvfCentroids): a deterministic id-stride sample
-  * capped at `TrainCap` is collected to the driver and per-subspace
-  * k-means (k-means++ D² init with an xxhash64-derived deterministic
-  * stream, then Lloyd) trains each codebook — the corpus itself never
-  * shuffles for training, and encode/decode is a narrow typed map over
-  * broadcast codebooks.
+  * Training shares its trainer with the IVF codebook
+  * (Similarity.ivfCentroids): `strideSample` collects a deterministic
+  * id-stride sample to the driver (capped at `TrainCap` here), and
+  * `kmeans` (k-means++ D² init with an xxhash64-derived deterministic
+  * stream, then Lloyd) trains each per-subspace codebook — the corpus
+  * itself never shuffles for training, and encode/decode is a narrow
+  * typed map over broadcast codebooks.
   *
   * The synthetic embeddings are near-uniform random directions — PQ's
   * worst case (no cluster structure to exploit) — so the fidelity floors
@@ -30,12 +30,33 @@ object Pq {
   val TrainCap = 4096
   val KmeansIters = 10
 
-  /** Deterministic k-means over a driver-side sample: k-means++ D²
-    * seeding driven by an xxhash64 stream (salted per subspace so the
-    * codebooks differ), then Lloyd iterations. First-index tie-breaks
-    * everywhere → bit-reproducible across runs and core counts.
+  /** Deterministic id-stride training sample, collected to the driver:
+    * the vectors whose vec_id is a multiple of max(1, n / cap) for n
+    * rows, sorted by vec_id. Returns n with the sample.
     */
-  private def kmeans(
+  private[operators] def strideSample(
+      embeddings: DataFrame, cap: Int): (Long, Array[Array[Double]]) = {
+    import embeddings.sparkSession.implicits._
+    val e = embeddings
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    val n = e.agg(count(lit(1))).as[Long].head()
+    val stride = math.max(1L, n / cap)
+    (n, e.filter(col("vec_id") % stride === 0)
+      .as[(Long, Seq[Double])].collect()
+      .sortBy(_._1).map(_._2.toArray))
+  }
+
+  /** Deterministic k-means over a driver-side sample: k-means++ D²
+    * seeding driven by an xxhash64 stream (salted per caller — per PQ
+    * subspace, so the codebooks differ, and once for the IVF codebook),
+    * then Lloyd iterations. No RNG object and first-index tie-breaks
+    * everywhere → bit-reproducible across runs and core counts. Each
+    * next seed is drawn with probability proportional to its squared
+    * distance from the nearest chosen seed — the published k-means++
+    * construction, which spreads seeds without the outlier-chasing of a
+    * pure farthest-point pick.
+    */
+  private[operators] def kmeans(
       sample: Array[Array[Double]],
       k: Int,
       iters: Int,
@@ -116,35 +137,25 @@ object Pq {
     */
   def trainCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] = {
     val embeddings = Relational.table(s, dir, "embeddings")
-    Similarity.boundedMemo(bookCache, ExtractJob.snapshotIdOf(embeddings))(
-      trainCodebooksUncached(embeddings))
+    Similarity.boundedMemo(bookCache, ExtractJob.snapshotIdOf(embeddings)) {
+      val (_, sample) = strideSample(embeddings, TrainCap)
+      // an empty table would throw at sample(0), and fewer samples than
+      // codes silently trains duplicate centroids — fail loudly instead,
+      // as the IVF codebook does
+      require(sample.length >= CodebookSize,
+        s"PQ training needs >= $CodebookSize sample vectors, got ${sample.length}")
+      val dims = sample(0).length
+      require(dims % SubVectors == 0, s"dims $dims not divisible by $SubVectors")
+      val sd = dims / SubVectors
+      Array.tabulate(SubVectors) { m =>
+        val sub = sample.map(v => java.util.Arrays.copyOfRange(v, m * sd, (m + 1) * sd))
+        kmeans(sub, CodebookSize, KmeansIters, salt = 7919L * (m + 1))
+      }
+    }
   }
 
   private val bookCache =
     scala.collection.concurrent.TrieMap.empty[Long, Array[Array[Array[Double]]]]
-
-  private def trainCodebooksUncached(embeddings: DataFrame): Array[Array[Array[Double]]] = {
-    import embeddings.sparkSession.implicits._
-    val e = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    val n = e.agg(count(lit(1))).as[Long].head()
-    val stride = math.max(1L, n / TrainCap)
-    val sample = e.filter(col("vec_id") % stride === 0)
-      .as[(Long, Seq[Double])].collect()
-      .sortBy(_._1).map(_._2.toArray)
-    // same guard as trainIvfCentroids: an empty table would throw at
-    // sample(0), and fewer samples than codes silently trains duplicate
-    // centroids — fail loudly instead
-    require(sample.length >= CodebookSize,
-      s"PQ training needs >= $CodebookSize sample vectors, got ${sample.length}")
-    val dims = sample(0).length
-    require(dims % SubVectors == 0, s"dims $dims not divisible by $SubVectors")
-    val sd = dims / SubVectors
-    Array.tabulate(SubVectors) { m =>
-      val sub = sample.map(v => java.util.Arrays.copyOfRange(v, m * sd, (m + 1) * sd))
-      kmeans(sub, CodebookSize, KmeansIters, salt = 7919L * (m + 1))
-    }
-  }
 
   /** Encode each vector to SubVectors 4-bit codes and decode back —
     * narrow typed map over the broadcast codebooks. The materialized

@@ -7,15 +7,23 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (Array[Float] column) — the retrieval layer of a training-data pipeline.
   *
-  * Two paths:
+  * Four paths:
   *   - annBruteForce: exact top-k by cosine. The query side is broadcast
   *     (queries ≪ corpus), so the corpus never shuffles: scan → score →
   *     per-query top-k via window. At 100 TB this is the "small query set
   *     against huge corpus" shape and it scales linearly.
   *   - annLsh: random-hyperplane (SimHash-for-vectors) signatures bucket
-  *     the corpus; queries probe their own bucket plus all 1-bit-flip
-  *     neighbors (multi-probe) and rank candidates exactly. Sub-linear
-  *     candidate sets; recall measured against brute force in the spec.
+  *     the corpus; queries probe their own bucket plus every 1- and 2-bit
+  *     flip of it (multi-probe, 37 probes per table). Sub-linear candidate
+  *     sets; recall measured against brute force in the spec.
+  *   - annIvf: a k-means coarse quantizer assigns the corpus to cells;
+  *     queries probe their nearest cells.
+  *   - annIvfPqFrom: IVF probing, then an ADC shortlist scored from PQ
+  *     codes (Pq).
+  *
+  * The three approximate paths end in the same exact re-rank
+  * (`exactTopK`) of their distinct candidate (qid, vec_id) pairs, and all
+  * four rank with one window (`keepTop`).
   *
   * All vector math uses built-in higher-order functions (zip_with +
   * aggregate — codegen'd, no UDF) via Dedup.dot/l2norm.
@@ -65,24 +73,7 @@ object Similarity {
     */
   def annBruteForce(s: SparkSession, dir: String): DataFrame = {
     val (q, e) = queriesAndCorpus(s, dir)
-    // rank on a COARSELY QUANTIZED sim: Spark and DuckDB fold the dot
-    // product in different orders, so raw sims differ in the last ulps —
-    // ranking on round(sim, 4) makes a cross-engine rank swap require a
-    // genuine 1e-15-scale tie sitting exactly on a 1e-4 grid line
-    // (~1e-11 per pair) instead of any near-tie; vec_id breaks grid ties
-    // identically on both engines. Deliberate product tradeoff: neighbors
-    // whose TRUE sims differ by < 1e-4 order by vec_id, not similarity —
-    // far below embedding noise, and the ranking becomes a deterministic
-    // total order any engine reproduces.
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(round(col("sim"), 4).desc, col("vec_id"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", Dedup.dot(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
-      .orderBy(col("qid"), col("rnk"))
+    cosineTopK(e.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid")))
   }
 
   val annBruteForceSql: String =
@@ -94,6 +85,55 @@ object Similarity {
        |     ORDER BY round(list_cosine_similarity(qe, CAST(e.embedding AS DOUBLE[])), 4) DESC, e.vec_id) AS rnk
        |  FROM q, embeddings e WHERE e.vec_id <> q.qid) t
        |WHERE rnk <= $TopK ORDER BY qid, rnk""".stripMargin
+
+  /** Ranks each query's rows by `sim` and keeps the first `k`, numbered
+    * `rnk` from 1.
+    *
+    * The rank is on a COARSELY QUANTIZED sim: Spark and DuckDB fold the
+    * dot product in different orders, so raw sims differ in the last ulps
+    * — ranking on round(sim, 4) makes a cross-engine rank swap require a
+    * genuine 1e-15-scale tie sitting exactly on a 1e-4 grid line (~1e-11
+    * per pair) instead of any near-tie; vec_id breaks grid ties
+    * identically on both engines. Deliberate product tradeoff: neighbors
+    * whose TRUE sims differ by < 1e-4 order by vec_id, not similarity —
+    * far below embedding noise, and the ranking becomes a deterministic
+    * total order any engine reproduces.
+    */
+  private def keepTop(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(round(col("sim"), 4).desc, col("vec_id"))
+    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+  }
+
+  /** Exact cosine top-k over rows that carry a corpus vector (`e`, `nrm`)
+    * beside its query's (`qe`, `qn`).
+    */
+  private def cosineTopK(pairs: DataFrame): DataFrame =
+    keepTop(pairs.withColumn("sim", Dedup.dot(col("e"), col("qe")) / (col("nrm") * col("qn"))), TopK)
+      // no sim column in the output: cross-engine cosine values differ in
+      // the last ulps (different fold order), and a rounded float column
+      // is a boundary-flake in the exact hash compare — the bruteforce
+      // oracle omits it for the same reason; ordering still uses sim
+      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
+      .orderBy(col("qid"), col("rnk"))
+
+  /** Joins each candidate row to its broadcast query's vector and norm. */
+  private def withQuery(q: DataFrame, rows: DataFrame): DataFrame =
+    rows.join(broadcast(q.select(col("qid"), col("qe"), col("qn"))), Seq("qid"))
+
+  /** The exact re-rank every approximate path ends in: fetch the corpus
+    * vector of each distinct candidate (qid, vec_id) pair and keep the
+    * exact cosine top-k per query.
+    */
+  private def exactTopK(q: DataFrame, e: DataFrame, cand: DataFrame): DataFrame =
+    cosineTopK(withQuery(q, cand.join(e, Seq("vec_id"))))
+
+  /** Distinct (qid, vec_id) pairs of a probe join, self-matches dropped.
+    * Dedupe on ids only (a pair colliding in several tables or cells
+    * scores once) — deduping rows that still carry the embedding arrays
+    * would hash every 64-dim vector per collision.
+    */
+  private def candidatePairs(probeJoin: DataFrame): DataFrame =
+    probeJoin.filter(col("vec_id") =!= col("qid")).select(col("qid"), col("vec_id")).distinct()
 
   // ------------------------------------------------------------------
   // Random-hyperplane LSH
@@ -178,8 +218,10 @@ object Similarity {
     * moves, and the trained codebook broadcasts back. No RNG anywhere:
     * the sample is an id-stride slice and initialization is k-means++
     * D-squared sampling driven by a deterministic hash stream, so the
-    * codebook is bit-reproducible across runs and cluster sizes. Cell count scales as ~sqrt(corpus)
-    * (ivfCellsFor). Returns (cellId, centroid).
+    * codebook is bit-reproducible across runs and cluster sizes. The
+    * trainer (`Pq.strideSample`, `Pq.kmeans`) is the one the PQ codebooks
+    * use. Cell count scales as ~sqrt(corpus) (ivfCellsFor). Returns
+    * (cellId, centroid).
     */
   def ivfCentroids(s: SparkSession, dir: String): Array[(Int, Array[Double])] = {
     // memoized per embeddings snapshot: the codebook is deterministic, and
@@ -189,8 +231,12 @@ object Similarity {
     // with identical part-file names (same layout, new content) still
     // retrains instead of silently reusing a stale codebook.
     val embeddings = Relational.table(s, dir, "embeddings")
-    boundedMemo(centroidCache, ExtractJob.snapshotIdOf(embeddings))(
-      trainIvfCentroids(embeddings))
+    boundedMemo(centroidCache, ExtractJob.snapshotIdOf(embeddings)) {
+      val (n, sample) = Pq.strideSample(embeddings, IvfTrainCap)
+      val cells = ivfCellsFor(n)
+      require(sample.length >= cells, s"sample ${sample.length} < $cells cells")
+      Pq.kmeans(sample, cells, IvfKmeansIters, salt = 1299709L).zipWithIndex.map(_.swap)
+    }
   }
 
   /** Bounded trained-artifact memo, shared by the IVF-centroid and PQ
@@ -209,92 +255,6 @@ object Similarity {
   private val centroidCache =
     scala.collection.concurrent.TrieMap.empty[Long, Array[(Int, Array[Double])]]
 
-  private def trainIvfCentroids(embeddings: DataFrame): Array[(Int, Array[Double])] = {
-    import embeddings.sparkSession.implicits._
-    val e = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    val n = e.agg(count(lit(1))).as[Long].collect()(0)
-    val cells = ivfCellsFor(n)
-    val stride = math.max(1L, n / IvfTrainCap)
-    val sample = e.filter(col("vec_id") % stride === 0)
-      .as[(Long, Seq[Double])].collect()
-      .sortBy(_._1)
-      .map(_._2.toArray)
-    require(sample.length >= cells, s"sample ${sample.length} < $cells cells")
-    val dims = sample(0).length
-    // init: k-means++ D² sampling with a DETERMINISTIC pseudo-random
-    // stream (xxhash64 of the step index — no RNG object, so the codebook
-    // is bit-reproducible across runs and cluster sizes). Each next
-    // center is drawn with probability proportional to its squared
-    // distance from the nearest chosen center — the published k-means++
-    // construction, which spreads seeds without the outlier-chasing of a
-    // pure farthest-point pick.
-    val chosen = new Array[Array[Double]](cells)
-    chosen(0) = sample(0).clone()
-    val minD = Array.fill(sample.length)(Double.MaxValue)
-    var k = 1
-    while (k < cells) {
-      val last = chosen(k - 1)
-      var total = 0.0
-      var j = 0
-      while (j < sample.length) {
-        val v = sample(j)
-        var d = 0.0
-        var i = 0
-        while (i < dims) { val t = v(i) - last(i); d += t * t; i += 1 }
-        if (d < minD(j)) minD(j) = d
-        total += minD(j)
-        j += 1
-      }
-      // deterministic uniform draw in [0, total)
-      val u = (XxHash.hashBytes(Array(
-        (k & 0xff).toByte, ((k >> 8) & 0xff).toByte,
-        ((k >> 16) & 0xff).toByte, ((k >> 24) & 0xff).toByte), 1299709L)
-        >>> 11).toDouble / (1L << 53).toDouble
-      val r = u * total
-      var acc = 0.0
-      var pick = -1
-      j = 0
-      while (j < sample.length && pick < 0) {
-        acc += minD(j)
-        if (acc > r) pick = j
-        j += 1
-      }
-      if (pick < 0) pick = sample.length - 1
-      chosen(k) = sample(pick).clone()
-      k += 1
-    }
-    var cents = chosen
-    var iter = 0
-    while (iter < IvfKmeansIters) {
-      val sums = Array.fill(cells)(new Array[Double](dims))
-      val counts = new Array[Long](cells)
-      sample.foreach { v =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cells) {
-          var d = 0.0
-          var i = 0
-          val cv = cents(c)
-          while (i < dims) { val t = v(i) - cv(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        val sb = sums(best)
-        var i = 0
-        while (i < dims) { sb(i) += v(i); i += 1 }
-      }
-      cents = Array.tabulate(cells) { c =>
-        if (counts(c) == 0) cents(c) // empty cell keeps its centroid
-        else { val m = sums(c); var i = 0; while (i < dims) { m(i) /= counts(c); i += 1 }; m }
-      }
-      iter += 1
-    }
-    cents.zipWithIndex.map { case (v, c) => (c, v) }
-  }
-
   private def nearestCells(v: Seq[Double], cents: Array[(Int, Array[Double])], k: Int): Seq[Int] =
     cents.map { case (c, cv) =>
       var d = 0.0
@@ -303,12 +263,6 @@ object Similarity {
       (c, d)
     }.sortBy(_._2).take(k).map(_._1).toSeq
 
-  /** IVF top-k: corpus assigned to its nearest cell once (at scale: a
-    * materialized index table partitioned by cell), queries probe their
-    * IvfProbes nearest cells and rank candidates exactly. The centroid
-    * table is tiny and driver-resident (broadcast via closure) — the
-    * corpus-side assignment is a narrow map, no shuffle.
-    */
   /** Corpus-side cell assignment (narrow map, no shuffle) — exposed for
     * materialization so the DuckDB oracle can replicate the probe join.
     */
@@ -338,12 +292,18 @@ object Similarity {
       .toDF("qid", "cell")
   }
 
+  /** IVF top-k: corpus assigned to its nearest cell once (at scale: a
+    * materialized index table partitioned by cell), queries probe their
+    * IvfProbes nearest cells and rank candidates exactly. The centroid
+    * table is tiny and driver-resident (broadcast via closure) — the
+    * corpus-side assignment is a narrow map, no shuffle.
+    */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     // one normed-corpus cut shared by index build, probe build, and
     // scoring (round 5 re-derived it per leg)
     val (q, e) = queriesAndCorpus(s, dir)
     val cents = ivfCentroids(s, dir)
-    annIvfScore(q, e, annIvfCellsOf(s, cents, e), annIvfProbesOf(s, cents, q))
+    exactTopK(q, e, ivfCandidates(annIvfCellsOf(s, cents, e), annIvfProbesOf(s, cents, q)))
   }
 
   /** Probe join + exact scoring from already-computed (or materialized)
@@ -352,29 +312,14 @@ object Similarity {
   def annIvfFrom(s: SparkSession, dir: String,
       corpusCells: DataFrame, probeCells: DataFrame): DataFrame = {
     val (q, e) = queriesAndCorpus(s, dir)
-    annIvfScore(q, e, corpusCells, probeCells)
+    exactTopK(q, e, ivfCandidates(corpusCells, probeCells))
   }
 
-  private def annIvfScore(q: DataFrame, e: DataFrame,
-      corpusCells: DataFrame, probeCells: DataFrame): DataFrame = {
-    // quantized rank ordering — see annBruteForce for the rationale
-    val w = Window.partitionBy(col("qid")).orderBy(round(col("sim"), 4).desc, col("vec_id"))
-    corpusCells.join(broadcast(probeCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"))
-      .distinct()
-      .join(e, Seq("vec_id"))
-      .join(broadcast(q.select(col("qid"), col("qe"), col("qn"))), Seq("qid"))
-      .withColumn("sim", Dedup.dot(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      // no sim column in the output: cross-engine cosine values differ in
-      // the last ulps (different fold order), and a rounded float column
-      // is a boundary-flake in the exact hash compare — the bruteforce
-      // oracle omits it for the same reason; ordering still uses sim
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
-      .orderBy(col("qid"), col("rnk"))
-  }
+  /** Candidate pairs of the IVF probe join: every corpus vector in a cell
+    * its query probes.
+    */
+  private def ivfCandidates(corpusCells: DataFrame, probeCells: DataFrame): DataFrame =
+    candidatePairs(corpusCells.join(broadcast(probeCells), Seq("cell")))
 
   // ------------------------------------------------------------------
   // IVF-PQ retrieval: ADC shortlist + exact re-rank
@@ -409,13 +354,8 @@ object Similarity {
     // these are the codebooks that produced the materialized codes
     val books = Pq.trainCodebooks(s, dir)
     val bcBooks = s.sparkContext.broadcast(books)
-    val cand = corpusCells.join(broadcast(probeCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"))
-      .distinct()
-    val withCodes = cand
-      .join(pqPairs.select(col("vec_id"), col("codes")), Seq("vec_id"))
-      .join(broadcast(q.select(col("qid"), col("qe"), col("qn"))), Seq("qid"))
+    val cand = ivfCandidates(corpusCells, probeCells)
+    val withCodes = withQuery(q, cand.join(pqPairs.select(col("vec_id"), col("codes")), Seq("vec_id")))
       .select(col("qid"), col("vec_id"), col("codes"), col("qe"), col("qn"))
       .as[(Long, Long, Seq[Int], Seq[Double], Double)]
     val adc = withCodes.mapPartitions { it =>
@@ -445,34 +385,12 @@ object Similarity {
         while (m < subs) { val c = codes(m); dot += lut(m)(c); n2 += normSq(m)(c); m += 1 }
         (qid, vid, dot / (math.sqrt(n2) * qn))
       }
-    }.toDF("qid", "vec_id", "asim")
-    // quantized rank ordering — see annBruteForce for the rationale
-    val ws = Window.partitionBy(col("qid")).orderBy(round(col("asim"), 4).desc, col("vec_id"))
-    val short = adc
-      .withColumn("srnk", row_number().over(ws))
-      .filter(col("srnk") <= PqShortlist)
-      .select(col("qid"), col("vec_id"))
-    val w = Window.partitionBy(col("qid")).orderBy(round(col("sim"), 4).desc, col("vec_id"))
-    short
-      .join(e, Seq("vec_id"))
-      .join(broadcast(q.select(col("qid"), col("qe"), col("qn"))), Seq("qid"))
-      .withColumn("sim", Dedup.dot(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
-      .orderBy(col("qid"), col("rnk"))
+    }.toDF("qid", "vec_id", "sim")
+    // the shortlist ranks its ADC sims with the same window as the final
+    // exact top-k
+    exactTopK(q, e, keepTop(adc, PqShortlist).select(col("qid"), col("vec_id")))
   }
 
-  /** Approximate top-k via (k=8 bits, L=8 tables) random-hyperplane LSH
-    * with 1-bit multi-probe on the query side.
-    *
-    * Shape at scale: the corpus side is computed ONCE per table (at 100 TB
-    * this is a precomputed index table partitioned by (table, bucket));
-    * queries are tiny and broadcast with their probe fan-out
-    * (L × (1 + k) probes each). Candidates dedupe before exact scoring,
-    * so cost = candidate count, sub-linear in the corpus for any selective
-    * signature. Recall is measured against brute force in OperatorsSpec.
-    */
   /** Corpus-side LSH index rows (vec_id, t, bucket) — all L signatures in
     * one typed pass: expressing 64 plane-dots as nested zip_with/aggregate
     * expressions blows up the generated code (measured ~3× slower than
@@ -519,12 +437,23 @@ object Similarity {
       .toDF("qid", "t", "probe")
   }
 
+  /** Approximate top-k via (k=8 bits, L=8 tables) random-hyperplane LSH
+    * with 1- and 2-bit multi-probe on the query side.
+    *
+    * Shape at scale: the corpus side is computed ONCE per table (at 100 TB
+    * this is a precomputed index table partitioned by (table, bucket));
+    * queries are tiny and broadcast with their probe fan-out
+    * (L × (1 + k + k(k-1)/2) = 8 × 37 probes each). Candidates dedupe
+    * before exact scoring, so cost = candidate count, sub-linear in the
+    * corpus for any selective signature. Recall is measured against brute
+    * force in OperatorsSpec.
+    */
   def annLsh(s: SparkSession, dir: String): DataFrame = {
     // one normed-corpus cut shared by index build, probe build, and
     // scoring (round 5 re-derived it per leg — five scans of the
     // embeddings table in one invocation)
     val (q, e) = queriesAndCorpus(s, dir)
-    annLshScore(q, e, annLshBandsOf(s, e), annLshProbesOf(s, q))
+    exactTopK(q, e, lshCandidates(annLshBandsOf(s, e), annLshProbesOf(s, q)))
   }
 
   /** Candidate join + exact scoring from already-computed (or
@@ -533,33 +462,13 @@ object Similarity {
   def annLshFrom(s: SparkSession, dir: String,
       corpus: DataFrame, probes: DataFrame): DataFrame = {
     val (q, e) = queriesAndCorpus(s, dir)
-    annLshScore(q, e, corpus, probes)
+    exactTopK(q, e, lshCandidates(corpus, probes))
   }
 
-  private def annLshScore(q: DataFrame, e: DataFrame,
-      corpus: DataFrame, probes: DataFrame): DataFrame = {
-    // quantized rank ordering — see annBruteForce for the rationale
-    val w = Window.partitionBy(col("qid")).orderBy(round(col("sim"), 4).desc, col("vec_id"))
-    // dedupe candidate PAIRS on ids only (a pair colliding in several
-    // tables scores once) — deduping rows that still carry the embedding
-    // arrays would hash every 64-dim vector per collision
-    val candPairs = corpus
-      .join(broadcast(probes.select(col("qid"), col("t"), col("probe"))),
-        col("bucket") === col("probe") && corpus("t") === probes("t"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"))
-      .distinct()
-    candPairs
-      .join(e, Seq("vec_id"))
-      .join(broadcast(q.select(col("qid"), col("qe"), col("qn"))), Seq("qid"))
-      .withColumn("sim", Dedup.dot(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      // no sim column in the output: cross-engine cosine values differ in
-      // the last ulps (different fold order), and a rounded float column
-      // is a boundary-flake in the exact hash compare — the bruteforce
-      // oracle omits it for the same reason; ordering still uses sim
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
-      .orderBy(col("qid"), col("rnk"))
-  }
+  /** Candidate pairs of the LSH probe join: every corpus vector sharing a
+    * table's bucket with one of its query's probes.
+    */
+  private def lshCandidates(corpus: DataFrame, probes: DataFrame): DataFrame =
+    candidatePairs(corpus.join(broadcast(probes.select(col("qid"), col("t"), col("probe"))),
+      col("bucket") === col("probe") && corpus("t") === probes("t")))
 }

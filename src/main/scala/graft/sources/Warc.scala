@@ -370,20 +370,6 @@ object Warc {
       WarcRecord(p.url, "response",
         if (p.html == null) Array.emptyByteArray else p.html))
 
-  /** True when `dir` holds WARC files (the crawl arrival layout) rather
-    * than parquet — lets the runner accept either input format.
-    */
-  def isWarcDir(s: SparkSession, dir: String): Boolean = {
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        n.endsWith(".warc.gz") || n.endsWith(".warc")
-      }
-    } catch { case _: java.io.IOException => false }
-  }
-
   /** Per-SparkContext drop counters for the WARC read path — the
     * no-silent-caps rule (Dedup.DropCounter's role): oversize-skipped
     * records and torn tails are counted into accumulators visible on the

@@ -494,6 +494,26 @@ class RunnerSpec extends AnyFunSuite {
     assert(next.snapshotId != planned, "the grown dir must be a new snapshot")
   }
 
+  test("runner: the planning listing tells WARC from parquet; a no-op parquet resume lists the pages once") {
+    val base = java.nio.file.Files.createTempDirectory("graft_lists").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.parquet(s"$base/pq")
+    Warc.stagePages(PageSynth.pages(spark, sf0001).limit(50), s"$base/warc", parts = 2)
+    spark.sparkContext.hadoopConfiguration.set("fs.lists.impl", classOf[ListCountingFs].getName)
+    // (docs processed, listings of the pages dir) of one run
+    def listings(pages: String, out: String): (Long, Int) = {
+      ListCountingFs.dir = pages
+      ListCountingFs.listings.set(0)
+      val r = ExtractRunner.run(spark, s"lists://$pages", out, buckets = 8)
+      (r.docsProcessed, ListCountingFs.listings.get)
+    }
+    // parquet: the planning listing, then the inferred read with work left
+    assert(listings(s"$base/pq", s"$base/out_pq") == ((50L, 2)))
+    assert(listings(s"$base/pq", s"$base/out_pq") == ((0L, 1)))
+    // WARC: the planning listing, then the WARC frame the id comes from
+    assert(listings(s"$base/warc", s"$base/out_warc") == ((50L, 2)))
+    assert(listings(s"$base/warc", s"$base/out_warc") == ((0L, 2)))
+  }
+
   test("runner: explicit cancel mid-run writes cancelled marks; rerun converges (A10)") {
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -586,4 +606,21 @@ class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object OpenCountingFs {
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** The local filesystem under a `lists:` scheme, counting the listings of
+  * the directory `ListCountingFs.dir`.
+  */
+class ListCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("lists:///")
+  override def getScheme: String = "lists"
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.toUri.getPath.stripSuffix("/") == ListCountingFs.dir) ListCountingFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object ListCountingFs {
+  @volatile var dir: String = ""
+  val listings = new java.util.concurrent.atomic.AtomicInteger()
 }
