@@ -71,14 +71,17 @@ case class PartitionLineage(
     status: String
 )
 
-/** One run of `ExtractRunner.run` — every run, no-op resumes included,
-  * appends exactly one: what ran (`engine`), over which input snapshot,
-  * with which bucket modulus, with what outcome, and the lineage of every
-  * bucket it covered.
+/** One record of a run of `ExtractRunner.run`: what ran (`engine`), over
+  * which input snapshot, with which bucket modulus, with what outcome,
+  * and the lineage of every bucket it covered. Every run ends with one,
+  * no-op resumes included. A run with work also commits a start record
+  * before it writes any data: status `started`, 0 docs, 0 buckets done,
+  * `wall_ms` its planning time and no lineage.
   *
   * Stored as one single-line JSON file under `runs/`, named
   * `s<unsigned hex snapshot_id>_b<buckets>_d<buckets_done>_<run_at epoch ms>_<uuid>.json`
-  * and published by renaming a hidden temp file (`operators.RunLog`).
+  * and published by renaming a hidden temp file (`operators.RunLog`). A
+  * run's records share the uuid.
   */
 case class RunRecord(
     snapshot_id: Long,

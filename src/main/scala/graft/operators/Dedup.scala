@@ -298,6 +298,14 @@ object Dedup {
   private def isAlnum(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
 
+  /** Most recent LSH candidate-set size (observability at scale:
+    * candidate growth is THE health metric of a banding config — too low
+    * = recall loss, too high = verify-join blowup). Fed by an observe()
+    * metric riding the candidate frame's checkpoint job — eager, zero
+    * extra jobs.
+    */
+  val MinhashCandidates = new java.util.concurrent.atomic.AtomicLong(-1L)
+
   /** Candidate pairs via LSH banding, then exact-Jaccard verification on
     * candidates only.
     *
@@ -311,22 +319,9 @@ object Dedup {
     * not silent: `MinhashDrops` records (buckets, doc slots) per run and
     * the count is logged (no-silent-caps rule).
     */
-  /** Most recent LSH candidate-set size (observability at scale:
-    * candidate growth is THE health metric of a banding config — too low
-    * = recall loss, too high = verify-join blowup). Fed by an observe()
-    * metric riding the candidate frame's checkpoint job — eager, zero
-    * extra jobs.
-    */
-  val MinhashCandidates = new java.util.concurrent.atomic.AtomicLong(-1L)
-
   def dedupMinhashLsh(s: SparkSession, dir: String, maxBucket: Int = 64): DataFrame =
     minhashLshPairsFrom(s, corpus(s, dir), maxBucket)
 
-  /** LSH near-dup pairs over an arbitrary (doc_id: Long, text: String)
-    * frame — the same operator the registered query uses, callable on the
-    * EXTRACTED corpus (bench + scale specs run it on extraction output
-    * with planted near-dups).
-    */
   /** The narrow signature stage alone: (doc_id, band, bucket) rows —
     * exposed so the harness can materialize it and the DuckDB oracle can
     * replicate the banding + verify relationally.
@@ -343,6 +338,11 @@ object Dedup {
       .toDF("doc_id", "band", "bucket")
   }
 
+  /** LSH near-dup pairs over an arbitrary (doc_id: Long, text: String)
+    * frame — the same operator the registered query uses, callable on the
+    * EXTRACTED corpus (bench + scale specs run it on extraction output
+    * with planted near-dups).
+    */
   def minhashLshPairsFrom(s: SparkSession, docs: DataFrame, maxBucket: Int = 64): DataFrame =
     minhashLshFromBands(s, minhashBands(s, docs), docs, maxBucket)
 

@@ -46,6 +46,13 @@ object ExtractJob {
   def bucketCol(buckets: Int) =
     pmod(xxhash64(col("url")), lit(buckets.toLong)).cast("int")
 
+  /** The bucket of one url, off Catalyst: MUST equal `bucketCol`.
+    * XxHash.hashUtf8 reimplements Spark's xxhash64 (seed 42, UTF-8
+    * bytes); equality is asserted in OperatorsSpec.
+    */
+  def bucketOf(url: String, buckets: Int): Int =
+    java.lang.Math.floorMod(XxHash.hashUtf8(url), buckets.toLong).toInt
+
   /** pages → extracted. Deliberately shuffle-free: the kernel is a narrow
     * typed mapPartitions directly over the scan partitions, so the raw
     * payload bytes (the dominant data volume — at 100 TB, ~all of it)
@@ -71,14 +78,7 @@ object ExtractJob {
       // unread text column alone is a ~40% scan saving)
       .select(col("url"), col("html"))
       .as[PageRaw]
-      .mapPartitions { it =>
-        // kernel-side bucket MUST equal bucketCol: pmod(xxhash64(url), B).
-        // XxHash.hashUtf8 reimplements Spark's xxhash64 (seed 42, UTF-8
-        // bytes); equality is asserted in OperatorsSpec.
-        val bucketOf = (p: PageRaw) =>
-          java.lang.Math.floorMod(XxHash.hashUtf8(p.url), b.toLong).toInt
-        ExtractKernel.run(bucketOf, prof)(it)
-      }
+      .mapPartitions(ExtractKernel.run(p => bucketOf(p.url, b), prof))
   }
 
   /** Per-bucket lineage metrics (replaces the SQLite status table's

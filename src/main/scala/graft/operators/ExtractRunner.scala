@@ -19,12 +19,15 @@ import graft.model.{Extracted, Page, PartitionLineage, RunRecord}
   *                              modulus and outcome, plus the lineage of
   *                              every bucket it covered
   *
-  * The record is written after the data write, on the driver, under a
-  * hidden temp name, and published by one rename (`RunLog`), so a run is
+  * A run with work commits a `started` record before its data write and
+  * its end record, under the same run id, after it; a no-op resume
+  * commits its end record alone. Each is written on the driver under a
+  * hidden temp name and published by one rename (`RunLog`), so it is
   * recorded whole or not at all (Iceberg's snapshot log with the manifest
-  * inlined, kept as Delta Lake keeps its commit log). Its name carries the
-  * snapshot id, the bucket modulus and the number of completed buckets.
-  * `runs` and `lineage` are views over the records.
+  * inlined, kept as Delta Lake keeps its commit log: the log entry first,
+  * then the data). A record's name carries the snapshot id, the bucket
+  * modulus and the number of completed buckets: the names alone hold the
+  * table's modulus. `runs` and `lineage` are views over the records.
   *
   * Resume-from-checkpoint (north rule): a run plans from the records
   * alone, on the driver: the snapshot id from the pages' file listing,
@@ -137,7 +140,11 @@ object ExtractRunner {
     require(moduli.forall(_ == buckets),
       s"table at $outRoot was written with buckets=${moduli.mkString(",")}; " +
         s"running with buckets=$buckets would mix partition moduli")
-    if (logged.isEmpty) requireLandedModulus(spark, outRoot, buckets)
+    // every run that writes commits its start record first, so a table
+    // that no record describes predates the run log
+    require(logged.nonEmpty || !pathExists(spark, s"$outRoot/extracted"),
+      s"table at $outRoot has no committed run record under ${runsPath(outRoot)}, so nothing " +
+        "holds its bucket modulus: it was written before run records; extract into a new out root")
 
     // every bucket already completed for this snapshot → no page can be
     // left to do: a no-op resume reads this snapshot's records alone,
@@ -149,7 +156,8 @@ object ExtractRunner {
       .flatMap(RunLog.read(spark, _).lineage.collect { case l if l.status == "completed" => l.bucket })
       .toSet
     if ((0 until buckets).forall(doneBuckets))
-      return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0)
+      return commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", Nil, t0,
+        java.util.UUID.randomUUID())
 
     val pages =
       if (warcInput) planned
@@ -170,9 +178,9 @@ object ExtractRunner {
     writeAndFinalize(spark, outRoot, snapshotId, buckets, doneBuckets, extracted, profile, t0)
   }
 
-  /** The tail of a run with work left: write under the cancel guard, then
-    * derive lineage from the rows that write consumed, commit the run
-    * record, and report.
+  /** The tail of a run with work left: commit the start record, write
+    * under the cancel guard, then derive lineage from the rows that write
+    * consumed, commit the end record, and report.
     *
     * The run covers every bucket not in `done`, decided on the driver
     * with no Spark job. Lineage is aggregated over the persisted
@@ -208,6 +216,10 @@ object ExtractRunner {
     // below must start no Spark job, which the still-pending interrupt
     // could kill
     val covered = (0 until buckets).filterNot(done)
+    // before any data lands: a run killed from here on leaves its modulus
+    // and a `started` row in the run log
+    val runId = java.util.UUID.randomUUID()
+    commitRun(spark, outRoot, snapshotId, buckets, profile, RunLog.Started, Nil, t0, runId)
     // the kernel runs once: the write fills the cache, lineage reads it
     extracted.persist()
     try {
@@ -228,7 +240,7 @@ object ExtractRunner {
           // resume correctness never depends on the marks (only 'completed'
           // rows skip buckets), so log and carry on
           val report = try commitRun(spark, outRoot, snapshotId, buckets, profile, "cancelled",
-            covered.map(mark(_, "cancelled")), t0)
+            covered.map(mark(_, "cancelled")), t0, runId)
           catch {
             case me: Exception =>
               log.warn(s"cancelled-mark write failed for snapshot=$snapshotId " +
@@ -247,24 +259,25 @@ object ExtractRunner {
         .drop("snapshot_id", "wall_ms").as[PartitionLineage].collect().toSeq
       val empty = covered.filterNot(rows.map(_.bucket).toSet).map(mark(_, "completed"))
       val lineage = (rows ++ empty).sortBy(_.bucket)
-      commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", lineage, t0)
+      commitRun(spark, outRoot, snapshotId, buckets, profile, "completed", lineage, t0, runId)
     } finally { extracted.unpersist(): Unit }
   }
 
-  /** Commit this run's one record to the run log — every run gets one,
-    * no-op resumes included, so operators can answer "did the scheduled
-    * run happen". Written on the driver after the data and published by
-    * one rename, so lineage, ledger row and modulus land together or not
-    * at all.
+  /** Commit one record of run `runId` to the run log — every run ends
+    * with one, no-op resumes included, so operators can answer "did the
+    * scheduled run happen". Written on the driver and published by one
+    * rename, so lineage, ledger row and modulus land together or not at
+    * all.
     */
   private def commitRun(spark: SparkSession, outRoot: String, snapshotId: Long,
       buckets: Int, profile: ExtractKernel.Profile, status: String,
-      lineage: Seq[PartitionLineage], t0: Long): RunReport = {
+      lineage: Seq[PartitionLineage], t0: Long, runId: java.util.UUID): RunReport = {
     val done = lineage.filter(_.status == "completed")
     val report = RunReport(snapshotId, done.map(_.doc_count).sum, done.size.toLong,
       System.currentTimeMillis() - t0)
     RunLog.commit(spark, runsPath(outRoot), RunRecord(snapshotId, buckets, profile.engine, status,
-      report.docsProcessed, report.bucketsDone, report.wallMs, java.time.Instant.now().toString, lineage))
+      report.docsProcessed, report.bucketsDone, report.wallMs, java.time.Instant.now().toString, lineage),
+      runId)
     report
   }
 
@@ -272,9 +285,10 @@ object ExtractRunner {
 
   /** The run ledger (Iceberg snapshot-log analogue): one row per run —
     * what ran, over which input snapshot, with which modulus and outcome.
+    * A run with no end record reads `started`: it crashed or still runs.
     */
   def runs(spark: SparkSession, outRoot: String): DataFrame =
-    RunLog.frame(spark, runsPath(outRoot)).drop("lineage")
+    RunLog.perRun(spark, runsPath(outRoot)).drop("lineage")
 
   /** Bucket lineage: one row per bucket per run, with its run's snapshot
     * id. A bucket completed twice (a rerun of a cancelled run, say) has a
@@ -285,36 +299,12 @@ object ExtractRunner {
       .select(col("snapshot_id"), explode(col("lineage")).as("l"))
       .select(col("snapshot_id"), col("l.*"))
 
-  /** The landed table, read with the `Extracted` schema: no inference
-    * job, and an `extracted/` a run wrote from zero rows (no part file)
-    * reads as zero rows.
-    */
-  private def landed(spark: SparkSession, outRoot: String): DataFrame =
-    spark.read.schema(Encoders.product[Extracted].schema).parquet(s"$outRoot/extracted")
-
-  /** The modulus guard for a landed table that no committed record
-    * describes: a first run killed between its data commit and its record
-    * commit, or an out root written before run records. Every landed row
-    * must sit in the bucket `buckets` hashes its url to; one url-only scan
-    * checks it, and only in that state.
-    */
-  private def requireLandedModulus(spark: SparkSession, outRoot: String, buckets: Int): Unit =
-    if (pathExists(spark, s"$outRoot/extracted")) {
-      val misplaced = landed(spark, outRoot)
-        .filter(ExtractJob.bucketCol(buckets) =!= col("bucket"))
-        .select(col("bucket")).head(1)
-      require(misplaced.isEmpty,
-        s"table at $outRoot has rows in bucket=${misplaced.head.getInt(0)} that " +
-          s"buckets=$buckets hashes elsewhere; running with buckets=$buckets " +
-          "would mix partition moduli")
-    }
-
   /** The table's bucket modulus for a lookup: the caller's value when
     * positive, else the one the run record names hold (one listing, no
-    * Spark job). With no committed record
-    * (a legacy root, or a first run killed before its record commit) the
-    * lookup fails and asks for `buckets`: guessing a modulus would prune
-    * to directories that may not hold the url and silently return nothing.
+    * Spark job). With no committed record (a root written before run
+    * records) the lookup fails and asks for `buckets`: guessing a modulus
+    * would prune to directories that may not hold the url and silently
+    * return nothing.
     */
   private def resolveBuckets(spark: SparkSession, outRoot: String, buckets: Int): Int =
     if (buckets > 0) buckets
@@ -342,10 +332,10 @@ object ExtractRunner {
       s"batch status lookup takes 1..100 urls (API.md:468), got ${urls.size}")
     val b = resolveBuckets(spark, outRoot, buckets)
     val wanted = urls.distinct
-    val bucketIds = wanted
-      .map(u => java.lang.Math.floorMod(XxHash.hashUtf8(u), b.toLong).toInt)
-      .distinct
-    landed(spark, outRoot)
+    val bucketIds = wanted.map(ExtractJob.bucketOf(_, b)).distinct
+    // read with the `Extracted` schema: no inference job, and an
+    // `extracted/` a run wrote from zero rows (no part file) reads as zero rows
+    spark.read.schema(Encoders.product[Extracted].schema).parquet(s"$outRoot/extracted")
       .filter(col("bucket").isin(bucketIds: _*) && col("url").isin(wanted: _*))
       .select(col("url"), col("status"), col("error"), col("n_pages"),
         col("n_failed_pages"), col("engine"))

@@ -5,6 +5,8 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, max, regexp_extract}
 
 import graft.model.RunRecord
 
@@ -21,13 +23,17 @@ import graft.model.RunRecord
   *   s<unsigned hex snapshot id>_b<buckets>_d<buckets done>_<run_at epoch ms>_<uuid>.json
   *
   * so planning learns every record's modulus from one listing and opens
-  * only the records of its own snapshot that completed a bucket: the
-  * records no-op resumes and cancelled runs append are never opened.
+  * only the records of its own snapshot that completed a bucket: start
+  * records and the records no-op resumes and cancelled runs append are
+  * never opened. A run's start record and end record share the uuid.
   */
 private[graft] object RunLog {
 
   /** A committed record, as its name describes it. */
   final case class Entry(path: Path, snapshotId: Long, buckets: Int, bucketsDone: Long)
+
+  /** The status of a start record, committed before a run writes data. */
+  val Started = "started"
 
   private val RecordName =
     """s([0-9a-f]{1,16})_b([1-9][0-9]{0,8})_d([0-9]{1,10})_([0-9]+)_([0-9a-f-]{36})\.json""".r
@@ -47,10 +53,11 @@ private[graft] object RunLog {
 
   private def fsOf(spark: SparkSession, p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Writes `record` under `dir` and publishes it by rename. */
-  def commit(spark: SparkSession, dir: String, record: RunRecord): Unit = {
+  /** Writes `record` of run `runId` under `dir` and publishes it by rename. */
+  def commit(spark: SparkSession, dir: String, record: RunRecord,
+      runId: java.util.UUID = java.util.UUID.randomUUID()): Unit = {
     val name = s"s${java.lang.Long.toHexString(record.snapshot_id)}_b${record.buckets}_" +
-      s"d${record.buckets_done}_${java.time.Instant.parse(record.run_at).toEpochMilli}_${java.util.UUID.randomUUID()}.json"
+      s"d${record.buckets_done}_${java.time.Instant.parse(record.run_at).toEpochMilli}_$runId.json"
     val target = new Path(dir, name)
     val temp = new Path(dir, s".$name.tmp")
     val fs = fsOf(spark, target)
@@ -108,5 +115,16 @@ private[graft] object RunLog {
   def frame(spark: SparkSession, dir: String): DataFrame = {
     entries(spark, dir)
     spark.read.schema(Encoders.product[RunRecord].schema).option("mode", "FAILFAST").json(dir)
+  }
+
+  /** `frame` with one row per run: its end record, or its start record
+    * when it has none. The records are paired by the uuid in their names.
+    */
+  def perRun(spark: SparkSession, dir: String): DataFrame = {
+    val run = Window.partitionBy(regexp_extract(col("_metadata.file_name"), RecordName.regex, 5))
+    frame(spark, dir)
+      .withColumn("ended", max(col("status") =!= Started).over(run))
+      .filter(col("status") =!= Started || !col("ended"))
+      .drop("ended")
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.kernel.ExtractKernel
-import graft.model.{Extracted, Page, PageRaw}
-import graft.operators.XxHash
+import graft.model.{Extracted, Page}
+import graft.operators.ExtractJob
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,32 +15,21 @@ import org.apache.spark.sql.streaming.Trigger
   * kernel is stateless per row).
   *
   * At scale this is how you tail a landing zone of WARC-derived parquet:
-  * `maxFilesPerTrigger` bounds batch size, the checkpoint directory is the
-  * resume state (same role as the lineage table for batch runs).
+  * the checkpoint directory is the resume state (same role as the run
+  * log for batch runs).
   */
 object StreamingExtract {
 
-  /** Streaming pages → extracted (stateless typed mapPartitions — the
-    * identical kernel closure the batch path uses).
+  /** Streaming pages → extracted: the batch kernel (`ExtractJob.extract`)
+    * over a file stream of the pages table.
     */
   def extractStream(
       spark: SparkSession,
       pagesDir: String,
-      buckets: Int = 64,
-      maxFilesPerTrigger: Option[Int] = None): Dataset[Extracted] = {
+      buckets: Int = 64): Dataset[Extracted] = {
     import spark.implicits._
-    val reader = spark.readStream.schema(Encoders.product[Page].schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-    val pages = withOpt.parquet(pagesDir)
-      .select(org.apache.spark.sql.functions.col("url"),
-        org.apache.spark.sql.functions.col("html"))
-      .as[PageRaw] // column pruning: the stream scan reads url+html only
-    val b = buckets
-    pages.mapPartitions { it =>
-      val bucketOf = (p: PageRaw) =>
-        java.lang.Math.floorMod(XxHash.hashUtf8(p.url), b.toLong).toInt
-      ExtractKernel.run(bucketOf)(it)
-    }
+    ExtractJob.extract(spark,
+      spark.readStream.schema(Encoders.product[Page].schema).parquet(pagesDir).as[Page], buckets)
   }
 
   /** One catch-up run into an in-memory sink table (debug/inspection path;

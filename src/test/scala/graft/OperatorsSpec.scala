@@ -34,6 +34,12 @@ class OperatorsSpec extends AnyFunSuite {
       .as[(String, Long)].collect()
     assert(urls.nonEmpty)
     urls.foreach { case (u, h) => assert(XxHash.hashUtf8(u) == h, s"url $u") }
+    // the kernel's and the lookup's bucket equals the Catalyst-side bucket
+    for (b <- Seq(1, 8, 64, 1000)) {
+      val buckets = PageSynth.pages(spark, sf0001).select(col("url")).limit(200)
+        .withColumn("b", ExtractJob.bucketCol(b)).as[(String, Int)].collect()
+      buckets.foreach { case (u, bc) => assert(ExtractJob.bucketOf(u, b) == bc, s"url $u, buckets=$b") }
+    }
   }
 
   // ---- distributed golden byte-identity (the north-rule contract) ----

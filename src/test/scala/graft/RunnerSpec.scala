@@ -56,6 +56,45 @@ class RunnerSpec extends AnyFunSuite {
   /** Committed records under `runs/`. */
   private def recordFiles(out: String): Int = RunLog.entries(spark, s"$out/runs").size
 
+  /** (url, text md5, status) of the landed table under `root`, by url. */
+  private def tableOf(root: String): Seq[(String, String, String)] = {
+    import spark.implicits._
+    spark.read.parquet(s"$root/extracted")
+      .select(col("url"), md5(col("text")).as("h"), col("status"))
+      .as[(String, String, String)].collect().sortBy(_._1).toSeq
+  }
+
+  /** The `status` column of the `runs` view, sorted. */
+  private def runStatuses(out: String): Seq[String] =
+    ExtractRunner.runs(spark, out).select(col("status")).collect().map(_.getString(0)).sorted.toSeq
+
+  /** Runs `pages` at 8 buckets into `out` through the `kill:` filesystem,
+    * which fails the first file create or rename onto a path `at` accepts:
+    * the run dies there, as a killed driver would.
+    */
+  private def killedRun(pages: String, out: String, at: org.apache.hadoop.fs.Path => Boolean): Unit = {
+    spark.sparkContext.hadoopConfiguration.set("fs.kill.impl", classOf[KillFs].getName)
+    KillFs.at = at
+    val e = try intercept[Exception](ExtractRunner.run(spark, pages, s"kill://$out", buckets = 8))
+    finally KillFs.at = _ => false
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(16).map(_.getMessage).mkString("\n")
+    assert(msgs.contains(KillFs.Killed), s"the run died elsewhere: $msgs")
+  }
+
+  /** After a killed run: `runs` shows it as started alone, it recorded no
+    * lineage, and one rerun redoes every bucket and converges to the
+    * uninterrupted table `ref`.
+    */
+  private def assertRerunConverges(pages: String, out: String, ref: String): Unit = {
+    assert(runStatuses(out) == Seq("started"))
+    assert(ExtractRunner.lineage(spark, out).count() == 0)
+    val r = ExtractRunner.run(spark, pages, out, buckets = 8)
+    assert(r.bucketsDone == 8 && r.docsProcessed == 500)
+    assert(tableOf(out) == tableOf(ref), "the rerun must converge to the uninterrupted table")
+    assert(runStatuses(out) == Seq("completed", "started"))
+    assertLineageMatchesLanded(out, r.snapshotId)
+  }
+
   test("runner: full run, then no-op rerun, then crash-resume equivalence") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_runner").toString
@@ -70,7 +109,8 @@ class RunnerSpec extends AnyFunSuite {
     assert(table1.size == 500)
     assertLineageMatchesLanded(s"$base/out", r1.snapshotId)
     assert(spark.sharedState.cacheManager.isEmpty, "a run must not leave persisted data behind")
-    assert(recordFiles(s"$base/out") == 1)
+    // its start record and its end record
+    assert(recordFiles(s"$base/out") == 2)
 
     // run 2 over the same input snapshot: every bucket is done, so the
     // no-op resume plans from the pages' file listing and the run log on
@@ -86,9 +126,10 @@ class RunnerSpec extends AnyFunSuite {
     assert(table2 == table1, "no-op rerun must not change the table")
     assert(ExtractRunner.lineage(spark, s"$base/out").count() == 8,
       "no duplicate lineage rows")
-    // an out root holds the table and the run log, one committed file per run
+    // an out root holds the table and the run log: two committed files for
+    // the run with work, one for the no-op resume
     assert(new java.io.File(s"$base/out").list().toSet == Set("extracted", "runs"))
-    assert(recordFiles(s"$base/out") == 2)
+    assert(recordFiles(s"$base/out") == 3)
 
     // crash simulation: fresh output with a record for only half the
     // buckets (as if the job died mid-write), then one resume run
@@ -214,46 +255,63 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
-  test("runner: a record killed before its commit is invisible; the resume redoes every bucket") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_window").toString
-    PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
-    val ref = ExtractRunner.run(spark, s"$base/pages", s"$base/ref", buckets = 8)
-    assert(ref.bucketsDone == 8)
-    // the crash window: the data write committed, the record did not —
-    // extracted/ is whole, runs/ holds only the record's hidden temp file,
-    // half written
+  test("runner: an out root with extracted/ and no run record is a legacy root; every run fails at submission") {
+    val base = java.nio.file.Files.createTempDirectory("graft_legacy").toString
+    PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+    ExtractRunner.run(spark, s"$base/pages", s"$base/ref", buckets = 8)
+    // a root written before run records: extracted/ and no runs/
     val out = s"$base/out"
-    spark.read.parquet(s"$base/ref/extracted")
-      .write.partitionBy("bucket").parquet(s"$out/extracted")
-    val committed = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/ref/runs"))
-      .iterator().asScala.find(_.getFileName.toString.endsWith(".json")).get
-    val bytes = java.nio.file.Files.readAllBytes(committed)
-    val torn = java.nio.file.Paths.get(s"$out/runs/.${committed.getFileName}.tmp")
-    java.nio.file.Files.createDirectories(torn.getParent)
-    java.nio.file.Files.write(torn, bytes.take(bytes.length / 2))
-
-    // nothing records the modulus in this state, yet another bucket count
-    // is refused from the landed rows' url hashes, writing nothing: 4
-    // leaves rows in bucket dirs past its range, 16 keeps every dir in range
+    spark.read.parquet(s"$base/ref/extracted").write.partitionBy("bucket").parquet(s"$out/extracted")
     val before = filesUnder(out)
-    for (b <- Seq(4, 16)) {
-      val e = intercept[IllegalArgumentException] {
-        ExtractRunner.run(spark, s"$base/pages", out, buckets = b)
-      }
-      assert(e.getMessage.contains(s"running with buckets=$b would mix partition moduli"), e.getMessage)
+    // every bucket count, the table's own included: nothing records the
+    // modulus, and no run scans the landed rows to recover it
+    val (errors, queries) = TestSpark.capturingQueries(Seq(4, 8, 16).map { b =>
+      b -> intercept[IllegalArgumentException](ExtractRunner.run(spark, s"$base/pages", out, buckets = b))
+    })
+    for ((b, e) <- errors) {
+      assert(e.getMessage.contains(s"no committed run record under $out/runs"), s"buckets=$b: ${e.getMessage}")
       assert(filesUnder(out) == before, s"a rejected buckets=$b run wrote under the out root")
     }
+    assert(queries.isEmpty, s"a legacy root must be refused with no Spark query, ran ${queries.size}")
+  }
 
-    val r = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
-    assert(r.bucketsDone == 8 && r.docsProcessed == 500)
-    def tableOf(root: String) = spark.read.parquet(s"$root/extracted")
-      .select(col("url"), md5(col("text")).as("h"), col("status"))
-      .as[(String, String, String)].collect().sortBy(_._1).toSeq
-    assert(tableOf(out) == tableOf(s"$base/ref"), "the resume must converge to the uninterrupted table")
-    assert(ExtractRunner.runs(spark, out).count() == 1)
-    val lin = ExtractRunner.lineage(spark, out)
-    assert(lin.count() == 8 && lin.filter(col("status") === "completed").count() == 8)
+  test("runner: a run killed after its start record, before its data commits, reads as started; the rerun converges") {
+    val base = java.nio.file.Files.createTempDirectory("graft_kill_write").toString
+    val pages = s"$base/pages"
+    PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(pages)
+    ExtractRunner.run(spark, pages, s"$base/ref", buckets = 8)
+    val out = s"$base/out"
+    killedRun(pages, out, _.toUri.getPath.contains("/extracted/"))
+    assert(!filesUnder(out).exists(_.endsWith(".parquet")), "the killed write must commit no data")
+
+    // the start record alone holds the modulus: another bucket count is
+    // refused from the record names, with no Spark query, writing nothing
+    val before = filesUnder(out)
+    val (errors, queries) = TestSpark.capturingQueries(Seq(4, 16).map { b =>
+      b -> intercept[IllegalArgumentException](ExtractRunner.run(spark, pages, out, buckets = b))
+    })
+    for ((b, e) <- errors)
+      assert(e.getMessage.contains(s"buckets=8; running with buckets=$b would mix partition moduli"), e.getMessage)
+    assert(queries.isEmpty, s"the modulus check must run no Spark query, ran ${queries.size}")
+    assert(filesUnder(out) == before, "a rejected run wrote under the out root")
+
+    assertRerunConverges(pages, out, s"$base/ref")
+  }
+
+  test("runner: a run killed after its data commits, before its end record, reads as started; the rerun converges") {
+    val base = java.nio.file.Files.createTempDirectory("graft_kill_record").toString
+    val pages = s"$base/pages"
+    PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(pages)
+    ExtractRunner.run(spark, pages, s"$base/ref", buckets = 8)
+    val out = s"$base/out"
+    // the end record of a run over all 8 buckets is the one published as
+    // `s…_d8_….json`, renamed from its hidden temp file
+    killedRun(pages, out, p => p.getName.startsWith("s") && p.getName.contains("_d8_"))
+    assert(tableOf(out) == tableOf(s"$base/ref"), "the data write must have committed")
+    // the end record was written in full under its hidden temp name, never
+    // published: the log and the views skip it
+    assert(new java.io.File(s"$out/runs").list().exists(n => n.startsWith(".") && n.contains("_d8_")))
+    assertRerunConverges(pages, out, s"$base/ref")
   }
 
   test("runner: a table with empty buckets becomes a no-op after one run") {
@@ -281,11 +339,11 @@ class RunnerSpec extends AnyFunSuite {
     spark.emptyDataset[graft.model.Page].write.parquet(s"$base/pages")
     val out = s"$base/out"
     val r1 = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
-    assert(r1.docsProcessed == 0 && recordFiles(out) == 1)
+    assert(r1.docsProcessed == 0 && recordFiles(out) == 2)
 
     val (r2, jobs) = TestSpark.countingJobs(
       ExtractRunner.run(spark, s"$base/pages", out, buckets = 8))
-    assert(r2.docsProcessed == 0 && recordFiles(out) == 2)
+    assert(r2.docsProcessed == 0 && recordFiles(out) == 3)
     assert(jobs == 0, s"a rerun over an empty table must start no Spark job, started $jobs")
 
     for (url <- Seq("https://e/a", "https://e/b", "https://e/c"))
@@ -297,7 +355,7 @@ class RunnerSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft_nomodulus").toString
     PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
     ExtractRunner.run(spark, s"$base/pages", s"$base/ref", buckets = 8)
-    // a legacy root, or the crash window: extracted/ landed, no record
+    // a legacy root: extracted/ landed before run records existed
     val out = s"$base/out"
     spark.read.parquet(s"$base/ref/extracted").write.partitionBy("bucket").parquet(s"$out/extracted")
     // a url the old fallback modulus of 64 prunes to a directory a
@@ -398,12 +456,13 @@ class RunnerSpec extends AnyFunSuite {
     // completed nothing, as do cancelled runs and runs over other snapshots
     for (_ <- 1 to 20) assert(ExtractRunner.run(spark, s"$base/pages", out, buckets = 8).docsProcessed == 0)
     writeRecord(out, 12345L, Seq(PartitionLineage(0, 1L, 1L, 1L, 0L, Seq.empty, "completed")))
-    assert(recordFiles(out) == 22)
+    // the first run's start and end records, 20 no-op records, the other snapshot's
+    assert(recordFiles(out) == 23)
 
     spark.sparkContext.hadoopConfiguration.set("fs.opens.impl", classOf[OpenCountingFs].getName)
     OpenCountingFs.opened.clear()
     val r = ExtractRunner.run(spark, s"$base/pages", s"opens://$out", buckets = 8)
-    assert(r.docsProcessed == 0 && recordFiles(out) == 23)
+    assert(r.docsProcessed == 0 && recordFiles(out) == 24)
     val opened = OpenCountingFs.opened.asScala.toSeq
     assert(opened.size == 1 && opened.forall(_.contains("_d8_")),
       s"a no-op resume must open only the record of the run that did the work: ${opened.mkString(", ")}")
@@ -553,9 +612,6 @@ class RunnerSpec extends AnyFunSuite {
     assert(!r2.cancelled && r2.bucketsDone == 8)
     val ref = java.nio.file.Files.createTempDirectory("graft_cancel_ref").toString
     ExtractRunner.run(spark, s"$base/pages", s"$ref/out", buckets = 8)
-    def tableOf(root: String) = spark.read.parquet(s"$root/extracted")
-      .select(col("url"), md5(col("text")).as("h"), col("status"))
-      .as[(String, String, String)].collect().sortBy(_._1).toSeq
     assert(tableOf(s"$base/out") == tableOf(s"$ref/out"),
       "cancel+resume must converge to the uninterrupted result")
 
@@ -623,4 +679,29 @@ class ListCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 object ListCountingFs {
   @volatile var dir: String = ""
   val listings = new java.util.concurrent.atomic.AtomicInteger()
+}
+
+/** The local filesystem under a `kill:` scheme: a file create, or a rename
+  * onto a path, that `KillFs.at` accepts fails as if the process died there.
+  */
+class KillFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("kill:///")
+  override def getScheme: String = "kill"
+  private def check(f: org.apache.hadoop.fs.Path): Unit =
+    if (KillFs.at(f)) throw new java.io.IOException(s"${KillFs.Killed} at $f")
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    check(dst)
+    super.rename(src, dst)
+  }
+}
+
+object KillFs {
+  val Killed = "injected kill"
+  @volatile var at: org.apache.hadoop.fs.Path => Boolean = _ => false
 }

@@ -1,12 +1,7 @@
+"""Compares every query output a `graft.Verify` run wrote against its DuckDB
+oracle: python3 tools/oracle_check.py <verify out dir> <sf dir>. Prints one
+line per query and `FAILS: <n>`; exits non-zero on any failure."""
 import duckdb, json, glob, math, sys
-
-outdir = sys.argv[1] if len(sys.argv) > 1 else '/tmp/verify_sf001'
-sfdir = sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.01'
-con = duckdb.connect()
-for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
-
-oracle = json.load(open(f'{outdir}/oracle_sql.json'))
 
 def norm(v):
     if isinstance(v, float):
@@ -52,27 +47,40 @@ def canon_type(t):
 def compatible_type(a, b):
     return canon_type(a) == canon_type(b)
 
-fails = 0
-for name in sorted(oracle):
-    sql = oracle[name]
-    try:
-        scols, srows, stypes = fetch(con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'"))
-        dcols, drows, dtypes = fetch(con.sql(sql))
-        if sorted(scols) != sorted(dcols):
-            print(f'FAIL {name}: cols {sorted(scols)} vs {sorted(dcols)}'); fails += 1; continue
-        skew = {c: (stypes[c], dtypes[c]) for c in stypes
-                if not compatible_type(stypes[c], dtypes.get(c, ''))}
-        if skew:
-            print(f'FAIL {name}: dtype skew (spark vs oracle): {skew}'); fails += 1; continue
-        sk, dk = table_key(srows, scols), table_key(drows, dcols)
-        if len(sk) != len(dk):
-            print(f'FAIL {name}: rows {len(sk)} vs {len(dk)}'); fails += 1; continue
-        bad = [ (a,b) for a,b in zip(sk,dk) if a != b ]
-        if bad:
-            print(f'FAIL {name}: {len(bad)} mismatched rows, first: {bad[0]}'); fails += 1
-        else:
-            print(f'OK   {name}: {len(sk)} rows')
-    except Exception as e:
-        print(f'ERR  {name}: {str(e)[:200]}'); fails += 1
-print('FAILS:', fails)
-sys.exit(1 if fails else 0)
+def main(argv):
+    outdir = argv[1] if len(argv) > 1 else '/tmp/verify_sf001'
+    sfdir = argv[2] if len(argv) > 2 else '/root/testdata/sf0.01'
+    con = duckdb.connect()
+    for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+
+    oracle = json.load(open(f'{outdir}/oracle_sql.json'))
+
+    fails = 0
+    for name in sorted(oracle):
+        sql = oracle[name]
+        try:
+            scols, srows, stypes = fetch(con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'"))
+            dcols, drows, dtypes = fetch(con.sql(sql))
+            if sorted(scols) != sorted(dcols):
+                print(f'FAIL {name}: cols {sorted(scols)} vs {sorted(dcols)}'); fails += 1; continue
+            skew = {c: (stypes[c], dtypes[c]) for c in stypes
+                    if not compatible_type(stypes[c], dtypes.get(c, ''))}
+            if skew:
+                print(f'FAIL {name}: dtype skew (spark vs oracle): {skew}'); fails += 1; continue
+            sk, dk = table_key(srows, scols), table_key(drows, dcols)
+            if len(sk) != len(dk):
+                print(f'FAIL {name}: rows {len(sk)} vs {len(dk)}'); fails += 1; continue
+            bad = [ (a,b) for a,b in zip(sk,dk) if a != b ]
+            if bad:
+                print(f'FAIL {name}: {len(bad)} mismatched rows, first: {bad[0]}'); fails += 1
+            else:
+                print(f'OK   {name}: {len(sk)} rows')
+        except Exception as e:
+            print(f'ERR  {name}: {str(e)[:200]}'); fails += 1
+    print('FAILS:', fails)
+    return 1 if fails else 0
+
+
+if __name__ == '__main__':
+    sys.exit(main(sys.argv))
