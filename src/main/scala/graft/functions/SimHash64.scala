@@ -16,9 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Dataset boundary: the text column is read straight off the internal
   * row as UTF8String).
   *
-  * Semantics are identical to `graft.operators.Dedup.simhash(tokensOf(s))`
-  * (asserted in OperatorsSpec): lowercase [a-z0-9]+ runs, Charikar
-  * majority-vote over xxhash64(token) bits, weighted by token count.
+  * Semantics are identical to `graft.operators.Dedup.simhash` over the
+  * tokens of `TokenGrams.ofUtf8(s, 1)` (asserted in OperatorsSpec):
+  * lowercase [a-z0-9]+ runs, Charikar majority-vote over xxhash64(token)
+  * bits, weighted by token count.
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
@@ -43,9 +44,10 @@ object SimHash64 {
 
   /** Called from generated code — must stay a static-shaped, total fn. */
   def ofUtf8(s: UTF8String): Long = {
-    // UTF8String.toString is a single decode; tokenization itself is the
-    // shared Dedup logic so the expression and the Scala path cannot drift
-    graft.operators.Dedup.simhash(graft.operators.Dedup.tokensOf(s.toString))
+    // the tokens come from the shared TokenGrams tokenizer, so this and
+    // every shingle path cannot drift
+    val toks = TokenGrams.ofUtf8(s, 1)
+    graft.operators.Dedup.simhash(Seq.tabulate(toks.numElements)(toks.getUTF8String(_).toString))
   }
 
   val info = new ExpressionInfo(classOf[SimHash64].getName, null, "simhash64")

@@ -29,6 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `n = 1` is the plain token array (`Dedup.tokensCol` twin).
   *
+  * `TokenGrams.ofUtf8` is also the one tokenizer of the signature kernels:
+  * `Dedup`'s MinHash bands take its 3-grams and `SimHash64` its tokens.
+  *
   * Why it exists (guide §1.2 step 2, "per-task work"): the tokenize +
   * per-window `slice`+`concat_ws` expression chain dominates the CPU of
   * every gram-shaped operator (substring dedup, decontamination, bigram

@@ -18,8 +18,10 @@ import graft.sources.PageSynth
   *                        (one df shuffle + broadcast-set narrow map)
   *   2. exact dedup       one shuffle on md5(text) — kills byte-copies
   *                        before the costlier shingle pass
-  *   3. near dedup        MinHash-LSH candidates verified by Jaccard;
-  *                        keep the lowest url per duplicate cluster
+  *   3. near dedup        `Dedup.minhashLshPairsFrom` keyed by url (LSH
+  *                        candidates verified by Jaccard, its bucket cap
+  *                        counted in `Dedup.MinhashDrops`); keep the
+  *                        smaller url of each near-dup pair
   *   4. repetition filter Gopher dup-line/top-2gram flag on scrubbed text
   *   5. quality filter    C4-style score over extracted text, no shuffle
   *   6. language ID       kernel heuristic, no shuffle
@@ -45,7 +47,6 @@ object CorpusPipeline {
 
   /** Extracted docs annotated with every pipeline signal + keep flags. */
   def corpus(s: SparkSession, dir: String, buckets: Int = 32): DataFrame = {
-    import s.implicits._
     val extracted0 = ExtractJob.extract(s, PageSynth.pages(s, dir), buckets)
       .toDF()
       .filter(col("status") === "completed" && length(col("text")) > 0)
@@ -70,47 +71,11 @@ object CorpusPipeline {
       .join(keepExact, Seq("h"))
       .withColumn("is_exact_dup", col("url") =!= col("keep_url"))
 
-    // 3. near dedup on the exact-kept set: LSH candidate pairs verified by
-    //    Jaccard; drop the lexicographically larger url of each pair.
-    //    Signatures are a narrow in-kernel map (no shingle shuffle);
-    //    shingles explode only for candidate docs.
-    val docsForLsh = exactKept.filter(!col("is_exact_dup"))
-      .select(col("url"), col("text"))
-    val bands = docsForLsh
-      .as[(String, String)]
-      .flatMap { case (u, text) =>
-        val sig = Dedup.minhashSignature(Dedup.shinglesOf(text))
-        (0 until Dedup.Bands).map(b => (u, b, Dedup.bandHash(sig, b)))
-      }
-      .toDF("url", "band", "bucket_h")
-    val cand = bands.groupBy(col("band"), col("bucket_h"))
-      .agg(sort_array(collect_list(col("url"))).as("us"))
-      .filter(size(col("us")).between(2, 64))
-      .select(explode(expr(
-        "flatten(transform(us, (x, i) -> transform(slice(us, i + 2, size(us)), y -> struct(x AS url_a, y AS url_b))))"))
-        .as("p"))
-      .select(col("p.url_a"), col("p.url_b"))
-      .distinct()
-      .localCheckpoint() // consumed by the gate and the verify join
-    // no .distinct(): left-semi broadcast build side — duplicates are
-    // semantics-free, the distinct was a pure extra exchange
-    val candUrls = cand.select(col("url_a").as("url"))
-      .unionAll(cand.select(col("url_b").as("url")))
-    // per-url shingle SETS as arrays (same set-intersect verify shape as
-    // Dedup.minhashLshFromBands — no shingle explode, no per-pair agg)
-    val shSets = docsForLsh
-      .join(broadcast(candUrls), Seq("url"), "left_semi")
-      .select(col("url"), array_distinct(
-        graft.functions.TokenGrams.tokenGrams(s, col("text"), 3)).as("sh"))
-    val nearDupUrls = cand
-      .join(shSets.select(col("url").as("url_a"), col("sh").as("sha"),
-        size(col("sh")).as("na")), Seq("url_a"))
-      .join(shSets.select(col("url").as("url_b"), col("sh").as("shb"),
-        size(col("sh")).as("nb")), Seq("url_b"))
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .filter(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")) >= Dedup.JaccardThreshold)
-      .select(col("url_b").as("url")) // keep the smaller url of each pair
+    // 3. near dedup on the exact-kept set: Dedup's MinHash-LSH operator
+    //    keyed by url; drop the lexicographically larger url of each pair
+    val nearDupUrls = Dedup.minhashLshPairsFrom(s,
+        exactKept.filter(!col("is_exact_dup")).select(col("url").as("doc_id"), col("text")))
+      .select(col("id_b").as("url")) // keep the smaller url of each pair
       .distinct()
 
     // 5+6. quality + language over the survivors

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.TokenGrams
 
 /** Deduplication operators over the `documents` table — the training-data
   * pipeline layer on top of the extraction engine (a Common-Crawl corpus is
@@ -25,7 +28,9 @@ import org.apache.spark.sql.functions._
   *                   here (oracle-checkable), LSH variant in Similarity.
   *
   * All tokenization is the shared `[a-z0-9]+` lowercase-alnum runs so the
-  * Spark side and the DuckDB oracle agree byte-for-byte.
+  * Spark side and the DuckDB oracle agree byte-for-byte: `tokensCol` in
+  * SQL form, `TokenGrams.ofUtf8` in the kernels (the MinHash and SimHash
+  * signatures and the LSH verify side).
   *
   * The testdata corpus has no planted duplicates, so each strategy runs on
   * `corpus()` = documents ∪ deterministic near-copies (doc_id+1000000,
@@ -64,10 +69,11 @@ object Dedup {
     * sketch path, the count is eager, and the warn line fires
     * unconditionally per run.
     *
-    * Scope: LAST-RUN observability on this driver JVM — concurrent LSH
-    * runs interleave their writes (last wins). Anything needing per-run
-    * audit data at scale should persist the counts next to its own
-    * lineage.
+    * Scope: LAST-RUN observability on this driver JVM — every LSH run
+    * writes it, the corpus pipeline's near-dup stage included, and the
+    * last run wins (concurrent runs interleave their writes). Anything
+    * needing per-run audit data at scale should persist the counts next
+    * to its own lineage.
     */
   final class DropCounter(val name: String) {
     private val buckets = new java.util.concurrent.atomic.AtomicLong(-1L)
@@ -180,7 +186,7 @@ object Dedup {
       // fused native 3-gram pass (graft.functions.TokenGrams); equality
       // with tokensCol+shinglesExpr is asserted in TokenGramsSpec
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.TokenGrams.tokenGrams(docs.sparkSession, col("text"), 3))).as("s"))
+        TokenGrams.tokenGrams(docs.sparkSession, col("text"), 3))).as("s"))
 
   /** Exact n-gram Jaccard near-dup pairs (shingle self-join). */
   def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame = {
@@ -222,12 +228,17 @@ object Dedup {
 
   /** MinHash signature from two base hashes: h_i(s) = h1(s) + i·h2(s)
     * (Indyk's affine family — standard public construction). Deterministic,
-    * no RNG: both base hashes are xxhash64 with fixed seeds.
+    * no RNG: both base hashes are xxhash64 with fixed seeds. A min over a
+    * multiset equals the min over its set, so repeated shingles need no
+    * distinct pass.
     */
-  def minhashSignature(shingles: Iterable[String]): Array[Long] = {
+  def minhashSignature(shingles: Iterable[String]): Array[Long] =
+    signatureOf(shingles.iterator.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** The signature over shingles given as their UTF-8 bytes. */
+  private def signatureOf(shingles: Iterator[Array[Byte]]): Array[Long] = {
     val sig = Array.fill(NumHashes)(Long.MaxValue)
-    shingles.foreach { sh =>
-      val bytes = sh.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    shingles.foreach { bytes =>
       val h1 = XxHash.hashBytes(bytes, 42L)
       val h2 = XxHash.hashBytes(bytes, 271828L) | 1L // odd → full-period
       // 4-way unrolled min-update: h_i = h1 + i·h2 computed from four
@@ -265,38 +276,17 @@ object Dedup {
     h
   }
 
-  /** In-kernel shingling — EXACTLY the semantics of
-    * `tokensCol` + `shinglesExpr` (lowercase alnum runs, distinct 3-gram
-    * space-joined shingles); equality asserted in OperatorsSpec. Lets the
-    * signature stage run as a narrow map with zero shuffle instead of
-    * explode → groupBy(collect_set) over every shingle in the corpus.
+  /** The band buckets of one text's signature, over the 3-grams of
+    * `TokenGrams.ofUtf8` — EXACTLY `tokensCol` + `shinglesExpr` up to
+    * repeats (asserted in OperatorsSpec). Lets the signature stage run as
+    * a narrow map with zero shuffle instead of explode →
+    * groupBy(collect_set) over every shingle in the corpus.
     */
-  def tokensOf(text: String): scala.collection.IndexedSeq[String] = {
-    val lower = text.toLowerCase(java.util.Locale.ROOT)
-    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    val n = lower.length
-    while (i < n) {
-      while (i < n && !isAlnum(lower.charAt(i))) i += 1
-      val s0 = i
-      while (i < n && isAlnum(lower.charAt(i))) i += 1
-      if (i > s0) toks += lower.substring(s0, i)
-    }
-    toks
+  private def bandsOf(text: String): Array[Long] = {
+    val grams = TokenGrams.ofUtf8(UTF8String.fromString(text), 3)
+    val sig = signatureOf(Iterator.range(0, grams.numElements).map(grams.getUTF8String(_).getBytes))
+    Array.tabulate(Bands)(bandHash(sig, _))
   }
-
-  def shinglesOf(text: String): scala.collection.Set[String] = {
-    val toks = tokensOf(text)
-    val out = scala.collection.mutable.HashSet.empty[String]
-    var k = 0
-    while (k + 2 < toks.length) {
-      out += (toks(k) + " " + toks(k + 1) + " " + toks(k + 2))
-      k += 1
-    }
-    out
-  }
-  private def isAlnum(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
 
   /** Most recent LSH candidate-set size (observability at scale:
     * candidate growth is THE health metric of a banding config — too low
@@ -322,26 +312,20 @@ object Dedup {
   def dedupMinhashLsh(s: SparkSession, dir: String, maxBucket: Int = 64): DataFrame =
     minhashLshPairsFrom(s, corpus(s, dir), maxBucket)
 
-  /** The narrow signature stage alone: (doc_id, band, bucket) rows —
-    * exposed so the harness can materialize it and the DuckDB oracle can
-    * replicate the banding + verify relationally.
+  /** The narrow signature stage alone: (doc_id, band int, bucket bigint)
+    * rows, `doc_id` passed through whatever its type — exposed so the
+    * harness can materialize it and the DuckDB oracle can replicate the
+    * banding + verify relationally.
     */
-  def minhashBands(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    docs
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val sig = minhashSignature(shinglesOf(text))
-        (0 until Bands).map(b => (id, b, bandHash(sig, b)))
-      }
-      .toDF("doc_id", "band", "bucket")
-  }
+  def minhashBands(s: SparkSession, docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      posexplode(udf(bandsOf _).apply(col("text"))).as(Seq("band", "bucket")))
 
-  /** LSH near-dup pairs over an arbitrary (doc_id: Long, text: String)
-    * frame — the same operator the registered query uses, callable on the
-    * EXTRACTED corpus (bench + scale specs run it on extraction output
-    * with planted near-dups).
+  /** LSH near-dup pairs over an arbitrary (doc_id, text: String) frame,
+    * any orderable `doc_id` type — the same operator the registered query
+    * uses, callable on the EXTRACTED corpus (bench + scale specs run it on
+    * extraction output with planted near-dups; the corpus pipeline keys it
+    * by url).
     */
   def minhashLshPairsFrom(s: SparkSession, docs: DataFrame, maxBucket: Int = 64): DataFrame =
     minhashLshFromBands(s, minhashBands(s, docs), docs, maxBucket)
@@ -395,7 +379,7 @@ object Dedup {
       .unionAll(cand.select(col("id_b").as("doc_id")))
     val sh = docs.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), array_distinct(
-        graft.functions.TokenGrams.tokenGrams(s, col("text"), 3)).as("sh"))
+        TokenGrams.tokenGrams(s, col("text"), 3)).as("sh"))
     cand
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sha"),
         size(col("sh")).as("na")), Seq("id_a"))

@@ -3,8 +3,10 @@ package graft.operators
 import graft.kernel.ExtractKernel
 import graft.model.{Extracted, Page, PageRaw}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
 
 /** The flagship pipeline: pages → extract kernel (narrow, shuffle-free) →
   * bucket-grouped write (+ per-bucket lineage, resume anti-join).
@@ -46,9 +48,9 @@ object ExtractJob {
   def bucketCol(buckets: Int) =
     pmod(xxhash64(col("url")), lit(buckets.toLong)).cast("int")
 
-  /** The bucket of one url, off Catalyst: MUST equal `bucketCol`.
-    * XxHash.hashUtf8 reimplements Spark's xxhash64 (seed 42, UTF-8
-    * bytes); equality is asserted in OperatorsSpec.
+  /** The bucket of one url, off Catalyst: equals `bucketCol` by
+    * construction, since XxHash.hashUtf8 delegates to the XXH64 that Spark's
+    * xxhash64 runs (seed 42, UTF-8 bytes); asserted in OperatorsSpec.
     */
   def bucketOf(url: String, buckets: Int): Int =
     java.lang.Math.floorMod(XxHash.hashUtf8(url), buckets.toLong).toInt
@@ -203,88 +205,13 @@ object ExtractJob {
 
 /** Stable 64-bit hash of a UTF-8 string matching Spark's `xxhash64`
   * (seed 42) so the kernel-side bucket equals the Catalyst-side
-  * `bucketCol` value. Implementation: XXH64 over the UTF-8 bytes, seed 42
-  * — the same definition Spark's XxHash64 expression uses for
-  * StringType input.
+  * `bucketCol` value. Delegates to Spark's own XXH64 over the UTF-8 bytes:
+  * the code the XxHash64 expression runs for StringType input.
   */
 object XxHash {
-  private val PRIME1 = -7046029288634856825L // 0x9E3779B185EBCA87
-  private val PRIME2 = -4417276706812531889L // 0xC2B2AE3D27D4EB4F
-  private val PRIME3 = 1609587929392839161L  // 0x165667B19E3779F9
-  private val PRIME4 = -8796714831421723037L // 0x85EBCA77C2B2AE63
-  private val PRIME5 = 2870177450012600261L  // 0x27D4EB2F165667C5
-
   def hashUtf8(s: String, seed: Long = 42L): Long =
     hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), seed)
 
-  def hashBytes(data: Array[Byte], seed: Long): Long = {
-    val length = data.length
-    var hash: Long = 0L
-    var off = 0
-    if (length >= 32) {
-      var v1 = seed + PRIME1 + PRIME2
-      var v2 = seed + PRIME2
-      var v3 = seed
-      var v4 = seed - PRIME1
-      val limit = length - 32
-      while (off <= limit) {
-        v1 = round(v1, getLong(data, off))
-        v2 = round(v2, getLong(data, off + 8))
-        v3 = round(v3, getLong(data, off + 16))
-        v4 = round(v4, getLong(data, off + 24))
-        off += 32
-      }
-      hash = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
-        java.lang.Long.rotateLeft(v3, 12) + java.lang.Long.rotateLeft(v4, 18)
-      hash = mergeRound(hash, v1)
-      hash = mergeRound(hash, v2)
-      hash = mergeRound(hash, v3)
-      hash = mergeRound(hash, v4)
-    } else {
-      hash = seed + PRIME5
-    }
-    hash += length
-    while (off + 8 <= length) {
-      hash ^= round(0L, getLong(data, off))
-      hash = java.lang.Long.rotateLeft(hash, 27) * PRIME1 + PRIME4
-      off += 8
-    }
-    if (off + 4 <= length) {
-      hash ^= (getInt(data, off) & 0xFFFFFFFFL) * PRIME1
-      hash = java.lang.Long.rotateLeft(hash, 23) * PRIME2 + PRIME3
-      off += 4
-    }
-    while (off < length) {
-      hash ^= (data(off) & 0xFFL) * PRIME5
-      hash = java.lang.Long.rotateLeft(hash, 11) * PRIME1
-      off += 1
-    }
-    fmix(hash)
-  }
-
-  private def round(acc: Long, input: Long): Long =
-    java.lang.Long.rotateLeft(acc + input * PRIME2, 31) * PRIME1
-
-  private def mergeRound(h: Long, v: Long): Long =
-    (h ^ round(0L, v)) * PRIME1 + PRIME4
-
-  private def fmix(h0: Long): Long = {
-    var h = h0
-    h ^= h >>> 33
-    h *= PRIME2
-    h ^= h >>> 29
-    h *= PRIME3
-    h ^= h >>> 32
-    h
-  }
-
-  private def getLong(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) | ((b(i + 2) & 0xFFL) << 16) |
-      ((b(i + 3) & 0xFFL) << 24) | ((b(i + 4) & 0xFFL) << 32) |
-      ((b(i + 5) & 0xFFL) << 40) | ((b(i + 6) & 0xFFL) << 48) |
-      ((b(i + 7) & 0xFFL) << 56)
-
-  private def getInt(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) | ((b(i + 2) & 0xFFL) << 16) |
-      ((b(i + 3) & 0xFFL) << 24)
+  def hashBytes(data: Array[Byte], seed: Long): Long =
+    XXH64.hashUnsafeBytes(data, Platform.BYTE_ARRAY_OFFSET, data.length, seed)
 }

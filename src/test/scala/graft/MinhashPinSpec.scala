@@ -1,0 +1,70 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{CorpusPipeline, Dedup}
+
+/** The MinHash-LSH family's signatures and the corpus pipeline's rows,
+  * pinned by value: SHA-256 digests over the sorted (doc_id, band, bucket)
+  * rows of `Dedup.minhashBands` and the sorted (doc_id, sig) rows of
+  * `Dedup.simhashSigs` at sf0.001 and at sf0.01, and over the sorted rows of
+  * `CorpusPipeline.corpus` at sf0.001 in the columns `pipeline_corpus`
+  * materializes. The oracles cannot catch a changed signature: the
+  * `dedup_minhash_lsh` oracle replays banding from the materialized bands,
+  * and the `pipeline_corpus` oracle reads its rows back.
+  *
+  * Also pins the Spark jobs that build and collect the three LSH outputs at
+  * sf0.001, as upper bounds.
+  */
+class MinhashPinSpec extends AnyFunSuite {
+  import TestSpark.{countingJobs, sf0001, spark}
+
+  /** (digest of the sorted rows, row count); a double enters by its raw bits */
+  private def rows(df: DataFrame): (String, Int) = {
+    val lines = df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case v => String.valueOf(v)
+    }.mkString("\u0001")).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    (md.digest().map("%02x".format(_)).mkString, lines.length)
+  }
+
+  /** Digests taken from the code before the MinHash family shared one
+    * tokenizer, Spark's XXH64 and one LSH operator: (bands, simhash sigs).
+    */
+  private val pins = Seq(
+    sf0001 -> (
+      ("00d18c1de75ef74a11016f29df6476a3823ad91c56d85e5f83f22421c190573b", 17600),
+      ("6603b91cc27eb7c15942d0209ab17881592e40b752e6a91491930e0f81b6b330", 550)),
+    "/root/testdata/sf0.01" -> (
+      ("6ff877c4eb5a850cfd8c0d29497c57eebf94bdffb86a56cf0b369bad65c00b1b", 17600),
+      ("9b64ad24316538dab95ce580210885addf92fd0fbc054a7c249ead00698fce4c", 550)))
+
+  for ((dir, (bands, sigs)) <- pins) {
+    val sf = dir.split('/').last
+    test(s"$sf: minhash bands and simhash signatures keep their pinned rows") {
+      val docs = Dedup.corpus(spark, dir)
+      assert(rows(Dedup.minhashBands(spark, docs).select("doc_id", "band", "bucket")) == bands)
+      assert(rows(Dedup.simhashSigs(spark, docs).select("doc_id", "sig")) == sigs)
+    }
+  }
+
+  test("sf0.001: the corpus pipeline keeps its pinned rows") {
+    assert(rows(CorpusPipeline.corpus(spark, sf0001).select("url", "n_paras_dropped",
+      "is_exact_dup", "is_near_dup", "repetition_flagged", "quality", "lang_pred", "keep")) ==
+      ("5eca7128f732e40458420d8164fb84f7a4cfd30a97e1619f87556d9ac9662e2e", 483))
+  }
+
+  test("sf0.001: building and collecting the LSH outputs starts no more jobs than pinned") {
+    val (_, minhash) = countingJobs(Dedup.dedupMinhashLsh(spark, sf0001).collect())
+    val (_, simhash) = countingJobs(Dedup.dedupSimhash(spark, sf0001).collect())
+    val (_, pipeline) = countingJobs(CorpusPipeline.corpus(spark, sf0001).collect())
+    info(s"jobs: dedupMinhashLsh $minhash, dedupSimhash $simhash, CorpusPipeline.corpus $pipeline")
+    // counted on the code the digests were taken from
+    assert(minhash <= 12, s"dedupMinhashLsh: $minhash jobs")
+    assert(simhash <= 8, s"dedupSimhash: $simhash jobs")
+    assert(pipeline <= 24, s"CorpusPipeline.corpus: $pipeline jobs")
+  }
+}

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, ExtractJob, Multimodal, Similarity, TextAnalysis, XxHash}
@@ -119,9 +120,9 @@ class OperatorsSpec extends AnyFunSuite {
     assert(lsh.size.toDouble / exact.size >= 0.8, s"recall ${lsh.size}/${exact.size}")
   }
 
-  // ---- in-kernel shingles must equal the SQL shingles ----
+  // ---- the kernels' shingles must equal the SQL shingles ----
 
-  test("dedup: in-kernel shinglesOf equals tokensCol+shinglesExpr") {
+  test("dedup: TokenGrams.ofUtf8 3-grams equal tokensCol+shinglesExpr") {
     import spark.implicits._
     val sqlShingles = Dedup.corpus(spark, sf0001)
       .select(col("doc_id"), Dedup.tokensCol(col("text")).as("toks"))
@@ -130,7 +131,10 @@ class OperatorsSpec extends AnyFunSuite {
     val kernelShingles = Dedup.corpus(spark, sf0001)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect()
-      .map { case (id, text) => id -> Dedup.shinglesOf(text).toSet }.toMap
+      .map { case (id, text) =>
+        val grams = graft.functions.TokenGrams.ofUtf8(UTF8String.fromString(text), 3)
+        id -> Seq.tabulate(grams.numElements)(grams.getUTF8String(_).toString).toSet
+      }.toMap
     assert(sqlShingles.keySet == kernelShingles.keySet)
     sqlShingles.foreach { case (id, shs) =>
       assert(kernelShingles(id) == shs, s"doc $id shingle mismatch")
@@ -169,14 +173,15 @@ class OperatorsSpec extends AnyFunSuite {
     // SQL surface
     val viaSql = spark.sql(
       "SELECT simhash64('Hello, WORLD 42!') AS h").as[Long].collect()(0)
-    assert(viaSql == Dedup.simhash(Dedup.tokensOf("Hello, WORLD 42!")))
-    // column surface over real data — compare against the typed map
+    assert(viaSql == Dedup.simhash(Seq("hello", "world", "42")))
+    // column surface over real data — compare against the scala path over
+    // the SQL tokenizer
     val exprSide = Dedup.corpus(spark, sf0001)
       .select(col("doc_id"), call_function("simhash64", col("text")).as("sig"))
       .as[(Long, Long)].collect().toMap
     val scalaSide = Dedup.corpus(spark, sf0001)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-      .map { case (id, t) => id -> Dedup.simhash(Dedup.tokensOf(t)) }.toMap
+      .select(col("doc_id"), Dedup.tokensCol(col("text"))).as[(Long, Seq[String])].collect()
+      .map { case (id, toks) => id -> Dedup.simhash(toks) }.toMap
     assert(exprSide == scalaSide)
     // null safety
     assert(spark.sql("SELECT simhash64(CAST(NULL AS STRING)) IS NULL AS n")

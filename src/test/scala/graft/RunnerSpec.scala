@@ -216,6 +216,19 @@ class RunnerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("buckets must be positive, got 0"))
   }
 
+  test("runner: a pages table whose html is a string fails at analysis, writing nothing") {
+    val base = java.nio.file.Files.createTempDirectory("graft_mistyped").toString
+    PageSynth.pages(spark, sf0001).limit(5).withColumn("html", col("html").cast("string"))
+      .write.mode("overwrite").parquet(s"$base/pages")
+    val out = s"$base/out"
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+    }
+    assert(e.getMessage.contains("html"), e.getMessage)
+    for (sub <- Seq("runs", "extracted"))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/$sub")), s"$sub/ was written")
+  }
+
   test("runner: resume skips completed record buckets, not cancelled ones") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_records").toString
