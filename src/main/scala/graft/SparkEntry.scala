@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ExtractJob, Multimodal, Relational, Similarity, TextAnalysis}
 import graft.sources.PageSynth
-import graft.streaming.StreamingExtract
-import graft.streaming.StreamingExtract.{rmTree, withStagedParquet, withTempDir}
+import graft.streaming.{Drain, StreamingDedup, StreamingExtract, StreamingJoin, StreamingSessionize}
+import graft.streaming.StreamingExtract.{withStagedParquet, withTempDir}
 
 /** Driver contract (SURVEY.md §7): the flagship `entry`, and `registry`,
   * one `Query` per implemented operator (SURVEY.md §2). Each entry pairs
@@ -207,21 +207,16 @@ object SparkEntry {
     // streamed counts must equal the BATCH kernel's materialized output
     // aggregated by DuckDB — a real streaming==batch cross-check. The
     // staged pages copy is deleted once the drain has finished (the
-    // memory sink holds the rows)
+    // drained rows are checkpointed)
     Query("stream_extract_counts",
       (s, dir) => {
         cachedExtract(s, dir) // ensure the batch materialization exists
         withTempDir("graft_stream") { base =>
           PageSynth.pages(s, dir).write.mode("overwrite").parquet(s"$base/pages")
-          val name = "stream_extract_" + java.lang.Long.toHexString(System.nanoTime())
-          StreamingExtract.runAvailableNow(s, s"$base/pages", name)
-          val out = s.table(name)
-            .groupBy(col("status")).agg(count(lit(1)).as("n"),
-              sum(col("n_pages").cast("long")).as("total_pages"))
-            .orderBy(col("status")).localCheckpoint()
-          s.catalog.dropTempView(name)
-          out
-        }
+          Drain.rows(StreamingExtract.extractStream(s, s"$base/pages"), "append")
+        }.groupBy(col("status")).agg(count(lit(1)).as("n"),
+            sum(col("n_pages").cast("long")).as("total_pages"))
+          .orderBy(col("status"))
       },
       b => s"""SELECT status, CAST(count(*) AS BIGINT) AS n,
               | CAST(sum(n_pages) AS BIGINT) AS total_pages
@@ -238,16 +233,10 @@ object SparkEntry {
     // user's (still-open) last session — DuckDB recomputes that
     // relationally
     Query("stream_sessionize",
-      (s, dir) => {
-        withStagedParquet(s"$dir/events.parquet", "graft_sess_stream") { staged =>
-          val name = "stream_sessionize_" + java.lang.Long.toHexString(System.nanoTime())
-          graft.streaming.StreamingSessionize.runAvailableNow(s, staged, name)
-          val out = s.table(name)
-            .orderBy(col("user_id"), col("session_seq")).localCheckpoint()
-          s.catalog.dropTempView(name)
-          out
-        }
-      },
+      (s, dir) =>
+        withStagedParquet(s"$dir/events.parquet", "graft_sess_stream")(
+          StreamingSessionize.sessions(s, _, fireTimeouts = false))
+          .orderBy(col("user_id"), col("session_seq")),
       _ => """WITH g AS (
              | SELECT user_id, ts, event_id,
              |  date_diff('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) AS gap_s
@@ -270,16 +259,10 @@ object SparkEntry {
     // with watermarks on both sides; AvailableNow drain == the batch
     // join, which DuckDB recomputes relationally
     Query("stream_interval_join",
-      (s, dir) => {
-        withStagedParquet(s"$dir/events.parquet", "graft_join_stream") { staged =>
-          val name = "stream_ivjoin_" + java.lang.Long.toHexString(System.nanoTime())
-          graft.streaming.StreamingJoin.runAvailableNow(s, staged, name)
-          val out = s.table(name)
-            .orderBy(col("view_id"), col("click_id")).localCheckpoint()
-          s.catalog.dropTempView(name)
-          out
-        }
-      },
+      (s, dir) =>
+        withStagedParquet(s"$dir/events.parquet", "graft_join_stream")(staged =>
+          Drain.rows(StreamingJoin.intervalJoin(s, staged), "append"))
+          .orderBy(col("view_id"), col("click_id")),
       _ => graft.streaming.StreamingJoin.intervalJoinSql),
     // stateful streaming dedup (mapGroupsWithState): the corpus is
     // staged as 4 files and drained 2 files per micro-batch, so the
@@ -288,18 +271,13 @@ object SparkEntry {
     // the batch md5 group-by over a corpus with genuine exact
     // duplicates, which DuckDB recomputes relationally
     Query("stream_dedup_state",
-      (s, dir) => {
-        val base = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
-        graft.streaming.StreamingDedup.exactDupCorpus(s, dir)
-          .repartition(4).write.mode("overwrite").parquet(s"$base/docs")
-        val name = "stream_dedup_" + java.lang.Long.toHexString(System.nanoTime())
-        graft.streaming.StreamingDedup.runAvailableNow(
-          s, s"$base/docs", name, maxFilesPerTrigger = Some(2))
-        val out = graft.streaming.StreamingDedup.resolve(s, name).localCheckpoint()
-        s.catalog.dropTempView(name)
-        rmTree(base)
-        out
-      },
+      (s, dir) =>
+        withTempDir("graft_sdedup") { base =>
+          StreamingDedup.exactDupCorpus(s, dir)
+            .repartition(4).write.mode("overwrite").parquet(s"$base/docs")
+          StreamingDedup.resolve(Drain.rows(
+            StreamingDedup.dedupStream(s, s"$base/docs", maxFilesPerTrigger = Some(2)), "update"))
+        },
       _ => s"""WITH all_docs AS (${graft.streaming.StreamingDedup.exactDupCorpusSql})
               |SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
               |FROM all_docs GROUP BY 1 ORDER BY keep_id""".stripMargin),

@@ -60,13 +60,13 @@ object ExtractKernel {
     }
   }
 
-  private def isPdf(b: Array[Byte]): Boolean =
+  private[graft] def isPdf(b: Array[Byte]): Boolean =
     b.length >= 5 && b(0) == '%' && b(1) == 'P' && b(2) == 'D' && b(3) == 'F' && b(4) == '-'
 
   /** HTML sniff: first non-whitespace byte is '<', or "<html" / "<!doctype"
     * appears in the first 256 bytes (case-insensitive).
     */
-  private def looksHtml(b: Array[Byte]): Boolean = {
+  private[graft] def looksHtml(b: Array[Byte]): Boolean = {
     var i = 0
     while (i < b.length && (b(i) == ' ' || b(i) == '\n' || b(i) == '\r' || b(i) == '\t')) i += 1
     if (i < b.length && b(i) == '<') return true
@@ -258,7 +258,7 @@ object ExtractKernel {
     sb.toString
   }
 
-  private def stripBom(b: Array[Byte]): Array[Byte] =
+  private[graft] def stripBom(b: Array[Byte]): Array[Byte] =
     if (b.length >= 3 && (b(0) & 0xff) == 0xEF && (b(1) & 0xff) == 0xBB && (b(2) & 0xff) == 0xBF)
       java.util.Arrays.copyOfRange(b, 3, b.length)
     else b

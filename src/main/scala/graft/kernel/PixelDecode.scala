@@ -40,20 +40,19 @@ object PixelDecode {
 
   def luma601(r: Int, g: Int, b: Int): Int = (77 * r + 150 * g + 29 * b) >> 8
 
-  /** Grayscale decode of a PNG/BMP/GIF/uncompressed-TIFF payload; None
-    * for anything else.
+  /** Grayscale decode of a PNG/JPEG/GIF/TIFF/BMP payload, dispatched on
+    * the one raster magic table (`ImageHeader.formatOf`); None for
+    * anything else.
     */
-  def decodeLuma(b: Array[Byte]): Option[Luma] = {
-    if (b == null || b.length < 8) return None
-    try {
-      if ((b(0) & 0xff) == 0x89 && b(1) == 'P') png(b)
-      else if (b(0) == 'B' && b(1) == 'M') bmp(b)
-      else if (b(0) == 'G' && b(1) == 'I' && b(2) == 'F') gif(b)
-      else if ((b(0) == 'I' && b(1) == 'I') || (b(0) == 'M' && b(1) == 'M')) tiff(b)
-      else if ((b(0) & 0xff) == 0xFF && (b(1) & 0xff) == 0xD8) JpegDecode.decode(b)
-      else None
+  def decodeLuma(b: Array[Byte]): Option[Luma] =
+    try ImageHeader.formatOf(b).flatMap {
+      case "png" => png(b)
+      case "jpg" => JpegDecode.decode(b)
+      case "gif" => gif(b)
+      case "tiff" => tiff(b)
+      case "bmp" => bmp(b)
+      case _ => None
     } catch { case _: Exception => None }
-  }
 
   /** Box-filter resample of a decoded image to (tw × th): each output
     * pixel is the integer mean of its exact source box — deterministic,
@@ -216,7 +215,6 @@ object PixelDecode {
 
   private def gif(b: Array[Byte]): Option[Luma] = {
     if (b.length < 13) return None
-    if (!(b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a')) return None
     val w = le16(b, 6)
     val h = le16(b, 8)
     if (w <= 0 || h <= 0 || w > MergeSpec.MaxImageDim || h > MergeSpec.MaxImageDim)
@@ -355,10 +353,7 @@ object PixelDecode {
   // ------------------------------------------------------------------
 
   private def tiff(b: Array[Byte]): Option[Luma] = {
-    if (b.length < 8) return None
     val le = b(0) == 'I'
-    if (le && !(b(1) == 'I' && u8(b, 2) == 0x2A && u8(b, 3) == 0)) return None
-    if (!le && !(b(1) == 'M' && u8(b, 2) == 0 && u8(b, 3) == 0x2A)) return None
     def rd16(i: Int): Int = if (le) le16(b, i) else ((u8(b, i) << 8) | u8(b, i + 1))
     def rd32(i: Int): Long = if (le) le32(b, i)
       else (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)

@@ -33,18 +33,6 @@ object CorpusPipeline {
 
   val QualityThreshold = 0.5
 
-  private def qualityCol(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val toks = size(regexp_extract_all(text, lit("\\S+"), lit(0)))
-    val stops = size(regexp_extract_all(lower(text),
-      lit("\\b(the|and|of|to|in|is|that|a)\\b"), lit(0)))
-    val punct = length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
-    val stopRatio = stops.cast("double") / greatest(toks, lit(1))
-    val punctRatio = punct.cast("double") / greatest(length(text), lit(1))
-    lit(0.4) * least(stopRatio * 5.0, lit(1.0)) +
-      lit(0.3) * (lit(1.0) - least(punctRatio * 10.0, lit(1.0))) +
-      lit(0.3) * least(toks.cast("double") / 100.0, lit(1.0))
-  }
-
   /** Extracted docs annotated with every pipeline signal + keep flags. */
   def corpus(s: SparkSession, dir: String, buckets: Int = 32): DataFrame = {
     val extracted0 = ExtractJob.extract(s, PageSynth.pages(s, dir), buckets)
@@ -84,7 +72,7 @@ object CorpusPipeline {
     val survivors = exactKept
       .join(nearDupUrls.withColumn("is_near_dup", lit(true)), Seq("url"), "left")
       .withColumn("is_near_dup", coalesce(col("is_near_dup"), lit(false)))
-      .withColumn("quality", round(qualityCol(col("text")), 3))
+      .withColumn("quality", round(TextAnalysis.qualityCol(col("text")), 3))
     val withLang = survivors
       .select(col("url"), col("text"), col("n_paras_dropped"),
         col("is_exact_dup"), col("is_near_dup"), col("quality"))

@@ -38,16 +38,21 @@ object Multimodal {
       height: Int,        // header-parsed (ImageHeader)
       decode_ok: Boolean) // header parsed successfully
 
-  def sniffType(b: Array[Byte]): String = {
-    if (b == null || b.isEmpty) "empty"
-    else if (b.length >= 5 && b(0) == '%' && b(1) == 'P' && b(2) == 'D' && b(3) == 'F') "pdf"
+  /** The payload's type in the kernel's own dispatch order
+    * (`ExtractKernel.extractRaw`): BOM strip, then empty → pdf → html with
+    * the kernel's own tests, then zip and the raster magic table
+    * (`ImageHeader.formatOf`). Html goes before the raster magics, so a
+    * payload that matches a weak image magic but carries html markers
+    * sniffs as the branch that extracts it; triage and extraction never
+    * disagree about a payload.
+    */
+  def sniffType(raw: Array[Byte]): String = {
+    import graft.kernel.ExtractKernel.{isPdf, looksHtml, stripBom}
+    val b = if (raw == null) Array.emptyByteArray else stripBom(raw)
+    if (b.isEmpty) "empty"
+    else if (isPdf(b)) "pdf"
+    else if (looksHtml(b)) "html"
     else if (b.length >= 4 && b(0) == 'P' && b(1) == 'K' && b(2) == 3 && b(3) == 4) "zip"
-    // html BEFORE the raster magics — same precedence as the kernel's
-    // dispatch (isPdf → looksHtml → image), so triage and extraction
-    // never disagree about a payload that matches a weak image magic but
-    // carries html markers (real raster headers never sniff html)
-    else if (b(0) == '<' || new String(b, 0, math.min(b.length, 64), "ISO-8859-1")
-      .toLowerCase(java.util.Locale.ROOT).contains("<!doctype")) "html"
     else graft.kernel.ImageHeader.formatOf(b).getOrElse("bin")
   }
 

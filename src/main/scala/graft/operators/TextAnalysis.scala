@@ -57,29 +57,33 @@ object TextAnalysis {
 
   /** Quality score in [0,1]: stopword presence + low punctuation noise +
     * length saturation (the heuristics-trio every webtext filter uses —
-    * C4/Gopher-style rules, expressed as one arithmetic column).
-    * Reported per language (groupBy agg).
+    * C4/Gopher-style rules, expressed as one arithmetic column). The one
+    * score behind `textQuality` and the corpus pipeline's quality filter.
     */
-  def textQuality(s: SparkSession, dir: String): DataFrame = {
-    val toks = size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
-    val stops = size(regexp_extract_all(lower(col("text")),
+  def qualityCol(text: Column): Column = {
+    val toks = size(regexp_extract_all(text, lit("\\S+"), lit(0)))
+    val stops = size(regexp_extract_all(lower(text),
       lit("\\b(the|and|of|to|in|is|that|a)\\b"), lit(0)))
-    val punct = length(col("text")) - length(regexp_replace(col("text"), "[.,;:!?]", ""))
+    val punct = length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
     val stopRatio = stops.cast("double") / greatest(toks, lit(1))
-    val punctRatio = punct.cast("double") / greatest(length(col("text")), lit(1))
-    val score =
-      lit(0.4) * least(stopRatio * 5.0, lit(1.0)) +
-        lit(0.3) * (lit(1.0) - least(punctRatio * 10.0, lit(1.0))) +
-        lit(0.3) * least(toks.cast("double") / 100.0, lit(1.0))
+    val punctRatio = punct.cast("double") / greatest(length(text), lit(1))
+    lit(0.4) * least(stopRatio * 5.0, lit(1.0)) +
+      lit(0.3) * (lit(1.0) - least(punctRatio * 10.0, lit(1.0))) +
+      lit(0.3) * least(toks.cast("double") / 100.0, lit(1.0))
+  }
+
+  /** `qualityCol` over the documents table, reported per language
+    * (groupBy agg).
+    */
+  def textQuality(s: SparkSession, dir: String): DataFrame =
     Relational.table(s, dir, "documents")
-      .withColumn("q", score)
+      .withColumn("q", qualityCol(col("text")))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         round(avg(col("q")), 3).as("avg_quality"),
         round(min(col("q")), 3).as("min_quality"),
         round(max(col("q")), 3).as("max_quality"))
       .orderBy(col("lang"))
-  }
 
   val textQualitySql: String =
     """WITH scored AS (

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
 
@@ -32,7 +32,7 @@ object StreamingDedup {
     * verbatim under doc_id + 2000000. Derived identically by the DuckDB
     * oracle (exactDupCorpusSql) — the Dedup.corpus pattern.
     */
-  def exactDupCorpus(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+  def exactDupCorpus(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.operators.Relational.table(s, dir, "documents")
       .select(col("doc_id"), col("text"))
     docs.unionAll(
@@ -58,11 +58,7 @@ object StreamingDedup {
       docsDir: String,
       maxFilesPerTrigger: Option[Int] = None): Dataset[DedupUpdate] = {
     import spark.implicits._
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(docsDir)
+    Drain.files(spark, docsDir, maxFilesPerTrigger)
       .select(md5(col("text")).as("h"), col("doc_id"))
       .as[DocHash]
       .groupByKey(_.h)
@@ -79,27 +75,12 @@ object StreamingDedup {
       }
   }
 
-  /** Drain the stream into an (update-mode) memory sink; returns the
-    * sink table of update rows.
+  /** Final dedup answer from an update log — the rows `Drain.rows`
+    * returns in update mode, or the parquet changelog `runIncremental`
+    * writes (a batch-equivalent fold over either).
     */
-  def runAvailableNow(
-      spark: SparkSession,
-      docsDir: String,
-      queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): String = {
-    val q = dedupStream(spark, docsDir, maxFilesPerTrigger).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    queryName
-  }
-
-  /** Final dedup answer from the update log (batch-equivalent fold). */
-  def resolve(spark: SparkSession, sinkTable: String): org.apache.spark.sql.DataFrame =
-    spark.table(sinkTable)
+  def resolve(updates: DataFrame): DataFrame =
+    updates
       .groupBy(col("h"))
       .agg(min(col("keep_id")).as("keep_id"), max(col("n_copies")).as("n_copies"))
       .orderBy(col("keep_id"))
@@ -111,8 +92,7 @@ object StreamingDedup {
     * `docsDir` and the new run resumes the state store: a duplicate whose
     * first copy arrived in an earlier RUN continues its n_copies count
     * instead of restarting at 1 (StreamingDedupSpec pins this). The
-    * final answer is the same fold as `resolve`, over the parquet
-    * changelog.
+    * final answer is `resolve` over the parquet changelog.
     */
   def runIncremental(
       spark: SparkSession,
@@ -131,11 +111,4 @@ object StreamingDedup {
       .start()
     q.awaitTermination()
   }
-
-  /** Fold of the parquet changelog written by `runIncremental`. */
-  def resolveParquet(spark: SparkSession, outDir: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(outDir)
-      .groupBy(col("h"))
-      .agg(min(col("keep_id")).as("keep_id"), max(col("n_copies")).as("n_copies"))
-      .orderBy(col("keep_id"))
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.model.{Extracted, Page}
 import graft.operators.ExtractJob
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental extraction as a Structured Streaming job — the optional
   * wrapper SURVEY.md §2 Table C describes: the same batch kernel, driven by
@@ -15,8 +14,10 @@ import org.apache.spark.sql.streaming.Trigger
   * kernel is stateless per row).
   *
   * At scale this is how you tail a landing zone of WARC-derived parquet:
-  * the checkpoint directory is the resume state (same role as the run
-  * log for batch runs).
+  * `Drain.toParquet(extractStream(...), checkpointDir, outDir)` is the
+  * resumable path, and the checkpoint directory is the resume state (same
+  * role as the run log for batch runs). `Drain.rows` over the same stream
+  * is the one-shot inspection path.
   */
 object StreamingExtract {
 
@@ -32,139 +33,50 @@ object StreamingExtract {
       spark.readStream.schema(Encoders.product[Page].schema).parquet(pagesDir).as[Page], buckets)
   }
 
-  /** One catch-up run into an in-memory sink table (debug/inspection path;
-    * the memory sink cannot recover from a checkpoint, so this variant is
-    * for one-shot runs — the production, resumable path is the parquet
-    * variant below). Blocks until drained, returns the table name.
+  /** Event-time tumbling-window aggregation with a watermark over an
+    * events stream: per-day counts and value sums. The one transform
+    * behind both drains of the events table — complete mode into memory
+    * (`eventWindowCounts`) and append mode to parquet (`Drain.toParquet`).
     */
-  def runAvailableNow(
-      spark: SparkSession,
-      pagesDir: String,
-      queryName: String,
-      buckets: Int = 64): String = {
-    val q = extractStream(spark, pagesDir, buckets)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    queryName
-  }
-
-  /** Event-time tumbling-window aggregation with a watermark over the
-    * events table — the windowed-agg streaming shape, driven to
-    * completion with AvailableNow. Complete output mode makes the final
-    * table batch-equivalent, so the DuckDB oracle recomputes the same
-    * per-day counts relationally (the driver-checked counterpart to the
-    * WatermarkSpec late-data/append-mode tests).
-    *
-    * ORACLE-ONLY SHAPE: complete mode + memory sink keeps every window in
-    * state forever — fine here (AvailableNow over a bounded table), but
-    * unbounded on a continuous stream. The production shape is
-    * `eventWindowCountsToParquet` below: append mode, watermark-bounded
-    * state, exactly-once parquet sink.
-    */
-  def eventWindowCounts(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    val eventsFile = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(eventsFile).schema
-    withStagedParquet(eventsFile, "graft_events_stream") { eventsPath =>
-      // unique sink name: memory-sink names are session-global and a rerun
-      // in the same JVM must not collide (output is deterministic either way)
-      val name = "stream_event_windows_" + java.lang.Long.toHexString(System.nanoTime())
-      val q = spark.readStream.schema(schema).parquet(eventsPath)
-        // the table stores TIMESTAMP_NTZ; event-time watermarks need
-        // TIMESTAMP (session TZ is UTC, so values are unchanged)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name)
-        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy(col("day"), col("event_type"))
-        // detach from the memory sink so the staged dir and sink table can
-        // be released (repeat invocations must not accumulate /tmp copies
-        // of the events table or session-catalog temp views)
-        .localCheckpoint()
-      spark.catalog.dropTempView(name)
-      out
-    }
-  }
-
-  /** Windowed aggregation in APPEND mode to a parquet sink — the
-    * production shape of `eventWindowCounts`: the watermark bounds state
-    * (a window is emitted once when the watermark passes its end, then
-    * dropped from state), and the file sink's commit log + source
-    * checkpoint give exactly-once across restarts. Windows still open at
-    * the watermark when input drains are withheld — on a continuous
-    * stream they'd finalize later; WatermarkSpec asserts exactly this
-    * closed-window semantics against the batch answer.
-    */
-  def eventWindowCountsToParquet(
-      spark: SparkSession,
-      eventsDir: String,
-      checkpointDir: String,
-      outDir: String): Unit = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val q = spark.readStream.schema(schema).parquet(eventsDir)
+  def eventWindows(events: DataFrame): DataFrame =
+    events
+      // the table stores TIMESTAMP_NTZ; event-time watermarks need
+      // TIMESTAMP (session TZ is UTC, so values are unchanged)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("sum_value"))
-      .writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
-  /** File-sink variant (the production shape: parquet out, exactly-once via
-    * the sink's commit log + source checkpoint).
+  /** `eventWindows` over the events table, drained with AvailableNow.
+    * Complete output mode makes the final table batch-equivalent, so the
+    * DuckDB oracle recomputes the same per-day counts relationally (the
+    * driver-checked counterpart to the WatermarkSpec late-data/append-mode
+    * tests).
+    *
+    * ORACLE-ONLY SHAPE: complete mode keeps every window in state
+    * forever — fine here (AvailableNow over a bounded table), but
+    * unbounded on a continuous stream. The production shape is
+    * `Drain.toParquet` over `eventWindows`: append mode emits a window
+    * once the watermark passes its end and drops it from state, and the
+    * file sink gives exactly-once output across restarts. Windows still
+    * open when the input drains are withheld; WatermarkSpec asserts
+    * exactly this closed-window semantics against the batch answer.
     */
-  def runAvailableNowToParquet(
-      spark: SparkSession,
-      pagesDir: String,
-      checkpointDir: String,
-      outDir: String,
-      buckets: Int = 64): Unit = {
-    val q = extractStream(spark, pagesDir, buckets)
-      .writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def eventWindowCounts(spark: SparkSession, sfDir: String): DataFrame =
+    withStagedParquet(s"$sfDir/events.parquet", "graft_events_stream") { eventsPath =>
+      Drain.rows(eventWindows(Drain.files(spark, eventsPath)), "complete")
+    }.orderBy(col("day"), col("event_type"))
 
-  /** Recursive delete of a local temp tree. */
-  private[graft] def rmTree(path: String): Unit = {
+  /** Runs `body` on a fresh local temp dir, then deletes the dir tree. */
+  private[graft] def withTempDir[A](prefix: String)(body: String => A): A = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
     def rm(x: java.io.File): Unit = {
       if (x.isDirectory) Option(x.listFiles).foreach(_.foreach(rm))
       x.delete(): Unit
     }
-    rm(new java.io.File(path))
-  }
-
-  /** Runs `body` on a fresh local temp dir, then deletes the dir. */
-  private[graft] def withTempDir[A](prefix: String)(body: String => A): A = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    try body(d) finally rmTree(d)
+    try body(d) finally rm(new java.io.File(d))
   }
 
   /** Streaming file sources need a DIRECTORY; the testdata tables are

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream interval join — the remaining structured-streaming
   * operator class next to windowed aggs and arbitrary state: every
@@ -30,17 +29,12 @@ object StreamingJoin {
       spark: SparkSession,
       eventsDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(eventsDir).schema
-    def stream() = {
-      val r = spark.readStream.schema(schema)
-      maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n)).parquet(eventsDir)
-    }
-    val views = stream()
+    val views = Drain.files(spark, eventsDir, maxFilesPerTrigger)
       .filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"),
         col("ts").cast("timestamp").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    val clicks = stream()
+    val clicks = Drain.files(spark, eventsDir, maxFilesPerTrigger)
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
         col("ts").cast("timestamp").as("click_ts"))
@@ -53,23 +47,6 @@ object StreamingJoin {
       .select(col("view_id"), col("click_id"), col("user_id"),
         (unix_timestamp(col("click_ts")) - unix_timestamp(col("view_ts")))
           .as("gap_seconds"))
-  }
-
-  /** Drain into an append-mode memory sink; returns the sink table name. */
-  def runAvailableNow(
-      spark: SparkSession,
-      eventsDir: String,
-      queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): String = {
-    val q = intervalJoin(spark, eventsDir, maxFilesPerTrigger)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    queryName
   }
 
   /** DuckDB recompute: the same interval join relationally. */

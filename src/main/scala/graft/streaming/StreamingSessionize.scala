@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming gap-based sessionization via
   * `KeyValueGroupedDataset.flatMapGroupsWithState` — the custom-state
@@ -83,11 +83,7 @@ object StreamingSessionize {
       eventsDir: String,
       maxFilesPerTrigger: Option[Int] = None): Dataset[Session] = {
     import spark.implicits._
-    val schema = spark.read.parquet(eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n))
-    withOpt.parquet(eventsDir)
+    Drain.files(spark, eventsDir, maxFilesPerTrigger)
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("event_id"))
       .withWatermark("ts", "0 seconds")
       .as[Ev]
@@ -96,7 +92,7 @@ object StreamingSessionize {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  /** Drain into an append-mode memory sink; returns the sink table name.
+  /** The closed sessions of one append-mode drain (`Drain.rows`).
     *
     * `fireTimeouts = false` (the oracle-checked mode) disables the final
     * no-data micro-batch, so ONLY gap-closed sessions emit — a crisp
@@ -107,27 +103,15 @@ object StreamingSessionize {
     * watermark-vs-timeout boundary comparison that is not worth pinning
     * across engines (the spec covers it instead).
     */
-  def runAvailableNow(
+  def sessions(
       spark: SparkSession,
       eventsDir: String,
-      queryName: String,
       maxFilesPerTrigger: Option[Int] = None,
-      fireTimeouts: Boolean = false): String = {
+      fireTimeouts: Boolean): DataFrame = {
     val key = "spark.sql.streaming.noDataMicroBatches.enabled"
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, fireTimeouts.toString)
-    try {
-      val q = sessionStream(spark, eventsDir, maxFilesPerTrigger)
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      saved.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-    }
-    queryName
+    try Drain.rows(sessionStream(spark, eventsDir, maxFilesPerTrigger), "append")
+    finally saved.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
   }
 }

@@ -207,6 +207,23 @@ class KernelSpec extends AnyFunSuite {
     assert(bmText.status == "failed" && bmText.error == "不支持的文件类型: .bmp")
   }
 
+  test("sniff: Multimodal.sniffType names the branch the kernel takes") {
+    // whitespace-led and BOM-led pages extract as html (looksHtml skips
+    // leading whitespace; the BOM is stripped first)
+    val wsHtml = "  <p>hi</p>".getBytes("UTF-8")
+    val bomHtml = Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ "<p>hi</p>".getBytes("UTF-8")
+    for (b <- Seq(wsHtml, bomHtml)) {
+      val e = ExtractKernel.extractOne(mkPage(b), 0)
+      assert(e.status == "completed" && e.text == "hi")
+      assert(graft.operators.Multimodal.sniffType(b) == "html")
+    }
+    // "%PDF" without the '-' is not the pdf branch: an unknown payload
+    val notPdf = "%PDFx 1.4 not a pdf header".getBytes("UTF-8")
+    val e = ExtractKernel.extractOne(mkPage(notPdf), 0)
+    assert(e.status == "failed" && e.error == "不支持的文件类型: .bin")
+    assert(graft.operators.Multimodal.sniffType(notPdf) == "bin")
+  }
+
   // ---- engine profiles (A5-A7: llm defensive literals, ollama serializers) ----
 
   test("profiles: llm response ladder; ollama serializers (all 5 formats)") {

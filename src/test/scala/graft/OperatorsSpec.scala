@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, ExtractJob, Multimodal, Similarity, TextAnalysis, XxHash}
 import graft.sources.PageSynth
-import graft.streaming.StreamingExtract
+import graft.streaming.{Drain, StreamingExtract}
+import graft.streaming.StreamingExtract.withTempDir
 
 /** Spark-backed operator tests: the distributed byte contract, resume
   * semantics, and the dedup/similarity/text suites' invariants that the
@@ -419,26 +420,26 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("streaming: availableNow equals batch; checkpoint resume processes nothing") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_spec").toString
-    PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
+    withTempDir("graft_stream_spec") { base =>
+      PageSynth.pages(spark, sf0001).write.mode("overwrite").parquet(s"$base/pages")
 
-    StreamingExtract.runAvailableNow(spark, s"$base/pages", "spec_stream")
-    val streamed = spark.table("spec_stream")
-      .select(col("url"), md5(col("text")).as("h")).as[(String, String)]
-      .collect().sortBy(_._1).toSeq
-    val batch = ExtractJob.extract(spark, PageSynth.pages(spark, sf0001), 8)
-      .select(col("url"), md5(col("text")).as("h")).as[(String, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(streamed == batch)
+      val streamed = Drain.rows(StreamingExtract.extractStream(spark, s"$base/pages"), "append")
+        .select(col("url"), md5(col("text")).as("h")).as[(String, String)]
+        .collect().sortBy(_._1).toSeq
+      val batch = ExtractJob.extract(spark, PageSynth.pages(spark, sf0001), 8)
+        .select(col("url"), md5(col("text")).as("h")).as[(String, String)]
+        .collect().sortBy(_._1).toSeq
+      assert(streamed == batch)
 
-    // checkpointed parquet sink: first run writes everything, a second run
-    // against the same checkpoint finds nothing new (exactly-once resume)
-    StreamingExtract.runAvailableNowToParquet(
-      spark, s"$base/pages", s"$base/ckpt", s"$base/out")
-    val n1 = spark.read.parquet(s"$base/out").count()
-    assert(n1 == batch.size)
-    StreamingExtract.runAvailableNowToParquet(
-      spark, s"$base/pages", s"$base/ckpt", s"$base/out")
-    assert(spark.read.parquet(s"$base/out").count() == n1)
+      // checkpointed parquet sink: first run writes everything, a second run
+      // against the same checkpoint finds nothing new (exactly-once resume)
+      Drain.toParquet(StreamingExtract.extractStream(spark, s"$base/pages"),
+        s"$base/ckpt", s"$base/out")
+      val n1 = spark.read.parquet(s"$base/out").count()
+      assert(n1 == batch.size)
+      Drain.toParquet(StreamingExtract.extractStream(spark, s"$base/pages"),
+        s"$base/ckpt", s"$base/out")
+      assert(spark.read.parquet(s"$base/out").count() == n1)
+    }
   }
 }

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamingDedup
+import graft.streaming.{Drain, StreamingDedup}
+import graft.streaming.StreamingExtract.withTempDir
 
 /** Stateful streaming dedup (mapGroupsWithState): the update-log fold
   * must equal batch exact-dedup even when the source is forced through
@@ -14,15 +15,14 @@ class StreamingDedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("incremental dedup resumes state across RUNS from the checkpoint") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sdedup_inc").toString
-    try {
+    withTempDir("graft_sdedup_inc") { base =>
       import spark.implicits._
       // phase 1: three docs, one duplicate pair (A appears twice)
       Seq((10L, "doc A"), (11L, "doc B"), (12L, "doc A"))
         .toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(s"$base/docs")
       StreamingDedup.runIncremental(spark, s"$base/docs", s"$base/ckpt", s"$base/out")
-      val after1 = StreamingDedup.resolveParquet(spark, s"$base/out")
+      val after1 = StreamingDedup.resolve(spark.read.parquet(s"$base/out"))
         .as[(String, Long, Long)].collect().map(r => r._2 -> r._3).toMap
       assert(after1 == Map(10L -> 2L, 11L -> 1L))
       // phase 2: two more files land — another copy of A (higher id) and
@@ -32,32 +32,23 @@ class StreamingDedupSpec extends AnyFunSuite {
       Seq((13L, "doc A"), (14L, "doc C")).toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(s"$base/docs")
       StreamingDedup.runIncremental(spark, s"$base/docs", s"$base/ckpt", s"$base/out")
-      val after2 = StreamingDedup.resolveParquet(spark, s"$base/out")
+      val after2 = StreamingDedup.resolve(spark.read.parquet(s"$base/out"))
         .as[(String, Long, Long)].collect().map(r => r._2 -> r._3).toMap
       assert(after2 == Map(10L -> 3L, 11L -> 1L, 14L -> 1L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base))
     }
   }
 
   test("streaming dedup across forced micro-batches equals batch exact dedup") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sdedup_spec").toString
-    try {
+    withTempDir("graft_sdedup_spec") { base =>
       StreamingDedup.exactDupCorpus(spark, sf0001).repartition(8)
         .write.mode("overwrite").parquet(s"$base/docs")
-      val name = "sdedup_spec_" + java.lang.Long.toHexString(System.nanoTime())
       // 1 file per trigger → 8 micro-batches: duplicate pairs land in
       // different batches, so state genuinely carries across triggers
-      StreamingDedup.runAvailableNow(spark, s"$base/docs", name, Some(1))
-      val updates = spark.table(name)
+      val updates = Drain.rows(StreamingDedup.dedupStream(spark, s"$base/docs", Some(1)), "update")
       val nGroups = updates.select(col("h")).distinct().count()
       // same group updated in more than one batch at least once
       assert(updates.count() > nGroups, "expected cross-batch state updates")
-      val streamed = StreamingDedup.resolve(spark, name)
+      val streamed = StreamingDedup.resolve(updates)
         .as[(String, Long, Long)].collect().sortBy(_._2)
       val batch = StreamingDedup.exactDupCorpus(spark, sf0001)
         .groupBy(md5(col("text")).as("h"))
@@ -66,13 +57,6 @@ class StreamingDedupSpec extends AnyFunSuite {
       assert(streamed.length == batch.length)
       assert(streamed.sameElements(batch))
       assert(batch.exists(_._3 > 1), "corpus must contain duplicates for this to be meaningful")
-      spark.catalog.dropTempView(name)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base))
     }
   }
 }

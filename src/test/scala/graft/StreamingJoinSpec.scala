@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamingJoin
+import graft.streaming.{Drain, StreamingJoin}
+import graft.streaming.StreamingExtract.withTempDir
 
 /** Stream-stream interval join: the AvailableNow drain must equal the
   * batch interval join row-for-row — in one micro-batch AND across
@@ -31,17 +32,14 @@ class StreamingJoinSpec extends AnyFunSuite {
   test("interval join: streaming equals batch, single and multi micro-batch") {
     val batch = batchJoin()
     assert(batch.nonEmpty)
-    val d = java.nio.file.Files.createTempDirectory("graft_ivjoin_spec").toString
-    try {
+    withTempDir("graft_ivjoin_spec") { d =>
       // single-batch drain
       val staged1 = s"$d/one"
       spark.read.parquet(s"$sf0001/events.parquet").coalesce(1)
         .write.parquet(staged1)
-      val n1 = "ivjoin_one_" + java.lang.Long.toHexString(System.nanoTime())
-      StreamingJoin.runAvailableNow(spark, staged1, n1)
-      val one = spark.table(n1).as[(Long, Long, Long, Long)].collect().toSet
+      val one = Drain.rows(StreamingJoin.intervalJoin(spark, staged1), "append")
+        .as[(Long, Long, Long, Long)].collect().toSet
       assert(one == batch, s"single-batch: ${one.size} vs batch ${batch.size}")
-      spark.catalog.dropTempView(n1)
 
       // two time-ordered files, one per micro-batch: matches span batches
       // and view-side state must survive until the watermark passes
@@ -52,17 +50,10 @@ class StreamingJoinSpec extends AnyFunSuite {
       val staged2 = s"$d/two"
       firstHalf.coalesce(1).write.parquet(staged2)
       secondHalf.coalesce(1).write.mode("append").parquet(staged2)
-      val n2 = "ivjoin_two_" + java.lang.Long.toHexString(System.nanoTime())
-      StreamingJoin.runAvailableNow(spark, staged2, n2, maxFilesPerTrigger = Some(1))
-      val two = spark.table(n2).as[(Long, Long, Long, Long)].collect().toSet
+      val two = Drain.rows(
+        StreamingJoin.intervalJoin(spark, staged2, maxFilesPerTrigger = Some(1)), "append")
+        .as[(Long, Long, Long, Long)].collect().toSet
       assert(two == batch, s"multi-batch: ${two.size} vs batch ${batch.size}")
-      spark.catalog.dropTempView(n2)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(d))
     }
   }
 }

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
 import graft.streaming.StreamingSessionize
+import graft.streaming.StreamingExtract.withTempDir
 
 /** flatMapGroupsWithState sessionization: closed streaming sessions must
   * equal the batch operator's sessions (same floor-second arithmetic),
@@ -22,8 +23,7 @@ class StreamingSessionizeSpec extends AnyFunSuite {
 
   test("streaming sessions match batch across forced micro-batches, timeouts close idle sessions") {
     val batch = batchSessions()
-    val d = java.nio.file.Files.createTempDirectory("graft_sess_spec2").toString
-    try {
+    withTempDir("graft_sess_spec2") { d =>
       // two time-ordered halves → 2 micro-batches, sessions span batches
       val ev = spark.read.parquet(s"$sf0001/events.parquet").orderBy(col("ts"))
       val n = ev.count()
@@ -34,10 +34,8 @@ class StreamingSessionizeSpec extends AnyFunSuite {
       val staged = s"$d/all"
       spark.read.parquet(s"$d/p0").coalesce(1).write.parquet(staged)
       spark.read.parquet(s"$d/p1").coalesce(1).write.mode("append").parquet(staged)
-      val name = "sess_spec_" + java.lang.Long.toHexString(System.nanoTime())
-      StreamingSessionize.runAvailableNow(spark, staged, name,
+      val streamed = StreamingSessionize.sessions(spark, staged,
         maxFilesPerTrigger = Some(1), fireTimeouts = true)
-      val streamed = spark.table(name)
         .as[(Long, Long, Long, Long)].collect()
         .map { case (u, seq, nn, dd) => (u, seq) -> ((nn, dd)) }.toMap
       // every emitted session is byte-identical to its batch counterpart
@@ -51,13 +49,6 @@ class StreamingSessionizeSpec extends AnyFunSuite {
       assert(streamed.size > gapOnly,
         s"expected event-time timeouts to close idle sessions beyond $gapOnly, got ${streamed.size}")
       assert(streamed.size <= batch.size)
-      spark.catalog.dropTempView(name)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(d))
     }
   }
 }

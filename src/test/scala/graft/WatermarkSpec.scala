@@ -4,6 +4,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.{Drain, StreamingExtract}
+import graft.streaming.StreamingExtract.withTempDir
+
 /** Event-time semantics over the events-stream shape (SURVEY.md Table C
   * "Streaming"): windowed aggregation with a watermark, late-data drop,
   * append-mode finalization. The reference has no streaming semantics at
@@ -55,7 +58,7 @@ class WatermarkSpec extends AnyFunSuite {
   test("stream_event_windows: streaming windowed agg equals the batch group-by") {
     import org.apache.spark.sql.functions._
     val dir = TestSpark.sf0001
-    val streamed = graft.streaming.StreamingExtract.eventWindowCounts(spark, dir)
+    val streamed = StreamingExtract.eventWindowCounts(spark, dir)
       .collect().map(_.toString).sorted.toSeq
     val batch = spark.read.parquet(s"$dir/events.parquet")
       .groupBy(date_format(col("ts").cast("timestamp"), "yyyy-MM-dd").as("day"),
@@ -70,41 +73,43 @@ class WatermarkSpec extends AnyFunSuite {
   test("event windows, append mode to parquet: exactly the watermark-closed windows land") {
     import spark.implicits._
     val dir = TestSpark.sf0001
-    val base = java.nio.file.Files.createTempDirectory("graft_wm_append").toString
-    // stage the single-file events table into a directory for the stream source
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/events"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$base/events/events.parquet"))
-    graft.streaming.StreamingExtract.eventWindowCountsToParquet(
-      spark, s"$base/events", s"$base/ckpt", s"$base/out")
-    val streamed = spark.read.parquet(s"$base/out")
-      .collect().map(_.toString).sorted.toSeq
+    withTempDir("graft_wm_append") { base =>
+      // stage the single-file events table into a directory for the stream source
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/events"))
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$base/events/events.parquet"))
+      def drainToParquet(): Unit = Drain.toParquet(
+        StreamingExtract.eventWindows(Drain.files(spark, s"$base/events")),
+        s"$base/ckpt", s"$base/out")
+      drainToParquet()
+      val streamed = spark.read.parquet(s"$base/out")
+        .collect().map(_.toString).sorted.toSeq
 
-    // expected: the batch per-day aggregation restricted to windows whose
-    // END the final watermark (max ts - 1 hour) has passed — append mode
-    // withholds still-open windows when AvailableNow drains
-    val events = spark.read.parquet(s"$dir/events.parquet")
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val maxTs = events.agg(max(col("ts"))).as[java.sql.Timestamp].collect()(0)
-    val watermarkMs = maxTs.getTime - 3600L * 1000L
-    val expected = events
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .filter(col("window.end").cast("long") * 1000L <= watermarkMs)
-      .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-        col("event_type"), col("n"), col("sum_value"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed.nonEmpty, "no closed windows emitted — corpus too short for the watermark?")
-    assert(streamed == expected,
-      s"append-mode output (${streamed.size}) != watermark-closed batch windows (${expected.size})")
+      // expected: the batch per-day aggregation restricted to windows whose
+      // END the final watermark (max ts - 1 hour) has passed — append mode
+      // withholds still-open windows when AvailableNow drains
+      val events = spark.read.parquet(s"$dir/events.parquet")
+        .withColumn("ts", col("ts").cast("timestamp"))
+      val maxTs = events.agg(max(col("ts"))).as[java.sql.Timestamp].collect()(0)
+      val watermarkMs = maxTs.getTime - 3600L * 1000L
+      val expected = events
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .filter(col("window.end").cast("long") * 1000L <= watermarkMs)
+        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+          col("event_type"), col("n"), col("sum_value"))
+        .collect().map(_.toString).sorted.toSeq
+      assert(streamed.nonEmpty, "no closed windows emitted — corpus too short for the watermark?")
+      assert(streamed == expected,
+        s"append-mode output (${streamed.size}) != watermark-closed batch windows (${expected.size})")
 
-    // second run over the same checkpoint: nothing new to process, sink unchanged
-    graft.streaming.StreamingExtract.eventWindowCountsToParquet(
-      spark, s"$base/events", s"$base/ckpt", s"$base/out")
-    val rerun = spark.read.parquet(s"$base/out")
-      .collect().map(_.toString).sorted.toSeq
-    assert(rerun == streamed, "checkpoint resume must be a no-op on unchanged input")
+      // second run over the same checkpoint: nothing new to process, sink unchanged
+      drainToParquet()
+      val rerun = spark.read.parquet(s"$base/out")
+        .collect().map(_.toString).sorted.toSeq
+      assert(rerun == streamed, "checkpoint resume must be a no-op on unchanged input")
+    }
   }
 
   test("streaming dedup: dropDuplicatesWithinWatermark drops a re-crawled url") {
