@@ -40,20 +40,20 @@ object Multimodal {
 
   /** The payload's type in the kernel's own dispatch order
     * (`ExtractKernel.extractRaw`): BOM strip, then empty → pdf → html with
-    * the kernel's own tests, then zip and the raster magic table
-    * (`ImageHeader.formatOf`). Html goes before the raster magics, so a
-    * payload that matches a weak image magic but carries html markers
+    * the kernel's own tests, then the extension label the kernel names an
+    * unsupported payload by (`ExtractKernel.sniffExtLabel`: zip, the
+    * raster magic table, short `BM`). Html goes before the raster magics,
+    * so a payload that matches a weak image magic but carries html markers
     * sniffs as the branch that extracts it; triage and extraction never
     * disagree about a payload.
     */
   def sniffType(raw: Array[Byte]): String = {
-    import graft.kernel.ExtractKernel.{isPdf, looksHtml, stripBom}
+    import graft.kernel.ExtractKernel.{isPdf, looksHtml, sniffExtLabel, stripBom}
     val b = if (raw == null) Array.emptyByteArray else stripBom(raw)
     if (b.isEmpty) "empty"
     else if (isPdf(b)) "pdf"
     else if (looksHtml(b)) "html"
-    else if (b.length >= 4 && b(0) == 'P' && b(1) == 'K' && b(2) == 3 && b(3) == 4) "zip"
-    else graft.kernel.ImageHeader.formatOf(b).getOrElse("bin")
+    else sniffExtLabel(b).drop(1)
   }
 
   /** Shannon entropy of the byte histogram, in millibits (integer → exact

@@ -222,6 +222,11 @@ class KernelSpec extends AnyFunSuite {
     val e = ExtractKernel.extractOne(mkPage(notPdf), 0)
     assert(e.status == "failed" && e.error == "不支持的文件类型: .bin")
     assert(graft.operators.Multimodal.sniffType(notPdf) == "bin")
+    // a `BM` payload shorter than a BMP header: the kernel names it .bmp
+    val shortBmp = "BM short".getBytes("UTF-8")
+    val eb = ExtractKernel.extractOne(mkPage(shortBmp), 0)
+    assert(eb.status == "failed" && eb.error == "不支持的文件类型: .bmp")
+    assert(graft.operators.Multimodal.sniffType(shortBmp) == "bmp")
   }
 
   // ---- engine profiles (A5-A7: llm defensive literals, ollama serializers) ----

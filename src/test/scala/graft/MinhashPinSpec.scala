@@ -15,7 +15,8 @@ import graft.operators.{CorpusPipeline, Dedup}
   * and the `pipeline_corpus` oracle reads its rows back.
   *
   * Also pins the Spark jobs that build and collect the three LSH outputs at
-  * sf0.001, as upper bounds.
+  * sf0.001, and those of the heaviest registered secondary queries after
+  * one warm call, as upper bounds.
   */
 class MinhashPinSpec extends AnyFunSuite {
   import TestSpark.{countingJobs, sf0001, spark}
@@ -66,5 +67,23 @@ class MinhashPinSpec extends AnyFunSuite {
     assert(minhash <= 12, s"dedupMinhashLsh: $minhash jobs")
     assert(simhash <= 8, s"dedupSimhash: $simhash jobs")
     assert(pipeline <= 24, s"CorpusPipeline.corpus: $pipeline jobs")
+  }
+
+  /** Jobs of a second `frame(spark, sf0.001).collect()`, the first having
+    * built the memos and materializations the registry shares; counted on
+    * the code before these ceilings.
+    */
+  private val jobPins = Seq(
+    "ann_ivfpq" -> 16, "ann_lsh" -> 13, "decontaminate" -> 11,
+    "substring_dedup" -> 10, "substring_dedup_hashed" -> 10)
+
+  test("sf0.001: warm registered frames start no more jobs than pinned") {
+    val counts = jobPins.map { case (name, pin) =>
+      val frame = SparkEntry.queries(name)
+      frame(spark, sf0001).collect()
+      (name, countingJobs(frame(spark, sf0001).collect())._2, pin)
+    }
+    info(s"jobs: ${counts.map { case (n, c, _) => s"$n $c" }.mkString(", ")}")
+    for ((name, jobs, pin) <- counts) assert(jobs <= pin, s"$name: $jobs jobs")
   }
 }

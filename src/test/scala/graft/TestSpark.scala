@@ -16,6 +16,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", graft.operators.GraftConf.LocalFsImpl)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -23,8 +24,10 @@ object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
 
   /** Runs `body` and returns it with every query execution that succeeded
-    * while it ran. The listener bus is async: after `body`, poll until the
-    * captured set stops growing (two consecutive equal, non-zero sizes).
+    * while it ran. The listener bus is async: before `body`, drain it so a
+    * query that ended earlier is not delivered to this listener; after
+    * `body`, poll until the captured set stops growing (two consecutive
+    * equal, non-zero sizes).
     */
   def capturingQueries[T](body: => T): (T, Seq[QueryExecution]) = {
     val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
@@ -33,6 +36,7 @@ object TestSpark {
         qes.add(qe): Unit
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    countingJobs(()): Unit
     spark.listenerManager.register(listener)
     try {
       val out = body
