@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,12 +18,15 @@ import graft.functions.TokenGrams
   *                   verification / small corpora; at 100 TB the shingle
   *                   self-join explodes on common shingles.
   *   - minhash LSH:  the scale path. 128 minhashes (h1 + i*h2 family) →
-  *                   32 bands × 4 rows → bucket join emits candidates →
+  *                   32 bands × 4 rows → co-bucketed docs are candidates →
   *                   exact Jaccard verify on candidates only. Linear in
   *                   corpus size + candidate count.
   *   - simhash:      64-bit weighted token fingerprint; hamming ≤ 3 via
   *                   4×16-bit chunk banding (pigeonhole: ≤3 flipped bits
   *                   leave ≥1 chunk intact).
+  *     Both sketches band through ONE stage, `bandPairs`: group by band
+  *     key → cap the bucket (drops counted) → explode pairs → the family's
+  *     pair filter (simhash: hamming) → distinct → checkpoint.
   *   - embedding:    cosine ≥ 0.99 near-dup pairs; brute-force pair join
   *                   here (oracle-checkable), LSH variant in Similarity.
   *
@@ -62,12 +65,8 @@ object Dedup {
 
   /** Bucket-cap drop counter: when LSH banding drops an over-cap bucket
     * (degenerate content), the drop must be observable, not silent. One
-    * counter per sketch family, refreshed per run on the driver.
-    *
-    * Values come from `Dataset.observe` metrics that PIGGYBACK on the
-    * run's own checkpoint job — no extra Spark job in (or after) the
-    * sketch path, the count is eager, and the warn line fires
-    * unconditionally per run.
+    * counter per sketch family, set eagerly by each run's `bandPairs`
+    * (the warn line fires per run).
     *
     * Scope: LAST-RUN observability on this driver JVM — every LSH run
     * writes it, the corpus pipeline's near-dup stage included, and the
@@ -93,30 +92,44 @@ object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Over-cap-drop metrics as observe() expressions — computed inside the
-    * frame's own (checkpoint) job, never as a separate action.
+  /** The banding stage both sketch families share (SparkER's block purging
+    * and candidate generation): group `keyed` by the band `keys` into
+    * sorted `item` lists, drop buckets over `maxBucket` (counted in
+    * `drops`), explode each kept bucket's ordered `(id_a, id_b)` pairs,
+    * keep those `verify` passes and checkpoint their distinct, so only
+    * verified pairs shuffle. Returns the pairs and their count, read on
+    * demand. Both counts are `observe` metrics riding the checkpoint; AQE
+    * can rewrite an observed node out of an all-dropped plan, and only
+    * then is a count recomputed: never silently 0.
     */
-  private def dropMetrics(maxBucket: Int): Seq[org.apache.spark.sql.Column] = Seq(
-    coalesce(count(when(size(col("ids")) > maxBucket, 1)), lit(0L)).as("dropped_buckets"),
-    coalesce(sum(when(size(col("ids")) > maxBucket, size(col("ids")).cast("long"))), lit(0L))
-      .as("dropped_slots"))
-
-  /** Read the drop metrics that rode the checkpoint job. AQE's
-    * empty-relation propagation can REWRITE the observed node out of the
-    * plan when a downstream stage turns out empty — which is exactly the
-    * all-buckets-dropped case the counter exists for — so a missing
-    * metric falls back to `recompute` (one extra aggregation job, paid
-    * only on that degenerate path; never silently zero).
-    */
-  private def recordDropsFrom(c: DropCounter, obs: org.apache.spark.sql.Observation)(
-      recompute: => (Long, Long)): Unit = {
-    val m = obs.get // already computed — the checkpoint was the action
-    if (m.contains("dropped_buckets"))
-      c.set(m("dropped_buckets").asInstanceOf[Long], m("dropped_slots").asInstanceOf[Long])
-    else {
-      val (b, d) = recompute
-      c.set(b, d)
-    }
+  private def bandPairs(keyed: DataFrame, keys: Seq[Column], item: Column, maxBucket: Int,
+      drops: DropCounter)(verify: DataFrame => DataFrame): (DataFrame, () => Long) = {
+    val dropObs = Observation()
+    val candObs = Observation()
+    val over = size(col("ids")) > maxBucket
+    val dropped = Seq(
+      coalesce(count(when(over, 1)), lit(0L)).as("dropped_buckets"),
+      coalesce(sum(when(over, size(col("ids")).cast("long"))), lit(0L)).as("dropped_slots"))
+    val grouped = keyed.groupBy(keys: _*)
+      .agg(sort_array(collect_list(item)).as("ids"))
+      .filter(size(col("ids")) >= 2)
+    val pairs = grouped
+      .observe(dropObs, dropped.head, dropped.tail: _*)
+      .filter(size(col("ids")) <= maxBucket)
+      .select(explode(expr(
+        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"))
+        .as("p"))
+      .select(col("p.id_a"), col("p.id_b"))
+      .transform(verify)
+      .distinct()
+      .observe(candObs, count(lit(1)).as("n_candidates"))
+      .transform(truncate)
+    val m = dropObs.get // already computed: the checkpoint was the action
+    val d = if (m.contains("dropped_buckets")) m
+      else grouped.agg(dropped.head, dropped.tail: _*).head()
+        .getValuesMap[Any](Seq("dropped_buckets", "dropped_slots"))
+    drops.set(d("dropped_buckets").asInstanceOf[Long], d("dropped_slots").asInstanceOf[Long])
+    (pairs, () => candObs.get.get("n_candidates").map(_.asInstanceOf[Long]).getOrElse(pairs.count()))
   }
 
   /** documents ∪ planted near-duplicates (every 10th doc, suffix-mutated).
@@ -335,35 +348,12 @@ object Dedup {
     */
   def minhashLshFromBands(s: SparkSession, bands: DataFrame, docs: DataFrame,
       maxBucket: Int = 64): DataFrame = {
-    // candidate pairs: co-bucketed docs (distinct across bands). ONE
-    // checkpoint, of the (tiny) candidate-pair set; the bucket frame, its
-    // drop metrics, and the candidate count all complete inside that same
-    // checkpoint job (round 5 checkpointed the bucket frame AND the pair
-    // set — two sequential jobs where one suffices).
-    val dropObs = org.apache.spark.sql.Observation()
-    val candObs = org.apache.spark.sql.Observation()
-    val grouped = bands.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-    val cand = grouped
-      .observe(dropObs, dropMetrics(maxBucket).head, dropMetrics(maxBucket).tail: _*)
-      .filter(size(col("ids")) <= maxBucket)
-      .select(explode(expr(
-        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
-      .observe(candObs, count(lit(1)).as("n_candidates"))
-      // the candidate set is consumed three times below (doc gate + both
-      // sides of the verify join) — materialize it once, it's tiny
-      .transform(truncate)
-    recordDropsFrom(MinhashDrops, dropObs) { // metrics rode the checkpoint job
-      val r = grouped.agg(dropMetrics(maxBucket).head, dropMetrics(maxBucket).tail: _*)
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    MinhashCandidates.set(
-      candObs.get.get("n_candidates").map(_.asInstanceOf[Long]).getOrElse(cand.count()))
+    // candidate pairs: co-bucketed docs, checkpointed once; the candidate
+    // set is consumed three times below (doc gate + both sides of the
+    // verify join), and it is tiny
+    val (cand, nCand) = bandPairs(bands, Seq(col("band"), col("bucket")), col("doc_id"),
+      maxBucket, MinhashDrops)(identity)
+    MinhashCandidates.set(nCand())
     // exact verify on candidates only: the semi-join gate sits BELOW the
     // shingle computation (docs are filtered before tokenization — round
     // 5 exploded every doc's shingles and semi-joined after, which the
@@ -508,9 +498,10 @@ object Dedup {
     sig
   }
 
-  /** Near-dup pairs with hamming(simhash) ≤ 3 via chunk banding.
-    * Same 3-shuffle shape as minhash LSH; candidate set is docs sharing
-    * any 16-bit chunk value (pigeonhole-complete for hamming ≤ 3).
+  /** Near-dup pairs with hamming(simhash) ≤ 3 via chunk banding, through
+    * the banding stage minhash LSH uses (`bandPairs`, keyed by chunk and
+    * 16-bit value); candidate set is docs sharing any 16-bit chunk value
+    * (pigeonhole-complete for hamming ≤ 3).
     */
   def dedupSimhash(s: SparkSession, dir: String, maxBucket: Int = 256): DataFrame =
     dedupSimhashFromSigs(simhashSigs(s, corpus(s, dir)), maxBucket)
@@ -531,27 +522,15 @@ object Dedup {
         explode(expr(s"transform(sequence(0, ${SimhashChunks - 1}), " +
           "c -> struct(c AS chunk, CAST(shiftright(sig, c * 16) & 65535 AS INT) AS v))")).as("p"))
       .select(col("doc_id"), col("sig"), col("p.chunk"), col("p.v"))
-    val dropObs = org.apache.spark.sql.Observation()
-    val pre = chunks.groupBy(col("chunk"), col("v"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-    val grouped = pre
-      .observe(dropObs, dropMetrics(maxBucket).head, dropMetrics(maxBucket).tail: _*)
-      .transform(truncate)
-    recordDropsFrom(SimhashDrops, dropObs) {
-      val r = pre.agg(dropMetrics(maxBucket).head, dropMetrics(maxBucket).tail: _*).collect()(0)
-      (r.getLong(0), r.getLong(1))
+    // a pair carries both signatures, so the hamming verify needs no join
+    // and runs before the distinct: only pairs within the radius shuffle
+    val (pairs, _) = bandPairs(chunks, Seq(col("chunk"), col("v")),
+        struct(col("doc_id"), col("sig")), maxBucket, SimhashDrops) {
+      _.select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"),
+          expr("bit_count(id_a.sig ^ id_b.sig)").as("hamming"))
+        .filter(col("hamming") <= SimhashMaxHamming)
     }
-    val byBucket = grouped.filter(size(col("ids")) <= maxBucket)
-    byBucket
-      .select(explode(expr(
-        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x.doc_id AS id_a, x.sig AS sig_a, y.doc_id AS id_b, y.sig AS sig_b))))"))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"),
-        expr("bit_count(p.sig_a ^ p.sig_b)").as("hamming"))
-      .filter(col("hamming") <= SimhashMaxHamming)
-      .distinct()
-      .orderBy(col("id_a"), col("id_b"))
+    pairs.orderBy(col("id_a"), col("id_b"))
   }
 
   // ------------------------------------------------------------------

@@ -7,8 +7,14 @@ import org.apache.spark.sql.SparkSession
   * shuffle sizing", skew handling) and is harmless at local scale.
   */
 object GraftConf {
-  /** The `fs.file.impl` class for `file:` paths (see NioLocalFileSystem). */
-  val LocalFsImpl: String = classOf[NioLocalFileSystem].getName
+  /** `file:` file systems that set modes in the JVM instead of forking one
+    * `chmod` per file, `.crc` and directory (see NioLocalFileSystem):
+    * `FileSystem` for batch writes, `FileContext` (which ignores
+    * `fs.file.impl`) for streaming checkpoints and file-sink logs.
+    */
+  val LocalFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     // AQE: runtime re-planning — coalesce undersized shuffle partitions,
@@ -49,8 +55,5 @@ object GraftConf {
     // stragglers: re-launch slow tasks (the reference's 1800 s celery
     // time ceiling analogue is cluster-level speculation, not a kill).
     .config("spark.speculation", "true")
-    // local writes set file and directory modes in the JVM instead of
-    // forking one `chmod` per file, `.crc` and directory; HDFS and object
-    // stores keep their own file systems.
-    .config("spark.hadoop.fs.file.impl", LocalFsImpl)
+    .config(LocalFs)
 }

@@ -3,7 +3,10 @@ package graft.operators
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import java.net.URI
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local file system (`.crc` sidecars unchanged) over
@@ -22,6 +25,18 @@ class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw) {
     */
   override def rename(src: Path, dst: Path): Boolean = !pathToFile(dst).isFile && super.rename(src, dst)
 }
+
+/** The same raw file system for `FileContext`, which Structured Streaming's
+  * checkpoint and file-sink logs write through: Hadoop's stock `file:`
+  * `AbstractFileSystem` builds its own `RawLocalFileSystem` and ignores
+  * `fs.file.impl`. Checksummed like Hadoop's `LocalFs`; `GraftConf` selects
+  * it as `fs.AbstractFileSystem.file.impl`.
+  */
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
+    new DelegateToFileSystem(uri, new NioLocalFileSystem.Raw, conf, "file", false) {
+      /** Any local name is valid, as in Hadoop's `RawLocalFs`. */
+      override def isValidName(src: String): Boolean = true
+    })
 
 object NioLocalFileSystem {
 

@@ -68,6 +68,19 @@ class DedupScaleSpec extends AnyFunSuite {
     assert(Dedup.MinhashDrops.droppedBuckets == 0)
   }
 
+  test("bucket-cap drop counter: identical simhash signatures record dropped buckets") {
+    import spark.implicits._
+    // 40 docs with one signature → each of the 4 chunk buckets holds all
+    // 40 → with cap 8 all 4 are dropped (160 doc slots); no pairs survive
+    val sigs = (0 until 40).map(i => (i.toLong, 0x0123456789abcdefL)).toDF("doc_id", "sig")
+    assert(Dedup.dedupSimhashFromSigs(sigs, maxBucket = 8).count() == 0)
+    assert(Dedup.SimhashDrops.droppedBuckets == 4)
+    assert(Dedup.SimhashDrops.droppedDocSlots == 160)
+    // with the cap lifted: the full clique at hamming 0, nothing dropped
+    assert(Dedup.dedupSimhashFromSigs(sigs, maxBucket = 64).count() == 40L * 39 / 2)
+    assert(Dedup.SimhashDrops.droppedBuckets == 0)
+  }
+
   test("reliable-checkpoint mode: same clusters, checkpoint files on the FS") {
     import spark.implicits._
     // chain 0-1-2-3 + pair 10-11: two components, diameter > 1 so the

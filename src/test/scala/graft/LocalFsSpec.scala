@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.NioLocalFileSystem
+import graft.operators.{NioLocalFileSystem, NioLocalFs}
 
 /** The engine's `file:` file system: writes through the session start no
   * `chmod` process, and the modes it leaves equal stock Hadoop's. Process
@@ -79,6 +79,22 @@ class LocalFsSpec extends AnyFunSuite {
       stock.initialize(new URI("file:///"), new Configuration())
       val (_, seen) = processStarts(stock.setPermission(new Path(out), new FsPermission(0x1ed.toShort)))
       assert(chmods(seen).nonEmpty == stockForks)
+    }
+  }
+
+  test("a streaming drain to parquet starts no chmod: checkpoints go through NioLocalFs") {
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fc.getDefaultFileSystem.getClass == classOf[NioLocalFs])
+    withDir { d =>
+      val src = d.resolve("src").toString
+      for (i <- 0 until 4) spark.range(i * 10L, i * 10L + 10).coalesce(1).write.mode("append").parquet(src)
+      // one file per micro-batch: four offset, commit and sink-log rounds
+      val (_, cmds) = processStarts(graft.streaming.Drain.toParquet(
+        graft.streaming.Drain.files(spark, src, maxFilesPerTrigger = Some(1)),
+        d.resolve("ckpt").toString, d.resolve("out").toString))
+      assert(chmods(cmds).isEmpty, s"${chmods(cmds).size} chmod processes: ${chmods(cmds).take(3)}")
+      assert(spark.read.parquet(d.resolve("out").toString).count() == 40)
     }
   }
 

@@ -12,7 +12,9 @@ import graft.operators.{CorpusPipeline, Dedup}
   * `CorpusPipeline.corpus` at sf0.001 in the columns `pipeline_corpus`
   * materializes. The oracles cannot catch a changed signature: the
   * `dedup_minhash_lsh` oracle replays banding from the materialized bands,
-  * and the `pipeline_corpus` oracle reads its rows back.
+  * and the `pipeline_corpus` oracle reads its rows back. The pair rows of
+  * `dedupMinhashLsh` and `dedupSimhash` are pinned the same way at both
+  * scales.
   *
   * Also pins the Spark jobs that build and collect the three LSH outputs at
   * sf0.001, and those of the heaviest registered secondary queries after
@@ -52,6 +54,26 @@ class MinhashPinSpec extends AnyFunSuite {
     }
   }
 
+  /** Digests of the pair rows the two banding operators return, taken from
+    * the code before SimHash and MinHash-LSH shared one banding stage:
+    * (dedupMinhashLsh, dedupSimhash).
+    */
+  private val pairPins = Seq(
+    sf0001 -> (
+      ("47ef9d0ad0bdaed28f4412b2d93a7b9e1efee1ba45bfbfce247e5fd81ebe0bde", 94),
+      ("6acf8393cab16088df18108c1e14b85a061107097e9448f06f7cbc2e1190c7ab", 64)),
+    "/root/testdata/sf0.01" -> (
+      ("472ba2568955e3c3b6c2c032b42411fbc72ade55979fa04430b341786cda1c44", 81),
+      ("8ff706a1005f5dc4d8adf7bee23ca4ce30cc817cecf46b66e943b49e293fd29e", 41)))
+
+  for ((dir, (minhash, simhash)) <- pairPins) {
+    val sf = dir.split('/').last
+    test(s"$sf: minhash LSH and simhash pairs keep their pinned rows") {
+      assert((rows(Dedup.dedupMinhashLsh(spark, dir)), rows(Dedup.dedupSimhash(spark, dir))) ==
+        ((minhash, simhash)))
+    }
+  }
+
   test("sf0.001: the corpus pipeline keeps its pinned rows") {
     assert(rows(CorpusPipeline.corpus(spark, sf0001).select("url", "n_paras_dropped",
       "is_exact_dup", "is_near_dup", "repetition_flagged", "quality", "lang_pred", "keep")) ==
@@ -71,11 +93,13 @@ class MinhashPinSpec extends AnyFunSuite {
 
   /** Jobs of a second `frame(spark, sf0.001).collect()`, the first having
     * built the memos and materializations the registry shares; counted on
-    * the code before these ceilings.
+    * the code before these ceilings (the two sketch dedups: before their
+    * one banding stage).
     */
   private val jobPins = Seq(
     "ann_ivfpq" -> 16, "ann_lsh" -> 13, "decontaminate" -> 11,
-    "substring_dedup" -> 10, "substring_dedup_hashed" -> 10)
+    "substring_dedup" -> 10, "substring_dedup_hashed" -> 10,
+    "dedup_minhash_lsh" -> 11, "dedup_simhash" -> 7)
 
   test("sf0.001: warm registered frames start no more jobs than pinned") {
     val counts = jobPins.map { case (name, pin) =>

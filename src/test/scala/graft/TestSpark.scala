@@ -16,7 +16,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", graft.operators.GraftConf.LocalFsImpl)
+      .config(graft.operators.GraftConf.LocalFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
