@@ -54,23 +54,29 @@ object SparkEntry {
     s"/tmp/graft_oracle/${f.getName}_$h"
   }
 
-  private val matCache = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  /** One-shot side-effect staging (non-parquet formats) memoized per
-    * path, like materialize.
+  /** The stages one caller materializes under `base`: each sub-stage is
+    * written at most once by this instance and read back on every use.
+    * Instances share nothing, so a fresh one rewrites what an earlier run
+    * left (or deleted) under the same base, and two bases (two processes,
+    * two plan profiles) never read each other's files.
     */
-  private def stageOnce(path: String)(write: => Unit): Unit =
-    matCache.getOrElseUpdate(path, write)
+  private[graft] final class Stages(val base: String) {
+    private val written = scala.collection.concurrent.TrieMap.empty[String, Unit]
 
-  private def materialize(s: SparkSession, path: String)(df: => DataFrame): DataFrame = {
-    matCache.getOrElseUpdate(path, {
-      df.write.mode("overwrite").parquet(path)
-    })
-    s.read.parquet(path)
+    /** `base/sub`, once `write` has run on it for this instance. */
+    def once(sub: String)(write: String => Unit): String = {
+      val path = s"$base/$sub"
+      written.getOrElseUpdate(sub, write(path))
+      path
+    }
+
+    /** `df` written as parquet to `base/sub` once, read back. */
+    def parquet(s: SparkSession, sub: String)(df: => DataFrame): DataFrame =
+      s.read.parquet(once(sub)(df.write.mode("overwrite").parquet(_)))
   }
 
-  private def cachedExtract(s: SparkSession, dir: String): DataFrame =
-    materialize(s, s"${oracleBase(dir)}/extracted") {
+  private def cachedExtract(s: SparkSession, dir: String, st: Stages): DataFrame =
+    st.parquet(s, "extracted") {
       // repartition before writing: the single-file smoke docs table gives
       // the kernel one scan partition, and writing its output as one file
       // would serialize every downstream extraction-family query too
@@ -79,23 +85,21 @@ object SparkEntry {
         .repartition(s.sparkContext.defaultParallelism)
     }
 
-  private def mediaMetaMat(s: SparkSession, dir: String): DataFrame =
-    materialize(s, s"${oracleBase(dir)}/media_meta")(
-      Multimodal.mediaMeta(s, dir).toDF())
+  private def mediaMetaMat(s: SparkSession, dir: String, st: Stages): DataFrame =
+    st.parquet(s, "media_meta")(Multimodal.mediaMeta(s, dir).toDF())
 
   /** MinHash-LSH pairs over the registered dedup corpus, with the band
     * frame materialized once — shared by dedup_minhash_lsh and
     * dedup_clusters_lsh so the signature kernel runs once per Verify and
     * both queries derive from the identical bands.
     */
-  private def minhashPairsMat(s: SparkSession, dir: String): DataFrame =
+  private def minhashPairsMat(s: SparkSession, dir: String, st: Stages): DataFrame =
     Dedup.minhashLshFromBands(s,
-      materialize(s, s"${oracleBase(dir)}/minhash_bands")(
-        Dedup.minhashBands(s, Dedup.corpus(s, dir))),
+      st.parquet(s, "minhash_bands")(Dedup.minhashBands(s, Dedup.corpus(s, dir))),
       Dedup.corpus(s, dir))
 
-  private def pipelineCorpusMat(s: SparkSession, dir: String): DataFrame =
-    materialize(s, s"${oracleBase(dir)}/pipeline_corpus")(
+  private def pipelineCorpusMat(s: SparkSession, dir: String, st: Stages): DataFrame =
+    st.parquet(s, "pipeline_corpus")(
       graft.operators.CorpusPipeline.corpus(s, dir)
         .select("url", "n_paras_dropped", "is_exact_dup", "is_near_dup",
           "repetition_flagged", "quality", "lang_pred", "keep"))
@@ -103,13 +107,14 @@ object SparkEntry {
   /** A materialized kernel output under base `b`, as a DuckDB relation. */
   private def rp(b: String, sub: String) = s"read_parquet('$b/$sub/*.parquet')"
 
-  /** One registered query: `frame` computes it on Spark over an sf dir;
-    * `oracle` maps that dir's materialization base (`oracleBase(dir)`) to
-    * DuckDB SQL over the same tables that must return the same rows.
+  /** One registered query: `frame` computes it on Spark over an sf dir,
+    * materializing its stages through the caller's `Stages`; `oracle` maps
+    * that materialization base to DuckDB SQL over the same tables that
+    * must return the same rows.
     */
   private[graft] final case class Query(
       name: String,
-      frame: (SparkSession, String) => DataFrame,
+      frame: (SparkSession, String, Stages) => DataFrame,
       oracle: String => String)
 
   /** `qs`, or a failure naming every query name registered twice. */
@@ -132,26 +137,26 @@ object SparkEntry {
     // mm_media_meta below is the same construction. Do not over-credit
     // these two rows when auditing oracle strength (SURVEY §8 footnote).
     Query("extract_main",
-      (s, dir) =>
-        cachedExtract(s, dir).select("url", "status", "text", "error",
+      (s, dir, st) =>
+        cachedExtract(s, dir, st).select("url", "status", "text", "error",
           "n_pages", "n_failed_pages", "engine", "bucket"),
       b => s"""SELECT url, status, text, error, n_pages, n_failed_pages, engine, bucket
               |FROM ${rp(b, "extracted")}""".stripMargin),
     // DuckDB independently re-explodes the span structs
     Query("extract_spans",
-      (s, dir) =>
-        cachedExtract(s, dir)
+      (s, dir, st) =>
+        cachedExtract(s, dir, st)
           .select(col("url"), explode(col("spans")).as("span"))
           .select(col("url"), col("span.start").as("start"),
             col("span.end").as("end"), col("span.kind").as("kind")),
       b => s"""SELECT url, s.start AS start, s."end" AS "end", s.kind AS kind
               |FROM (SELECT url, unnest(spans) AS s FROM ${rp(b, "extracted")}) t""".stripMargin),
     Query("extract_lineage",
-      (s, dir) => {
+      (s, dir, st) => {
         import s.implicits._
         // failure_samples is an array in the lineage table; serialize it
         // for the driver compare (pandas cannot sort/hash array cells)
-        ExtractJob.lineage(cachedExtract(s, dir).as[graft.model.Extracted], snapshotId = 1L)
+        ExtractJob.lineage(cachedExtract(s, dir, st).as[graft.model.Extracted], snapshotId = 1L)
           .withColumn("failure_samples", array_join(col("failure_samples"), "|"))
       },
       b => s"""SELECT CAST(1 AS BIGINT) AS snapshot_id, bucket,
@@ -168,9 +173,9 @@ object SparkEntry {
     // host metrics: DuckDB recomputes host parse + aggs (the Spark side
     // is the salted two-phase agg — same answer, different plan)
     Query("extract_by_host",
-      (s, dir) => {
+      (s, dir, st) => {
         import s.implicits._
-        ExtractJob.metricsByHost(cachedExtract(s, dir).as[graft.model.Extracted])
+        ExtractJob.metricsByHost(cachedExtract(s, dir, st).as[graft.model.Extracted])
       },
       b => s"""SELECT regexp_extract(url, '^https?://([^/]+)/', 1) AS host,
               | CAST(count(*) AS BIGINT) AS doc_count,
@@ -183,9 +188,9 @@ object SparkEntry {
     // contract: DuckDB joins extracted vs golden and compares
     // text/status/error itself
     Query("extract_golden_check",
-      (s, dir) => {
-        val extracted = cachedExtract(s, dir)
-        val golden = materialize(s, s"${oracleBase(dir)}/golden")(
+      (s, dir, st) => {
+        val extracted = cachedExtract(s, dir, st)
+        val golden = st.parquet(s, "golden")(
           PageSynth.golden(s, dir).toDF())
         extracted.join(golden, Seq("url"))
           .agg(
@@ -209,8 +214,8 @@ object SparkEntry {
     // staged pages copy is deleted once the drain has finished (the
     // drained rows are checkpointed)
     Query("stream_extract_counts",
-      (s, dir) => {
-        cachedExtract(s, dir) // ensure the batch materialization exists
+      (s, dir, st) => {
+        cachedExtract(s, dir, st) // ensure the batch materialization exists
         withTempDir("graft_stream") { base =>
           PageSynth.pages(s, dir).write.mode("overwrite").parquet(s"$base/pages")
           Drain.rows(StreamingExtract.extractStream(s, s"$base/pages"), "append")
@@ -224,7 +229,7 @@ object SparkEntry {
     // streaming windowed agg == batch group-by (complete mode): DuckDB
     // recomputes the tumbling-window counts relationally
     Query("stream_event_windows",
-      (s, dir) => StreamingExtract.eventWindowCounts(s, dir),
+      (s, dir, _) => StreamingExtract.eventWindowCounts(s, dir),
       _ => """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
              | count(*) AS n, round(sum(value), 2) AS sum_value
              |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
@@ -233,7 +238,7 @@ object SparkEntry {
     // user's (still-open) last session — DuckDB recomputes that
     // relationally
     Query("stream_sessionize",
-      (s, dir) =>
+      (s, dir, _) =>
         withStagedParquet(s"$dir/events.parquet", "graft_sess_stream")(
           StreamingSessionize.sessions(s, _, fireTimeouts = false))
           .orderBy(col("user_id"), col("session_seq")),
@@ -259,7 +264,7 @@ object SparkEntry {
     // with watermarks on both sides; AvailableNow drain == the batch
     // join, which DuckDB recomputes relationally
     Query("stream_interval_join",
-      (s, dir) =>
+      (s, dir, _) =>
         withStagedParquet(s"$dir/events.parquet", "graft_join_stream")(staged =>
           Drain.rows(StreamingJoin.intervalJoin(s, staged), "append"))
           .orderBy(col("view_id"), col("click_id")),
@@ -271,7 +276,7 @@ object SparkEntry {
     // the batch md5 group-by over a corpus with genuine exact
     // duplicates, which DuckDB recomputes relationally
     Query("stream_dedup_state",
-      (s, dir) =>
+      (s, dir, _) =>
         withTempDir("graft_sdedup") { base =>
           StreamingDedup.exactDupCorpus(s, dir)
             .repartition(4).write.mode("overwrite").parquet(s"$base/docs")
@@ -286,8 +291,8 @@ object SparkEntry {
     // envelope-fault slice. Per-profile rows are materialized so the
     // oracle recomputes the aggregation independently.
     Query("extract_profiles",
-      (s, dir) => {
-        val mat = materialize(s, s"${oracleBase(dir)}/profiles") {
+      (s, dir, st) => {
+        val mat = st.parquet(s, "profiles") {
           import graft.kernel.ExtractKernel.Profile
           val pages = PageSynth.pages(s, dir)
           Seq(
@@ -320,7 +325,7 @@ object SparkEntry {
     // serialized byte size) from doc_id with SQL arithmetic — the parse
     // must invert the serialization exactly
     Query("mm_video_meta",
-      (s, dir) => Multimodal.videoMeta(s, dir),
+      (s, dir, _) => Multimodal.videoMeta(s, dir),
       _ => """SELECT doc_id,
              | 1000 + (doc_id % 9) * 100 AS timescale,
              | 1000 + doc_id % 50000 AS duration,
@@ -336,8 +341,8 @@ object SparkEntry {
     // decoded sample frame materializes and DuckDB recomputes the
     // energy/zero-crossing features with its own window functions
     Query("mm_audio",
-      (s, dir) => {
-        val mat = materialize(s, s"${oracleBase(dir)}/audio_samples")(
+      (s, dir, st) => {
+        val mat = st.parquet(s, "audio_samples")(
           Multimodal.audioSamples(s, dir))
         Multimodal.audioFeatures(mat)
       },
@@ -363,9 +368,9 @@ object SparkEntry {
     // (PageSynth) must keep emitting anchors in exactly that shape, or
     // widen the oracle regex in the same change
     Query("link_graph",
-      (s, dir) => {
+      (s, dir, st) => {
         import s.implicits._
-        val mat = materialize(s, s"${oracleBase(dir)}/html_pages") {
+        val mat = st.parquet(s, "html_pages") {
           PageSynth.pages(s, dir)
             .filter(p => p.html != null && p.html.length > 0 &&
               p.html(0) == '<'.toByte)
@@ -407,14 +412,11 @@ object SparkEntry {
     // over the same bytes) — the round trip must be byte-exact for every
     // completed doc
     Query("q_wet_sink",
-      (s, dir) => {
+      (s, dir, st) => {
         import s.implicits._
-        val extracted = cachedExtract(s, dir)
-        val staged = s"${oracleBase(dir)}/staged_wet"
-        stageOnce(staged) {
-          graft.sources.Warc.stageExtracted(
-            extracted.as[graft.model.Extracted], staged, parts = 8)
-        }
+        val extracted = cachedExtract(s, dir, st)
+        val staged = st.once("staged_wet")(
+          graft.sources.Warc.stageExtracted(extracted.as[graft.model.Extracted], _, parts = 8))
         graft.sources.Warc.records(s, staged, "conversion")
           .toDF("url", "payload")
           .select(col("url"), length(col("payload")).as("n_bytes"),
@@ -430,8 +432,8 @@ object SparkEntry {
     // Completed rows must carry the recognized text; DuckDB re-joins
     // the materialized rows against expectations per url.
     Query("extract_ocr_engine",
-      (s, dir) => {
-        val mat = materialize(s, s"${oracleBase(dir)}/ocr_engine") {
+      (s, dir, st) => {
+        val mat = st.parquet(s, "ocr_engine") {
           import s.implicits._
           val pages = Relational.table(s, dir, "documents")
             .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -465,7 +467,7 @@ object SparkEntry {
     // genuine cross-engine check of the scrub semantics, byte-level on
     // clean_text)
     Query("para_stats",
-      (s, dir) => graft.operators.ParagraphDedup.paragraphStats(cachedExtract(s, dir)),
+      (s, dir, st) => graft.operators.ParagraphDedup.paragraphStats(cachedExtract(s, dir, st)),
       b => s"""WITH docs AS (SELECT url, text FROM ${rp(b, "extracted")} WHERE status = 'completed'),
               |paras AS (SELECT url, unnest(string_split(text, chr(10)||chr(10))) AS para FROM docs),
               |per AS (SELECT para, url, count(*) AS occ FROM paras GROUP BY 1, 2)
@@ -474,7 +476,7 @@ object SparkEntry {
               | CAST(length(para) AS INT) AS n_chars
               |FROM per GROUP BY para HAVING count(*) >= 2 ORDER BY df DESC, para""".stripMargin),
     Query("para_scrub",
-      (s, dir) => graft.operators.ParagraphDedup.paragraphScrubFrom(s, cachedExtract(s, dir)),
+      (s, dir, st) => graft.operators.ParagraphDedup.paragraphScrubFrom(s, cachedExtract(s, dir, st)),
       b => s"""WITH docs AS (SELECT url, string_split(text, chr(10)||chr(10)) AS sp
               |  FROM ${rp(b, "extracted")} WHERE status = 'completed'),
               |pu AS (SELECT DISTINCT url, para FROM (SELECT url, unnest(sp) AS para FROM docs) t),
@@ -490,25 +492,25 @@ object SparkEntry {
     // Gopher-style within-document repetition metrics + flag, over the
     // extracted corpus; DuckDB recomputes lines/2-grams/fractions itself
     Query("text_repetition",
-      (s, dir) => TextAnalysis.textRepetition(cachedExtract(s, dir)),
+      (s, dir, st) => TextAnalysis.textRepetition(cachedExtract(s, dir, st)),
       b => TextAnalysis.textRepetitionSql(rp(b, "extracted"))),
     // URL canonicalization + dedup over a deterministic variant corpus
     Query("url_dedup",
-      (s, dir) => graft.operators.UrlDedup.urlDedup(cachedExtract(s, dir)),
+      (s, dir, st) => graft.operators.UrlDedup.urlDedup(cachedExtract(s, dir, st)),
       b => graft.operators.UrlDedup.urlDedupSql(rp(b, "extracted"))),
     // robots.txt policy filter: both engines derive, parse, and apply
     // the same per-host robots text (prefix Disallow semantics)
     Query("robots_filter",
-      (s, dir) => graft.operators.UrlDedup.robotsFilter(cachedExtract(s, dir)),
+      (s, dir, st) => graft.operators.UrlDedup.robotsFilter(cachedExtract(s, dir, st)),
       b => graft.operators.UrlDedup.robotsFilterSql(rp(b, "extracted"))),
     // ---- end-to-end training-corpus pipeline ----
     Query("pipeline_corpus",
-      (s, dir) => pipelineCorpusMat(s, dir).orderBy(col("url")),
+      (s, dir, st) => pipelineCorpusMat(s, dir, st).orderBy(col("url")),
       b => s"""SELECT url, n_paras_dropped, is_exact_dup, is_near_dup,
               | repetition_flagged, quality, lang_pred, keep
               |FROM ${rp(b, "pipeline_corpus")} ORDER BY url""".stripMargin),
     Query("pipeline_funnel",
-      (s, dir) => graft.operators.CorpusPipeline.funnelFrom(s, pipelineCorpusMat(s, dir)),
+      (s, dir, st) => graft.operators.CorpusPipeline.funnelFrom(s, pipelineCorpusMat(s, dir, st)),
       b => s"""SELECT stage, CAST(n_docs AS BIGINT) AS n_docs FROM (
               | SELECT '1_extracted_ok' AS stage, count(*) AS n_docs FROM ${rp(b, "pipeline_corpus")}
               | UNION ALL SELECT '2_after_exact_dedup', count(*) FROM ${rp(b, "pipeline_corpus")} WHERE NOT is_exact_dup
@@ -521,14 +523,14 @@ object SparkEntry {
     // read-back; the meta computation is spec-verified (OperatorsSpec
     // header round-trips) and mm_triage genuinely re-aggregates it
     Query("mm_media_meta",
-      (s, dir) =>
-        mediaMetaMat(s, dir)
+      (s, dir, st) =>
+        mediaMetaMat(s, dir, st)
           .select("url", "media_type", "n_bytes", "content_hash", "entropy_m",
             "width", "height", "decode_ok"),
       b => s"""SELECT url, media_type, n_bytes, content_hash, entropy_m, width, height, decode_ok
               |FROM ${rp(b, "media_meta")}""".stripMargin),
     Query("mm_triage",
-      (s, dir) => Multimodal.mediaTriageFrom(mediaMetaMat(s, dir)),
+      (s, dir, st) => Multimodal.mediaTriageFrom(mediaMetaMat(s, dir, st)),
       b => s"""SELECT media_type, CAST(count(*) AS BIGINT) AS n_docs,
               | CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
               | CAST(max(n_bytes) AS BIGINT) AS max_bytes,
@@ -540,8 +542,8 @@ object SparkEntry {
     // the header dims it already has in media_meta (the fake-pixel
     // bytes are spec-checked, not oracled)
     Query("mm_thumbs",
-      (s, dir) => {
-        mediaMetaMat(s, dir) // ensure the oracle's media_meta input exists
+      (s, dir, st) => {
+        mediaMetaMat(s, dir, st) // ensure the oracle's media_meta input exists
         Multimodal.mediaThumbs(s, dir).toDF()
           .select(col("url"), col("fmt"), col("width"), col("height"),
             col("thumb_w"), col("thumb_h"), length(col("thumb")).as("n_thumb_bytes"))
@@ -558,8 +560,8 @@ object SparkEntry {
     // frame sampling: k evenly spaced offsets per payload; DuckDB
     // recomputes the offsets from media_meta.n_bytes
     Query("mm_frames",
-      (s, dir) => {
-        mediaMetaMat(s, dir)
+      (s, dir, st) => {
+        mediaMetaMat(s, dir, st)
         Multimodal.frameSamples(s, dir).toDF()
           .select(col("url"), col("n_bytes"), col("frame_no"), col("byte_off"))
           .orderBy(col("url"), col("frame_no"))
@@ -572,8 +574,8 @@ object SparkEntry {
     // per-doc frame materializes so DuckDB independently re-compares
     // expected vs recognized text and re-derives the summary
     Query("mm_ocr",
-      (s, dir) => {
-        val mat = materialize(s, s"${oracleBase(dir)}/ocr_results")(
+      (s, dir, st) => {
+        val mat = st.parquet(s, "ocr_results")(
           Multimodal.ocrResults(s, dir).toDF())
         mat.agg(
           count(lit(1)).as("n_images"),
@@ -587,8 +589,8 @@ object SparkEntry {
               | CAST(sum(n_payload_bytes) AS BIGINT) AS total_payload_bytes
               |FROM ${rp(b, "ocr_results")}""".stripMargin),
     // ---- dedup family ----
-    Query("dedup_exact", (s, dir) => Dedup.dedupExact(s, dir), _ => Dedup.dedupExactSql),
-    Query("dedup_ngram_jaccard", (s, dir) => Dedup.dedupNgramJaccard(s, dir),
+    Query("dedup_exact", (s, dir, _) => Dedup.dedupExact(s, dir), _ => Dedup.dedupExactSql),
+    Query("dedup_ngram_jaccard", (s, dir, _) => Dedup.dedupNgramJaccard(s, dir),
       _ => Dedup.dedupNgramJaccardSql),
     // sketch stages (band/signature frames) materialize so DuckDB can
     // replicate the MinHash-LSH banding (bucket cap included) from the
@@ -596,7 +598,7 @@ object SparkEntry {
     // Jaccard — only the minhash signatures themselves come from the
     // kernel
     Query("dedup_minhash_lsh",
-      (s, dir) => minhashPairsMat(s, dir),
+      (s, dir, st) => minhashPairsMat(s, dir, st),
       b => s"""WITH all_docs AS (${Dedup.corpusSql}),
               |toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM all_docs),
               |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
@@ -618,8 +620,8 @@ object SparkEntry {
     // simhash: DuckDB re-does the 16-bit chunk banding + hamming verify
     // from the materialized signatures (bit ops cross-checked)
     Query("dedup_simhash",
-      (s, dir) => Dedup.dedupSimhashFromSigs(
-        materialize(s, s"${oracleBase(dir)}/simhash_sigs")(
+      (s, dir, st) => Dedup.dedupSimhashFromSigs(
+        st.parquet(s, "simhash_sigs")(
           Dedup.simhashSigs(s, Dedup.corpus(s, dir)))),
       b => s"""WITH sigs AS (SELECT * FROM ${rp(b, "simhash_sigs")}),
               |chunks AS (SELECT doc_id, sig, c, (sig >> (c * 16)) & 65535 AS v
@@ -631,9 +633,9 @@ object SparkEntry {
               |SELECT id_a, id_b, CAST(bit_count(xor(sig_a, sig_b)) AS INT) AS hamming
               |FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= ${Dedup.SimhashMaxHamming}
               |ORDER BY id_a, id_b""".stripMargin),
-    Query("dedup_embedding", (s, dir) => Dedup.dedupEmbedding(s, dir),
+    Query("dedup_embedding", (s, dir, _) => Dedup.dedupEmbedding(s, dir),
       _ => Dedup.dedupEmbeddingSql),
-    Query("dedup_clusters", (s, dir) => Dedup.dedupClusters(s, dir),
+    Query("dedup_clusters", (s, dir, _) => Dedup.dedupClusters(s, dir),
       _ => Dedup.dedupClustersSql),
     // the SCALE path end-to-end: LSH pair set → distributed connected
     // components; DuckDB recomputes the components over the SAME
@@ -641,9 +643,9 @@ object SparkEntry {
     // minhash_bands materialization so the signature kernel runs once
     // per Verify even though two queries consume it.
     Query("dedup_clusters_lsh",
-      (s, dir) => Dedup.clustersFrom(s,
-        materialize(s, s"${oracleBase(dir)}/lsh_pairs")(
-          minhashPairsMat(s, dir).select(col("id_a"), col("id_b")))),
+      (s, dir, st) => Dedup.clustersFrom(s,
+        st.parquet(s, "lsh_pairs")(
+          minhashPairsMat(s, dir, st).select(col("id_a"), col("id_b")))),
       b => s"""WITH bidir AS (
               |  SELECT id_a AS u, id_b AS v FROM ${rp(b, "lsh_pairs")}
               |  UNION SELECT id_b, id_a FROM ${rp(b, "lsh_pairs")}),
@@ -659,14 +661,14 @@ object SparkEntry {
               | min(node) AS min_doc, max(node) AS max_doc
               |FROM rec GROUP BY label HAVING count(*) >= 2 ORDER BY cluster_id""".stripMargin),
     // ---- similarity search ----
-    Query("ann_bruteforce", (s, dir) => Similarity.annBruteForce(s, dir),
+    Query("ann_bruteforce", (s, dir, _) => Similarity.annBruteForce(s, dir),
       _ => Similarity.annBruteForceSql),
     // ANN sketches: DuckDB re-joins the materialized index/probe frames
     // and re-ranks candidates with its own cosine top-k
     Query("ann_lsh",
-      (s, dir) => Similarity.annLshFrom(s, dir,
-        materialize(s, s"${oracleBase(dir)}/annlsh_bands")(Similarity.annLshBands(s, dir)),
-        materialize(s, s"${oracleBase(dir)}/annlsh_probes")(Similarity.annLshProbes(s, dir))),
+      (s, dir, st) => Similarity.annLshFrom(s, dir,
+        st.parquet(s, "annlsh_bands")(Similarity.annLshBands(s, dir)),
+        st.parquet(s, "annlsh_probes")(Similarity.annLshProbes(s, dir))),
       b => s"""WITH cand AS (
               | SELECT DISTINCT p.qid, c.vec_id
               | FROM ${rp(b, "annlsh_bands")} c
@@ -683,9 +685,9 @@ object SparkEntry {
               | FROM scored) t
               |WHERE rnk <= ${Similarity.TopK} ORDER BY qid, rnk""".stripMargin),
     Query("ann_ivf",
-      (s, dir) => Similarity.annIvfFrom(s, dir,
-        materialize(s, s"${oracleBase(dir)}/annivf_cells")(Similarity.annIvfCells(s, dir)),
-        materialize(s, s"${oracleBase(dir)}/annivf_probes")(Similarity.annIvfProbes(s, dir))),
+      (s, dir, st) => Similarity.annIvfFrom(s, dir,
+        st.parquet(s, "annivf_cells")(Similarity.annIvfCells(s, dir)),
+        st.parquet(s, "annivf_probes")(Similarity.annIvfProbes(s, dir))),
       b => s"""WITH cand AS (
               | SELECT DISTINCT p.qid, c.vec_id
               | FROM ${rp(b, "annivf_cells")} c
@@ -710,10 +712,10 @@ object SparkEntry {
     // with exact cosine — the whole two-stage retrieval
     // cross-engine-verified
     Query("ann_ivfpq",
-      (s, dir) => Similarity.annIvfPqFrom(s, dir,
-        materialize(s, s"${oracleBase(dir)}/annivf_cells")(Similarity.annIvfCells(s, dir)),
-        materialize(s, s"${oracleBase(dir)}/annivf_probes")(Similarity.annIvfProbes(s, dir)),
-        materialize(s, s"${oracleBase(dir)}/pq_pairs")(
+      (s, dir, st) => Similarity.annIvfPqFrom(s, dir,
+        st.parquet(s, "annivf_cells")(Similarity.annIvfCells(s, dir)),
+        st.parquet(s, "annivf_probes")(Similarity.annIvfProbes(s, dir)),
+        st.parquet(s, "pq_pairs")(
           graft.operators.Pq.pqPairs(s, dir))),
       b => s"""WITH cand AS (
               | SELECT DISTINCT p.qid, c.vec_id
@@ -741,8 +743,8 @@ object SparkEntry {
               | FROM scored) t
               |WHERE rnk <= ${Similarity.TopK} ORDER BY qid, rnk""".stripMargin),
     Query("emb_quantize_stats",
-      (s, dir) => graft.operators.Quantize.quantizeStatsFrom(
-        materialize(s, s"${oracleBase(dir)}/quantized")(
+      (s, dir, st) => graft.operators.Quantize.quantizeStatsFrom(
+        st.parquet(s, "quantized")(
           graft.operators.Quantize.quantized(s, dir))),
       b => s"""SELECT CAST(count(*) AS BIGINT) AS n_vectors,
               | round(avg(cos_fidelity), 5) AS avg_cos_fidelity,
@@ -752,8 +754,8 @@ object SparkEntry {
     // PQ: DuckDB recomputes the reconstruction fidelity itself from the
     // materialized (original, reconstructed) pairs
     Query("emb_pq_stats",
-      (s, dir) => graft.operators.Pq.pqStatsFrom(
-        materialize(s, s"${oracleBase(dir)}/pq_pairs")(
+      (s, dir, st) => graft.operators.Pq.pqStatsFrom(
+        st.parquet(s, "pq_pairs")(
           graft.operators.Pq.pqPairs(s, dir))),
       b => s"""SELECT CAST(count(*) AS BIGINT) AS n_vectors,
               | round(avg(list_cosine_similarity(e, recon)), 5) AS avg_cos_fidelity,
@@ -761,65 +763,63 @@ object SparkEntry {
               | round(avg(len(e) * 32.0 / (${graft.operators.Pq.SubVectors} * 4.0)), 1) AS compression_ratio
               |FROM ${rp(b, "pq_pairs")}""".stripMargin),
     // ---- text analysis ----
-    Query("text_stats", (s, dir) => TextAnalysis.textStats(s, dir), _ => TextAnalysis.textStatsSql),
-    Query("text_quality", (s, dir) => TextAnalysis.textQuality(s, dir),
+    Query("text_stats", (s, dir, _) => TextAnalysis.textStats(s, dir), _ => TextAnalysis.textStatsSql),
+    Query("text_quality", (s, dir, _) => TextAnalysis.textQuality(s, dir),
       _ => TextAnalysis.textQualitySql),
-    Query("text_top_tokens", (s, dir) => TextAnalysis.textTopTokens(s, dir),
+    Query("text_top_tokens", (s, dir, _) => TextAnalysis.textTopTokens(s, dir),
       _ => TextAnalysis.textTopTokensSql),
-    Query("bpe_pair_stats", (s, dir) => TextAnalysis.bpePairStats(s, dir),
+    Query("bpe_pair_stats", (s, dir, _) => TextAnalysis.bpePairStats(s, dir),
       _ => TextAnalysis.bpePairStatsSql),
     Query("text_langid",
-      (s, dir) => TextAnalysis.langidConfusion(
-        materialize(s, s"${oracleBase(dir)}/langid_pairs")(TextAnalysis.langidPairs(s, dir))),
+      (s, dir, st) => TextAnalysis.langidConfusion(
+        st.parquet(s, "langid_pairs")(TextAnalysis.langidPairs(s, dir))),
       b => s"""SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n
               |FROM ${rp(b, "langid_pairs")} GROUP BY 1, 2 ORDER BY lang, pred_lang""".stripMargin),
     Query("text_fingerprint",
-      (s, dir) => TextAnalysis.fingerprintGroups(
-        materialize(s, s"${oracleBase(dir)}/fingerprints")(TextAnalysis.fingerprintPairs(s, dir))),
+      (s, dir, st) => TextAnalysis.fingerprintGroups(
+        st.parquet(s, "fingerprints")(TextAnalysis.fingerprintPairs(s, dir))),
       b => s"""SELECT fp, min(doc_id) AS keep_id, CAST(count(*) AS BIGINT) AS n
               |FROM ${rp(b, "fingerprints")} GROUP BY fp ORDER BY keep_id""".stripMargin),
-    Query("corpus_split", (s, dir) => TextAnalysis.corpusSplit(s, dir),
+    Query("corpus_split", (s, dir, _) => TextAnalysis.corpusSplit(s, dir),
       _ => TextAnalysis.corpusSplitSql),
     // PII detect/redact and token-window chunking: narrow codegen'd
     // stages over the documents table (PII corpus derived identically
     // on both engines — the Dedup.corpus pattern)
-    Query("text_pii", (s, dir) => TextAnalysis.textPii(s, dir), _ => TextAnalysis.textPiiSql),
-    Query("text_chunks", (s, dir) => TextAnalysis.textChunks(s, dir),
+    Query("text_pii", (s, dir, _) => TextAnalysis.textPii(s, dir), _ => TextAnalysis.textPiiSql),
+    Query("text_chunks", (s, dir, _) => TextAnalysis.textChunks(s, dir),
       _ => TextAnalysis.textChunksSql),
-    Query("text_length_quantiles", (s, dir) => TextAnalysis.textLengthQuantiles(s, dir),
+    Query("text_length_quantiles", (s, dir, _) => TextAnalysis.textLengthQuantiles(s, dir),
       _ => TextAnalysis.textLengthQuantilesSql),
-    Query("text_lm_score", (s, dir) => TextAnalysis.textLmScore(s, dir),
+    Query("text_lm_score", (s, dir, _) => TextAnalysis.textLmScore(s, dir),
       _ => TextAnalysis.textLmScoreSql),
     // ---- training-set assembly ----
-    Query("decontaminate", (s, dir) => graft.operators.TrainingSet.decontaminate(s, dir),
+    Query("decontaminate", (s, dir, _) => graft.operators.TrainingSet.decontaminate(s, dir),
       _ => graft.operators.TrainingSet.decontaminateSql),
-    Query("substring_dedup", (s, dir) => graft.operators.TrainingSet.substringDedup(s, dir),
+    Query("substring_dedup", (s, dir, _) => graft.operators.TrainingSet.substringDedup(s, dir),
       _ => graft.operators.TrainingSet.substringDedupSql),
     // the scale twin shuffles xxhash64(window) instead of the window
     // string; the oracle is the same STRING-keyed SQL on purpose —
     // identical rows from both engines is also the hash-collision-freedom
     // check
     Query("substring_dedup_hashed",
-      (s, dir) => graft.operators.TrainingSet.substringDedupHashed(s, dir),
+      (s, dir, _) => graft.operators.TrainingSet.substringDedupHashed(s, dir),
       _ => graft.operators.TrainingSet.substringDedupSql),
-    Query("corpus_mix", (s, dir) => graft.operators.TrainingSet.corpusMix(s, dir),
+    Query("corpus_mix", (s, dir, _) => graft.operators.TrainingSet.corpusMix(s, dir),
       _ => graft.operators.TrainingSet.corpusMixSql),
-    Query("corpus_mix_sample", (s, dir) => graft.operators.TrainingSet.corpusMixSample(s, dir),
+    Query("corpus_mix_sample", (s, dir, _) => graft.operators.TrainingSet.corpusMixSample(s, dir),
       _ => graft.operators.TrainingSet.corpusMixSampleSql),
-    Query("corpus_pack", (s, dir) => graft.operators.TrainingSet.corpusPack(s, dir),
+    Query("corpus_pack", (s, dir, _) => graft.operators.TrainingSet.corpusPack(s, dir),
       _ => graft.operators.TrainingSet.corpusPackSql),
     // ---- non-parquet sources: the SAME staged files are read by both
     // engines with their own CSV/JSON readers, so the formats' parsing
     // (headers, types, nulls) is cross-engine-verified, not just the
     // relational logic downstream ----
     Query("q_csv_source",
-      (s, dir) => {
-        val path = s"${oracleBase(dir)}/staged_nation_csv"
-        stageOnce(path) {
+      (s, dir, st) => {
+        val path = st.once("staged_nation_csv")(
           Relational.table(s, dir, "nation")
             .orderBy(col("n_nationkey")).coalesce(1)
-            .write.mode("overwrite").option("header", "true").csv(path)
-        }
+            .write.mode("overwrite").option("header", "true").csv(_))
         val nation = s.read
           .schema("n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT")
           .option("header", "true").csv(path)
@@ -844,12 +844,10 @@ object SparkEntry {
     // round-trip (write+gzip+read+parse) over every payload kind (HTML,
     // PDF, binary, empty, the 10 MB oversize doc)
     Query("q_warc_source",
-      (s, dir) => {
-        val staged = s"${oracleBase(dir)}/staged_warc"
-        stageOnce(staged) {
-          graft.sources.Warc.stagePages(PageSynth.pages(s, dir), staged, parts = 8)
-        }
-        materialize(s, s"${oracleBase(dir)}/warc_expected")(
+      (s, dir, st) => {
+        val staged = st.once("staged_warc")(
+          graft.sources.Warc.stagePages(PageSynth.pages(s, dir), _, parts = 8))
+        st.parquet(s, "warc_expected")(
           PageSynth.pages(s, dir).toDF()
             .select(col("url"), length(col("html")).as("n_bytes"),
               xxhash64(col("html")).as("payload_hash")))
@@ -861,13 +859,11 @@ object SparkEntry {
       b => s"""SELECT url, n_bytes, payload_hash
               |FROM ${rp(b, "warc_expected")} ORDER BY url""".stripMargin),
     Query("q_json_source",
-      (s, dir) => {
-        val path = s"${oracleBase(dir)}/staged_supplier_json"
-        stageOnce(path) {
+      (s, dir, st) => {
+        val path = st.once("staged_supplier_json")(
           Relational.table(s, dir, "supplier")
             .orderBy(col("s_suppkey")).coalesce(1)
-            .write.mode("overwrite").json(path)
-        }
+            .write.mode("overwrite").json(_))
         s.read
           .schema("s_suppkey BIGINT, s_name STRING, s_nationkey BIGINT, s_acctbal DOUBLE")
           .json(path)
@@ -882,11 +878,23 @@ object SparkEntry {
               |FROM read_json('$b/staged_supplier_json/*.json',
               |  columns={'s_suppkey':'BIGINT','s_name':'VARCHAR','s_nationkey':'BIGINT','s_acctbal':'DOUBLE'})
               |GROUP BY 1 ORDER BY nation_mod""".stripMargin)
-  ) ++ Relational.all.map { case (name, frame, sql) => Query(name, frame, _ => sql) })
+  ) ++ Relational.all.map { case (name, frame, sql) => Query(name, (s, dir, _) => frame(s, dir), _ => sql) })
 
-  /** Every registered query's Spark frame, by name. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.frame).toMap
+  /** Every registered query's Spark frame, by name. The frames of one map
+    * share one `Stages` per sf dir, under `oracleBase(dir)`: a run over
+    * the whole map (Verify) materializes each stage once, where the
+    * oracle SQL reads it. A second map writes its stages afresh.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = queriesUnder(oracleBase)
+
+  /** `queries` with each sf dir's stages under `base(dir)`. */
+  private[graft] def queriesUnder(base: String => String): Map[String, (SparkSession, String) => DataFrame] = {
+    val stages = scala.collection.concurrent.TrieMap.empty[String, Stages]
+    registry.map { q =>
+      q.name -> ((s: SparkSession, dir: String) =>
+        q.frame(s, dir, stages.getOrElseUpdate(dir, new Stages(base(dir)))))
+    }.toMap
+  }
 
   /** The driver runs Verify at sf0.01, so the static contract method
     * points there; Verify itself dumps `oracleSqlFor(sfDir)` so the

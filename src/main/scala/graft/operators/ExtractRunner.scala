@@ -302,16 +302,22 @@ object ExtractRunner {
   /** The table's bucket modulus for a lookup: the caller's value when
     * positive, else the one the run record names hold (one listing, no
     * Spark job). With no committed record (a root written before run
-    * records) the lookup fails and asks for `buckets`: guessing a modulus
-    * would prune to directories that may not hold the url and silently
-    * return nothing.
+    * records), or records of more than one modulus (two runs that raced
+    * on one root), the lookup fails: guessing a modulus would prune to
+    * directories that may not hold the url and silently return nothing.
     */
   private def resolveBuckets(spark: SparkSession, outRoot: String, buckets: Int): Int =
     if (buckets > 0) buckets
-    else RunLog.entries(spark, runsPath(outRoot)).headOption.map(_.buckets)
-      .getOrElse(throw new IllegalArgumentException(
+    else RunLog.entries(spark, runsPath(outRoot)).map(_.buckets).distinct match {
+      case Seq(b) => b
+      case Seq() => throw new IllegalArgumentException(
         s"no committed run record under ${runsPath(outRoot)} holds the table's bucket " +
-          "modulus; pass `buckets` to look up a url"))
+          "modulus; pass `buckets` to look up a url")
+      case moduli => throw new IllegalStateException(
+        s"the run records under ${runsPath(outRoot)} hold bucket moduli " +
+          s"${moduli.sorted.mkString(", ")}; a lookup cannot tell which one partitions " +
+          "extracted/")
+    }
 
   /** Status point lookup — the `GET /api/file/status/<id>` analogue
     * (routes.py:138-204, task.py:60-84): the batch lookup for one url.

@@ -6,7 +6,7 @@ import java.nio.file.attribute.PosixFilePermission
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local file system (`.crc` sidecars unchanged) over
@@ -54,6 +54,17 @@ object NioLocalFileSystem {
         try Files.setPosixFilePermissions(pathToFile(p).toPath, posix(mode)): Unit
         catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
     }
+
+    /** A path that is not a symbolic link has no link status of its own:
+      * its file status, with no process. The stock call forks `readlink`
+      * first, and `FileContext` asks for link status around each rename
+      * that commits a streaming checkpoint or sink-log file; on a `file:`
+      * URI that `readlink` can only fail. A symbolic link takes the stock
+      * path.
+      */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
   }
 
   /** The permission set of the low nine bits of `mode`; the enum runs from

@@ -98,7 +98,7 @@ class GlyphOcrSpec extends AnyFunSuite {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
     val (nDocs, nCompleted, nExact, nTagged) =
-      SparkEntry.queries("extract_ocr_engine")(spark, sf0001)
+      TestSpark.queries("extract_ocr_engine")(spark, sf0001)
         .as[(Long, Long, Long, Long)].head()
     assert(nDocs == 500L && nCompleted == 500L && nExact == 500L && nTagged == 500L)
   }
@@ -106,7 +106,7 @@ class GlyphOcrSpec extends AnyFunSuite {
   test("mm_ocr: zero mismatches over the smoke corpus, oracle-shaped summary") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
-    val row = SparkEntry.queries("mm_ocr")(spark, sf0001)
+    val row = TestSpark.queries("mm_ocr")(spark, sf0001)
       .as[(Long, Long, Long, Long)].head()
     val (nImages, nExact, nMismatched, payloadBytes) = row
     assert(nImages == 500L)

@@ -59,7 +59,7 @@ class LinkExtractSpec extends AnyFunSuite {
   test("link_graph: chrome anchors appear on every html page of a host") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
-    val rows = SparkEntry.queries("link_graph")(spark, sf0001)
+    val rows = TestSpark.queries("link_graph")(spark, sf0001)
       .as[(String, Long, Long)].collect()
     assert(rows.nonEmpty)
     // all destinations resolved absolute

@@ -33,8 +33,11 @@ class LocalFsSpec extends AnyFunSuite {
     } finally { rec.close(); Files.deleteIfExists(f): Unit }
   }
 
-  private def chmods(cmds: Seq[String]): Seq[String] =
-    cmds.filter(_.split(' ').head.split('/').last == "chmod")
+  /** The commands in `cmds` that start program `name`. */
+  private def runs(name: String, cmds: Seq[String]): Seq[String] =
+    cmds.filter(_.split(' ').head.split('/').last == name)
+
+  private def chmods(cmds: Seq[String]): Seq[String] = runs("chmod", cmds)
 
   /** Stock Hadoop forks `chmod` only without libhadoop's native chmod. */
   private val stockForks = !NativeIO.isAvailable
@@ -94,7 +97,30 @@ class LocalFsSpec extends AnyFunSuite {
         graft.streaming.Drain.files(spark, src, maxFilesPerTrigger = Some(1)),
         d.resolve("ckpt").toString, d.resolve("out").toString))
       assert(chmods(cmds).isEmpty, s"${chmods(cmds).size} chmod processes: ${chmods(cmds).take(3)}")
+      val readlinks = runs("readlink", cmds)
+      assert(readlinks.isEmpty, s"${readlinks.size} readlink processes: ${readlinks.take(3)}")
       assert(spark.read.parquet(d.resolve("out").toString).count() == 40)
+    }
+  }
+
+  test("link status equals stock Hadoop's for a file, a directory and a symbolic link") {
+    val nio = new NioLocalFileSystem.Raw
+    val stock = new org.apache.hadoop.fs.RawLocalFileSystem
+    for (fs <- Seq(nio, stock)) fs.initialize(new URI("file:///"), new Configuration())
+    def fields(s: org.apache.hadoop.fs.FileStatus) = (s.getPath, s.isFile, s.isDirectory,
+      s.isSymlink, if (s.isSymlink) s.getSymlink else null, s.getLen, s.getModificationTime,
+      s.getAccessTime, s.getPermission, s.getOwner, s.getGroup, s.getReplication, s.getBlockSize)
+    withDir { d =>
+      Files.write(d.resolve("file"), Array[Byte](1, 2, 3))
+      Files.createDirectory(d.resolve("dir"))
+      Files.createSymbolicLink(d.resolve("link"), d.resolve("file"))
+      // as a file: URI (how Spark names its paths) and as a bare path
+      for (name <- Seq("file", "dir", "link"); p <- Seq(d.resolve(name).toUri.toString, d.resolve(name).toString)) {
+        val want = fields(stock.getFileLinkStatus(new Path(p)))
+        val (got, cmds) = processStarts(nio.getFileLinkStatus(new Path(p)))
+        assert(fields(got) == want, p)
+        if (name != "link") assert(runs("readlink", cmds).isEmpty, p)
+      }
     }
   }
 

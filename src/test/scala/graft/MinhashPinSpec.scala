@@ -103,7 +103,7 @@ class MinhashPinSpec extends AnyFunSuite {
 
   test("sf0.001: warm registered frames start no more jobs than pinned") {
     val counts = jobPins.map { case (name, pin) =>
-      val frame = SparkEntry.queries(name)
+      val frame = TestSpark.queries(name)
       frame(spark, sf0001).collect()
       (name, countingJobs(frame(spark, sf0001).collect())._2, pin)
     }

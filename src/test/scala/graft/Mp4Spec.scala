@@ -84,7 +84,7 @@ class Mp4Spec extends AnyFunSuite {
   test("mm_video_meta: every doc parses with doc_id-exact metadata") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
-    val rows = SparkEntry.queries("mm_video_meta")(spark, sf0001)
+    val rows = TestSpark.queries("mm_video_meta")(spark, sf0001)
       .as[(Long, Long, Long, Long, Int, Int, Int, Int)].collect()
     assert(rows.length == 500)
     rows.foreach { case (id, ts, dur, ms, nv, na, no, nb) =>

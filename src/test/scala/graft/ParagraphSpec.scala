@@ -86,7 +86,7 @@ class ParagraphSpec extends AnyFunSuite {
   }
 
   test("sf0.001: scrub removes the cross-document merge chrome, stats surface it") {
-    val extracted = SparkEntry.queries("extract_main")(spark, sf0001)
+    val extracted = TestSpark.queries("extract_main")(spark, sf0001)
     val stats = ParagraphDedup.paragraphStats(extracted)
       .as[(String, Long, Long, Int)].collect()
     assert(stats.exists(_._1 == "Part 1"), "shared page header should be high-df")

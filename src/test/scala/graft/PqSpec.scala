@@ -85,9 +85,9 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("ann_ivfpq: registered IVF+ADC+re-rank query keeps recall vs brute force") {
-    val exact = SparkEntry.queries("ann_bruteforce")(spark, sf0001)
+    val exact = TestSpark.queries("ann_bruteforce")(spark, sf0001)
       .select(col("qid"), col("nid")).as[(Long, Long)].collect().toSet
-    val ivfpq = SparkEntry.queries("ann_ivfpq")(spark, sf0001)
+    val ivfpq = TestSpark.queries("ann_ivfpq")(spark, sf0001)
       .select(col("qid"), col("nid")).as[(Long, Long)].collect().toSet
     // exactly TopK rows per query survive the two-stage retrieval
     assert(ivfpq.groupBy(_._1).forall(_._2.size == graft.operators.Similarity.TopK))

@@ -20,6 +20,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(blank.isEmpty, s"blank oracle SQL: $blank")
   }
 
+  /** sha256 over every (name, oracle SQL) pair, sorted by name, each field
+    * NUL-terminated. Pinned: the oracle strings are frozen, and a
+    * deliberate change to one re-pins this and says why.
+    */
+  test("registry: the oracle SQL strings keep their pinned digest") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for ((name, sql) <- SparkEntry.oracleSqlFor(sf0001).toSeq.sorted)
+      md.update(s"$name\u0000$sql\u0000".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(md.digest().map(b => f"${b & 0xff}%02x").mkString ==
+      "b6732b413b1a3cf97fa8c136cadfc100ef12a2cf7b1a3b2e6a32ba41b5e542cd")
+  }
+
   test("registry: a name registered twice fails when the registry is built") {
     val q = SparkEntry.registry.head
     val other = SparkEntry.registry(1)
@@ -37,11 +49,11 @@ class RegistrySpec extends AnyFunSuite {
     def stagedDirs(): Set[String] =
       Option(tmp.list()).fold(Set.empty[String])(_.filter(_.matches("graft_stream\\d+")).toSet)
     val before = stagedDirs()
-    val got = SparkEntry.queries("stream_extract_counts")(spark, sf0001)
+    val got = TestSpark.queries("stream_extract_counts")(spark, sf0001)
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(stagedDirs() -- before == Set.empty[String])
     assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("stream_extract")))
-    val want = SparkEntry.queries("extract_main")(spark, sf0001)
+    val want = TestSpark.queries("extract_main")(spark, sf0001)
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n"), sum(col("n_pages").cast("long")).as("total_pages"))
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq

@@ -380,6 +380,23 @@ class RunnerSpec extends AnyFunSuite {
     assert(ExtractRunner.status(spark, out, url, buckets = 8).count() == 1)
   }
 
+  test("runner: a lookup over run records of two moduli fails, naming both") {
+    import spark.implicits._
+    graft.streaming.StreamingExtract.withTempDir("graft_twomoduli") { base =>
+      PageSynth.pages(spark, sf0001).limit(50).write.mode("overwrite").parquet(s"$base/pages")
+      val out = s"$base/out"
+      val r = ExtractRunner.run(spark, s"$base/pages", out, buckets = 8)
+      // the record a racing run at 16 buckets leaves on the same root
+      RunLog.commit(spark, s"$out/runs", RunRecord(r.snapshotId, 16, "standard", "completed",
+        0L, 0L, 1L, java.time.Instant.now().toString, Nil))
+      assert(RunLog.entries(spark, s"$out/runs").map(_.buckets).toSet == Set(8, 16))
+      val url = spark.read.parquet(s"$out/extracted").select(col("url")).as[String].head()
+      val e = intercept[IllegalStateException](ExtractRunner.status(spark, out, url))
+      assert(e.getMessage.contains(s"$out/runs") && e.getMessage.contains("moduli 8, 16"), e.getMessage)
+      assert(ExtractRunner.status(spark, out, url, buckets = 8).count() == 1)
+    }
+  }
+
   test("runner: a default-buckets status lookup runs one query, the pruned extracted/ scan") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_lookup").toString

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -22,6 +22,17 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The registry frames every spec runs: one `SparkEntry.queriesUnder`
+    * map for the test JVM, so each stage materializes once per run, under
+    * a temp base of this JVM's own that is deleted at exit. Verify keeps
+    * `/tmp/graft_oracle` to itself.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val root = java.nio.file.Files.createTempDirectory("graft_stages").toFile
+    sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(root): Unit)
+    SparkEntry.queriesUnder(dir => s"$root/${new java.io.File(SparkEntry.oracleBase(dir)).getName}")
+  }
 
   /** Runs `body` and returns it with every query execution that succeeded
     * while it ran. The listener bus is async: before `body`, drain it so a

@@ -113,7 +113,7 @@ class TextPipelineSpec extends AnyFunSuite {
 
   test("url dedup: every canonical group is exactly original + its variant") {
     import graft.operators.UrlDedup
-    val extracted = SparkEntry.queries("extract_main")(spark, sf0001)
+    val extracted = TestSpark.queries("extract_main")(spark, sf0001)
     val groups = UrlDedup.urlDedup(extracted)
       .as[(String, Long, String)].collect()
     val nCompleted = extracted.filter(col("status") === "completed").count()
@@ -194,7 +194,7 @@ class TextPipelineSpec extends AnyFunSuite {
 
   test("decontaminate: planted benchmark-overlap docs are flagged, donors excluded") {
     import graft.operators.TrainingSet
-    val got = SparkEntry.queries("decontaminate")(spark, sf0001)
+    val got = TestSpark.queries("decontaminate")(spark, sf0001)
       .as[(Long, Long)].collect().toMap
     // every planted doc (donor snippet embedded verbatim) is flagged with
     // ALL of its snippet's 13-gram windows hitting
@@ -209,7 +209,7 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("robots_filter: prefix Disallow semantics, per-host accounting closes") {
-    val rows = SparkEntry.queries("robots_filter")(spark, sf0001)
+    val rows = TestSpark.queries("robots_filter")(spark, sf0001)
       .as[(String, Long, Long, Long, Long)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (host, nRules, nUrls, nBlocked, nAllowed) =>
@@ -222,7 +222,7 @@ class TextPipelineSpec extends AnyFunSuite {
     // prefix semantics: 'Disallow: /src1' must block /src1/... AND
     // /src10/... /src19/... (robots prefixes are raw string prefixes,
     // not path segments) — verify against a driver-side recount
-    val urls = SparkEntry.queries("extract_main")(spark, sf0001)
+    val urls = TestSpark.queries("extract_main")(spark, sf0001)
       .filter(col("status") === "completed").select(col("url")).as[String].collect()
     val wantBlocked = urls.count { u =>
       val host = u.split("/")(2)
@@ -234,7 +234,7 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("bpe_pair_stats: one merge-selection round over the corpus") {
-    val rows = SparkEntry.queries("bpe_pair_stats")(spark, sf0001)
+    val rows = TestSpark.queries("bpe_pair_stats")(spark, sf0001)
       .as[(String, Long)].collect()
     assert(rows.length == 32)
     // every pair is two symbols from the word alphabet
@@ -260,7 +260,7 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("substring_dedup: planted near-dup pairs share their window sets") {
-    val rows = SparkEntry.queries("substring_dedup")(spark, sf0001)
+    val rows = TestSpark.queries("substring_dedup")(spark, sf0001)
       .as[(Long, Long, Long, Double)].collect()
     val byId = rows.map(r => r._1 -> r).toMap
     val plantedCopies = rows.map(_._1).filter(_ >= 1000000L)
@@ -280,9 +280,9 @@ class TextPipelineSpec extends AnyFunSuite {
     // the scale twin shuffles xxhash64(window) instead of the window
     // string; equality against the string-keyed answer IS the
     // collision-freedom check on this corpus
-    val a = SparkEntry.queries("substring_dedup")(spark, sf0001)
+    val a = TestSpark.queries("substring_dedup")(spark, sf0001)
       .as[(Long, Long, Long, Double)].collect().toSeq
-    val b = SparkEntry.queries("substring_dedup_hashed")(spark, sf0001)
+    val b = TestSpark.queries("substring_dedup_hashed")(spark, sf0001)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(a.nonEmpty && a == b)
   }
@@ -318,7 +318,7 @@ class TextPipelineSpec extends AnyFunSuite {
 
   test("corpus_pack: budget respected, sequences contiguous, every doc packed once") {
     import graft.operators.TrainingSet
-    val rows = SparkEntry.queries("corpus_pack")(spark, sf0001)
+    val rows = TestSpark.queries("corpus_pack")(spark, sf0001)
       .as[(Long, Long, Long, Long, Double)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (_, _, nDocs, nTok, frac) =>
@@ -344,7 +344,7 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("corpus_mix_sample: deterministic resampling realizes the planned boosts") {
-    val rows = SparkEntry.queries("corpus_mix_sample")(spark, sf0001)
+    val rows = TestSpark.queries("corpus_mix_sample")(spark, sf0001)
       .as[(String, Long, Double, Long, Double, Double)].collect()
     assert(rows.length == 5)
     rows.foreach { case (lang, nDocs, boost, nSampled, realized, _) =>
@@ -360,13 +360,13 @@ class TextPipelineSpec extends AnyFunSuite {
     assert(bySize.last._4 < bySize.last._2) // en: fewer sampled than docs
     assert(bySize.head._4 > bySize.head._2) // rarest: more sampled than docs
     // determinism: a second run is identical (hash thresholds, no rand)
-    val again = SparkEntry.queries("corpus_mix_sample")(spark, sf0001)
+    val again = TestSpark.queries("corpus_mix_sample")(spark, sf0001)
       .as[(String, Long, Double, Long, Double, Double)].collect()
     assert(rows.toSeq == again.toSeq)
   }
 
   test("corpus_mix: temperature weights sum to 1 and boost is inverse to size") {
-    val rows = SparkEntry.queries("corpus_mix")(spark, sf0001)
+    val rows = TestSpark.queries("corpus_mix")(spark, sf0001)
       .as[(String, Long, Double, Double, Double)].collect()
     assert(rows.length == 5)
     assert(math.abs(rows.map(_._4).sum - 1.0) < 1e-3) // mix_frac ~sums to 1

@@ -346,11 +346,11 @@ class WarcSpec extends AnyFunSuite {
   test("q_wet_sink: extracted text round-trips as conversion records, byte-exact") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
-    val got = SparkEntry.queries("q_wet_sink")(spark, sf0001)
+    val got = TestSpark.queries("q_wet_sink")(spark, sf0001)
       .as[(String, Int, String)].collect()
     assert(got.nonEmpty)
     // every completed doc appears exactly once with its exact text bytes
-    val want = SparkEntry.queries("extract_main")(spark, sf0001)
+    val want = TestSpark.queries("extract_main")(spark, sf0001)
       .filter(col("status") === "completed")
       .select(col("url"), col("text")).as[(String, String)].collect()
       .map { case (u, t) => (u, t.getBytes("UTF-8").length) }.sortBy(_._1)
@@ -362,7 +362,7 @@ class WarcSpec extends AnyFunSuite {
   test("q_warc_source: full-corpus container round-trip matches the no-WARC frame") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
-    val got = SparkEntry.queries("q_warc_source")(spark, sf0001)
+    val got = TestSpark.queries("q_warc_source")(spark, sf0001)
       .as[(String, Int, Long)].collect()
     assert(got.length == 500)
     val want = graft.sources.PageSynth.pages(spark, sf0001)

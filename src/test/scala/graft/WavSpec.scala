@@ -60,7 +60,7 @@ class WavSpec extends AnyFunSuite {
   test("mm_audio: decoded-sample features are integer-exact and complete") {
     import TestSpark.{sf0001, spark}
     import spark.implicits._
-    val rows = SparkEntry.queries("mm_audio")(spark, sf0001)
+    val rows = TestSpark.queries("mm_audio")(spark, sf0001)
       .as[(Long, Int, Long, Long, Long)].collect()
     assert(rows.length == 500)
     rows.foreach { case (id, sr, n, energy, zcr) =>
